@@ -239,12 +239,12 @@ object Curation {
   def epochMix(docs: DataFrame, tiers: Seq[(String, Double, Double)],
       idCol: Column = col("doc_id"), text: Column = col("text")): DataFrame = {
     require(tiers.nonEmpty && tiers.forall(_._3 >= 0.0))
-    // Materialize pins the expensive score kernel to ONE evaluated column:
+    // OptimizerFence pins the expensive score kernel to ONE evaluated column:
     // the tier CASE ladder (one score reference per tier) + the pushed-down
     // tier filter would otherwise each get their own inlined copy of the
     // whole kernel (measured 5.4x at 500k docs — see
-    // functions/Materialize.scala). tier/copies then reference the cheap
-    // materialized column.
+    // functions/Fence.scala). tier/copies then reference the cheap
+    // computed column.
     val score = TextOps.qualityColumns(text)
       .collectFirst { case ("quality_score", c) => c }.get
     val tierCol = tiers.foldRight(lit(null: String)) {
@@ -263,7 +263,7 @@ object Curation {
           .otherwise(acc)
     }
     docs
-      .withColumn("__q", graft.functions.Materialize(score))
+      .withColumn("__q", graft.functions.OptimizerFence(score))
       .withColumn("tier", tierCol)
       .filter(col("tier").isNotNull)
       .withColumn("__copies", copies)

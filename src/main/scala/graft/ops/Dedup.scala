@@ -118,11 +118,6 @@ object Dedup {
           "in explicitly with uncapped = true")
     }
 
-  /** Dev-probe alias for [[cappedPairs]] (stage isolation in Probe6). */
-  private[graft] def probeCappedPairs(keyed: DataFrame, keyCols: Seq[String],
-      cap: Int, carry: Seq[String] = Nil): DataFrame =
-    cappedPairs(keyed, keyCols, cap, carry)
-
   /** Candidate near-dup pairs via MinHash+LSH (a < b), deduped across bands.
     *
     * Scale shape: exact duplicates are collapsed to their min-id

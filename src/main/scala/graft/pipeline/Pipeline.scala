@@ -32,21 +32,14 @@ object Pipeline {
     * router with no matching route and no default are filtered out, matching
     * the reference's silent drop.
     *
-    * `fence` (default ON) plants the zero-cost [[graft.functions.Fence]]
-    * planning barrier after the compiled chain. When to choose which:
-    *  - ON for export-style jobs that evaluate EVERY column (the flagship,
-    *    the sink fan-out): without it CollapseProject + quadratic constant
-    *    folding on the merged operator expression trees blows planning past
-    *    20 minutes, and nothing is lost because no predicate could prune an
-    *    evaluate-everything job anyway.
-    *  - OFF for selective interactive queries over the compiled pipeline
-    *    (e.g. `compile(spec, fence = false)(logs).filter(...).select(a, b)`):
-    *    the fence's non-deterministic marker also blocks filter/column
-    *    pushdown THROUGH the pipeline, so a query that reads two columns
-    *    would otherwise evaluate all of them. Planning cost is then
-    *    proportional to the operator surface the query actually touches.
+    * The output always passes through the zero-cost
+    * [[graft.functions.OptimizerFence]] planning barrier: without it
+    * CollapseProject + quadratic constant folding on the merged operator
+    * expression trees blows planning past 20 minutes. The fence also blocks
+    * filter/column pushdown THROUGH the pipeline, so every output column is
+    * evaluated even when a consumer reads only two of them.
     */
-  def compile(spec: PipelineSpec, fence: Boolean = true): DataFrame => DataFrame = { input =>
+  def compile(spec: PipelineSpec): DataFrame => DataFrame = { input =>
     val ops = spec.ops
     val ids = ops.map(_.id).toSet
 
@@ -141,16 +134,12 @@ object Pipeline {
     // row. [[graft.functions.OptimizerFence]] (identity expression flagged
     // non-deterministic on every column) blocks the same inlining with ZERO
     // runtime cost — the plan stays one whole-stage-codegen region.
-    // fence=false keeps the unfenced plan for callers that accept the
-    // planning blowup.
-    if (fence) {
-      // GRAFT_FENCE=observe restores the round-1 CollectMetrics fence — a
-      // diagnostic escape hatch for same-window A/B of the two fences
-      if (sys.env.get("GRAFT_FENCE").contains("observe"))
-        out.observe("graft_pipeline", count(lit(1)).as("emitted_rows"))
-      else
-        out.select(out.columns.map(c =>
-          graft.functions.OptimizerFence(col(c)).as(c)): _*)
-    } else out
+    // GRAFT_FENCE=observe restores the round-1 CollectMetrics fence — a
+    // diagnostic escape hatch for same-window A/B of the two fences.
+    if (sys.env.get("GRAFT_FENCE").contains("observe"))
+      out.observe("graft_pipeline", count(lit(1)).as("emitted_rows"))
+    else
+      out.select(out.columns.map(c =>
+        graft.functions.OptimizerFence(col(c)).as(c)): _*)
   }
 }
