@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Exporter, Pipeline}
@@ -41,12 +41,7 @@ object ScaleRun {
     val cores = args(0).toInt
     val inputPath = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scale-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
+    val spark = SparkEntry.sessionBuilder(cores, s"graft-scale-$cores")
       .config("spark.sql.adaptive.enabled", "true")
       // Split sizing is a measured trade-off on this host: per-task fixed
       // cost is ~0.4 s (64 x ~1 MiB tasks burned 78.8 core-s where 16 x
@@ -56,7 +51,6 @@ object ScaleRun {
       // balanced wave at 16 cores, four at 4 cores (best measured config,
       // efficiency 0.86).
       .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("SPARK_GRAFT_MAXSPLIT", "40m"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

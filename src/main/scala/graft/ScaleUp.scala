@@ -650,14 +650,8 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
+    val spark = SparkEntry.sessionBuilder(cores, "graft-scaleup")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val workDir = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_scaleup"

@@ -1,13 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Local smoke runner: flagship entry + per-query row counts. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.sessionBuilder(8, "graft-smoke").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val e = SparkEntry.entry(spark)
     e.show(50, false)

@@ -10,6 +10,19 @@ import graft.sources.Transcripts
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
+  /** Local-mode session builder for the non-benchmark mains and the test
+    * suite: `cores` task slots and shuffle partitions, UTC, non-ANSI casts,
+    * no UI. Callers add their own settings before `getOrCreate()`.
+    */
+  def sessionBuilder(cores: Int, appName: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "false")
+      .config("spark.ui.enabled", "false")
+
   /** Session settings every entry point needs:
     * - ANSI off: invalid parses yield NULL (the operators' on_error path)
     *   instead of runtime errors, matching the reference's per-entry error

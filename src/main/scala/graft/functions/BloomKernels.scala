@@ -6,7 +6,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -50,35 +49,18 @@ final class BloomBitsetWorker(words: Array[Long]) extends Serializable {
   * object, exactly like the k-means centroid table.
   */
 case class BloomContainsAll(child: Expression, filter: Array[Byte])
-    extends UnaryExpression {
-
-  private lazy val worker = {
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = {
     val bb = ByteBuffer.wrap(filter)
     val words = new Array[Long](filter.length / 8)
     var i = 0
     while (i < words.length) { words(i) = bb.getLong(); i += 1 }
     new BloomBitsetWorker(words)
   }
-
+  protected def method = "containsAll"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.containsAll(child.eval(input).asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("bloomWorker", worker,
-      classOf[BloomBitsetWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.value} = $w.containsAll(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): BloomContainsAll =
     copy(child = newChild)
 

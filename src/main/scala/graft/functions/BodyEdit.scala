@@ -4,9 +4,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -217,122 +216,59 @@ final class BodyEditWorker(keys: Array[String], toKeys: Array[String])
   * JSON-rendered value semantics (see [[BodyEditWorker.set]]).
   */
 case class BodyJsonSet(left: Expression, right: Expression, keys: Seq[String],
-    raw: Boolean) extends BinaryExpression {
-  private lazy val worker = new BodyEditWorker(keys.toArray, Array.empty)
+    raw: Boolean) extends BinaryExpression with InvokeKernel {
+  protected lazy val kernel = new BodyEditWorker(keys.toArray, Array.empty)
+  protected def method = "set"
+  override protected def arguments = Seq(left, right, Literal(raw))
+  override protected def propagateNull = false
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    worker.set(left.eval(input).asInstanceOf[UTF8String],
-      right.eval(input).asInstanceOf[UTF8String], raw)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val w = ctx.addReferenceObj("worker", worker, classOf[BodyEditWorker].getName)
-    val b = left.genCode(ctx)
-    val v = right.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${v.code}
-        UTF8String ${ev.value} = $w.set(
-          ${b.isNull} ? null : ${b.value}, ${v.isNull} ? null : ${v.value}, $raw);
-        boolean ${ev.isNull} = (${ev.value} == null);
-      """)
-  }
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): BodyJsonSet =
     copy(left = newLeft, right = newRight)
 }
 
-case class BodyJsonDelete(child: Expression, keys: Seq[String]) extends UnaryExpression {
-  private lazy val worker = new BodyEditWorker(keys.toArray, Array.empty)
+case class BodyJsonDelete(child: Expression, keys: Seq[String])
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new BodyEditWorker(keys.toArray, Array.empty)
+  protected def method = "delete"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    worker.delete(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[BodyEditWorker].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = $w.delete($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
   override protected def withNewChildInternal(newChild: Expression): BodyJsonDelete =
     copy(child = newChild)
 }
 
 case class BodyJsonMove(child: Expression, fromKeys: Seq[String], toKeys: Seq[String])
-    extends UnaryExpression {
-  private lazy val worker = new BodyEditWorker(fromKeys.toArray, toKeys.toArray)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new BodyEditWorker(fromKeys.toArray, toKeys.toArray)
+  protected def method = "move"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    worker.move(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[BodyEditWorker].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = $w.move($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
   override protected def withNewChildInternal(newChild: Expression): BodyJsonMove =
     copy(child = newChild)
 }
 
 case class BodyJsonCopy(child: Expression, fromKeys: Seq[String], toKeys: Seq[String])
-    extends UnaryExpression {
-  private lazy val worker = new BodyEditWorker(fromKeys.toArray, toKeys.toArray)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new BodyEditWorker(fromKeys.toArray, toKeys.toArray)
+  protected def method = "copyWithin"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    worker.copyWithin(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[BodyEditWorker].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = $w.copyWithin($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
   override protected def withNewChildInternal(newChild: Expression): BodyJsonCopy =
     copy(child = newChild)
 }
 
-case class BodyJsonExists(child: Expression, keys: Seq[String]) extends UnaryExpression {
-  private lazy val worker = new BodyEditWorker(keys.toArray, Array.empty)
+case class BodyJsonExists(child: Expression, keys: Seq[String])
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new BodyEditWorker(keys.toArray, Array.empty)
+  protected def method = "exists"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    worker.exists(child.eval(input).asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[BodyEditWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.value} = $w.exists(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
   override protected def withNewChildInternal(newChild: Expression): BodyJsonExists =
     copy(child = newChild)
 }
 
-case class BodyJsonGet(child: Expression, keys: Seq[String]) extends UnaryExpression {
-  private lazy val worker = new BodyEditWorker(keys.toArray, Array.empty)
+case class BodyJsonGet(child: Expression, keys: Seq[String])
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new BodyEditWorker(keys.toArray, Array.empty)
+  protected def method = "get"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    worker.get(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[BodyEditWorker].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = $w.get($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
   override protected def withNewChildInternal(newChild: Expression): BodyJsonGet =
     copy(child = newChild)
 }

@@ -5,7 +5,6 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -123,26 +122,13 @@ final class BodyPromotedWorker(paths: Array[String]) extends Serializable {
 /** `body_promoted(body)` -> struct(body_v2 STRING, body_promoted STRING);
   * NULL when the body is not a JSON object.
   */
-case class BodyPromoted(child: Expression, paths: Seq[String]) extends UnaryExpression {
-  private lazy val worker = new BodyPromotedWorker(paths.sorted.toArray)
-
+case class BodyPromoted(child: Expression, paths: Seq[String])
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new BodyPromotedWorker(paths.sorted.toArray)
+  protected def method = "process"
   override def dataType: DataType = StructType(Seq(
     StructField("body_v2", StringType),
     StructField("body_promoted", StringType)))
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    worker.process(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[BodyPromotedWorker].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = $w.process($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): BodyPromoted =
     copy(child = newChild)
 }

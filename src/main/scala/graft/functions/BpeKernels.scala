@@ -3,9 +3,7 @@ package graft.functions
 import java.util.Locale
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -106,28 +104,12 @@ final class BpeWorker(merges: Array[(String, String)]) extends Serializable {
 
 /** `bpe_stats(text)` -> struct(n_words, n_tokens, tokens). */
 case class BpeStats(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  private lazy val worker = new BpeWorker(merges.toArray)
-
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new BpeWorker(merges.toArray)
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = BpeStats.schema
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[BpeWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        InternalRow ${ev.value} = $w.compute(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): BpeStats =
     copy(child = newChild)
 }
@@ -149,29 +131,12 @@ object BpeStats {
   * word-frequency dict, never the corpus).
   */
 case class BpePairs(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  private lazy val worker = new BpeWorker(merges.toArray)
-
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new BpeWorker(merges.toArray)
+  protected def method = "pairs"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.pairs(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[BpeWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.GenericArrayData ${ev.value} =
-          $w.pairs(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): BpePairs =
     copy(child = newChild)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -50,30 +48,13 @@ final class NearestCentroidWorker(centroids: Array[Array[Double]])
 
 /** `nearest_centroid(vec)` -> struct(cluster, dist_e6). */
 case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
-    extends UnaryExpression {
-
-  private lazy val worker =
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel =
     new NearestCentroidWorker(centroids.map(_.toArray).toArray)
-
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = NearestCentroid.schema
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker,
-      classOf[NearestCentroidWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        InternalRow ${ev.value} = $w.compute(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)
 }
@@ -124,26 +105,12 @@ final class CentroidDistsWorker(centroids: Array[Array[Double]])
 
 /** `centroid_dists(vec)` -> array<bigint> of dist_e6 per cluster. */
 case class CentroidDists(child: Expression, centroids: Seq[Seq[Double]])
-    extends UnaryExpression {
-  private lazy val worker =
-    new CentroidDistsWorker(centroids.map(_.toArray).toArray)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new CentroidDistsWorker(centroids.map(_.toArray).toArray)
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker,
-      classOf[CentroidDistsWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $w.compute(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
   override protected def withNewChildInternal(newChild: Expression): CentroidDists =
     copy(child = newChild)
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,17 +29,11 @@ object GunzipKernel extends Serializable {
 }
 
 /** `gunzip(binary)` -> binary; NULL on corrupt input. */
-case class Gunzip(child: Expression) extends UnaryExpression {
+case class Gunzip(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = GunzipKernel
+  protected def method = "gunzip"
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    GunzipKernel.gunzip(input.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = graft.functions.GunzipKernel$$.MODULE$$.gunzip($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
   override protected def withNewChildInternal(newChild: Expression): Gunzip =
     copy(child = newChild)
 }
@@ -78,17 +71,12 @@ object CharsetDecodeKernel extends Serializable {
 }
 
 /** `charset_decode(binary, 'utf-16')` -> string. */
-case class CharsetDecode(child: Expression, charset: String) extends UnaryExpression {
-  private val csUtf8 = UTF8String.fromString(charset)
+case class CharsetDecode(child: Expression, charset: String)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = CharsetDecodeKernel
+  protected def method = "decode"
+  override protected def arguments = Seq(child, Literal(charset))
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    CharsetDecodeKernel.decode(input.asInstanceOf[Array[Byte]], csUtf8)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cs = ctx.addReferenceObj("charset", csUtf8, classOf[UTF8String].getName)
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.CharsetDecodeKernel$$.MODULE$$.decode($input, $cs)")
-  }
   override protected def withNewChildInternal(newChild: Expression): CharsetDecode =
     copy(child = newChild)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, IntegerType}
@@ -28,31 +27,10 @@ final class DictIntWorker(entries: Array[(String, Int)]) extends Serializable {
 }
 
 case class DictLookupInt(child: Expression, entries: Seq[(String, Int)])
-    extends UnaryExpression {
-  private lazy val worker = new DictIntWorker(entries.toArray)
-
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new DictIntWorker(entries.toArray)
+  protected def method = "lookup"
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = worker.lookup(input.asInstanceOf[UTF8String])
-    if (r == null) null else r.intValue(): java.lang.Integer
-  }
-
-  // nullSafeCodeGen can't express "null result from non-null input" via
-  // defineCodeGen, so emit the probe + null check by hand
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("dict", worker, classOf[DictIntWorker].getName)
-    nullSafeCodeGen(ctx, ev, input => {
-      val tmp = ctx.freshName("hit")
-      s"""
-         |java.lang.Integer $tmp = $w.lookup($input);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.intValue(); }
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): DictLookupInt =
     copy(child = newChild)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -94,21 +92,11 @@ final class DsirBucketWorker(buckets: Int) extends Serializable {
 }
 
 /** `dsir_buckets(text)` -> array<long> of feature bucket ids. */
-case class DsirBucketIds(child: Expression, buckets: Int) extends UnaryExpression {
-
-  private lazy val worker = new DsirBucketWorker(buckets)
-
+case class DsirBucketIds(child: Expression, buckets: Int)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new DsirBucketWorker(buckets)
+  protected def method = "compute"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    worker.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[DsirBucketWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.compute($input)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): DsirBucketIds =
     copy(child = newChild)
 }
@@ -121,28 +109,12 @@ object DsirBucketIds {
 
 /** `dsir_score(text)` -> struct(n_features, logw_e6). */
 case class DsirScoreStats(child: Expression, ratioE6: Seq[Long])
-    extends UnaryExpression {
-
-  private lazy val worker = new DsirScoreWorker(ratioE6.toArray)
-
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new DsirScoreWorker(ratioE6.toArray)
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = DsirScoreStats.schema
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[DsirScoreWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        InternalRow ${ev.value} = $w.compute(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): DsirScoreStats =
     copy(child = newChild)
 }

@@ -1,11 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+object FastLowerKernel extends Serializable {
+  def lower(s: UTF8String): UTF8String = s.toLowerCase
+}
 
 /** Lowercase via `UTF8String.toLowerCase` directly.
   *
@@ -16,16 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * bytes (all severity aliases and hex ids) and correct JVM Unicode case
   * mapping otherwise, at a fraction of the cost.
   */
-case class FastLower(child: Expression) extends UnaryExpression {
+case class FastLower(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = FastLowerKernel
+  protected def method = "lower"
+  override protected def returnNullable = false
   override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(input: Any): Any =
-    input.asInstanceOf[UTF8String].toLowerCase
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input => s"($input).toLowerCase()")
-
   override protected def withNewChildInternal(newChild: Expression): FastLower =
     copy(child = newChild)
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -177,14 +176,12 @@ object FnvBytesKernel extends Serializable {
   }
 }
 
-case class FnvOverBytes(child: Expression, seed: Long) extends UnaryExpression {
+case class FnvOverBytes(child: Expression, seed: Long)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = FnvBytesKernel
+  protected def method = "hash"
+  override protected def arguments = Seq(child, Literal(seed))
   override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    FnvBytesKernel.hash(input.asInstanceOf[Array[Byte]], seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.FnvBytesKernel$$.MODULE$$.hash($input, ${seed}L)")
   override protected def withNewChildInternal(newChild: Expression): FnvOverBytes =
     copy(child = newChild)
 }
@@ -267,27 +264,14 @@ final class AttrsMetaWorker(skipKeys: Array[String]) extends Serializable {
 }
 
 /** `attrs_meta(struct(strings, numbers, bools))` — see [[AttrsMetaWorker]]. */
-case class AttrsMeta(child: Expression, skipKeys: Seq[String]) extends UnaryExpression {
+case class AttrsMeta(child: Expression, skipKeys: Seq[String])
+    extends UnaryExpression with InvokeKernel {
   import org.apache.spark.sql.types._
-  private lazy val worker = new AttrsMetaWorker(skipKeys.toArray)
-
+  protected lazy val kernel = new AttrsMetaWorker(skipKeys.toArray)
+  protected def method = "compute"
   override def dataType: DataType = StructType(Seq(
     StructField("fprint", LongType),
     StructField("attrs", MapType(StringType, StringType, valueContainsNull = false))))
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    worker.compute(input.asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[AttrsMetaWorker].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = $w.compute($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): AttrsMeta =
     copy(child = newChild)
 }
@@ -302,20 +286,11 @@ object AttrsMeta {
 }
 
 /** `resource_fingerprint(map)` -> hierarchy-labeled FNV-1a fingerprint. */
-case class ResourceFingerprint(child: Expression) extends UnaryExpression {
-  private lazy val worker = new FingerprintWorker
-
+case class ResourceFingerprint(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new FingerprintWorker
+  protected def method = "calc"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    worker.calc(input.asInstanceOf[MapData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[FingerprintWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.calc($input)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): ResourceFingerprint =
     copy(child = newChild)
 }

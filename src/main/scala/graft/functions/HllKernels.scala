@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -126,32 +125,17 @@ final class HllStatsWorker(m: Int) extends Serializable {
 /** `hll_stats(registers)` -> struct(n_zero, sum_pow, registers_csv,
   * estimate) over the binary register array from [[HllRegistersAgg]].
   */
-case class HllStats(child: Expression, m: Int) extends UnaryExpression {
-
-  private lazy val worker = new HllStatsWorker(m)
-
+case class HllStats(child: Expression, m: Int)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new HllStatsWorker(m)
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = HllStats.schema
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("hllWorker", worker, classOf[HllStatsWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        InternalRow ${ev.value} = $w.compute((byte[]) ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HllStats =
-    copy(child = newChild)
 
   override def prettyName: String = "hll_stats"
+  override protected def withNewChildInternal(newChild: Expression): HllStats =
+    copy(child = newChild)
 }
 
 object HllStats {

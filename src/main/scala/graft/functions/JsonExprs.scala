@@ -5,7 +5,6 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
@@ -125,27 +124,12 @@ case class JsonTypedMaps(
     pathPrefix: String = "",
     unquoteFirst: Boolean = true,
     flattenArrays: Boolean = false
-) extends UnaryExpression {
-
-  private lazy val worker =
+) extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel =
     new JsonTypedMapsWorker(flatten, maxDepth, enablePaths, pathPrefix, unquoteFirst,
       flattenArrays)
-
+  protected def method = "parse"
   override def dataType: DataType = JsonKernels.typedMapsSchema
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    worker.parse(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[JsonTypedMapsWorker].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = $w.parse($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): JsonTypedMaps =
     copy(child = newChild)
 }
@@ -225,20 +209,11 @@ final class NormalizeBodyWorker extends Serializable {
 }
 
 /** `normalize_body(str)` -> canonical JSON string, see [[NormalizeBodyWorker]]. */
-case class NormalizeBody(child: Expression) extends UnaryExpression {
-  private lazy val worker = new NormalizeBodyWorker
-
+case class NormalizeBody(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new NormalizeBodyWorker
+  protected def method = "normalize"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    worker.normalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[NormalizeBodyWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.normalize($input)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): NormalizeBody =
     copy(child = newChild)
 }

@@ -2,8 +2,8 @@ package graft.functions
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -50,6 +50,13 @@ object JsonPathTypesKernel extends Serializable {
   private val TInt = "int64"
   private val TFloat = "float64"
   private val TBool = "bool"
+
+  /** [[walk]] as the kernel's rows: `array<struct<path, dtype>>`. */
+  def rows(body: UTF8String, maxDepth: Int, maxArrayElements: Int,
+      maxKeysAtLevel: Int): GenericArrayData =
+    new GenericArrayData(walk(body, maxDepth, maxArrayElements, maxKeysAtLevel).map {
+      case (p, t) => InternalRow(UTF8String.fromString(p), UTF8String.fromString(t))
+    }.asInstanceOf[Array[Any]])
 
   def walk(body: UTF8String, maxDepth: Int, maxArrayElements: Int,
       maxKeysAtLevel: Int): Array[(String, String)] = {
@@ -144,33 +151,16 @@ object JsonPathTypesKernel extends Serializable {
 
 case class JsonPathTypes(child: Expression, maxDepth: Int = 100,
     maxArrayElements: Int = 100, maxKeysAtLevel: Int = 1024)
-    extends UnaryExpression {
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = JsonPathTypesKernel
+  protected def method = "rows"
+  override protected def arguments =
+    Seq(child, Literal(maxDepth), Literal(maxArrayElements), Literal(maxKeysAtLevel))
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("path", StringType, nullable = false),
     StructField("dtype", StringType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-
-  def run(body: UTF8String): GenericArrayData = {
-    val pairs = JsonPathTypesKernel.walk(body, maxDepth, maxArrayElements, maxKeysAtLevel)
-    new GenericArrayData(pairs.map { case (p, t) =>
-      org.apache.spark.sql.catalyst.InternalRow(
-        UTF8String.fromString(p), UTF8String.fromString(t))
-    }.asInstanceOf[Array[Any]])
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    run(child.eval(input).asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    val self = ctx.addReferenceObj("jsonPathTypes", this, classOf[JsonPathTypes].getName)
-    val ad = classOf[GenericArrayData].getName
-    ev.copy(code =
-      code"""
-        ${c.code}
-        $ad ${ev.value} = $self.run(${c.isNull} ? null : ${c.value});
-        boolean ${ev.isNull} = false;""")
-  }
   override protected def withNewChildInternal(newChild: Expression): JsonPathTypes =
     copy(child = newChild)
 }

@@ -2,13 +2,15 @@ package graft.functions
 
 import java.util.regex.Pattern
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** "Does this attribute key look randomly generated?" heuristic used to gate
   * tag-metadata emission, replicating `pkg/keycheck/keycheck.go:31-151`:
   * UUIDs, >=16-char hex, base64 blobs, 13-digit timestamps and ULIDs (any
   * dot-separated segment) are random; short lowercase / letter-heavy keys
   * with separators are meaningful.
   */
-object KeyCheck {
+object KeyCheck extends Serializable {
   private val MaxKeyLength = 256
   private val ShortKeyLength = 15
   private val MediumKeyLength = 25
@@ -19,6 +21,8 @@ object KeyCheck {
   private val hexRe = Pattern.compile("(?i)^[0-9a-f]{16,}$")
   private val base64Re = Pattern.compile("^[A-Za-z0-9+/]{16,}={0,2}$")
   private val timestampRe = Pattern.compile("^\\d{13}$")
+
+  def isRandomKey(key: UTF8String): Boolean = isRandomKey(key.toString)
 
   def isRandomKey(key: String): Boolean = {
     val length = key.length
@@ -82,20 +86,11 @@ object KeyCheck {
   * explode path.
   */
 case class IsRandomKey(child: org.apache.spark.sql.catalyst.expressions.Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected def kernel = KeyCheck
+  protected def method = "isRandomKey"
   override def dataType: org.apache.spark.sql.types.DataType =
     org.apache.spark.sql.types.BooleanType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    KeyCheck.isRandomKey(input.toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.KeyCheck$$.MODULE$$.isRandomKey($input.toString())")
-
   override protected def withNewChildInternal(
       newChild: org.apache.spark.sql.catalyst.expressions.Expression): IsRandomKey =
     copy(child = newChild)

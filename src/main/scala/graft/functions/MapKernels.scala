@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
@@ -70,51 +69,18 @@ final class MapMergeWorker(valueType: DataType) extends Serializable {
 
 /** `merge_maps(old, winner, dropKeysOf1, dropKeysOf2)` — see [[MapMergeWorker]]. */
 case class MergeMaps(old: Expression, winner: Expression, d1: Expression, d2: Expression)
-    extends Expression {
-
+    extends Expression with InvokeKernel {
   private lazy val valueType: DataType =
     old.dataType.asInstanceOf[MapType].valueType
-  private lazy val worker = new MapMergeWorker(valueType)
+  protected lazy val kernel = new MapMergeWorker(valueType)
+  protected def method = "merge"
+  override protected def propagateNull = false
+  // merge returns null exactly when `old` is null
+  override protected def returnNullable = old.nullable
 
   override def children: Seq[Expression] = Seq(old, winner, d1, d2)
   override def dataType: DataType = MapType(StringType, valueType, valueContainsNull = true)
-  override def nullable: Boolean = old.nullable
   override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: InternalRow): Any = {
-    val o = old.eval(input)
-    if (o == null) return null
-    worker.merge(
-      o.asInstanceOf[MapData],
-      winner.eval(input).asInstanceOf[MapData],
-      d1.eval(input).asInstanceOf[MapData],
-      d2.eval(input).asInstanceOf[MapData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val w = ctx.addReferenceObj("worker", worker, classOf[MapMergeWorker].getName)
-    val oC = old.genCode(ctx)
-    val wC = winner.genCode(ctx)
-    val d1C = d1.genCode(ctx)
-    val d2C = d2.genCode(ctx)
-    val md = classOf[MapData].getName
-    ev.copy(code =
-      code"""
-        ${oC.code}
-        ${wC.code}
-        ${d1C.code}
-        ${d2C.code}
-        boolean ${ev.isNull} = ${oC.isNull};
-        $md ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $w.merge(
-            ${oC.value},
-            ${wC.isNull} ? null : ${wC.value},
-            ${d1C.isNull} ? null : ${d1C.value},
-            ${d2C.isNull} ? null : ${d2C.value});
-        }""")
-  }
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): MergeMaps =
     copy(old = newChildren(0), winner = newChildren(1), d1 = newChildren(2), d2 = newChildren(3))
@@ -181,14 +147,10 @@ object MapSortedJsonKernel extends Serializable {
 
 /** `map_sorted_json(map)` — see [[MapSortedJsonKernel]]; NULL for NULL. */
 case class MapSortedJson(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected def kernel = MapSortedJsonKernel
+  protected def method = "toJson"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MapSortedJsonKernel.toJson(input.asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.MapSortedJsonKernel$$.MODULE$$.toJson($input)")
   override protected def withNewChildInternal(newChild: Expression): MapSortedJson =
     copy(child = newChild)
 }
@@ -236,34 +198,18 @@ final class TagRowsWorker(tagType: String, dataType: String, mode: Int)
 
 case class MapToTagRows(child: Expression, tagType: String, dataTypeName: String,
     mode: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
   import org.apache.spark.sql.types._
-  private lazy val worker = new TagRowsWorker(tagType, dataTypeName, mode)
-
+  protected lazy val kernel = new TagRowsWorker(tagType, dataTypeName, mode)
+  protected def method = "rows"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("tag_key", StringType, nullable = false),
     StructField("tag_type", StringType, nullable = false),
     StructField("tag_data_type", StringType, nullable = false),
     StructField("string_value", StringType),
     StructField("number_value", DoubleType))), containsNull = false)
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.rows(child.eval(input).asInstanceOf[MapData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[TagRowsWorker].getName)
-    val c = child.genCode(ctx)
-    val gad = classOf[GenericArrayData].getName
-    ev.copy(code =
-      code"""
-        ${c.code}
-        $gad ${ev.value} = $w.rows(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): MapToTagRows =
     copy(child = newChild)
 }
@@ -318,17 +264,12 @@ final class MapFilterKeysWorker(keys: Array[String], keep: Boolean,
 }
 
 case class MapFilterKeys(child: Expression, keys: Seq[String], keep: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  private lazy val worker = new MapFilterKeysWorker(keys.toArray, keep,
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new MapFilterKeysWorker(keys.toArray, keep,
     child.dataType.asInstanceOf[MapType].valueType)
+  protected def method = "filter"
+  override protected def returnNullable = false
   override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(input: Any): Any =
-    worker.filter(input.asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[MapFilterKeysWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.filter($input)")
-  }
   override protected def withNewChildInternal(newChild: Expression): MapFilterKeys =
     copy(child = newChild)
 }
@@ -383,17 +324,12 @@ final class MapGrokNumericWorker(intKeys: Array[String]) extends Serializable {
 }
 
 case class MapGrokNumeric(child: Expression, intKeys: Seq[String])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  private lazy val worker = new MapGrokNumericWorker(intKeys.toArray)
-  override def dataType: DataType =
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new MapGrokNumericWorker(intKeys.toArray)
+  protected def method = "convert"
+  override protected def returnNullable = false
+  override def dataType: DataType = 
     MapType(StringType, org.apache.spark.sql.types.DoubleType, valueContainsNull = true)
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(input: Any): Any =
-    worker.convert(input.asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[MapGrokNumericWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.convert($input)")
-  }
   override protected def withNewChildInternal(newChild: Expression): MapGrokNumeric =
     copy(child = newChild)
 }
@@ -437,14 +373,11 @@ object MapDropNullValuesKernel extends Serializable {
 }
 
 case class MapDropNullValues(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected def kernel = MapDropNullValuesKernel
+  protected def method = "drop"
+  override protected def returnNullable = false
   override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(input: Any): Any =
-    MapDropNullValuesKernel.drop(input.asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.MapDropNullValuesKernel$$.MODULE$$.drop($input)")
   override protected def withNewChildInternal(newChild: Expression): MapDropNullValues =
     copy(child = newChild)
 }
@@ -519,32 +452,13 @@ object StringifyTypedMapsKernel extends Serializable {
 }
 
 case class StringifyTypedMaps(strings: Expression, numbers: Expression,
-    bools: Expression) extends Expression {
+    bools: Expression) extends Expression with InvokeKernel {
+  protected def kernel = StringifyTypedMapsKernel
+  protected def method = "stringify"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def children: Seq[Expression] = Seq(strings, numbers, bools)
   override def dataType: DataType = MapType(StringType, StringType, valueContainsNull = true)
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any =
-    StringifyTypedMapsKernel.stringify(
-      strings.eval(input).asInstanceOf[MapData],
-      numbers.eval(input).asInstanceOf[MapData],
-      bools.eval(input).asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val sC = strings.genCode(ctx)
-    val nC = numbers.genCode(ctx)
-    val bC = bools.genCode(ctx)
-    val md = classOf[MapData].getName
-    ev.copy(code =
-      code"""
-        ${sC.code}
-        ${nC.code}
-        ${bC.code}
-        boolean ${ev.isNull} = false;
-        $md ${ev.value} = graft.functions.StringifyTypedMapsKernel$$.MODULE$$.stringify(
-          ${sC.isNull} ? null : ${sC.value},
-          ${nC.isNull} ? null : ${nC.value},
-          ${bC.isNull} ? null : ${bC.value});""")
-  }
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): StringifyTypedMaps =
     copy(strings = newChildren(0), numbers = newChildren(1), bools = newChildren(2))
@@ -586,28 +500,12 @@ final class AnyKeyContainsWorker(subs: Array[String]) extends Serializable {
 }
 
 case class AnyKeyContains(child: Expression, subs: Seq[String])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.BooleanType
-  private lazy val worker = new AnyKeyContainsWorker(subs.toArray)
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.matches(child.eval(input).asInstanceOf[MapData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[AnyKeyContainsWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.value} = $w.matches(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new AnyKeyContainsWorker(subs.toArray)
+  protected def method = "matches"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
+  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
   override protected def withNewChildInternal(newChild: Expression): AnyKeyContains =
     copy(child = newChild)
 }
@@ -679,17 +577,12 @@ final class MapRenameKeysWorker(renames: Array[Array[String]]) extends Serializa
 }
 
 case class MapRenameKeys(child: Expression, renames: Seq[(String, String)])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  private lazy val worker =
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected lazy val kernel =
     new MapRenameKeysWorker(renames.map(r => Array(r._1, r._2)).toArray)
+  protected def method = "rename"
+  override protected def returnNullable = false
   override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(input: Any): Any =
-    worker.rename(input.asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[MapRenameKeysWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.rename($input)")
-  }
   override protected def withNewChildInternal(newChild: Expression): MapRenameKeys =
     copy(child = newChild)
 }

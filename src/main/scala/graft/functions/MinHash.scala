@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -124,14 +123,11 @@ object MinHashKernel extends Serializable {
 }
 
 case class MinHashBands(child: Expression, shingleN: Int, k: Int, nBands: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = MinHashKernel
+  protected def method = "bands"
+  override protected def arguments = Seq(child, Literal(shingleN), Literal(k), Literal(nBands))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashKernel.bands(input.asInstanceOf[UTF8String], shingleN, k, nBands)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.MinHashKernel$$.MODULE$$.bands($input, $shingleN, $k, $nBands)")
   override protected def withNewChildInternal(newChild: Expression): MinHashBands =
     copy(child = newChild)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -101,30 +99,14 @@ case class NbScoreStats(
     vocab: Seq[String],
     tokenCounts: Seq[(String, Int, Long)],
     classTokTotals: Seq[Long],
-    vTot: Long) extends UnaryExpression {
-
-  private lazy val worker = new NbScoreWorker(classes.toArray,
+    vTot: Long) extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new NbScoreWorker(classes.toArray,
     priorsE6.toArray, vocab.toArray, tokenCounts.toArray,
     classTokTotals.toArray, vTot)
-
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = NbScoreStats.schema
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[NbScoreWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        InternalRow ${ev.value} = $w.compute(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): NbScoreStats =
     copy(child = newChild)
 }

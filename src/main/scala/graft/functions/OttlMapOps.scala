@@ -4,7 +4,6 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
@@ -57,17 +56,12 @@ final class MapKeysRegexWorker(pattern: String, keep: Boolean,
   * (`regexp.MatchString` find semantics).
   */
 case class MapKeysRegex(child: Expression, pattern: String, keep: Boolean)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  private lazy val worker = new MapKeysRegexWorker(pattern, keep,
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new MapKeysRegexWorker(pattern, keep,
     child.dataType.asInstanceOf[MapType].valueType)
+  protected def method = "filter"
+  override protected def returnNullable = false
   override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(input: Any): Any =
-    worker.filter(input.asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[MapKeysRegexWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.filter($input)")
-  }
   override protected def withNewChildInternal(newChild: Expression): MapKeysRegex =
     copy(child = newChild)
 }
@@ -123,18 +117,13 @@ final class MapReplacePatternsWorker(mode: String, pattern: String,
 
 case class MapReplacePatterns(child: Expression, mode: String, pattern: String,
     replacement: String)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
   require(mode == "key" || mode == "value", s"replace_all_patterns mode: $mode")
-  private lazy val worker = new MapReplacePatternsWorker(mode, pattern,
+  protected lazy val kernel = new MapReplacePatternsWorker(mode, pattern,
     replacement, child.dataType.asInstanceOf[MapType].valueType)
+  protected def method = "replace"
+  override protected def returnNullable = false
   override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(input: Any): Any =
-    worker.replace(input.asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[MapReplacePatternsWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.replace($input)")
-  }
   override protected def withNewChildInternal(newChild: Expression): MapReplacePatterns =
     copy(child = newChild)
 }
@@ -180,17 +169,12 @@ final class MapTruncateValuesWorker(limit: Int) extends Serializable {
 }
 
 case class MapTruncateValues(child: Expression, limit: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
   require(limit >= 0, s"truncate_all limit must be non-negative: $limit")
-  private lazy val worker = new MapTruncateValuesWorker(limit)
+  protected lazy val kernel = new MapTruncateValuesWorker(limit)
+  protected def method = "truncate"
+  override protected def returnNullable = false
   override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-  override protected def nullSafeEval(input: Any): Any =
-    worker.truncate(input.asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[MapTruncateValuesWorker].getName)
-    defineCodeGen(ctx, ev, input => s"$w.truncate($input)")
-  }
   override protected def withNewChildInternal(newChild: Expression): MapTruncateValues =
     copy(child = newChild)
 }
@@ -267,38 +251,17 @@ final class LimitTypedMapsWorker(n: Int, priority: Array[String]) extends Serial
 }
 
 case class LimitTypedMaps(strings: Expression, numbers: Expression,
-    bools: Expression, n: Int, priority: Seq[String]) extends Expression {
+    bools: Expression, n: Int, priority: Seq[String]) extends Expression with InvokeKernel {
   require(n >= 0, s"limit must be non-negative: $n")
-  private lazy val worker = new LimitTypedMapsWorker(n, priority.toArray)
+  protected lazy val kernel = new LimitTypedMapsWorker(n, priority.toArray)
+  protected def method = "limit"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def children: Seq[Expression] = Seq(strings, numbers, bools)
   override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("strings", strings.dataType),
     org.apache.spark.sql.types.StructField("numbers", numbers.dataType),
     org.apache.spark.sql.types.StructField("bools", bools.dataType)))
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any = worker.limit(
-    strings.eval(input).asInstanceOf[MapData],
-    numbers.eval(input).asInstanceOf[MapData],
-    bools.eval(input).asInstanceOf[MapData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val w = ctx.addReferenceObj("worker", worker, classOf[LimitTypedMapsWorker].getName)
-    val s = strings.genCode(ctx)
-    val d = numbers.genCode(ctx)
-    val b = bools.genCode(ctx)
-    val md = classOf[MapData].getName
-    val ir = classOf[InternalRow].getName
-    ev.copy(code =
-      code"""
-        ${s.code}
-        ${d.code}
-        ${b.code}
-        boolean ${ev.isNull} = false;
-        $ir ${ev.value} = $w.limit(
-          ${s.isNull} ? ($md) null : ${s.value},
-          ${d.isNull} ? ($md) null : ${d.value},
-          ${b.isNull} ? ($md) null : ${b.value});""")
-  }
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): LimitTypedMaps =
     copy(strings = newChildren(0), numbers = newChildren(1), bools = newChildren(2))

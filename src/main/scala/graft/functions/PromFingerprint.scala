@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, Literal}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -233,39 +232,14 @@ object PromFingerprintKernel extends Serializable {
 
 /** `prom_fingerprint(base, extras, offset)` -> struct(hash, attrs). */
 case class PromFingerprint(base: Expression, extras: Expression, offset: Expression)
-    extends Expression {
+    extends Expression with InvokeKernel {
+  protected def kernel = PromFingerprintKernel
+  protected def method = "compute"
+  override protected def arguments = Seq(base, extras, PromFingerprint.offsetOrDefault(offset))
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = PromFingerprintKernel.structType
-  override def nullable: Boolean = false
   override def children: Seq[Expression] = Seq(base, extras, offset)
-
-  override def eval(input: InternalRow): Any = {
-    val b = base.eval(input)
-    val e = extras.eval(input)
-    val o = offset.eval(input)
-    PromFingerprintKernel.compute(
-      b.asInstanceOf[MapData], e.asInstanceOf[MapData],
-      if (o == null) Fingerprint.offset64Public else o.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val b = base.genCode(ctx)
-    val e = extras.genCode(ctx)
-    val o = offset.genCode(ctx)
-    val ir = classOf[InternalRow].getName
-    val offsetDefault = s"${Fingerprint.offset64Public}L"
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${e.code}
-        ${o.code}
-        $ir ${ev.value} = graft.functions.PromFingerprintKernel$$.MODULE$$.compute(
-          ${b.isNull} ? null : ${b.value},
-          ${e.isNull} ? null : ${e.value},
-          ${o.isNull} ? $offsetDefault : ${o.value});""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): PromFingerprint =
     copy(base = newChildren(0), extras = newChildren(1), offset = newChildren(2))
 }
@@ -275,51 +249,23 @@ object PromFingerprint {
     ExpressionUtils.column(PromFingerprint(
       ExpressionUtils.expression(base), ExpressionUtils.expression(extras),
       ExpressionUtils.expression(offset)))
+
+  /** A NULL offset hashes as the FNV-64 offset basis. */
+  private[functions] def offsetOrDefault(offset: Expression): Expression =
+    Coalesce(Seq(offset, Literal(Fingerprint.offset64Public)))
 }
 
 /** `prom_fingerprint_reduced(base, extras, offset, rule)` -> struct or NULL
   * when rule is NULL (no matching rule).
   */
 case class PromFingerprintReduced(base: Expression, extras: Expression,
-    offset: Expression, rule: Expression) extends Expression {
+    offset: Expression, rule: Expression) extends Expression with InvokeKernel {
+  protected def kernel = PromFingerprintKernel
+  protected def method = "computeReduced"
+  override protected def arguments = Seq(base, extras, PromFingerprint.offsetOrDefault(offset), rule)
+  override protected def propagateNull = false
   override def dataType: DataType = PromFingerprintKernel.structType
-  override def nullable: Boolean = true
   override def children: Seq[Expression] = Seq(base, extras, offset, rule)
-
-  override def eval(input: InternalRow): Any = {
-    val r = rule.eval(input)
-    if (r == null) return null
-    val b = base.eval(input)
-    val e = extras.eval(input)
-    val o = offset.eval(input)
-    PromFingerprintKernel.computeReduced(
-      b.asInstanceOf[MapData], e.asInstanceOf[MapData],
-      if (o == null) Fingerprint.offset64Public else o.asInstanceOf[Long],
-      r.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val b = base.genCode(ctx)
-    val e = extras.genCode(ctx)
-    val o = offset.genCode(ctx)
-    val r = rule.genCode(ctx)
-    val ir = classOf[InternalRow].getName
-    val offsetDefault = s"${Fingerprint.offset64Public}L"
-    ev.copy(code =
-      code"""
-        ${b.code}
-        ${e.code}
-        ${o.code}
-        ${r.code}
-        $ir ${ev.value} = graft.functions.PromFingerprintKernel$$.MODULE$$.computeReduced(
-          ${b.isNull} ? null : ${b.value},
-          ${e.isNull} ? null : ${e.value},
-          ${o.isNull} ? $offsetDefault : ${o.value},
-          ${r.isNull} ? null : ${r.value});
-        boolean ${ev.isNull} = (${ev.value} == null);""")
-  }
-
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): PromFingerprintReduced =
     copy(base = newChildren(0), extras = newChildren(1),
       offset = newChildren(2), rule = newChildren(3))
@@ -334,14 +280,10 @@ object PromFingerprintReduced {
 
 /** `prom_hash_with_name(hash, name)` (fingerprint.go:103-109). */
 case class PromHashWithName(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with InvokeKernel {
+  protected def kernel = PromFingerprintKernel
+  protected def method = "hashWithName"
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(hash: Any, name: Any): Any =
-    PromFingerprintKernel.hashWithName(hash.asInstanceOf[Long], name.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (h, n) =>
-      s"graft.functions.PromFingerprintKernel$$.MODULE$$.hashWithName($h, $n)")
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): PromHashWithName = copy(left = newLeft, right = newRight)
 }
@@ -377,7 +319,9 @@ object PromLabelsJsonKernel extends Serializable {
     }
   }
 
-  def render(name: UTF8String, ms: Array[MapData]): UTF8String = {
+  def render(name: UTF8String, point: MapData, scope: MapData,
+      resource: MapData): UTF8String = {
+    val ms = Array(point, scope, resource)
     var total = 1
     ms.foreach(m => if (m != null) total += m.numElements())
     val keys = new Array[UTF8String](total)
@@ -437,43 +381,13 @@ object PromLabelsJsonKernel extends Serializable {
 
 /** `prom_labels_json(name, pointAttrs, scopeAttrs, resourceAttrs)`. */
 case class PromLabelsJson(name: Expression, point: Expression,
-    scope: Expression, resource: Expression) extends Expression {
+    scope: Expression, resource: Expression) extends Expression with InvokeKernel {
+  protected def kernel = PromLabelsJsonKernel
+  protected def method = "render"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = StringType
-  override def nullable: Boolean = false
   override def children: Seq[Expression] = Seq(name, point, scope, resource)
-
-  override def eval(input: InternalRow): Any = {
-    val n = name.eval(input)
-    val p = point.eval(input)
-    val s = scope.eval(input)
-    val r = resource.eval(input)
-    PromLabelsJsonKernel.render(n.asInstanceOf[UTF8String],
-      Array(p.asInstanceOf[MapData], s.asInstanceOf[MapData], r.asInstanceOf[MapData]))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val n = name.genCode(ctx)
-    val p = point.genCode(ctx)
-    val s = scope.genCode(ctx)
-    val r = resource.genCode(ctx)
-    val md = classOf[MapData].getName
-    val u8 = classOf[UTF8String].getName
-    ev.copy(code =
-      code"""
-        ${n.code}
-        ${p.code}
-        ${s.code}
-        ${r.code}
-        $u8 ${ev.value} = graft.functions.PromLabelsJsonKernel$$.MODULE$$.render(
-          ${n.isNull} ? null : ${n.value},
-          new $md[] {
-            ${p.isNull} ? null : ${p.value},
-            ${s.isNull} ? null : ${s.value},
-            ${r.isNull} ? null : ${r.value}});""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): PromLabelsJson =
     copy(name = newChildren(0), point = newChildren(1),
       scope = newChildren(2), resource = newChildren(3))
@@ -507,14 +421,10 @@ object PrefixSumsKernel extends Serializable {
 }
 
 case class PrefixSums(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected def kernel = PrefixSumsKernel
+  protected def method = "sums"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    PrefixSumsKernel.sums(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.PrefixSumsKernel$$.MODULE$$.sums($input)")
   override protected def withNewChildInternal(newChild: Expression): PrefixSums =
     copy(child = newChild)
 }
@@ -533,6 +443,7 @@ object GoFormatFloatKernel extends Serializable {
   def format(d: Double): UTF8String = {
     if (d == java.lang.Double.POSITIVE_INFINITY) return UTF8String.fromString("+Inf")
     if (d == java.lang.Double.NEGATIVE_INFINITY) return UTF8String.fromString("-Inf")
+    if (d.isNaN) return UTF8String.fromString("NaN")
     // shortest round-trip decimal without exponent: BigDecimal of the
     // shortest repr, rendered plain
     val shortest = java.lang.Double.toString(d)
@@ -542,14 +453,10 @@ object GoFormatFloatKernel extends Serializable {
 }
 
 case class GoFormatFloat(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected def kernel = GoFormatFloatKernel
+  protected def method = "format"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    GoFormatFloatKernel.format(input.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.GoFormatFloatKernel$$.MODULE$$.format($input)")
   override protected def withNewChildInternal(newChild: Expression): GoFormatFloat =
     copy(child = newChild)
 }

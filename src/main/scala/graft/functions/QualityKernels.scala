@@ -1,16 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass text-quality kernel (round 6).
   *
-  * Bit-identical to the composed column form in
-  * `TextOps.qualityColumnsComposed` — `length`, `split(trim(.), "\s+")`,
+  * Bit-identical to the composed column form `ComposedForms.qualityColumns`
+  * (golden-tested in ShinglesSpec) — `length`, `split(trim(.), "\s+")`,
   * two `size(regexp_extract_all(...))` counts, `CountInSet` stopwords, and
   * the rounded ratio/score arithmetic — but computed in ONE code-generated
   * call. The composed form built a materialized ARRAY of every matched
@@ -94,21 +92,10 @@ final class QualityStatsWorker(stopwords: Array[String]) extends Serializable {
 
 /** `quality_stats(text)` -> struct of the seven quality columns. */
 case class QualityStats(child: Expression, stopwords: Seq[String])
-    extends UnaryExpression {
-
-  private lazy val worker = new QualityStatsWorker(stopwords.toArray)
-
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new QualityStatsWorker(stopwords.toArray)
+  protected def method = "compute"
   override def dataType: DataType = QualityStats.schema
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[QualityStatsWorker].getName)
-    nullSafeCodeGen(ctx, ev, input => s"${ev.value} = $w.compute($input);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): QualityStats =
     copy(child = newChild)
 }

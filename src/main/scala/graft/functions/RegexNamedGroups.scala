@@ -3,7 +3,6 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
@@ -212,28 +211,14 @@ final class NamedGroupMatcher(val pattern: String) extends Serializable {
   * per-task matcher, keeping the surrounding stage in whole-stage codegen.
   */
 case class RegexExtractNamedGroups(child: Expression, pattern: String)
-    extends UnaryExpression {
+    extends UnaryExpression with InvokeKernel {
 
   require(RegexNamedGroups.namedGroupCount(pattern) > 0,
     s"regex pattern must contain at least one named group: $pattern")
 
-  private lazy val matcher = new NamedGroupMatcher(pattern)
-
+  protected lazy val kernel = new NamedGroupMatcher(pattern)
+  protected def method = "extract"
   override def dataType: DataType = MapType(StringType, StringType, valueContainsNull = true)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    matcher.extract(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("matcher", matcher, classOf[NamedGroupMatcher].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = $m.extract($input);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): RegexExtractNamedGroups =
     copy(child = newChild)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -141,27 +139,13 @@ final class RepetitionWorker extends Serializable {
 }
 
 /** `repetition_stats(text)` -> struct of the 8 repetition signals. */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
-  private lazy val worker = new RepetitionWorker
-
+case class RepetitionStats(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new RepetitionWorker
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = RepetitionStats.schema
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[RepetitionWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        InternalRow ${ev.value} = $w.compute(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
     copy(child = newChild)
 }

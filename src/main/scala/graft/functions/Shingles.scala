@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType, StructField, StructType}
@@ -10,7 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass distinct word-n-gram shingles.
   *
-  * Semantically identical to the composed column form in TextOps.shingles —
+  * Semantically identical to the composed column form `ComposedForms.shingles`
+  * (golden-tested in ShinglesSpec) —
   * `array_distinct(CASE WHEN size(split(trim(text),'\s+')) >= n THEN
   * transform(sequence(1, size-n+1), i -> concat_ws(' ', slice(toks,i,n)))
   * ELSE array(concat_ws(' ', toks)) END)` — and therefore to the DuckDB
@@ -70,14 +70,12 @@ object ShinglesKernel extends Serializable {
 }
 
 /** `shingle_array(text, n)` -> array<string> of distinct n-gram shingles. */
-case class ShingleArray(child: Expression, n: Int) extends UnaryExpression {
+case class ShingleArray(child: Expression, n: Int)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = ShinglesKernel
+  protected def method = "shingles"
+  override protected def arguments = Seq(child, Literal(n))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    ShinglesKernel.shingles(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.ShinglesKernel$$.MODULE$$.shingles($input, $n)")
   override protected def withNewChildInternal(newChild: Expression): ShingleArray =
     copy(child = newChild)
 }
@@ -130,14 +128,12 @@ object WindowHashKernel extends Serializable {
   * the bytes are in bijection with the hex form, and the binary key
   * halves every downstream exchange of the exploded window rows.
   */
-case class WindowHashes(child: Expression, w: Int) extends UnaryExpression {
+case class WindowHashes(child: Expression, w: Int)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = WindowHashKernel
+  protected def method = "windows"
+  override protected def arguments = Seq(child, Literal(w))
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    WindowHashKernel.windows(input.asInstanceOf[UTF8String], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.WindowHashKernel$$.MODULE$$.windows($input, $w)")
   override protected def withNewChildInternal(newChild: Expression): WindowHashes =
     copy(child = newChild)
 }
@@ -202,32 +198,13 @@ object KeptStatsKernel extends Serializable {
   * n_removed, n_spans, kept_md5). Null `removed` = nothing removed.
   */
 case class KeptStats(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with InvokeKernel {
+  protected def kernel = KeptStatsKernel
+  protected def method = "compute"
+  override protected def propagateNull = false
+  // compute returns null exactly when the token array is null
+  override protected def returnNullable = left.nullable
   override def dataType: DataType = KeptStats.schema
-  override def nullable: Boolean = left.nullable
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val t = left.eval(input)
-    val r = right.eval(input)
-    KeptStatsKernel.compute(
-      t.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${l.code}
-        ${r.code}
-        InternalRow ${ev.value} = graft.functions.KeptStatsKernel$$.MODULE$$.compute(
-          ${l.isNull} ? null : ${l.value}, ${r.isNull} ? null : ${r.value});
-        boolean ${ev.isNull} = ${ev.value} == null;
-      """)
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): KeptStats =
     copy(left = newLeft, right = newRight)

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -51,17 +50,11 @@ object SimHashKernel extends Serializable {
   }
 }
 
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = SimHashKernel
+  protected def method = "simhash64"
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHashKernel.simhash64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.SimHashKernel$$.MODULE$$.simhash64($input)")
-
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }

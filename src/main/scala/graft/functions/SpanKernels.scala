@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
@@ -12,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Span-shaping kernels for the traces exporter slice
   * (`exporter/clickhousetracesexporter/clickhouse_exporter_v3.go`).
   *
-  * All are plain codegen-friendly expressions (worker object + defineCodeGen)
+  * All are plain codegen-friendly expressions (worker object + [[InvokeKernel]])
   * so the spansV3 projection stays inside whole-stage codegen — the same
   * discipline as [[MapSortedJsonKernel]] (one CodegenFallback expression
   * would drag the entire span projection interpreted).
@@ -65,14 +64,11 @@ object SpanEventsJsonKernel extends Serializable {
 }
 
 /** `span_events_json(events)` — see [[SpanEventsJsonKernel]]. */
-case class SpanEventsJson(child: Expression) extends UnaryExpression {
+case class SpanEventsJson(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = SpanEventsJsonKernel
+  protected def method = "toJsonArray"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    SpanEventsJsonKernel.toJsonArray(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.SpanEventsJsonKernel$$.MODULE$$.toJsonArray($input)")
   override protected def withNewChildInternal(newChild: Expression): SpanEventsJson =
     copy(child = newChild)
 }
@@ -93,7 +89,10 @@ object SpanReferencesKernel extends Serializable {
     * (their own golden, clickhouse_exporter_v3_test.go:436). Replicated
     * faithfully.
     */
-  def toJson(traceId: UTF8String, parentSpanId: UTF8String, links: ArrayData): UTF8String = {
+  def toJson(span: InternalRow): UTF8String = {
+    val traceId = if (span.isNullAt(0)) null else span.getUTF8String(0)
+    val parentSpanId = if (span.isNullAt(1)) null else span.getUTF8String(1)
+    val links: ArrayData = if (span.isNullAt(2)) null else span.getArray(2)
     val parent = if (parentSpanId == null) "" else parentSpanId.toString
     val nLinks = if (links == null) 0 else links.numElements()
     val sb = new java.lang.StringBuilder(64)
@@ -132,24 +131,11 @@ object SpanReferencesKernel extends Serializable {
 }
 
 /** `span_references(struct(trace_id, parent_span_id, links))`. */
-case class SpanReferences(child: Expression) extends UnaryExpression {
+case class SpanReferences(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = SpanReferencesKernel
+  protected def method = "toJson"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any = {
-    val row = input.asInstanceOf[InternalRow]
-    SpanReferencesKernel.toJson(
-      if (row.isNullAt(0)) null else row.getUTF8String(0),
-      if (row.isNullAt(1)) null else row.getUTF8String(1),
-      if (row.isNullAt(2)) null else row.getArray(2))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = graft.functions.SpanReferencesKernel$$.MODULE$$.toJson(
-         |  $input.isNullAt(0) ? null : $input.getUTF8String(0),
-         |  $input.isNullAt(1) ? null : $input.getUTF8String(1),
-         |  $input.isNullAt(2) ? null : $input.getArray(2));
-       """.stripMargin)
   override protected def withNewChildInternal(newChild: Expression): SpanReferences =
     copy(child = newChild)
 }
@@ -170,14 +156,11 @@ object GoJsonQuoteKernel extends Serializable {
     UTF8String.fromString(JsonCanon.quote(if (s == null) "" else s.toString))
 }
 
-case class GoJsonQuote(child: Expression) extends UnaryExpression {
+case class GoJsonQuote(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = GoJsonQuoteKernel
+  protected def method = "quote"
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    GoJsonQuoteKernel.quote(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.GoJsonQuoteKernel$$.MODULE$$.quote($input)")
   override protected def withNewChildInternal(newChild: Expression): GoJsonQuote =
     copy(child = newChild)
 }
@@ -221,17 +204,12 @@ object MapDropKeyPrefixKernel extends Serializable {
   }
 }
 
-case class MapDropKeyPrefix(child: Expression, prefix: String) extends UnaryExpression {
-  private val prefixUtf8 = UTF8String.fromString(prefix)
+case class MapDropKeyPrefix(child: Expression, prefix: String)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = MapDropKeyPrefixKernel
+  protected def method = "drop"
+  override protected def arguments = Seq(child, Literal(prefix))
   override def dataType: DataType = child.dataType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    MapDropKeyPrefixKernel.drop(input.asInstanceOf[MapData], prefixUtf8)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val p = ctx.addReferenceObj("prefix", prefixUtf8, classOf[UTF8String].getName)
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.MapDropKeyPrefixKernel$$.MODULE$$.drop($input, $p)")
-  }
   override protected def withNewChildInternal(newChild: Expression): MapDropKeyPrefix =
     copy(child = newChild)
 }

@@ -5,7 +5,6 @@ import java.security.MessageDigest
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -79,23 +78,12 @@ final class StableTokenRewriteWorker(tags: Array[String], patterns: Array[String
 
 /** `stable_token_rewrite(text)` — see [[StableTokenRewriteWorker]]. */
 case class StableTokenRewrite(child: Expression, classes: Seq[(String, String)])
-    extends UnaryExpression {
-
-  @transient private lazy val worker =
+    extends UnaryExpression with InvokeKernel {
+  @transient protected lazy val kernel =
     new StableTokenRewriteWorker(classes.map(_._1).toArray, classes.map(_._2).toArray)
-
+  protected def method = "rewrite"
+  override protected def returnNullable = false
   override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override protected def nullSafeEval(input: Any): Any =
-    worker.rewrite(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("rewriteWorker", worker,
-      classOf[StableTokenRewriteWorker].getName)
-    defineCodeGen(ctx, ev, c => s"$w.rewrite($c)")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): StableTokenRewrite =
     copy(child = newChild)
 

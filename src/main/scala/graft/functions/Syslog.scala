@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
@@ -53,14 +52,11 @@ object OctetSplitKernel extends Serializable {
   }
 }
 
-case class OctetSplit(child: Expression) extends UnaryExpression {
+case class OctetSplit(child: Expression)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = OctetSplitKernel
+  protected def method = "split"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OctetSplitKernel.split(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, input =>
-      s"graft.functions.OctetSplitKernel$$.MODULE$$.split($input)")
   override protected def withNewChildInternal(newChild: Expression): OctetSplit =
     copy(child = newChild)
 }

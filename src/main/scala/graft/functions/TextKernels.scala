@@ -66,26 +66,13 @@ final class CountInSetWorker(items: Array[String]) extends Serializable {
 case class CountInSet(
     child: org.apache.spark.sql.catalyst.expressions.Expression,
     items: Seq[String])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  private lazy val worker = new CountInSetWorker(items.toArray)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new CountInSetWorker(items.toArray)
+  protected def method = "count"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: org.apache.spark.sql.types.DataType =
     org.apache.spark.sql.types.IntegerType
-  override def nullable: Boolean = false
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    worker.count(child.eval(input)
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[CountInSetWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        int ${ev.value} = $w.count(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
   override protected def withNewChildInternal(
       newChild: org.apache.spark.sql.catalyst.expressions.Expression): CountInSet =
     copy(child = newChild)
@@ -150,25 +137,12 @@ final class CharEntropyWorker extends Serializable {
 /** `char_entropy(text)` -> struct(n_chars, n_distinct, h_sum_e6). */
 case class CharEntropyStats(
     child: org.apache.spark.sql.catalyst.expressions.Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  private lazy val worker = new CharEntropyWorker
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new CharEntropyWorker
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: org.apache.spark.sql.types.DataType = CharEntropyStats.schema
-  override def nullable: Boolean = false
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    worker.compute(child.eval(input)
-      .asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val w = ctx.addReferenceObj("worker", worker, classOf[CharEntropyWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        InternalRow ${ev.value} = $w.compute(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
   override protected def withNewChildInternal(
       newChild: org.apache.spark.sql.catalyst.expressions.Expression): CharEntropyStats =
     copy(child = newChild)

@@ -321,24 +321,11 @@ case class GoTimeParse(
     child: org.apache.spark.sql.catalyst.expressions.Expression,
     javaPattern: String,
     defaultZone: String
-) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-
-  private lazy val worker = new TimeParseWorker(javaPattern, defaultZone)
+) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new TimeParseWorker(javaPattern, defaultZone)
+  protected def method = "parse"
   override def dataType: org.apache.spark.sql.types.DataType =
     org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    worker.parse(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("worker", worker, classOf[TimeParseWorker].getName)
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |java.lang.Long ${ev.value}Box = $w.parse($input);
-         |if (${ev.value}Box == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}Box.longValue(); }
-       """.stripMargin)
-  }
   override protected def withNewChildInternal(
       newChild: org.apache.spark.sql.catalyst.expressions.Expression): GoTimeParse =
     copy(child = newChild)

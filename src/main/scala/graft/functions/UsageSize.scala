@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -156,24 +154,12 @@ object JsonStringArraySizeKernel extends Serializable {
 }
 
 case class JsonStringArraySize(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
+  protected def kernel = JsonStringArraySizeKernel
+  protected def method = "size"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    JsonStringArraySizeKernel.size(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        long ${ev.value} = graft.functions.JsonStringArraySizeKernel$$.MODULE$$.size(
-          ${c.isNull} ? null : ${c.value});
-        boolean ${ev.isNull} = false;""")
-  }
   override protected def withNewChildInternal(newChild: Expression): JsonStringArraySize =
     copy(child = newChild)
 }
@@ -184,32 +170,13 @@ object JsonStringArraySize {
 }
 
 case class TypedAttrsGoJson(strings: Expression, numbers: Expression,
-    bools: Expression, dropNonFinite: Boolean = false) extends Expression {
+    bools: Expression, dropNonFinite: Boolean = false) extends Expression with InvokeKernel {
+  protected def kernel = TypedAttrsGoJsonKernel
+  protected def method = "toJson"
+  override protected def arguments = children :+ Literal(dropNonFinite)
+  override protected def propagateNull = false
   override def children: Seq[Expression] = Seq(strings, numbers, bools)
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any =
-    TypedAttrsGoJsonKernel.toJson(
-      strings.eval(input).asInstanceOf[MapData],
-      numbers.eval(input).asInstanceOf[MapData],
-      bools.eval(input).asInstanceOf[MapData], dropNonFinite)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val sC = strings.genCode(ctx)
-    val nC = numbers.genCode(ctx)
-    val bC = bools.genCode(ctx)
-    val u = classOf[UTF8String].getName
-    ev.copy(code =
-      code"""
-        ${sC.code}
-        ${nC.code}
-        ${bC.code}
-        $u ${ev.value} = graft.functions.TypedAttrsGoJsonKernel$$.MODULE$$.toJson(
-          ${sC.isNull} ? null : ${sC.value},
-          ${nC.isNull} ? null : ${nC.value},
-          ${bC.isNull} ? null : ${bC.value}, $dropNonFinite);
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TypedAttrsGoJson =
     copy(strings = newChildren(0), numbers = newChildren(1), bools = newChildren(2))

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -129,26 +128,20 @@ object VectorKernelsImpl extends Serializable {
 }
 
 
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
+case class DotProduct(left: Expression, right: Expression)
+    extends BinaryExpression with InvokeKernel {
+  protected def kernel = VectorKernelsImpl
+  protected def method = "dot"
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernelsImpl.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorKernelsImpl$$.MODULE$$.dot($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
     copy(left = l, right = r)
 }
 
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
+case class CosineSim(left: Expression, right: Expression)
+    extends BinaryExpression with InvokeKernel {
+  protected def kernel = VectorKernelsImpl
+  protected def method = "cosine"
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernelsImpl.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorKernelsImpl$$.MODULE$$.cosine($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
     copy(left = l, right = r)
 }
@@ -157,14 +150,12 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   * plane matrix is derived deterministically (see planeMatrix) and shared —
   * NOT recomputed per row (round-1 paid ~planes x dims md5 calls per row).
   */
-case class HyperplaneSig(child: Expression, planes: Int) extends UnaryExpression {
+case class HyperplaneSig(child: Expression, planes: Int)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = VectorKernelsImpl
+  protected def method = "signature"
+  override protected def arguments = Seq(child, Literal(planes))
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    VectorKernelsImpl.signature(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.VectorKernelsImpl$$.MODULE$$.signature($v, $planes)")
   override protected def withNewChildInternal(newChild: Expression): HyperplaneSig =
     copy(child = newChild)
 }
@@ -176,14 +167,12 @@ case class HyperplaneSig(child: Expression, planes: Int) extends UnaryExpression
   * preserved to (1±eps) by the JL lemma. Integer arithmetic end-to-end (see
   * jlProject) keeps it bit-identical across engines.
   */
-case class JlProject(child: Expression, dOut: Int) extends UnaryExpression {
+case class JlProject(child: Expression, dOut: Int)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = VectorKernelsImpl
+  protected def method = "jlProject"
+  override protected def arguments = Seq(child, Literal(dOut))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    VectorKernelsImpl.jlProject(input.asInstanceOf[ArrayData], dOut)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v =>
-      s"graft.functions.VectorKernelsImpl$$.MODULE$$.jlProject($v, $dOut)")
   override protected def withNewChildInternal(newChild: Expression): JlProject =
     copy(child = newChild)
 }

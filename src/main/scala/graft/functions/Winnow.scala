@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -82,24 +80,13 @@ final class WinnowWorker(k: Int, w: Int) extends Serializable {
 }
 
 /** `winnow_fps(text)` -> array<bigint> of winnowed fingerprint hashes. */
-case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  private lazy val worker = new WinnowWorker(k, w)
+case class WinnowFps(child: Expression, k: Int, w: Int)
+    extends UnaryExpression with InvokeKernel {
+  protected lazy val kernel = new WinnowWorker(k, w)
+  protected def method = "compute"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any =
-    worker.compute(child.eval(input).asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val wk = ctx.addReferenceObj("worker", worker, classOf[WinnowWorker].getName)
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $wk.compute(${c.isNull} ? null : ${c.value});
-      """, isNull = FalseLiteral)
-  }
   override protected def withNewChildInternal(newChild: Expression): WinnowFps =
     copy(child = newChild)
 }

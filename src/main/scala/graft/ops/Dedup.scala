@@ -228,16 +228,7 @@ object Dedup {
       threshold: Double = 0.9, maxDocs: Long = 100000L,
       uncapped: Boolean = false): DataFrame = {
     guardVerifierInput(docs, maxDocs, uncapped, "containmentPairs")
-    val sh = Par.widen(docs, col(idCol)).select(col(idCol).as("id"),
-      explode(TextOps.shingles(col(textCol), shingleN)).as("s"))
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("l").join(sh.as("r"),
-        col("l.s") === col("r.s") && col("l.id") < col("r.id"))
-      .groupBy(col("l.id").as("a"), col("r.id").as("b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "a").withColumnRenamed("sz", "sza"), "a")
-      .join(sizes.withColumnRenamed("id", "b").withColumnRenamed("sz", "szb"), "b")
+    shingleIntersections(docs, textCol, idCol, shingleN)
       .withColumn("containment",
         round(col("inter").cast("double") / least(col("sza"), col("szb")), 6))
       .withColumn("jaccard",
@@ -253,6 +244,20 @@ object Dedup {
       shingleN: Int = 3, threshold: Double = 0.8, maxDocs: Long = 100000L,
       uncapped: Boolean = false): DataFrame = {
     guardVerifierInput(docs, maxDocs, uncapped, "ngramJaccardPairs")
+    shingleIntersections(docs, textCol, idCol, shingleN)
+      .withColumn("jaccard",
+        round(col("inter").cast("double") / (col("sza") + col("szb") - col("inter")), 6))
+      .filter(col("jaccard") >= threshold)
+      .select("a", "b", "jaccard")
+  }
+
+  /** The exact verifiers' shared core: every doc pair (a < b) sharing at
+    * least one shingle, with its shingle-intersection size `inter` and both
+    * shingle-set sizes `sza`/`szb`. Self-joins exploded shingles, so cost is
+    * quadratic in shingle collisions.
+    */
+  private def shingleIntersections(docs: DataFrame, textCol: String, idCol: String,
+      shingleN: Int): DataFrame = {
     val sh = Par.widen(docs, col(idCol)).select(col(idCol).as("id"),
       explode(TextOps.shingles(col(textCol), shingleN)).as("s"))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
@@ -263,10 +268,6 @@ object Dedup {
     inter
       .join(sizes.withColumnRenamed("id", "a").withColumnRenamed("sz", "sza"), "a")
       .join(sizes.withColumnRenamed("id", "b").withColumnRenamed("sz", "szb"), "b")
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("sza") + col("szb") - col("inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
   }
 
   /** SimHash near-dup: 64-bit simhash over whitespace tokens (md5-derived

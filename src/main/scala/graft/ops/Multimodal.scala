@@ -2,12 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types._
+
+import graft.functions.InvokeKernel
 
 /** Multimodal column plumbing: image/audio/video as opaque `BINARY` columns
   * with typed metadata, plus decode / feature-extract / frame-sample stages.
@@ -113,22 +114,12 @@ object FakeDecodeKernel extends Serializable {
   }
 }
 
-case class FakeDecode(child: Expression, featureDim: Int) extends UnaryExpression {
+case class FakeDecode(child: Expression, featureDim: Int)
+    extends UnaryExpression with InvokeKernel {
+  protected def kernel = FakeDecodeKernel
+  protected def method = "decode"
+  override protected def arguments = Seq(child, Literal(featureDim))
   override def dataType: DataType = Multimodal.decodedSchema
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    FakeDecodeKernel.decode(input.asInstanceOf[Array[Byte]], featureDim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, input =>
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-         |  graft.ops.FakeDecodeKernel$$.MODULE$$.decode($input, $featureDim);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): FakeDecode =
     copy(child = newChild)
 }

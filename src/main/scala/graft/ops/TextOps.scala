@@ -31,7 +31,8 @@ object TextOps {
 
   def qualityColumns(text: Column): Seq[(String, Column)] = {
     // round 6: ONE codegen kernel pass (functions/QualityStats) —
-    // bit-identical to [[qualityColumnsComposed]] (golden-tested), whose
+    // bit-identical to the composed reference form golden-tested in
+    // ShinglesSpec (`ComposedForms.qualityColumns`), whose
     // two `size(regexp_extract_all(...))` counts materialized an array of
     // every matched character per row (18 s of the 18.3 s epoch_mix pass
     // at 500 k docs). Identical getField trees share one evaluation via
@@ -39,39 +40,6 @@ object TextOps {
     val s = graft.functions.QualityStats(text, stopwords)
     Seq("n_chars", "n_words", "avg_word_len", "punct_ratio", "alpha_ratio",
       "stopword_ratio", "quality_score").map(n => n -> s.getField(n))
-  }
-
-  /** The original composed-column quality form — kept as the executable
-    * spec the kernel is golden-tested against (ShinglesSpec).
-    */
-  def qualityColumnsComposed(text: Column): Seq[(String, Column)] = {
-    val nChars = length(text)
-    val words = split(trim(text), "\\s+")
-    val nWords = wsTokenCount(text)
-    val avgWordLen = when(nWords > 0,
-      round((nChars - (nWords - 1)).cast("double") / nWords, 4)).otherwise(lit(0.0))
-    val nPunct = size(regexp_extract_all(text, lit("[^A-Za-z0-9\\s]"), lit(0)))
-    val punctRatio = when(nChars > 0, round(nPunct.cast("double") / nChars, 6)).otherwise(0.0)
-    val nAlpha = size(regexp_extract_all(text, lit("[A-Za-z]"), lit(0)))
-    val alphaRatio = when(nChars > 0, round(nAlpha.cast("double") / nChars, 6)).otherwise(0.0)
-    // codegen kernel: filter() is a CodegenFallback HOF and would drag this
-    // whole projection out of whole-stage codegen
-    val nStop = graft.functions.CountInSet(words, stopwords)
-    val stopRatio = when(nWords > 0, round(nStop.cast("double") / nWords, 6)).otherwise(0.0)
-    // composite: alpha-heavy, some stopwords, not punctuation-heavy,
-    // reasonable word lengths
-    val score = round(
-      greatest(lit(0.0), least(lit(1.0),
-        alphaRatio * 0.5 + least(stopRatio * lit(4.0), lit(1.0)) * 0.3 +
-          (lit(1.0) - least(punctRatio * lit(5.0), lit(1.0))) * 0.2)), 6)
-    Seq(
-      "n_chars" -> nChars.cast("long"),
-      "n_words" -> nWords.cast("long"),
-      "avg_word_len" -> avgWordLen,
-      "punct_ratio" -> punctRatio,
-      "alpha_ratio" -> alphaRatio,
-      "stopword_ratio" -> stopRatio,
-      "quality_score" -> score)
   }
 
   /** n-gram-heuristic language ID: count marker words per language, take the
@@ -101,26 +69,14 @@ object TextOps {
 
   /** Word n-gram shingles (distinct), the dedup primitives' input.
     * One codegen kernel call (graft.functions.ShingleArray); bit-identical
-    * to [[shinglesComposed]], the original column form the DuckDB oracle
-    * replicates — the composed form's interpreted `transform`/`slice`
+    * to the original column form the DuckDB oracle replicates
+    * (`ComposedForms.shingles` in ShinglesSpec) — the composed form's interpreted `transform`/`slice`
     * lambdas re-evaluate `split(trim(text))` per shingle position and cost
     * ~30x more per row (round-6 measurement: 3.4 s -> ~0.1 s for the
     * 5 000-doc explode at sf0.1).
     */
   def shingles(text: Column, n: Int): Column =
     graft.functions.ShingleArray(text, n)
-
-  /** The original composed-column shingle form — kept as the executable
-    * spec the kernel is golden-tested against (TextKernelSpec).
-    */
-  def shinglesComposed(text: Column, n: Int): Column = {
-    val tokens = split(trim(text), "\\s+")
-    array_distinct(
-      when(size(tokens) >= n,
-        transform(sequence(lit(1), size(tokens) - (n - 1)),
-          i => concat_ws(" ", slice(tokens, i, lit(n)))))
-        .otherwise(array(concat_ws(" ", tokens))))
-  }
 
   /** Per-group approximate-distinct via the deterministic md5-HLL sketch
     * (functions/HllKernels.scala): one aggregation whose buffer is the

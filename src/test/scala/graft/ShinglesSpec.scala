@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextOps
@@ -39,7 +40,7 @@ class ShinglesSpec extends SparkSuite {
     for (n <- Seq(3, 5, 13)) {
       val both = df.select(
         TextOps.shingles(col("text"), n).as("k"),
-        TextOps.shinglesComposed(col("text"), n).as("c"))
+        ComposedForms.shingles(col("text"), n).as("c"))
       val bad = both.filter(not(col("k") <=> col("c"))).collect()
       assert(bad.isEmpty, s"n=$n mismatches: ${bad.take(3).mkString("; ")}")
     }
@@ -69,7 +70,7 @@ class ShinglesSpec extends SparkSuite {
       "ab\fc\rd", "ALLCAPS 12345 .... ,,,,", "😀 emoji 😀 test")
     val df = (edge ++ extra ++ randTexts(300)).toDF("text")
     val k = TextOps.qualityColumns(col("text"))
-    val c = TextOps.qualityColumnsComposed(col("text"))
+    val c = ComposedForms.qualityColumns(col("text"))
     val both = df.select(
       (k.map { case (n, cc) => cc.as(s"k_$n") } ++
         c.map { case (n, cc) => cc.as(s"c_$n") }): _*)
@@ -85,5 +86,51 @@ class ShinglesSpec extends SparkSuite {
     val r = df.select(TextOps.shingles(col("text"), 3).as("k")).collect()
     assert(r(0).isNullAt(0))
     assert(!r(1).isNullAt(0))
+  }
+}
+
+/** The original composed-column forms of the shingle and quality kernels —
+  * the executable specs the kernels are golden-tested against above, and the
+  * forms the DuckDB oracle replicates.
+  */
+object ComposedForms {
+
+  def shingles(text: Column, n: Int): Column = {
+    val tokens = split(trim(text), "\\s+")
+    array_distinct(
+      when(size(tokens) >= n,
+        transform(sequence(lit(1), size(tokens) - (n - 1)),
+          i => concat_ws(" ", slice(tokens, i, lit(n)))))
+        .otherwise(array(concat_ws(" ", tokens))))
+  }
+
+  def qualityColumns(text: Column): Seq[(String, Column)] = {
+    val nChars = length(text)
+    val words = split(trim(text), "\\s+")
+    val nWords = TextOps.wsTokenCount(text)
+    val avgWordLen = when(nWords > 0,
+      round((nChars - (nWords - 1)).cast("double") / nWords, 4)).otherwise(lit(0.0))
+    val nPunct = size(regexp_extract_all(text, lit("[^A-Za-z0-9\\s]"), lit(0)))
+    val punctRatio = when(nChars > 0, round(nPunct.cast("double") / nChars, 6)).otherwise(0.0)
+    val nAlpha = size(regexp_extract_all(text, lit("[A-Za-z]"), lit(0)))
+    val alphaRatio = when(nChars > 0, round(nAlpha.cast("double") / nChars, 6)).otherwise(0.0)
+    // codegen kernel: filter() is a CodegenFallback HOF and would drag this
+    // whole projection out of whole-stage codegen
+    val nStop = graft.functions.CountInSet(words, TextOps.stopwords)
+    val stopRatio = when(nWords > 0, round(nStop.cast("double") / nWords, 6)).otherwise(0.0)
+    // composite: alpha-heavy, some stopwords, not punctuation-heavy,
+    // reasonable word lengths
+    val score = round(
+      greatest(lit(0.0), least(lit(1.0),
+        alphaRatio * 0.5 + least(stopRatio * lit(4.0), lit(1.0)) * 0.3 +
+          (lit(1.0) - least(punctRatio * lit(5.0), lit(1.0))) * 0.2)), 6)
+    Seq(
+      "n_chars" -> nChars.cast("long"),
+      "n_words" -> nWords.cast("long"),
+      "avg_word_len" -> avgWordLen,
+      "punct_ratio" -> punctRatio,
+      "alpha_ratio" -> alphaRatio,
+      "stopword_ratio" -> stopRatio,
+      "quality_score" -> score)
   }
 }

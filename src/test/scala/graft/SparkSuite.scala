@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites (one JVM, local mode). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.sessionBuilder(4, "graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
