@@ -37,12 +37,47 @@ final case class JobConfig(
 
 object TranscriptJob {
 
-  /** transcript table -> committed sinks under `outDir`; returns the sink
-    * DataFrames (lazily re-readable via [[GraftTable.read]]).
+  /** transcript table -> committed sinks under `outDir`; returns each sink's
+    * committed row count (the tables are re-readable via [[GraftTable.read]]).
+    *
+    * The five sink writes run concurrently from the one cached `main` batch
+    * ([[GraftTable.writeAll]]), as the reference exporter sends its five
+    * table batches at once (exporter.go:796-827). The fan-out is
+    * all-or-error: either every sink commits and the counts come back, or
+    * `run` throws the first failure, and only after every other write has
+    * finished (each either committed or failed). `main` is unpersisted only
+    * then. With `resume`, `logs_v2` appends only its missing route
+    * partitions and the resource sink only its missing rows, so a re-run
+    * after a failure completes the fan-out.
     */
   def run(spark: SparkSession, transcripts: DataFrame, outDir: String,
       spec: PipelineSpec, cfg: JobConfig = JobConfig(),
       resume: Boolean = false): Map[String, Long] = {
+    // shared upstream of the 5-way fan-out (exporter.go:796-827)
+    val main = logsV2(transcripts, spec, cfg).cache()
+    try {
+      val existingRes =
+        if (resume) scala.util.Try(GraftTable.read(spark, s"$outDir/logs_v2_resource")).toOption
+        else None
+      val sinks: Seq[(String, String => GraftTable.Snapshot)] = Seq(
+        "logs_v2" -> (t =>
+          if (resume) GraftTable.appendMissingPartitions(main, t, "route", "logs_v2")
+          else GraftTable.write(main, t, Some("route"), "logs_v2")),
+        "logs_v2_resource" -> (t => GraftTable.write(
+          Exporter.resources(main, existingRes), t, None, "resources", overwrite = !resume)),
+        "tag_attributes_v2" -> (t => GraftTable.write(
+          Exporter.tagAttributes(main, cfg.exporter), t, None, "tags")),
+        "logs_attribute_keys" -> (t => GraftTable.write(Exporter.attributeKeys(main), t, None, "keys")),
+        "logs_resource_keys" -> (t => GraftTable.write(Exporter.resourceKeys(main), t, None, "keys")))
+      val snaps = GraftTable.writeAll(sinks.map { case (name, w) => s"$outDir/$name" -> w })
+      sinks.map(_._1).zip(snaps.map(_.rowCount)).toMap
+    } finally main.unpersist()
+  }
+
+  /** The `logs_v2` batch `run` caches and fans out: pipeline, enrich, layout
+    * shuffle, export, ordered within each partition.
+    */
+  def logsV2(transcripts: DataFrame, spec: PipelineSpec, cfg: JobConfig = JobConfig()): DataFrame = {
     val logs = Transcripts.toLogFrame(transcripts)
     val routed = Enrich.roleToolEnrich(Pipeline.compile(spec)(logs))
 
@@ -52,31 +87,6 @@ object TranscriptJob {
       if (cfg.layoutPartitions > 0) routed.repartition(cfg.layoutPartitions, col("conv_id"), block)
       else routed.repartition(col("conv_id"), block)
 
-    val main = Exporter.logsV2(layout, cfg.exporter)
-      .sortWithinPartitions("conv_id", "turn_idx")
-      .cache() // shared upstream of the 5-way fan-out (exporter.go:796-827)
-    try {
-      val counts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      val existingRes =
-        if (resume) scala.util.Try(GraftTable.read(spark, s"$outDir/logs_v2_resource")).toOption
-        else None
-
-      val mainSnap =
-        if (resume) GraftTable.appendMissingPartitions(main, s"$outDir/logs_v2", "route", "logs_v2")
-        else GraftTable.write(main, s"$outDir/logs_v2", Some("route"), "logs_v2")
-      counts("logs_v2") = mainSnap.rowCount
-
-      counts("logs_v2_resource") = GraftTable.write(
-        Exporter.resources(main, existingRes), s"$outDir/logs_v2_resource",
-        None, "resources", overwrite = !resume).rowCount
-      counts("tag_attributes_v2") = GraftTable.write(
-        Exporter.tagAttributes(main, cfg.exporter), s"$outDir/tag_attributes_v2",
-        None, "tags").rowCount
-      counts("logs_attribute_keys") = GraftTable.write(
-        Exporter.attributeKeys(main), s"$outDir/logs_attribute_keys", None, "keys").rowCount
-      counts("logs_resource_keys") = GraftTable.write(
-        Exporter.resourceKeys(main), s"$outDir/logs_resource_keys", None, "keys").rowCount
-      counts.toMap
-    } finally main.unpersist()
+    Exporter.logsV2(layout, cfg.exporter).sortWithinPartitions("conv_id", "turn_idx")
   }
 }

@@ -3,9 +3,13 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.concurrent.{blocking, Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Iceberg-style table layer: a directory of immutable Parquet files plus a
@@ -44,15 +48,17 @@ object GraftTable {
   private def metaDir(table: String): Path = Paths.get(table, "meta")
 
   // ---- tiny JSON (de)serialization — no external deps ----------------------
+  // control characters and surrogates go out as JSON unicode escapes, so a
+  // snapshot file is lossless UTF-8 whatever its strings hold
   private def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c if c < ' ' || Character.isSurrogate(c) => f"\\u${c.toInt}%04x"
     case c => c.toString
   }
 
-  private def render(s: Snapshot): String = {
+  private[graft] def render(s: Snapshot): String = {
     val files = s.files.map(f =>
       s"""{"path": "${esc(f.path)}", "partition": "${esc(f.partition)}", "rows": ${f.rows}}""")
       .mkString("[", ", ", "]")
@@ -63,10 +69,31 @@ object GraftTable {
     """\{"path": "((?:[^"\\]|\\.)*)", "partition": "((?:[^"\\]|\\.)*)", "rows": (\d+)\}""".r
   private val headRe = """"seq": (\d+), "parent": (-?\d+), "stage": "((?:[^"\\]|\\.)*)"""".r
 
-  private def unesc(s: String): String = s
-    .replace("\\\"", "\"").replace("\\n", "\n").replace("\\\\", "\\")
+  /** Inverse of `esc`, one left-to-right pass: every escape is decoded
+    * exactly once, so an escaped backslash never pairs with the character
+    * after it.
+    */
+  private def unesc(s: String): String = {
+    val out = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c != '\\') { out.append(c); i += 1 }
+      else {
+        s.charAt(i + 1) match {
+          case 'u' =>
+            out.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
+            i += 6
+          case e =>
+            out.append(if (e == 'n') '\n' else e) // else '"' or '\\'
+            i += 2
+        }
+      }
+    }
+    out.toString
+  }
 
-  private def parse(json: String): Snapshot = {
+  private[graft] def parse(json: String): Snapshot = {
     val head = headRe.findFirstMatchIn(json).getOrElse(
       throw new IllegalStateException(s"bad snapshot json: $json"))
     val files = fileRe.findAllMatchIn(json).map { m =>
@@ -119,8 +146,9 @@ object GraftTable {
       case None => ""
       case Some(c) =>
         val rel = dataRoot.relativize(file).toString
+        // Spark escapes the value in the directory name (`a:b` -> `a%3Ab`)
         rel.split('/').find(_.startsWith(s"$c="))
-          .map(_.substring(c.length + 1)).getOrElse("")
+          .map(d => ExternalCatalogUtils.unescapePathName(d.substring(c.length + 1))).getOrElse("")
     }
 
   /** Write `df` as a new snapshot of `table`. `overwrite=false` appends to
@@ -136,24 +164,58 @@ object GraftTable {
     val writer = partitionCol.fold(writer0)(writer0.partitionBy(_))
     writer.parquet(dataDir.toString)
 
-    // per-partition lineage: rows per written file from the parquet footers
-    val spark = df.sparkSession
-    val newFiles = listParquet(dataDir).map { p =>
-      val rows = footerRowCount(spark, p)
-      FileEntry(p.toString, partitionOf(p, dataDir, partitionCol), rows)
-    }
+    // per-partition lineage: rows per written file from the parquet footers,
+    // read concurrently
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val newFiles = Await.result(Future.traverse(listParquet(dataDir)) { p =>
+      Future(blocking(
+        FileEntry(p.toString, partitionOf(p, dataDir, partitionCol), footerRowCount(conf, p))))
+    }, Duration.Inf)
     val files =
       if (overwrite) newFiles
       else parent.map(_.files).getOrElse(Nil) ++ newFiles
     commit(table, Snapshot(seq, parent.map(_.seq).getOrElse(-1L), stage, files))
   }
 
-  private def footerRowCount(spark: SparkSession, file: Path): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
+  private def footerRowCount(conf: Configuration, file: Path): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file.toUri), conf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try reader.getRecordCount finally reader.close()
+  }
+
+  /** Run every `(table, write)` pair at once, `write(table)` on its own new
+    * thread, and return the snapshots in input order. The threads are made per
+    * call so they inherit the caller's Spark local properties (job group,
+    * description). Waits for every write; if any failed, then throws the
+    * first failure in input order with the others attached as suppressed.
+    * Tables must be distinct: two writes to one table would pick the same
+    * `seq`.
+    */
+  def writeAll(writes: Seq[(String, String => Snapshot)]): Seq[Snapshot] = {
+    val tables = writes.map { case (t, _) => Paths.get(t).toAbsolutePath.normalize }
+    require(tables.distinct.size == tables.size, s"writeAll needs distinct tables: ${writes.map(_._1)}")
+    val results = new Array[Either[Throwable, Snapshot]](writes.size)
+    val threads = writes.zipWithIndex.map { case ((table, write), i) =>
+      val t = new Thread(() => results(i) = try Right(write(table)) catch { case e: Throwable => Left(e) },
+        s"graft-sink-${Paths.get(table).getFileName}")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    // no early exit, not even on interrupt: every write ends before we return
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    results.collect { case Left(e) => e }.toList match {
+      case Nil => results.toSeq.map(_.toOption.get)
+      case first :: others =>
+        others.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+    }
   }
 
   /** Resume helper: write only the partitions of `df` whose value is not yet

@@ -1,6 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.pipeline.{Enrich, Exporter, JobConfig, Pipeline, TranscriptJob}
 import graft.sinks.GraftTable
@@ -81,7 +84,70 @@ class PipelineE2ESpec extends SparkSuite {
     // resume: re-running writes nothing new for completed route partitions
     val counts2 = TranscriptJob.run(spark, transcripts, dir,
       SparkEntry.transcriptPipeline, JobConfig(layoutPartitions = 4), resume = true)
-    assert(counts2("logs_v2") == counts("logs_v2"))
+    assert(counts2 == counts) // all five sinks keep their counts
+  }
+
+  /** Order-independent content checksum: row count plus the sum of a 64-bit
+    * hash of every row, map entries sorted by key.
+    */
+  private def checksum(df: org.apache.spark.sql.DataFrame): (Long, BigDecimal) = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    val cols = df.schema.fields.toSeq.sortBy(_.name).map { f =>
+      val c = col(s"`${f.name}`")
+      f.dataType match {
+        case _: MapType => array_sort(map_entries(c))
+        case _: ArrayType | _: StructType => to_json(c)
+        case _ => c
+      }
+    }
+    val r = df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"))
+      .agg(count(lit(1)), sum($"h")).collect().head
+    (r.getLong(0), Option(r.getDecimal(1)).map(BigDecimal(_)).getOrElse(BigDecimal(0)))
+  }
+
+  test("full job: every committed sink equals its in-memory Exporter frame") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-job-sum").toString
+    val cfg = JobConfig(layoutPartitions = 4)
+    val counts = TranscriptJob.run(spark, transcripts, dir, SparkEntry.transcriptPipeline, cfg)
+    val main = Exporter.logsV2(Enrich.roleToolEnrich(
+      Pipeline.compile(SparkEntry.transcriptPipeline)(Transcripts.toLogFrame(transcripts))), cfg.exporter)
+    val frames = Seq(
+      "logs_v2" -> main,
+      "logs_v2_resource" -> Exporter.resources(main),
+      "tag_attributes_v2" -> Exporter.tagAttributes(main, cfg.exporter),
+      "logs_attribute_keys" -> Exporter.attributeKeys(main),
+      "logs_resource_keys" -> Exporter.resourceKeys(main))
+    assert(counts.keySet == frames.map(_._1).toSet)
+    for ((name, frame) <- frames) {
+      val sink = GraftTable.read(spark, s"$dir/$name").select(frame.columns.toSeq.map(c => col(s"`$c`")): _*)
+      val want = checksum(frame)
+      assert(checksum(sink) == want, name)
+      assert(counts(name) == want._1, name)
+    }
+  }
+
+  test("full job: a failing sink write fails run only after the others end; main is uncached") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-job-fail").toString
+    // a regular file where a table directory should be: that write fails
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "tag_attributes_v2"), Array[Byte](1))
+    val cfg = JobConfig(layoutPartitions = 4)
+    // `storageLevel` looks the frame's plan up in the cache manager; check
+    // that the lookup finds `run`'s batch when it is cached
+    def main = TranscriptJob.logsV2(transcripts, SparkEntry.transcriptPipeline, cfg)
+    val probe = main.cache()
+    assert(main.storageLevel != StorageLevel.NONE)
+    probe.unpersist()
+    assert(main.storageLevel == StorageLevel.NONE)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      TranscriptJob.run(spark, transcripts, dir, SparkEntry.transcriptPipeline, cfg)
+    }
+    // the other four writes had all committed when run threw
+    for (name <- Seq("logs_v2", "logs_v2_resource", "logs_attribute_keys", "logs_resource_keys"))
+      assert(GraftTable.current(s"$dir/$name").exists(_.rowCount > 0), name)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t => t.isAlive && t.getName.startsWith("graft-sink-")))
+    assert(main.storageLevel == StorageLevel.NONE)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
   }
 
   test("streaming: same pipeline over readStream + windowed meter") {
