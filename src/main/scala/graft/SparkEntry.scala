@@ -40,8 +40,7 @@ object SparkEntry {
     // lets the coalescer actually target the session's parallelism for
     // sub-MB shuffles; production-sized shuffles (>= parallelism x 1 MB)
     // are untouched, so this is scale-neutral by construction.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     spark
   }
 

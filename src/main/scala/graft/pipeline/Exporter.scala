@@ -270,16 +270,10 @@ object Exporter {
       .select(concat_ws(":", col("tag_key"), col("tag_type"), col("tag_data_type")))
       .collect().map(_.getString(0)).toSet
 
-  /** The 5-way fan-out from one shared upstream (exporter.go:796-827): cache
-    * the logs_v2 projection once, derive every side sink from it.
-    */
-  def fanOut(pipelineOut: DataFrame, cfg: ExporterConfig = ExporterConfig(),
-      existingResources: Option[DataFrame] = None): Map[String, DataFrame] =
-    fanOutFrom(logsV2(pipelineOut, cfg), cfg, existingResources)
-
-  /** The sink fan-out from an already-shaped (and typically persisted)
-    * `logs_v2` frame — the one-batch-many-writers shape of the reference's
-    * pushLogsData: shape once, every sink reads the cached batch.
+  /** The 5-way sink fan-out (exporter.go:796-827) from an already-shaped
+    * (and typically persisted) `logs_v2` frame — the one-batch-many-writers
+    * shape of the reference's pushLogsData: shape once, every sink reads the
+    * cached batch.
     */
   def fanOutFrom(main: DataFrame, cfg: ExporterConfig = ExporterConfig(),
       existingResources: Option[DataFrame] = None): Map[String, DataFrame] = {

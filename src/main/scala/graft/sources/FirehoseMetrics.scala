@@ -189,25 +189,13 @@ object FirehoseMetrics {
   def parseMetricStreamRecord(bytes: Array[Byte]): Seq[OtlpProto.OtlpMetricRow] = {
     if (bytes == null || bytes.isEmpty) return Seq.empty
     val out = scala.collection.mutable.ArrayBuffer.empty[OtlpProto.OtlpMetricRow]
-    var pos = 0
-    while (pos < bytes.length) {
-      // proto varint
-      var n = 0L
-      var shift = 0
-      var ok = false
-      var p = pos
-      while (!ok && p < bytes.length && shift < 64) {
-        val b = bytes(p)
-        n |= (b & 0x7fL) << shift
-        shift += 7
-        p += 1
-        if ((b & 0x80) == 0) ok = true
-      }
-      if (!ok || n < 0 || p + n > bytes.length) return out.toSeq // malformed tail
-      val slice = java.util.Arrays.copyOfRange(bytes, p, p + n.toInt)
-      try out ++= OtlpProto.parseMetricsData(slice)
-      catch { case _: RuntimeException | _: ArrayIndexOutOfBoundsException => () }
-      pos = p + n.toInt
+    val r = new ProtoWire.Reader(bytes, 0, bytes.length)
+    while (r.hasMore) {
+      val request =
+        try r.readBytes()
+        catch { case _: IllegalArgumentException => return out.toSeq } // malformed tail
+      try out ++= OtlpProto.parseMetricsData(request)
+      catch { case _: RuntimeException => () }
     }
     out.toSeq
   }

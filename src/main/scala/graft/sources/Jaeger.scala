@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.OtlpProto.{OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
+import graft.sources.ProtoWire.{Reader, Writer, hexToBytes, idHex, nonNull, nonNullSeq, orEmpty}
 
 /** Jaeger trace encodings — the Kafka exporter's `jaeger_proto` /
   * `jaeger_json` marshalers (`exporter/signozkafkaexporter/
@@ -101,10 +102,6 @@ object Jaeger {
   val NoServiceName = "OTLPResourceNoServiceName"
 
   // ---- OTLP frame -> jaeger span (ProtoFromTraces semantics) ------------
-
-  private def orEmpty(s: String): String = if (s == null) "" else s
-  private def nonNull[K, V](m: Map[K, V]): Map[K, V] = if (m == null) Map.empty else m
-  private def nonNullSeq[T](s: Seq[T]): Seq[T] = if (s == null) Nil else s
 
   private def kindName(kind: Int): String = kind match {
     case 1 => "internal"
@@ -259,25 +256,6 @@ object Jaeger {
 
   // ---- proto wire ----------------------------------------------------------
 
-  import OtlpProtoEncode.Writer
-
-  private def hexToBytes(hex: String): Array[Byte] = {
-    val out = new Array[Byte](hex.length / 2)
-    var i = 0
-    while (i < out.length) {
-      out(i) = java.lang.Integer.parseInt(hex.substring(2 * i, 2 * i + 2), 16).toByte
-      i += 1
-    }
-    out
-  }
-
-  private def bytesToHex(b: Array[Byte], from: Int, len: Int): String = {
-    val sb = new java.lang.StringBuilder(2 * len)
-    var i = 0
-    while (i < len) { sb.append(f"${b(from + i) & 0xff}%02x"); i += 1 }
-    sb.toString
-  }
-
   /** The jaeger custom id types marshal as FIXED-WIDTH bytes (16 / 8),
     * zero bytes included — unlike OTLP's omit-when-all-zero ids.
     */
@@ -342,50 +320,7 @@ object Jaeger {
 
   // ---- proto parse ----------------------------------------------------------
 
-  private final class R(val buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def readVarint(): Long = {
-      var shift = 0; var res = 0L
-      while (shift < 70) {
-        val b = buf(pos); pos += 1
-        res |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return res
-        shift += 7
-      }
-      throw new IllegalArgumentException("malformed varint")
-    }
-    def readSlice(): R = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated length-delimited field")
-      val r = new R(buf, pos, pos + len); pos += len; r
-    }
-    def readString(): String = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated string")
-      val s = new String(buf, pos, len, java.nio.charset.StandardCharsets.UTF_8)
-      pos += len; s
-    }
-    def readBytes(): Array[Byte] = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated bytes")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + len)
-      pos += len; out
-    }
-    def readFixed64(): Long = {
-      var res = 0L; var i = 0
-      while (i < 8) { res |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8; res
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => readVarint()
-      case 1 => pos += 8
-      case 2 => val len = readVarint().toInt; pos += len
-      case 5 => pos += 4
-      case other => throw new IllegalArgumentException(s"unknown wire type $other")
-    }
-  }
-
-  private def parseTimestamp(r: R): Long = {
+  private def parseTimestamp(r: Reader): Long = {
     var secs = 0L; var nanos = 0L
     while (r.hasMore) {
       val tag = r.readVarint()
@@ -398,7 +333,7 @@ object Jaeger {
     secs * 1000000000L + nanos
   }
 
-  private def parseKV(r: R): JaegerKV = {
+  private def parseKV(r: Reader): JaegerKV = {
     var key = ""; var vType = 0; var vStr = ""; var vBool = false
     var vInt = 0L; var vDbl = 0.0; var vBin: Array[Byte] = null
     while (r.hasMore) {
@@ -409,7 +344,7 @@ object Jaeger {
         case (3, _) => vStr = r.readString()
         case (4, _) => vBool = r.readVarint() != 0L
         case (5, _) => vInt = r.readVarint()
-        case (6, _) => vDbl = java.lang.Double.longBitsToDouble(r.readFixed64())
+        case (6, _) => vDbl = r.readDouble()
         case (7, _) => vBin = r.readBytes()
         case (_, w) => r.skip(w)
       }
@@ -417,18 +352,11 @@ object Jaeger {
     JaegerKV(key, vType, vStr, vBool, vInt, vDbl, vBin)
   }
 
-  private def hexOrEmpty(b: Array[Byte]): String = {
-    var allZero = true
-    var i = 0
-    while (i < b.length) { if (b(i) != 0) allZero = false; i += 1 }
-    if (allZero) "" else bytesToHex(b, 0, b.length)
-  }
-
   /** Parse one serialized jaeger `model.Span`. Throws on malformed input
     * (the receiver surfaces the error and drops the message).
     */
   def parseSpanProto(bytes: Array[Byte]): JaegerSpan = {
-    val r = new R(bytes, 0, bytes.length)
+    val r = new Reader(bytes, 0, bytes.length)
     var traceId = ""; var spanId = ""; var op = ""; var flags = 0
     var start = 0L; var dur = 0L; var service = ""
     val refs = scala.collection.mutable.ArrayBuffer.empty[JaegerRef]
@@ -438,8 +366,8 @@ object Jaeger {
     while (r.hasMore) {
       val tag = r.readVarint()
       ((tag >> 3).toInt, (tag & 7).toInt) match {
-        case (1, _) => traceId = hexOrEmpty(r.readBytes())
-        case (2, _) => spanId = hexOrEmpty(r.readBytes())
+        case (1, _) => traceId = idHex(r.readBytes())
+        case (2, _) => spanId = idHex(r.readBytes())
         case (3, _) => op = r.readString()
         case (4, _) =>
           val s = r.readSlice()
@@ -447,8 +375,8 @@ object Jaeger {
           while (s.hasMore) {
             val t2 = s.readVarint()
             ((t2 >> 3).toInt, (t2 & 7).toInt) match {
-              case (1, _) => tid = hexOrEmpty(s.readBytes())
-              case (2, _) => sid = hexOrEmpty(s.readBytes())
+              case (1, _) => tid = idHex(s.readBytes())
+              case (2, _) => sid = idHex(s.readBytes())
               case (3, _) => rt = s.readVarint().toInt
               case (_, w) => s.skip(w)
             }
@@ -624,7 +552,7 @@ object Jaeger {
     require(n != null && n.isObject, "not a JSON object")
     def idOf(node: com.fasterxml.jackson.databind.JsonNode): String =
       if (node == null || node.asText().isEmpty) ""
-      else hexOrEmpty(java.util.Base64.getDecoder.decode(node.asText()))
+      else idHex(java.util.Base64.getDecoder.decode(node.asText()))
     def tsOf(node: com.fasterxml.jackson.databind.JsonNode): Long =
       if (node == null) 0L
       else {

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.functions.GoJsonFloatKernel
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
+import graft.sources.ProtoWire.{nonNull, nonNullSeq, orEmpty}
 
 /** OTLP/JSON encoding — the Kafka exporter's `otlp_json` encodings
   * (`exporter/signozkafkaexporter/marshaler.go:43,57,67`
@@ -92,10 +93,6 @@ object OtlpJson {
     def toBytes: Array[Byte] =
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   }
-
-  private def nonNull[K, V](m: Map[K, V]): Map[K, V] = if (m == null) Map.empty else m
-  private def nonNullSeq[T](s: Seq[T]): Seq[T] = if (s == null) Nil else s
-  private def orEmpty(s: String): String = if (s == null) "" else s
 
   // ---- shared attribute / scope fragments -----------------------------------
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 
 import graft.model.LogFrames
+import graft.sources.ProtoWire.{Reader, idHex}
 
 /** OTLP-protobuf logs decoding — the Kafka receiver's DEFAULT logs encoding
   * (`receiver/signozkafkareceiver/unmarshaler.go:75-84` `otlp_proto` ->
@@ -13,11 +14,11 @@ import graft.model.LogFrames
   * deep (ResourceLogs -> ScopeLogs -> LogRecord) into LogRow columns with
   * the engine's typed-attribute split and force-stringified resource attrs.
   *
-  * The wire-format walk below is hand-rolled from the PUBLIC protobuf
-  * encoding spec + the public OTLP proto definitions
-  * (opentelemetry-proto `logs/v1/logs.proto`, `common/v1/common.proto`) —
-  * no generated code, no external deps. Unknown fields are skipped by wire
-  * type (forward compatible). Field numbers:
+  * The message walk below reads through [[ProtoWire.Reader]] and follows
+  * the public OTLP proto definitions (opentelemetry-proto
+  * `logs/v1/logs.proto`, `common/v1/common.proto`) — no generated code, no
+  * external deps. Unknown fields are skipped by wire type (forward
+  * compatible). Field numbers:
   *
   *  - LogsData: resource_logs=1
   *  - ResourceLogs: resource=1, scope_logs=2, schema_url=3
@@ -61,67 +62,6 @@ object OtlpProto {
       scope_version: String,
       scope_string: Map[String, String])
 
-  // ---- wire-format primitives ---------------------------------------------
-
-  private final class Reader(val buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def readVarint(): Long = {
-      var shift = 0
-      var res = 0L
-      while (shift < 70) {
-        val b = buf(pos)
-        pos += 1
-        res |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return res
-        shift += 7
-      }
-      throw new IllegalArgumentException("malformed varint")
-    }
-    def readFixed64(): Long = {
-      var res = 0L
-      var i = 0
-      while (i < 8) { res |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8
-      res
-    }
-    def readFixed32(): Int = {
-      var res = 0
-      var i = 0
-      while (i < 4) { res |= (buf(pos + i) & 0xff) << (8 * i); i += 1 }
-      pos += 4
-      res
-    }
-    /** Length-delimited payload -> a sub-reader over the slice. */
-    def readSlice(): Reader = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated length-delimited field")
-      val r = new Reader(buf, pos, pos + len)
-      pos += len
-      r
-    }
-    def readString(): String = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated string field")
-      val s = new String(buf, pos, len, java.nio.charset.StandardCharsets.UTF_8)
-      pos += len
-      s
-    }
-    def readBytes(): Array[Byte] = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated bytes field")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + len)
-      pos += len
-      out
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => readVarint()
-      case 1 => pos += 8
-      case 2 => val len = readVarint().toInt; pos += len
-      case 5 => pos += 4
-      case w => throw new IllegalArgumentException(s"unsupported wire type $w")
-    }
-  }
-
   // ---- AnyValue ------------------------------------------------------------
 
   private sealed trait AV
@@ -144,7 +84,7 @@ object OtlpProto {
         case 1 => out = AVStr(r.readString())
         case 2 => out = AVBool(r.readVarint() != 0L)
         case 3 => out = AVInt(r.readVarint())
-        case 4 => out = AVDouble(java.lang.Double.longBitsToDouble(r.readFixed64()))
+        case 4 => out = AVDouble(r.readDouble())
         case 5 => // ArrayValue{values=1}
           val a = r.readSlice()
           val vs = scala.collection.mutable.ListBuffer.empty[AV]
@@ -244,12 +184,6 @@ object OtlpProto {
     out.toList
   }
 
-  private def hex(b: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(b.length * 2)
-    b.foreach(x => sb.append(f"${x & 0xff}%02x"))
-    sb.toString
-  }
-
   // ---- message walk --------------------------------------------------------
 
   /** Parse one serialized LogsData / ExportLogsServiceRequest into rows.
@@ -338,12 +272,8 @@ object OtlpProto {
         case 5 => body = avToString(parseAnyValue(r.readSlice()))
         case 6 => attrs = attrs :+ parseKeyValue(r.readSlice())
         case 8 => flags = r.readFixed32()
-        case 9 =>
-          val b = r.readBytes()
-          traceId = if (b.forall(_ == 0)) "" else hex(b)
-        case 10 =>
-          val b = r.readBytes()
-          spanId = if (b.forall(_ == 0)) "" else hex(b)
+        case 9 => traceId = idHex(r.readBytes())
+        case 10 => spanId = idHex(r.readBytes())
         case 11 => ots = r.readFixed64()
         case _ => r.skip(wire)
       }
@@ -365,7 +295,7 @@ object OtlpProto {
     val rows = df.select(valueCol.cast("binary").as("v")).as[Array[Byte]]
       .flatMap { bytes =>
         try parseLogsData(bytes)
-        catch { case _: RuntimeException | _: ArrayIndexOutOfBoundsException => Seq.empty }
+        catch { case _: RuntimeException => Seq.empty }
       }
     LogFrames.withDefaults(rows.toDF())
   }
@@ -489,9 +419,6 @@ object OtlpProto {
     }
   }
 
-  private def idHex(b: Array[Byte]): String =
-    if (b.forall(_ == 0)) "" else hex(b)
-
   private def parseSpanEvent(r: Reader): OtlpSpanEvent = {
     var ts = 0L
     var name = ""
@@ -587,7 +514,7 @@ object OtlpProto {
     val rows = df.select(valueCol.cast("binary").as("v")).as[Array[Byte]]
       .flatMap { bytes =>
         try parseTracesData(bytes)
-        catch { case _: RuntimeException | _: ArrayIndexOutOfBoundsException => Seq.empty }
+        catch { case _: RuntimeException => Seq.empty }
       }
     graft.model.SpanFrames.withDefaults(rows.toDF())
   }
@@ -641,22 +568,6 @@ object OtlpProto {
 
   /** Field names match [[graft.model.MetricFrames.quantileType]]. */
   final case class OtlpQuantile(q: Double, v: Double)
-
-  private def d64(bits: Long): Double = java.lang.Double.longBitsToDouble(bits)
-  private def zigzag32(n: Long): Int = (((n >>> 1) ^ -(n & 1))).toInt
-
-  /** Packed-or-not repeated fixed64 field: wire 2 = packed slice, wire 1 =
-    * a single element (pre-proto3 / forward-compat encodings).
-    */
-  private def readRepFixed64(r: Reader, wire: Int,
-      out: scala.collection.mutable.ArrayBuffer[Long]): Unit =
-    if (wire == 2) { val s = r.readSlice(); while (s.hasMore) out += s.readFixed64() }
-    else out += r.readFixed64()
-
-  private def readRepVarint(r: Reader, wire: Int,
-      out: scala.collection.mutable.ArrayBuffer[Long]): Unit =
-    if (wire == 2) { val s = r.readSlice(); while (s.hasMore) out += s.readVarint() }
-    else out += r.readVarint()
 
   private def temporalityString(v: Int): String = v match {
     case 1 => "Delta"
@@ -836,7 +747,7 @@ object OtlpProto {
       val wire = (tag & 7).toInt
       (tag >> 3).toInt match {
         case 3 => time = r.readFixed64()
-        case 4 => value = d64(r.readFixed64())
+        case 4 => value = r.readDouble()
         case 6 => value = r.readFixed64().toDouble // sfixed64 as_int
         case 7 =>
           val (k, v) = parseKeyValue(r.readSlice())
@@ -867,22 +778,22 @@ object OtlpProto {
       (tag >> 3).toInt match {
         case 3 => time = r.readFixed64()
         case 4 => count = r.readFixed64()
-        case 5 => sum = d64(r.readFixed64()); hasSum = true
-        case 6 => readRepFixed64(r, wire, buckets)
-        case 7 => readRepFixed64(r, wire, bounds)
+        case 5 => sum = r.readDouble(); hasSum = true
+        case 6 => r.readRepeatedFixed64(wire, buckets)
+        case 7 => r.readRepeatedFixed64(wire, bounds)
         case 9 =>
           val (k, v) = parseKeyValue(r.readSlice())
           attrs += k -> avToString(v)
         case 10 => flags = r.readVarint().toInt
-        case 11 => min = d64(r.readFixed64()); hasMin = true
-        case 12 => max = d64(r.readFixed64()); hasMax = true
+        case 11 => min = r.readDouble(); hasMin = true
+        case 12 => max = r.readDouble(); hasMax = true
         case _ => r.skip(wire)
       }
     }
     baseRow(c, "histogram", time, flags, attrs).copy(
       count = count, sum_v = sum, min_v = min, max_v = max,
       has_sum = hasSum, has_min = hasMin, has_max = hasMax,
-      explicit_bounds = bounds.map(d64).toSeq,
+      explicit_bounds = bounds.map(java.lang.Double.longBitsToDouble).toSeq,
       bucket_counts = buckets.toSeq)
   }
 
@@ -899,7 +810,7 @@ object OtlpProto {
       (tag >> 3).toInt match {
         case 3 => time = r.readFixed64()
         case 4 => count = r.readFixed64()
-        case 5 => sum = d64(r.readFixed64())
+        case 5 => sum = r.readDouble()
         case 6 =>
           val s = r.readSlice()
           var q = 0.0
@@ -907,8 +818,8 @@ object OtlpProto {
           while (s.hasMore) {
             val t2 = s.readVarint()
             (t2 >> 3).toInt match {
-              case 1 => q = d64(s.readFixed64())
-              case 2 => v = d64(s.readFixed64())
+              case 1 => q = s.readDouble()
+              case 2 => v = s.readDouble()
               case _ => s.skip((t2 & 7).toInt)
             }
           }
@@ -949,8 +860,8 @@ object OtlpProto {
         val t2 = s.readVarint()
         val w2 = (t2 & 7).toInt
         (t2 >> 3).toInt match {
-          case 1 => off = zigzag32(s.readVarint())
-          case 2 => readRepVarint(s, w2, counts)
+          case 1 => off = s.readSint32()
+          case 2 => s.readRepeatedVarint(w2, counts)
           case _ => s.skip(w2)
         }
       }
@@ -966,16 +877,16 @@ object OtlpProto {
           attrs += k -> avToString(v)
         case 3 => time = r.readFixed64()
         case 4 => count = r.readFixed64()
-        case 5 => sum = d64(r.readFixed64()); hasSum = true
-        case 6 => scale = zigzag32(r.readVarint())
+        case 5 => sum = r.readDouble(); hasSum = true
+        case 6 => scale = r.readSint32()
         case 7 => zeroCount = r.readFixed64().toDouble
         case 8 =>
           val (o, cs) = parseBuckets(r.readSlice()); posOff = o; pos ++= cs
         case 9 =>
           val (o, cs) = parseBuckets(r.readSlice()); negOff = o; neg ++= cs
         case 10 => flags = r.readVarint().toInt
-        case 12 => min = d64(r.readFixed64()); hasMin = true
-        case 13 => max = d64(r.readFixed64()); hasMax = true
+        case 12 => min = r.readDouble(); hasMin = true
+        case 13 => max = r.readDouble(); hasMax = true
         case _ => r.skip(wire)
       }
     }
@@ -996,7 +907,7 @@ object OtlpProto {
     df.select(valueCol.cast("binary").as("v")).as[Array[Byte]]
       .flatMap { bytes =>
         try parser(bytes)
-        catch { case _: RuntimeException | _: ArrayIndexOutOfBoundsException => Seq.empty }
+        catch { case _: RuntimeException => Seq.empty }
       }
   }
 

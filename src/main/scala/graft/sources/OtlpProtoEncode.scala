@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
+import graft.sources.ProtoWire.{Writer, hexToBytes, nonNull, nonNullSeq, orEmpty}
 
 /** OTLP-protobuf ENCODING — the write half of [[OtlpProto]], used by the
   * Kafka exporter analogue (`exporter/signozkafkaexporter/pdata_marshaler.go`
@@ -26,82 +27,6 @@ import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanEvent, OtlpSpanL
   *    normalizeLogData forces every body to a string before marshaling).
   */
 object OtlpProtoEncode {
-
-  // ---- wire-format writer --------------------------------------------------
-
-  /** Growable little buffer with the protobuf primitives. Nested messages
-    * are encoded into their own writer and spliced length-prefixed — the
-    * payloads here are bounded by the producer's max-message-bytes, so the
-    * extra copy is cheap and keeps the code single-pass per level.
-    */
-  final class Writer(initial: Int = 256) {
-    private var buf = new Array[Byte](initial)
-    private var len = 0
-    def size: Int = len
-    private def ensure(n: Int): Unit =
-      if (len + n > buf.length) {
-        var cap = buf.length * 2
-        while (cap < len + n) cap *= 2
-        buf = java.util.Arrays.copyOf(buf, cap)
-      }
-    def varint(v: Long): Unit = {
-      ensure(10)
-      var x = v
-      while ((x & ~0x7fL) != 0L) {
-        buf(len) = ((x & 0x7f) | 0x80).toByte; len += 1; x >>>= 7
-      }
-      buf(len) = x.toByte; len += 1
-    }
-    private def tag(field: Int, wire: Int): Unit = varint((field.toLong << 3) | wire)
-    def varintField(field: Int, v: Long): Unit = { tag(field, 0); varint(v) }
-    def boolField(field: Int, b: Boolean): Unit = varintField(field, if (b) 1L else 0L)
-    /** sint32 (zigzag) — ExponentialHistogram scale/offset. */
-    def sint32Field(field: Int, v: Int): Unit =
-      varintField(field, ((v.toLong << 1) ^ (v.toLong >> 31)) & 0xffffffffL)
-    def fixed64(v: Long): Unit = {
-      ensure(8)
-      var i = 0
-      while (i < 8) { buf(len + i) = ((v >>> (8 * i)) & 0xff).toByte; i += 1 }
-      len += 8
-    }
-    def fixed64Field(field: Int, v: Long): Unit = { tag(field, 1); fixed64(v) }
-    def doubleField(field: Int, d: Double): Unit =
-      fixed64Field(field, java.lang.Double.doubleToLongBits(d))
-    def fixed32Field(field: Int, v: Int): Unit = {
-      tag(field, 5)
-      ensure(4)
-      var i = 0
-      while (i < 4) { buf(len + i) = ((v >>> (8 * i)) & 0xff).toByte; i += 1 }
-      len += 4
-    }
-    def bytesField(field: Int, b: Array[Byte]): Unit = {
-      tag(field, 2); varint(b.length.toLong)
-      ensure(b.length)
-      System.arraycopy(b, 0, buf, len, b.length)
-      len += b.length
-    }
-    def stringField(field: Int, s: String): Unit =
-      bytesField(field, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    def msgField(field: Int, w: Writer): Unit = {
-      tag(field, 2); varint(w.len.toLong)
-      ensure(w.len)
-      System.arraycopy(w.buf, 0, buf, len, w.len)
-      len += w.len
-    }
-    /** Packed repeated fixed64 (bucket_counts / explicit_bounds). */
-    def packedFixed64Field(field: Int, vs: Seq[Long]): Unit = {
-      tag(field, 2); varint(vs.length * 8L)
-      vs.foreach(fixed64)
-    }
-    def packedDoubleField(field: Int, vs: Seq[Double]): Unit =
-      packedFixed64Field(field, vs.map(java.lang.Double.doubleToLongBits))
-    def packedVarintField(field: Int, vs: Seq[Long]): Unit = {
-      val p = new Writer(vs.length * 2 + 8)
-      vs.foreach(p.varint)
-      msgField(field, p)
-    }
-    def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, len)
-  }
 
   // ---- AnyValue / attribute encoding ---------------------------------------
 
@@ -149,10 +74,6 @@ object OtlpProtoEncode {
     }
   }
 
-  private def nonNull[K, V](m: Map[K, V]): Map[K, V] = if (m == null) Map.empty else m
-  private def nonNullSeq[T](s: Seq[T]): Seq[T] = if (s == null) Nil else s
-  private def orEmpty(s: String): String = if (s == null) "" else s
-
   /** Resource{attributes=1} — all values strings (sink force-stringify). */
   private def resourceMsg(attrs: Map[String, String]): Writer = {
     val w = new Writer(64)
@@ -168,16 +89,6 @@ object OtlpProtoEncode {
     if (orEmpty(version).nonEmpty) w.stringField(2, version)
     nonNull(attrs).foreach { case (k, v) => w.msgField(3, kvString(k, v)) }
     w
-  }
-
-  private def hexToBytes(hex: String): Array[Byte] = {
-    val out = new Array[Byte](hex.length / 2)
-    var i = 0
-    while (i < out.length) {
-      out(i) = java.lang.Integer.parseInt(hex.substring(2 * i, 2 * i + 2), 16).toByte
-      i += 1
-    }
-    out
   }
 
   // ---- generic Resource -> Scope -> record nesting -------------------------

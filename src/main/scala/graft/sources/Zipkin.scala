@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.OtlpProto.{OtlpSpanEvent, OtlpSpanRow}
+import graft.sources.ProtoWire.{Reader, hex, orEmpty}
 
 /** Zipkin trace decodings — the Kafka receiver's `zipkin_proto` /
   * `zipkin_json` / `zipkin_thrift` unmarshalers
@@ -81,8 +82,6 @@ object Zipkin {
       tags: Map[String, String],
       debug: Boolean,
       shared: Boolean)
-
-  private def orEmpty(s: String): String = if (s == null) "" else s
 
   // ---- v2 span -> OTLP frame row ----------------------------------------
 
@@ -193,61 +192,11 @@ object Zipkin {
 
   // ---- v2 proto3 ---------------------------------------------------------
 
-  private final class R(val buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def readVarint(): Long = {
-      var shift = 0; var res = 0L
-      while (shift < 70) {
-        val b = buf(pos); pos += 1
-        res |= (b & 0x7fL) << shift
-        if ((b & 0x80) == 0) return res
-        shift += 7
-      }
-      throw new IllegalArgumentException("malformed varint")
-    }
-    def readSlice(): R = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated length-delimited field")
-      val r = new R(buf, pos, pos + len); pos += len; r
-    }
-    def readString(): String = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated string")
-      val s = new String(buf, pos, len, java.nio.charset.StandardCharsets.UTF_8)
-      pos += len; s
-    }
-    def readBytes(): Array[Byte] = {
-      val len = readVarint().toInt
-      require(len >= 0 && pos + len <= end, "truncated bytes")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + len)
-      pos += len; out
-    }
-    def readFixed64(): Long = {
-      var res = 0L; var i = 0
-      while (i < 8) { res |= (buf(pos + i) & 0xffL) << (8 * i); i += 1 }
-      pos += 8; res
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => readVarint()
-      case 1 => pos += 8
-      case 2 => val len = readVarint().toInt; pos += len
-      case 5 => pos += 4
-      case other => throw new IllegalArgumentException(s"unknown wire type $other")
-    }
-  }
-
-  private def hexOf(b: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(2 * b.length)
-    var i = 0
-    while (i < b.length) { sb.append(f"${b(i) & 0xff}%02x"); i += 1 }
-    sb.toString
-  }
-
   private def ipOf(b: Array[Byte]): String =
     if (b == null || b.isEmpty) ""
     else java.net.InetAddress.getByAddress(b).getHostAddress
 
-  private def parseProtoEndpoint(r: R): ZEndpoint = {
+  private def parseProtoEndpoint(r: Reader): ZEndpoint = {
     var svc = ""; var ipv4 = ""; var ipv6 = ""; var port = 0
     while (r.hasMore) {
       val tag = r.readVarint()
@@ -267,7 +216,7 @@ object Zipkin {
   /** One `ListOfSpans` payload -> spans. Throws on malformed input. */
   def parseProtoV2(bytes: Array[Byte]): Seq[ZipkinSpan] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[ZipkinSpan]
-    val top = new R(bytes, 0, bytes.length)
+    val top = new Reader(bytes, 0, bytes.length)
     while (top.hasMore) {
       val tag = top.readVarint()
       require((tag >> 3).toInt == 1 && (tag & 7).toInt == 2,
@@ -282,9 +231,9 @@ object Zipkin {
       while (r.hasMore) {
         val t = r.readVarint()
         ((t >> 3).toInt, (t & 7).toInt) match {
-          case (1, _) => traceId = hexOf(r.readBytes())
-          case (2, _) => parentId = hexOf(r.readBytes())
-          case (3, _) => id = hexOf(r.readBytes())
+          case (1, _) => traceId = hex(r.readBytes())
+          case (2, _) => parentId = hex(r.readBytes())
+          case (3, _) => id = hex(r.readBytes())
           case (4, _) =>
             val k = r.readVarint().toInt
             kind = if (k >= 0 && k < protoKinds.length) protoKinds(k) else ""

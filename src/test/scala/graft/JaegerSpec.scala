@@ -1,7 +1,7 @@
 package graft
 
 import graft.sinks.KafkaExport
-import graft.sources.Jaeger
+import graft.sources.{Jaeger, ProtoWire}
 import graft.sources.Jaeger.{JaegerKV, JaegerRef, VType}
 import graft.sources.OtlpProto.{OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
 
@@ -137,6 +137,20 @@ class JaegerSpec extends SparkSuite {
   test("malformed payloads throw (receiver drops them)") {
     intercept[Exception](Jaeger.parseSpanProto("+$%".getBytes("UTF-8")))
     intercept[Exception](Jaeger.parseSpanJson("+$%".getBytes("UTF-8")))
+  }
+
+  test("a string length above 2^32 is not narrowed into range") {
+    // KeyValue{key=1} whose length prefix is 2^32 + 3 (3 once cut to an Int)
+    def spanWithKeyLength(len: Long): Array[Byte] = {
+      val prefix = new ProtoWire.Writer(8)
+      prefix.varint(10L) // field 1, wire 2
+      prefix.varint(len)
+      val span = new ProtoWire.Writer(32)
+      span.bytesField(8, prefix.toBytes ++ "abc".getBytes("UTF-8"))
+      span.toBytes
+    }
+    assert(Jaeger.parseSpanProto(spanWithKeyLength(3L)).tags.map(_.key) === Seq("abc"))
+    intercept[IllegalArgumentException](Jaeger.parseSpanProto(spanWithKeyLength((1L << 32) + 3)))
   }
 
   test("kafka export: one keyed message per span; receive side restores the frame") {

@@ -135,6 +135,30 @@ class OtlpProtoSpec extends SparkSuite {
     assert(rows.size == 1 && rows.head.severity_text == "WARN")
   }
 
+  test("otlp_proto: a varint cut off at a nested slice's end drops the message") {
+    val rec = msg { r =>
+      // AnyValue{int_value=3}: the varint's last byte still has its
+      // continuation bit set, and the AnyValue slice ends there
+      bytesField(r, 6, kv("n", Array[Byte](0x18, 0x80.toByte)))
+      strField(r, 3, "WARN") // a valid parent field right after the slice
+    }
+    val payload = logsData(Seq.empty, "s", Seq(rec))
+    intercept[IllegalArgumentException](OtlpProto.parseLogsData(payload))
+    val df = Seq(payload).toDF("value")
+    assert(LogSources.fromKafka(df, "otlp_proto").count() == 0)
+  }
+
+  test("otlp_proto: an unknown fixed64 field cut off at the record's end drops the message") {
+    val cut = msg { r =>
+      strField(r, 3, "WARN")
+      tag(r, 20, 1) // unknown fixed64 with only 2 of its 8 bytes in the record
+      r.write(1); r.write(2)
+    }
+    val next = msg(r => strField(r, 3, "INFO"))
+    val payload = logsData(Seq.empty, "s", Seq(cut, next))
+    intercept[IllegalArgumentException](OtlpProto.parseLogsData(payload))
+  }
+
   test("fromKafka otlp_proto: DataFrame adapter yields LogRow frames") {
     val payload = logsData(
       Seq(kv("host", avStr("h1"))), "sc",

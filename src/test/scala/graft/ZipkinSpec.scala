@@ -2,7 +2,7 @@ package graft
 
 import graft.sources.Zipkin
 import graft.sources.Zipkin.{ZAnnotation, ZEndpoint, ZipkinSpan}
-import graft.sources.OtlpProtoEncode.Writer
+import graft.sources.ProtoWire.Writer
 
 /** Zipkin receiver decodings (`zipkin_proto` / `zipkin_json` /
   * `zipkin_thrift`): v2 JSON parse goldens, hand-encoded proto3 and
@@ -98,6 +98,20 @@ class ZipkinSpec extends SparkSuite {
     val got = Zipkin.parseProtoV2(list.toBytes)
     val want = Zipkin.parseJsonV2(v2Json.getBytes("UTF-8"))
     assert(got === want)
+  }
+
+  test("v2 proto: a fixed64 timestamp cut off at the span's end throws") {
+    val cut = new Writer(32)
+    cut.stringField(5, "a")
+    cut.varint((6L << 3) | 1) // timestamp=6 (fixed64) with only 3 of its 8 bytes
+    Seq(1L, 2L, 3L).foreach(cut.varint)
+    val next = new Writer(32)
+    next.stringField(5, "b")
+    next.fixed64Field(6, 1597759000L)
+    val list = new Writer(64)
+    list.msgField(1, cut)
+    list.msgField(1, next)
+    intercept[IllegalArgumentException](Zipkin.parseProtoV2(list.toBytes))
   }
 
   // minimal TBinaryProtocol writer (big-endian)
