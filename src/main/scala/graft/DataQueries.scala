@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Multimodal, Similarity, TextOps}
+import graft.sources.Tables
 
 /** Training-data-pipeline queries (dedup family, ANN, text analysis,
   * multimodal plumbing) over the documents/embeddings tables, with DuckDB
@@ -16,11 +17,11 @@ object DataQueries {
 
   private def docs(s: SparkSession, d: String): DataFrame = {
     SparkEntry.configure(s)
-    s.read.parquet(s"$d/documents.parquet")
+    Tables.parquet(s, s"$d/documents.parquet")
   }
   private def embs(s: SparkSession, d: String): DataFrame = {
     SparkEntry.configure(s)
-    s.read.parquet(s"$d/embeddings.parquet")
+    Tables.parquet(s, s"$d/embeddings.parquet")
   }
 
   /** Deterministic transcript-shaped view over the documents table
@@ -127,7 +128,9 @@ object DataQueries {
       }
       val scans = plan.collect { case f: FileSourceScanExec => f }
       val touched = scans.map(_.metrics("numFiles").value).sum
-      val total = s.read.parquet(idx).inputFiles.length
+      // the index as listed by the relation this query scans (not a second
+      // listing of the directory)
+      val total = scans.map(_.relation.location.inputFiles.length).sum
       val nProbe = 7 // planes=6: exact bucket + 6 hamming-1 neighbors
       require(scans.nonEmpty && touched > 0 && touched <= nProbe && touched < total,
         s"signature index partition pruning failed: read $touched of $total files")
@@ -490,7 +493,7 @@ object DataQueries {
     // regardless of summation order
     "q_conv_embedding" -> ((s, d) => {
       import graft.ops.TranscriptOps
-      val e = s.read.parquet(s"$d/embeddings.parquet")
+      val e = Tables.parquet(s, s"$d/embeddings.parquet")
         .select(pmod(col("vec_id"), lit(50)).as("conv_id"), col("embedding"))
       TranscriptOps.convEmbeddings(e)
     }),
@@ -1130,21 +1133,6 @@ object DataQueries {
        |  / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
        |     * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
        |  6)""".stripMargin
-
-  /** DuckDB replica of SimHashKernel.simhash64 as a UBIGINT (bit-identical
-    * to the Spark kernel's signed long): md5 per whitespace token, first 16
-    * hex chars -> 64-bit value, +1/-1 vote per bit, sign -> bit.
-    */
-  private val simhashSql = {
-    val tokHash = "CAST('0x' || substr(md5(t), 1, 16) AS UBIGINT)"
-    s"""(SELECT COALESCE(list_sum(list_transform(range(0, 64), b ->
-       |  CASE WHEN (SELECT COALESCE(SUM(CASE WHEN ($tokHash >> b) & 1 = 1
-       |                                       THEN 1 ELSE -1 END), 0)
-       |             FROM unnest(list_filter(string_split_regex(text, '\\s+'),
-       |                                     x -> len(x) > 0)) AS u(t)) > 0
-       |       THEN CAST(1 AS UBIGINT) << b ELSE CAST(0 AS UBIGINT) END)),
-       |  CAST(0 AS UBIGINT)))""".stripMargin
-  }
 
   /** DuckDB replica of FakeDecodeKernel's FNV-1a rolling state over the
     * UTF-8 bytes of `text` (HUGEINT mod-2^64 emulates Java's wrapping

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.MetricFrames
+import graft.ops.Par
 import graft.pipeline.MetricsExporter
 import graft.pipeline.MetricsExporter.ReductionRule
+import graft.sources.Tables
 
 /** Driver-checked queries for the metrics exporter slice. The `events` table
   * is lifted into deterministic metric datapoints; the DuckDB oracles
@@ -17,16 +19,12 @@ import graft.pipeline.MetricsExporter.ReductionRule
 object MetricQueries {
 
   private def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    Tables.parquet(spark, s"$dir/$table.parquet")
 
-  // round 6: opt-in wide events scan for compute-heavy lifts — the
-  // single-row-group file plans as one task; the ~0.1 s repartition only
-  // pays for itself on the heavier decode/series chains (measured per
+  // round 6: `wide = true` widens the events read for compute-heavy lifts —
+  // the single-row-group file plans as one task; the ~0.1 s repartition
+  // only pays for itself on the heavier decode/series chains (measured per
   // query; no-op at production width — ops/Par.scala)
-  private def readWide(spark: SparkSession, dir: String, table: String): DataFrame =
-    graft.ops.Par.widen(read(spark, dir, table),
-      org.apache.spark.sql.functions.col("event_id"))
-
   /** Gauge datapoints: metric `events.value`, point attrs {event_type},
     * resource {service.name: svc-(user_id%4)}, scope all-empty. Values are
     * floored so cross-engine double summation stays exact.
@@ -34,7 +32,8 @@ object MetricQueries {
   private def eventsAsGauges(spark: SparkSession, dir: String,
       wide: Boolean = false): DataFrame = {
     SparkEntry.configure(spark)
-    gaugesFrom(if (wide) readWide(spark, dir, "events") else read(spark, dir, "events"))
+    val ev = read(spark, dir, "events")
+    gaugesFrom(if (wide) Par.widen(ev, col("event_id")) else ev)
   }
 
   /** Deterministic CloudWatch metric-stream records from an events table
@@ -87,7 +86,8 @@ object MetricQueries {
   private def eventsAsCounters(spark: SparkSession, dir: String,
       wide: Boolean = false): DataFrame = {
     SparkEntry.configure(spark)
-    val ev = if (wide) readWide(spark, dir, "events") else read(spark, dir, "events")
+    val ev0 = read(spark, dir, "events")
+    val ev = if (wide) Par.widen(ev0, col("event_id")) else ev0
     MetricFrames.withDefaults(ev.select(
       lit("req.count").as("metric_name"),
       lit("Sum").as("metric_type"),
@@ -210,7 +210,7 @@ object MetricQueries {
       // json-encode + firehose-decode chain is compute-bound per row, so
       // widen the narrow scan (no-op on a production-wide source)
       val frames = graft.sources.FirehoseMetrics.fromFirehoseCwMetrics(
-        firehoseRecordsFrom(readWide(s, d, "events")), col("record"))
+        firehoseRecordsFrom(Par.widen(read(s, d, "events"), col("event_id"))), col("record"))
       MetricsExporter.samplesV4(MetricsExporter.scalarPoints(frames))
         .groupBy(col("env"), col("temporality"), col("metric_name"),
           col("fingerprint"))

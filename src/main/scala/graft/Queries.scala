@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.model.LogFrames
 import graft.operators._
-import graft.pipeline.{Exporter, ExporterConfig, Pipeline, PipelineSpec}
+import graft.ops.Par
+import graft.pipeline.{Exporter, Pipeline, PipelineSpec}
+import graft.sources.Tables
 
 /** The driver-checked query registry: each entry exercises one engine
   * operator (SURVEY.md §2) over the shared testdata tables, with a
@@ -15,23 +17,21 @@ import graft.pipeline.{Exporter, ExporterConfig, Pipeline, PipelineSpec}
 object Queries {
 
   private def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    Tables.parquet(spark, s"$dir/$table.parquet")
 
   // round 6: the single-row-group events file plans as ONE scan task, so a
   // compute-heavy downstream lift serializes on one core. Opt-in per query:
   // the repartition costs ~0.1 s at sf0.1, so only queries whose per-row
-  // work is heavier than that use the wide form (measured per query; widen
+  // work is heavier than that widen the read (measured per query; widen
   // itself is a no-op once the source is production-wide — ops/Par.scala).
-  private def readWide(spark: SparkSession, dir: String, table: String): DataFrame =
-    graft.ops.Par.widen(read(spark, dir, table), col("event_id"))
-
   /** events table lifted into LogRow shape: props string is the body,
     * event_type/value become typed attributes, user_id a resource label.
     */
   private def eventsAsLogs(spark: SparkSession, dir: String,
       wide: Boolean = false): DataFrame = {
     SparkEntry.configure(spark)
-    val ev = if (wide) readWide(spark, dir, "events") else read(spark, dir, "events")
+    val ev0 = read(spark, dir, "events")
+    val ev = if (wide) Par.widen(ev0, col("event_id")) else ev0
     LogFrames.withDefaults(
       ev.select(
         col("event_id"),
@@ -377,7 +377,7 @@ object Queries {
     // (json_writer.go walkNode; types unioned across records)
     "q_json_path_types" -> ((s, d) => {
       SparkEntry.configure(s)
-      val ev = readWide(s, d, "events")
+      val ev = Par.widen(read(s, d, "events"), col("event_id"))
       val logs = LogFrames.withDefaults(ev.select(
         col("event_id"),
         concat(lit("{\"k\":"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.SpanFrames
 import graft.pipeline.{LlmPricing, TraceExporter}
+import graft.sources.Tables
 
 /** Driver-checked queries for the traces exporter slice: the `events` table
   * lifted into deterministic span frames, shaped by [[TraceExporter]], with
@@ -19,7 +20,7 @@ import graft.pipeline.{LlmPricing, TraceExporter}
 object TraceQueries {
 
   private def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    Tables.parquet(spark, s"$dir/$table.parquet")
 
   // round 6: the single-row-group events scan plans as one task; queries
   // whose per-row lift outweighs a ~0.1 s repartition opt in with

@@ -245,7 +245,7 @@ final class AttrsMetaWorker(skipKeys: Array[String]) extends Serializable {
     addMap(2, v => v.toString, isString = false)
 
     val sorted = entries.sortBy(_._1)
-    var sum = if (sorted.isEmpty) Fingerprint.offset64Public else {
+    val sum = if (sorted.isEmpty) Fingerprint.offset64Public else {
       var h = Fingerprint.offset64Public
       sorted.foreach { case (k, v, _) =>
         h = Fingerprint.hashAdd(h, k)

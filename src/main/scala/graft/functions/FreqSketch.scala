@@ -57,7 +57,7 @@ final case class MisraGriesAgg(child: Expression, k: Int,
           // (batch form); drop zeros; the remainder of the offered item,
           // if any, enters the freed space
           val dec = math.min(weight, buf.valuesIterator.min)
-          var remaining = weight - dec
+          val remaining = weight - dec
           val dead = buf.iterator.filter(_._2 == dec).map(_._1).toList
           buf.mapValuesInPlace((_, c) => c - dec)
           dead.foreach(buf.remove)

@@ -377,7 +377,7 @@ object ExprLang {
         case LNum(_, false) | CNum(_) => CTypeName(lit("float"))
         case CBool(_) => CTypeName(lit("bool"))
         case LNil => CTypeName(lit("nil"))
-        case other => CTypeName(lit("string"))
+        case _ => CTypeName(lit("string"))
       }
       case "int" => CNum(asNum(arg).cast("long").cast("double"))
       case "float" => CNum(asNum(arg))

@@ -348,7 +348,9 @@ object Dedup {
     * (without it the plan doubles every round and the driver, not the
     * data, becomes the bottleneck).
     *
-    * Returns (id, label) for every node appearing in `pairs`.
+    * Returns (id, label) for every node appearing in `pairs`. Fails, in
+    * both regimes, on a null or non-BIGINT id, and when the fixpoint loop
+    * exhausts `maxIters` rounds without converging.
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a", bCol: String = "b",
       maxIters: Int = 50, localEdgeThreshold: Long = 2000000L): DataFrame = {
@@ -375,8 +377,17 @@ object Dedup {
     // an eager checkpoint — a symmetrizing union would reference (and
     // re-execute) the candidate plan twice; the regime choice below is a
     // count over the cached blocks (cheap)
-    val rawDf = pairs.select(col(aCol).cast("long").as("a"),
-        col(bCol).cast("long").as("b"))
+    // a null or non-BIGINT id fails the checkpoint job itself, in either
+    // regime: as a node it would merge every such pair into one phantom
+    // component (or throw on the small path only)
+    val a = col(aCol).cast("long")
+    val b = col(bCol).cast("long")
+    val badId = raise_error(concat(
+      lit(s"connectedComponents: null or non-BIGINT id in ($aCol, $bCol) = ("),
+      coalesce(col(aCol).cast("string"), lit("null")), lit(", "),
+      coalesce(col(bCol).cast("string"), lit("null")), lit(")")))
+    val rawDf = pairs.select(
+        when(a.isNull || b.isNull, badId).otherwise(a).as("a"), b.as("b"))
       .localCheckpoint(true)
     val nPairs = rawDf.count()
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -447,6 +458,8 @@ object Dedup {
       prevSum = nextSum
       it += 1
     }
+    require(converged, s"connectedComponents did not converge within $maxIters rounds; " +
+      "raise maxIters (the rounds needed grow with the component diameter)")
     labels.select(col("id"), col("label"))
   }
 

@@ -42,16 +42,6 @@ object Dsir {
     def buckets: Int = ratioE6.length
   }
 
-  private def feats(textCol: Column): Column = {
-    val toks = filter(split(trim(textCol), "\\s+"), w => length(w) > 0)
-    val fenced = graft.functions.OptimizerFence(toks)
-    // unigrams ++ adjacent bigrams (guard: sequence(1, 0) is descending)
-    concat(fenced,
-      when(size(fenced) >= 2, transform(sequence(lit(1), size(fenced) - 1),
-        i => concat_ws(" ", element_at(fenced, i), element_at(fenced, i + 1))))
-        .otherwise(array().cast("array<string>")))
-  }
-
   /** The shared bucket function as a Catalyst column (training side). */
   def bucketCol(f: Column, buckets: Int): Column =
     pmod(conv(substring(md5(f), 1, 8), 16, 10).cast("long"), lit(buckets.toLong))
@@ -89,7 +79,7 @@ object Dsir {
   def trainSplit(raw: DataFrame, targetFilter: Column, textCol: Column,
       buckets: Int = 1024): DsirModel = {
     // round 6: the feature->bucket step is ONE codegen kernel call
-    // (DsirBucketIds) instead of the composed explode(feats)+md5+conv chain
+    // (DsirBucketIds) instead of a composed explode(unigrams ++ bigrams)+md5+conv chain
     // whose interpreted bigram lambdas re-split the text per position; the
     // widen() spreads a narrow small-file scan across the host (no-op on a
     // production-wide scan) — same counts, same model, bit-identical.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorKernels, VectorKernelsImpl}
+import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (`Array[Float]`).
@@ -103,8 +104,10 @@ object Similarity {
       .write.mode("overwrite").partitionBy("sig").parquet(path)
 
   /** ANN over a signature index: literal probe-bucket filter on the
-    * partition column → Catalyst partition pruning (verify via
-    * `.inputFiles` or the scan's PartitionFilters in explain).
+    * partition column → Catalyst partition pruning. Verify it with the
+    * executed scan's `numFiles` metric, which counts the pruned files, or
+    * the scan's PartitionFilters in explain; `.inputFiles` ignores partition
+    * filters and lists the whole index.
     */
   def lshTopKIndexed(spark: SparkSession, indexPath: String, query: DataFrame,
       k: Int, planes: Int = 8, vecCol: String = "embedding",
@@ -112,7 +115,7 @@ object Similarity {
     val qVec = query.select(col(vecCol)).head().getSeq[Float](0)
     val buckets = probeBuckets(signatureOf(qVec, planes), planes)
     val qLit = typedlit(qVec.toArray)
-    spark.read.parquet(indexPath)
+    Tables.parquet(spark, indexPath)
       .filter(col("sig").isin(buckets: _*))
       .withColumn("cosine", cosine(col(vecCol), qLit))
       .orderBy(col("cosine").desc, col(idCol).asc)
@@ -192,7 +195,7 @@ object Similarity {
     val qVec = query.select(col(vecCol)).head().getSeq[Float](0)
     val probes = Clustering.nearestClusters(centroids, qVec, nprobe)
     val qLit = typedlit(qVec.toArray)
-    spark.read.parquet(indexPath)
+    Tables.parquet(spark, indexPath)
       .filter(col("cluster").isin(probes.map(Int.box): _*))
       .withColumn("cosine", cosine(col(vecCol), qLit))
       .orderBy(col("cosine").desc, col(idCol).asc)

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{KeyCheck, MapDropKeyPrefix, MapSortedJson, ResourceFingerprint, TypedAttrsGoJson}
+import graft.functions.{MapDropKeyPrefix, MapSortedJson, ResourceFingerprint, TypedAttrsGoJson}
 
 /** The exporter stage: one shared upstream -> five sink-shaped DataFrames,
   * replicating `exporter/clickhouselogsexporter/exporter.go` semantics

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.model.LogSchema
 import graft.operators._
 
 /** The compiled logs pipeline.

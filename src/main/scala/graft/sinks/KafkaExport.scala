@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.functions.JsonCanon
-import graft.sources.{Jaeger, OtlpJson, OtlpProto, OtlpProtoEncode}
+import graft.sources.{Jaeger, OtlpJson, OtlpProtoEncode}
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanRow}
 
 /** One producer record, shaped for Spark's Kafka sink (`topic`/`value`/

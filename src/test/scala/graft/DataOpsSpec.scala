@@ -571,6 +571,35 @@ class DataOpsSpec extends SparkSuite {
     assert(labels(30L) == 30L && labels(31L) == 30L)
   }
 
+  /** Every message along the cause chain (task failures arrive wrapped). */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+
+  test("connected components: a null or non-BIGINT id fails in both regimes, " +
+      "naming the columns") {
+    val nulls = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (None, Some(3L)), (Some(4L), None), (Some(5L), Some(6L)))
+      .toDF("src", "dst")
+    val junk = Seq(("1", "2"), ("x", "3")).toDF("src", "dst")
+    for (pairs <- Seq(nulls, junk); threshold <- Seq(2000000L, 0L)) {
+      val e = intercept[Exception] {
+        Dedup.connectedComponents(pairs, "src", "dst", localEdgeThreshold = threshold)
+          .collect()
+      }
+      assert(messages(e).contains("null or non-BIGINT id in (src, dst)"), messages(e))
+    }
+  }
+
+  test("connected components: a loop that exhausts maxIters fails instead of " +
+      "returning partial labels") {
+    // the 12-node path needs 11 rounds; 2 leave 10 distinct labels
+    val pairs = (1L to 11L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(pairs, maxIters = 2, localEdgeThreshold = 0L).collect()
+    }
+    assert(e.getMessage.contains("did not converge within 2 rounds"))
+  }
+
   test("bm25: hand-computed scores, df/avgdl from corpus, unmatched doc " +
       "scores zero") {
     import graft.ops.Relevance

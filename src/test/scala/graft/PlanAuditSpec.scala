@@ -16,7 +16,8 @@ import graft.sources.{DataGen, Transcripts}
   * appear there): the exporter paths stay inside whole-stage codegen, no
   * query silently downgrades to SortAggregate (a var-length or complex
   * aggregation buffer sorts every partition), and epochMix evaluates its
-  * quality kernel once per row.
+  * quality kernel once per row. Building a query a second time starts no
+  * job, except in the allowlisted builders that need driver state first.
   */
 class PlanAuditSpec extends SparkSuite {
 
@@ -89,6 +90,49 @@ class PlanAuditSpec extends SparkSuite {
       }
     }
     assert(sortAggs.isEmpty, sortAggs.mkString("\n"))
+  }
+
+  /** The builders that still start jobs when they build a DataFrame over
+    * tables this session has already read, and why. Most need driver state
+    * (a collected constant, a loop's convergence) before they can return a
+    * plan; a probe or checkpoint is work that could move into the plan.
+    * Every other builder only plans.
+    */
+  private val buildJobs: Map[String, String] = Map(
+    "q_ann_indexed" -> ("collects the query vector for its probe buckets; runs the plan " +
+      "once to assert the scan's pruned numFiles"),
+    "q_ann_ivf" -> "k-means loop collects the centroids each round; collects the query vector",
+    "q_ann_lsh" -> "collects the query vector for its probe-bucket literal",
+    "q_ann_recall" -> "k-means loop collects the centroids each round",
+    "q_bloom_dedup" -> "aggregates the Bloom bitset to the driver before the probe",
+    "q_bm25" -> "collects the top-df terms, then the df and avgdl statistics",
+    "q_bpe" -> "BPE trainer collects the pair counts for each merge",
+    "q_conv_containment" -> ("Par.widen's df.rdd partition probe runs the grouped " +
+      "input's shuffle stages under AQE"),
+    "q_dedup_pr" -> "checkpoints `reps`, the input both the candidate and truth branches read",
+    "q_dsir" -> "collects the per-bucket feature counts; checkpoints the scored docs",
+    "q_dup_clusters" -> "connected components: checkpointed edge list, its count, the labels",
+    "q_heavy_hitters" -> "collects the Misra-Gries candidates for exact verification",
+    "q_kmeans" -> "k-means loop collects the centroids each round",
+    "q_lm_perplexity" -> "collects the LM vocabulary and bigram counts",
+    "q_nb_classify" -> "collects the naive-Bayes vocabulary and class/term counts",
+    "q_nb_eval" -> "collects the naive-Bayes vocabulary and class/term counts",
+    "q_semdedup" -> "k-means loop, then connected components over the cosine pairs",
+    "q_temp_sample" -> "collects the per-stratum sampling rates",
+    "q_turn_templates" -> "collects the Misra-Gries candidates for exact verification",
+  )
+
+  test("a warm build starts no job outside the allowlist") {
+    val jobs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+      q(spark, sf0001) // the first build reads the tables this session has not
+      name -> JobCount(spark)(q(spark, sf0001))._2
+    }.filter(_._2 > 0).toMap
+    val unlisted = jobs.keySet -- buildJobs.keySet
+    val stale = buildJobs.keySet -- jobs.keySet
+    assert(unlisted.isEmpty && stale.isEmpty,
+      s"jobs per warm build: ${jobs.toSeq.sorted.mkString(", ")}; " +
+        s"not allowlisted: ${unlisted.toSeq.sorted.mkString(", ")}; " +
+        s"allowlisted but ran none: ${stale.toSeq.sorted.mkString(", ")}")
   }
 
   test("epochMix evaluates the QualityStats kernel in exactly one Project") {
