@@ -438,10 +438,10 @@ object Queries {
         .agg(count(lit(1)).as("n"))
     }),
 
-    // exporter: attribute/resource key metadata (SURVEY §2.4); one shared
-    // tagRows scan for both sinks
+    // exporter: attribute/resource key metadata (SURVEY §2.4); both key
+    // sinks' rows from one tag-row scan
     "q_attribute_keys" -> ((s, d) =>
-      Exporter.allKeys(Exporter.logsV2(eventsAsLogs(s, d)))),
+      Exporter.keys(Exporter.logsV2(eventsAsLogs(s, d)), "tag", "resource")),
 
     // metadataexporter analogue: 6-hour-window (resource fp, attr fp,
     // string-valued attrs) rows (SURVEY §2.5; attribute_writer.go:38-100)

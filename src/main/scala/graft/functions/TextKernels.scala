@@ -27,13 +27,6 @@ object TextKernels {
     when(c.rlike("^\"(?s).*\"$"), unescaped).otherwise(c)
   }
 
-  /** Cheap JSON-object shape check usable in codegen'd predicates — the
-    * gate the `normalize` operator uses before attempting a body parse
-    * (`operators/normalize/transformer.go:45-142`; validity itself is
-    * enforced by `from_json` returning NULL on malformed input).
-    */
-  def looksLikeJsonObject(c: Column): Column =
-    c.isNotNull && c.rlike("^\\s*\\{(?s).*\\}\\s*$")
 }
 
 /** Counts elements of a string array that are members of a constant set —

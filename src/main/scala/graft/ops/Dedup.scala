@@ -26,17 +26,6 @@ object Dedup {
     docs.groupBy(md5(col(textCol)).as("fingerprint"))
       .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("exemplar"))
 
-  /** Rows minus exact duplicates (keep the min-id exemplar). */
-  def exactDeduped(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val w = exact(docs, textCol, idCol).select(col("fingerprint"), col("exemplar"))
-    docs.withColumn("fingerprint", md5(col(textCol)))
-      .join(broadcastIfSmall(w), Seq("fingerprint"))
-      .filter(col(idCol) === col("exemplar"))
-      .drop("fingerprint", "exemplar")
-  }
-
-  private def broadcastIfSmall(df: DataFrame): DataFrame = df // sized by AQE
-
   /** MinHash signature from a PRE-HASHED shingle array (md5 per shingle,
     * computed once): k lexicographic minima of md5(i || shingleHash) — a
     * deterministic, engine-portable stand-in for k independent hash

@@ -42,10 +42,6 @@ object Dsir {
     def buckets: Int = ratioE6.length
   }
 
-  /** The shared bucket function as a Catalyst column (training side). */
-  def bucketCol(f: Column, buckets: Int): Column =
-    pmod(conv(substring(md5(f), 1, 8), 16, 10).cast("long"), lit(buckets.toLong))
-
   private def bucketCounts(df: DataFrame, textCol: Column, buckets: Int): Map[Long, Long] =
     df.select(explode(graft.functions.DsirBucketIds(textCol, buckets)).as("b"))
       .groupBy("b").agg(count(lit(1)).as("c"))

@@ -1,9 +1,12 @@
 package graft.pipeline
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{MapDropKeyPrefix, MapSortedJson, ResourceFingerprint, TypedAttrsGoJson}
+import graft.functions.{IsRandomKey, MapDropKeyPrefix, MapSortedJson, MapToTagRows,
+  ResourceFingerprint, TypedAttrsGoJson}
 
 /** The exporter stage: one shared upstream -> five sink-shaped DataFrames,
   * replicating `exporter/clickhouselogsexporter/exporter.go` semantics
@@ -146,63 +149,57 @@ object Exporter {
     }
   }
 
-  /** All candidate tag rows before filtering: (unix_milli, tag_key, tag_type,
-    * tag_data_type, string_value, number_value). Deduped like the TTL caches
-    * dedup repeats within a window.
+  /** One tag-metadata row: the element type [[explodeTagRows]] explodes. */
+  private def tagRow(key: String, tagType: String, dataType: String,
+      strVal: Column, numVal: Column): Column =
+    struct(lit(key).as("tag_key"), lit(tagType).as("tag_type"),
+      lit(dataType).as("tag_data_type"),
+      strVal.as("string_value"), numVal.cast("double").as("number_value"))
+
+  /** A string-typed tag row for a fixed key (a log or span field). */
+  private[pipeline] def stringTag(key: String, tagType: String, value: Column): Column =
+    tagRow(key, tagType, "string", value, lit(null).cast("double"))
+
+  /** A float64-typed tag row for a fixed key (a log or span field). */
+  private[pipeline] def numberTag(key: String, tagType: String, value: Column): Column =
+    tagRow(key, tagType, "float64", lit(null).cast("string"), value)
+
+  /** The tag-row explode the logs and traces exporters share
+    * (exporter.go:887-1005, writer.go:311-421): (unix_milli, tag_key,
+    * tag_type, tag_data_type, string_value, number_value) for every typed
+    * attribute (`tag`), every resource attribute (`resource`, force-
+    * stringified: exporter.go:656 forceStringValues) and the caller's
+    * `extra` arrays of exporter-specific rows.
     *
-    * Built as ONE array-concat + ONE explode over a single scan of the
-    * upstream — round 1's seven `unionAll` branches recomputed the whole
-    * pipeline per branch whenever the upstream wasn't cached (and
-    * attributeKeys/resourceKeys each re-derived it again).
+    * ONE array-concat + ONE explode over a single scan of the upstream.
+    * unix_milli is hour-rounded from the record ts (deterministic stand-in
+    * for `(time.Now().UnixMilli()/3600000)*3600000`, exporter.go:929).
+    * MapToTagRows is one codegen kernel per map (transform() is a
+    * CodegenFallback HOF and would de-codegen the whole tag projection); a
+    * NULL map contributes an EMPTY array, so a frame from an external
+    * adapter built without LogFrames.withDefaults cannot null-propagate
+    * through concat() and drop the record's other tag rows.
     */
-  private def tagRows(logsV2: DataFrame): DataFrame = {
-    // hour-rounded from the record ts (deterministic stand-in for
-    // `(time.Now().UnixMilli()/3600000)*3600000`, exporter.go:929)
-    val unixMilli = expr("((timestamp div 1000000) div 3600000) * 3600000")
-
-    val nullStr = lit(null).cast("string")
-    val nullNum = lit(null).cast("double")
-    def row(key: Column, tagType: String, dataType: String,
-        strVal: Column, numVal: Column): Column =
-      struct(key.as("tag_key"), lit(tagType).as("tag_type"),
-        lit(dataType).as("tag_data_type"),
-        strVal.as("string_value"), numVal.cast("double").as("number_value"))
-
-    // MapToTagRows: one codegen kernel per map (transform() is a
-    // CodegenFallback HOF and would de-codegen the whole tag projection);
-    // a NULL map contributes an EMPTY array, so a frame from an external
-    // adapter built without LogFrames.withDefaults cannot null-propagate
-    // through concat() and drop the record's other tag rows
-    import graft.functions.MapToTagRows
-    val all = concat(
+  private[pipeline] def explodeTagRows(main: DataFrame, extra: Column*): DataFrame = {
+    val all = concat(Seq(
       MapToTagRows(col("attributes_string"), "tag", "string", mode = 0),
       MapToTagRows(col("attributes_number"), "tag", "float64", mode = 1),
       MapToTagRows(col("attributes_bool"), "tag", "bool", mode = 2),
-      // resource attrs are force-stringified (exporter.go:656,
-      // forceStringValues=true)
-      MapToTagRows(col("resources_string"), "resource", "string", mode = 0),
-      // scope attrs likewise (exporter.go:667); scope keys go to
-      // tag_attributes but to NEITHER key sink (exporter.go:887-919 switch)
-      MapToTagRows(col("scope_string"), "scope", "string", mode = 0),
-      // logfields: severity_text/severity_number (exporter.go:741)
-      array(
-        row(lit("severity_text"), "logfield", "string", col("severity_text"), nullNum),
-        row(lit("severity_number"), "logfield", "float64", nullStr,
-          col("severity_number").cast("double"))))
-
-    logsV2.select(unixMilli.as("unix_milli"), explode(all).as("e"))
+      MapToTagRows(col("resources_string"), "resource", "string", mode = 0)) ++ extra: _*)
+    main.select(expr("((timestamp div 1000000) div 3600000) * 3600000").as("unix_milli"),
+        explode(all).as("e"))
       .select(col("unix_milli"), col("e.tag_key"), col("e.tag_type"),
         col("e.tag_data_type"), col("e.string_value"), col("e.number_value"))
   }
 
-  /** tag_attributes_v2 sink rows (keycheck + value length + skip-set applied,
-    * deduped within the batch like the TTL cache would).
+  /** The `tag_attributes` tail both exporters share: deduped on the finest
+    * key within the batch (like the TTL caches dedup repeats within a
+    * window), value-length capped, cardinality skip-set honored.
     */
-  def tagAttributes(logsV2: DataFrame, cfg: ExporterConfig = ExporterConfig()): DataFrame = {
-    val rows = tagRows(logsV2)
+  private[pipeline] def tagAttributeRows(tagRows: DataFrame, cfg: ExporterConfig): DataFrame = {
+    val rows = tagRows
       .dropDuplicates("unix_milli", "tag_key", "tag_type", "tag_data_type",
         "string_value", "number_value")
-      .filter(!graft.functions.IsRandomKey(col("tag_key")))
       .filter(col("string_value").isNull ||
         length(col("string_value")) <= cfg.maxAttributeValueLength)
     if (cfg.skipKeys.isEmpty) rows
@@ -210,34 +207,41 @@ object Exporter {
       .isin(cfg.skipKeys.toSeq: _*))
   }
 
-  /** logs_attribute_keys / logs_resource_keys: distinct (name, datatype) for
-    * tag/resource tag types; scope+logfield keys are emitted to neither
+  /** All candidate log tag rows before filtering: the shared attribute and
+    * resource rows plus scope attrs (force-stringified like resources,
+    * exporter.go:667) and the severity logfields (exporter.go:741).
+    */
+  private def tagRows(logsV2: DataFrame): DataFrame =
+    explodeTagRows(logsV2,
+      MapToTagRows(col("scope_string"), "scope", "string", mode = 0),
+      array(
+        stringTag("severity_text", "logfield", col("severity_text")),
+        numberTag("severity_number", "logfield", col("severity_number"))))
+
+  /** tag_attributes_v2 sink rows: the shared tail over the keycheck-filtered
+    * log tag rows.
+    */
+  def tagAttributes(logsV2: DataFrame, cfg: ExporterConfig = ExporterConfig()): DataFrame =
+    tagAttributeRows(tagRows(logsV2).filter(!IsRandomKey(col("tag_key"))), cfg)
+
+  /** The key sinks: distinct keycheck-passing (name, datatype) per tag type
+    * among `tagTypes`. A key present under two of them yields one row for
+    * each. Scope and logfield keys go to neither key sink
     * (exporter.go:887-919 switch).
     */
-  // dedup BEFORE the keycheck predicate: the regex battery then runs once
-  // per distinct (name, datatype), not once per exploded tag row
-  def attributeKeys(logsV2: DataFrame): DataFrame =
-    tagRows(logsV2).filter(col("tag_type") === "tag")
-      .select(col("tag_key").as("name"), col("tag_data_type").as("datatype"))
-      .dropDuplicates()
-      .filter(!graft.functions.IsRandomKey(col("name")))
-
-  def resourceKeys(logsV2: DataFrame): DataFrame =
-    tagRows(logsV2).filter(col("tag_type") === "resource")
-      .select(col("tag_key").as("name"), col("tag_data_type").as("datatype"))
-      .dropDuplicates()
-      .filter(!graft.functions.IsRandomKey(col("name")))
-
-  /** Both key sinks from ONE tagRows pass (multiset-equal to
-    * `attributeKeys unionAll resourceKeys`, which scans the upstream twice).
-    */
-  def allKeys(logsV2: DataFrame): DataFrame =
-    tagRows(logsV2).filter(col("tag_type").isin("tag", "resource"))
+  def keys(logsV2: DataFrame, tagTypes: String*): DataFrame =
+    tagRows(logsV2).filter(col("tag_type").isin(tagTypes: _*))
       .select(col("tag_type"), col("tag_key").as("name"),
         col("tag_data_type").as("datatype"))
       .dropDuplicates()
-      .filter(!graft.functions.IsRandomKey(col("name")))
+      .filter(!IsRandomKey(col("name")))
       .select("name", "datatype")
+
+  /** logs_attribute_keys. */
+  def attributeKeys(logsV2: DataFrame): DataFrame = keys(logsV2, "tag")
+
+  /** logs_resource_keys. */
+  def resourceKeys(logsV2: DataFrame): DataFrame = keys(logsV2, "resource")
 
   /** Usage metering: per-route record counts + byte sizes
     * (usage/common.go:56-63, flushed per tenant/exporter).
@@ -252,9 +256,6 @@ object Exporter {
   def severityHistogram(logsV2: DataFrame): DataFrame =
     logsV2.groupBy(col("route"), col("severity_text"), col("severity_number"))
       .agg(count(lit(1)).as("n"))
-
-  def toolHistogram(logsV2: DataFrame): DataFrame =
-    logsV2.groupBy(col("route"), col("tool")).agg(count(lit(1)).as("n"))
 
   /** Cardinality guard (exporter.go:359-406): find tag keys whose distinct
     * value count exceeds `maxDistinctValues` (ClickHouse `uniq` ==
@@ -271,29 +272,19 @@ object Exporter {
       .collect().map(_.getString(0)).toSet
 
   /** The 5-way sink fan-out (exporter.go:796-827) from an already-shaped
-    * (and typically persisted) `logs_v2` frame — the one-batch-many-writers
-    * shape of the reference's pushLogsData: shape once, every sink reads the
-    * cached batch.
+    * (and typically persisted) `logs_v2` frame: the reference's
+    * pushLogsData sends one batch to five writers, and here every sink
+    * reads the one `main`. This is the one sink list; callers add only
+    * their write policy. Each sink is its own plan, so a job that writes
+    * them explodes `main`'s tag rows once per tag sink. The map iterates in
+    * the order listed.
     */
   def fanOutFrom(main: DataFrame, cfg: ExporterConfig = ExporterConfig(),
-      existingResources: Option[DataFrame] = None): Map[String, DataFrame] = {
-    // both key sinks hang off ONE tagRows derivation (tag_type retained,
-    // filtered per sink) instead of two independent attributeKeys /
-    // resourceKeys plans — with a cached upstream each sink's job then scans
-    // the cache once through a shared explode+dedup shape rather than
-    // re-deriving tagRows twice from scratch
-    val keys = tagRows(main).filter(col("tag_type").isin("tag", "resource"))
-      .select(col("tag_type"), col("tag_key").as("name"),
-        col("tag_data_type").as("datatype"))
-      .dropDuplicates()
-      .filter(!graft.functions.IsRandomKey(col("name")))
-    Map(
+      existingResources: Option[DataFrame] = None): Map[String, DataFrame] =
+    ListMap(
       "logs_v2" -> main,
       "logs_v2_resource" -> resources(main, existingResources),
       "tag_attributes_v2" -> tagAttributes(main, cfg),
-      "logs_attribute_keys" ->
-        keys.filter(col("tag_type") === "tag").select("name", "datatype"),
-      "logs_resource_keys" ->
-        keys.filter(col("tag_type") === "resource").select("name", "datatype"))
-  }
+      "logs_attribute_keys" -> attributeKeys(main),
+      "logs_resource_keys" -> resourceKeys(main))
 }

@@ -39,8 +39,6 @@ object MeterConnector {
   final case class Names(count: String, size: String, countDesc: String, sizeDesc: String)
   private val logNames = Names("signoz.meter.log.count", "signoz.meter.log.size",
     "The number of log records observed.", "The size of log records observed.")
-  private val spanNames = Names("signoz.meter.span.count", "signoz.meter.span.size",
-    "The number of spans observed.", "The size of spans observed.")
   private val dpNames = Names("signoz.meter.metric.datapoint.count",
     "signoz.meter.metric.datapoint.size",
     "The number of data points observed.", "The size of data points observed.")
@@ -83,15 +81,6 @@ object MeterConnector {
     build(logsV2.select(col("resources_string").as("__res"), lit(1L).as("__count"),
       col("record_size").cast("long").as("__size")),
       dims, logNames, connectorId, flushUnixMilli)
-
-  /** Spans -> `signoz.meter.span.{count,size}` (SizePerSpan == the spansV3
-    * `record_size`).
-    */
-  def fromSpans(spansV3: DataFrame, dims: Seq[String], connectorId: String,
-      flushUnixMilli: Long): DataFrame =
-    build(spansV3.select(col("resources_string").as("__res"), lit(1L).as("__count"),
-      col("record_size").cast("long").as("__size")),
-      dims, spanNames, connectorId, flushUnixMilli)
 
   /** Metric datapoint frames -> `signoz.meter.metric.datapoint.{count,size}`.
     * `scalars`/`histograms`/`summaries` are MetricFrames-shaped; exponential

@@ -296,11 +296,6 @@ object MetricsExporter {
         min(col("min")).as("min"), max(col("max")).as("max"),
         sum(col("sum")).as("sum"), sum(col("count")).as("count"))
 
-  /** `time_series_v4_6hrs` re-bucket (one row per series per 6 h epoch). */
-  def timeSeries6hrs(ts: DataFrame): DataFrame =
-    ts.withColumn("unix_milli", expr("(unix_milli div 21600000) * 21600000"))
-      .dropDuplicates("fingerprint", "unix_milli")
-
   /** Attach reduction identity (rules.go:240-263 reducer.reduce): the rule
     * is keyed by the FLATTENED metric name, applies only to datapoints at or
     * after its effective_from (datapoint time, not wall clock), and the
@@ -353,31 +348,6 @@ object MetricsExporter {
         col("__rrfp.attrs").as("resource_attrs"))
       .dropDuplicates("fingerprint", "unix_milli")
 
-  /** `samples_v4_reduced_last_60s` (metrics_migrations.go:1411-1500):
-    * gauges + non-monotonic cumulatives; per-series 60 s last/min/max/sum,
-    * then aggregated across the group.
-    */
-  def reducedLast60s(reducedSamples: DataFrame): DataFrame = {
-    val perSeries = reducedSamples
-      .filter(col("reduced_fingerprint") =!= 0L &&
-        col("flags").bitwiseAND(1) === 0 &&
-        (col("temporality") === "Unspecified" ||
-          (col("temporality") === "Cumulative" && !col("is_monotonic"))))
-      .groupBy(col("env"), col("temporality"), col("metric_name"),
-        col("reduced_fingerprint"), col("fingerprint"),
-        expr("(unix_milli div 60000) * 60000").as("bucket_unix_milli"))
-      .agg(max_by(col("value"), col("unix_milli")).as("last"),
-        min(col("value")).as("min_value"), max(col("value")).as("max_value"),
-        sum(col("value")).as("sum_value"), count(lit(1)).as("num_values"))
-    perSeries
-      .groupBy(col("env"), col("temporality"), col("metric_name"),
-        col("reduced_fingerprint"), col("bucket_unix_milli").as("unix_milli"))
-      .agg(sum(col("last")).as("sum_last"),
-        min(col("min_value")).as("min"), max(col("max_value")).as("max"),
-        sum(col("sum_value")).as("sum_values"),
-        count(lit(1)).as("count_series"), sum(col("num_values")).as("count_samples"))
-  }
-
   /** `samples_v4_reduced_sum_60s` cumulative branch
     * (metrics_migrations.go:1554-1630): per-point increments with reset
     * detection (a drop counts the post-reset value), a series' first point
@@ -407,20 +377,6 @@ object MetricsExporter {
       .agg(sum(col("series_increment")).as("sum"),
         count(lit(1)).as("count_series"), sum(col("num_values")).as("count_samples"))
   }
-
-  /** Delta counters reduce by plain sum (the `sum_60s_delta_mv` branch). */
-  def reducedSum60sDelta(reducedSamples: DataFrame): DataFrame =
-    reducedSamples
-      .filter(col("reduced_fingerprint") =!= 0L &&
-        col("flags").bitwiseAND(1) === 0 && col("temporality") === "Delta")
-      .groupBy(col("env"), col("temporality"), col("metric_name"),
-        col("reduced_fingerprint"), col("fingerprint"),
-        expr("(unix_milli div 60000) * 60000").as("bucket_unix_milli"))
-      .agg(sum(col("value")).as("series_increment"), count(lit(1)).as("num_values"))
-      .groupBy(col("env"), col("temporality"), col("metric_name"),
-        col("reduced_fingerprint"), col("bucket_unix_milli").as("unix_milli"))
-      .agg(sum(col("series_increment")).as("sum"),
-        count(lit(1)).as("count_series"), sum(col("num_values")).as("count_samples"))
 
   /** Exponential histograms as DD-sketch rows (processExponentialHistogram,
     * exporter.go:913-1085): delta-only, gamma = 2^(2^-scale), contiguous

@@ -16,7 +16,8 @@ import graft.model.LogSchema
   *
   * Sinks produced (writer.go:152,236,291-297,518 + schema-migrator MVs):
   *  - `signoz_index_v3` — the span rows ([[spansV3]])
-  *  - `traces_v3_resource` — per-bucket resource dedup ([[resources]])
+  *  - `traces_v3_resource` — per-bucket resource dedup ([[Exporter.resources]]
+  *    over [[spansV3]]: same columns, same rfCache anti-join as logs)
   *  - `span_attributes` / `span_attributes_keys` — tag metadata
   *    ([[tagAttributes]], [[tagKeys]])
   *  - `signoz_error_index_v2` — exception events ([[errorEvents]])
@@ -220,87 +221,41 @@ object TraceExporter {
         col("scope_name"), col("scope_version"))
   }
 
-  /** `traces_v3_resource`: one row per distinct (labels, fingerprint) per
-    * 1800 s bucket (exporter_v3.go:430-441 resourcesSeen + writer.go:508-540;
-    * the rfCache becomes the optional anti-join, same as logs).
+  /** All span tag rows (writer.go:311-421): the shared attribute and
+    * resource rows ([[Exporter.explodeTagRows]]), scope tags
+    * (scope.name/scope.version + scope attrs, empty values skipped —
+    * schema-signoz.go:235-253), and the spanfield rows (name, kind,
+    * kind_string, status_code, status_code_string). Hour-rounded
+    * unix_milli from the span start ts (writer.go:312).
     */
-  def resources(spansV3: DataFrame, existing: Option[DataFrame] = None): DataFrame = {
-    val fresh = spansV3
-      .select(col("labels"), col("resource_fingerprint").as("fingerprint"),
-        col("ts_bucket_start").as("seen_at_ts_bucket_start"))
-      .dropDuplicates("fingerprint", "seen_at_ts_bucket_start")
-    existing match {
-      case Some(e) => fresh.join(e.select("fingerprint", "seen_at_ts_bucket_start"),
-        Seq("fingerprint", "seen_at_ts_bucket_start"), "left_anti")
-      case None => fresh
-    }
-  }
-
-  /** All span tag rows (writer.go:311-421): typed attribute tags, resource
-    * tags (string-forced), scope tags (scope.name/scope.version + scope
-    * attrs, empty values skipped — schema-signoz.go:235-253), and the
-    * spanfield rows (name, kind, kind_string, status_code, status_code_string).
-    * Hour-rounded unix_milli from the span start ts (writer.go:312).
-    */
-  private def tagRows(spansV3: DataFrame): DataFrame = {
-    val unixMilli = expr("((timestamp div 1000000) div 3600000) * 3600000")
-
-    val nullStr = lit(null).cast("string")
-    val nullNum = lit(null).cast("double")
-    def row(key: Column, tagType: String, dataType: String,
-        strVal: Column, numVal: Column): Column =
-      struct(key.as("tag_key"), lit(tagType).as("tag_type"),
-        lit(dataType).as("tag_data_type"),
-        strVal.as("string_value"), numVal.cast("double").as("number_value"))
-
+  private def tagRows(spansV3: DataFrame): DataFrame =
     // NO functions.filter(lambda) here — HigherOrderFunction =
     // CodegenFallback; empty scope values are dropped by the plain
     // post-explode filter below instead (same rows, stays in codegen)
-    val scopeFields = concat(
+    Exporter.explodeTagRows(spansV3,
+      concat(
+        array(
+          Exporter.stringTag("scope.name", "scope", col("scope_name")),
+          Exporter.stringTag("scope.version", "scope", col("scope_version"))),
+        MapToTagRows(col("scope_string"), "scope", "string", mode = 0)),
       array(
-        row(lit("scope.name"), "scope", "string", col("scope_name"), nullNum),
-        row(lit("scope.version"), "scope", "string", col("scope_version"), nullNum)),
-      MapToTagRows(col("scope_string"), "scope", "string", mode = 0))
-
-    val all = concat(
-      MapToTagRows(col("attributes_string"), "tag", "string", mode = 0),
-      MapToTagRows(col("attributes_number"), "tag", "float64", mode = 1),
-      MapToTagRows(col("attributes_bool"), "tag", "bool", mode = 2),
-      MapToTagRows(col("resources_string"), "resource", "string", mode = 0),
-      scopeFields,
-      array(
-        row(lit("name"), "spanfield", "string", col("name"), nullNum),
-        row(lit("kind_string"), "spanfield", "string", col("span_kind"), nullNum),
-        row(lit("kind"), "spanfield", "float64", nullStr, col("kind").cast("double")),
-        row(lit("status_code_string"), "spanfield", "string",
-          col("status_code_string"), nullNum),
-        row(lit("status_code"), "spanfield", "float64", nullStr,
-          col("status_code").cast("double"))))
-
-    spansV3.select(unixMilli.as("unix_milli"), explode(all).as("e"))
-      .select(col("unix_milli"), col("e.tag_key"), col("e.tag_type"),
-        col("e.tag_data_type"), col("e.string_value"), col("e.number_value"))
+        Exporter.stringTag("name", "spanfield", col("name")),
+        Exporter.stringTag("kind_string", "spanfield", col("span_kind")),
+        Exporter.numberTag("kind", "spanfield", col("kind")),
+        Exporter.stringTag("status_code_string", "spanfield", col("status_code_string")),
+        Exporter.numberTag("status_code", "spanfield", col("status_code"))))
       // NaN numbers are skipped (utils.IsValidFloat gate, exporter_v3.go:189-196)
       .filter(col("number_value").isNull || !isnan(col("number_value")))
       // scope rows with empty values are skipped (schema-signoz.go:240-243)
       .filter(col("tag_type") =!= "scope" ||
         (col("string_value").isNotNull && col("string_value") =!= ""))
-  }
 
-  /** `span_attributes` sink rows: value-length capped, skip-set honored,
-    * deduped within the batch (writer.go:303-353 value/key maps). Unlike the
-    * logs tag writer there is no random-key keycheck on the traces path.
+  /** `span_attributes` sink rows: the shared tail (writer.go:303-353
+    * value/key maps). Unlike the logs tag writer there is no random-key
+    * keycheck on the traces path.
     */
-  def tagAttributes(spansV3: DataFrame, cfg: ExporterConfig = ExporterConfig()): DataFrame = {
-    val rows = tagRows(spansV3)
-      .dropDuplicates("unix_milli", "tag_key", "tag_type", "tag_data_type",
-        "string_value", "number_value")
-      .filter(col("string_value").isNull ||
-        length(col("string_value")) <= cfg.maxAttributeValueLength)
-    if (cfg.skipKeys.isEmpty) rows
-    else rows.filter(!concat_ws(":", col("tag_key"), col("tag_type"), col("tag_data_type"))
-      .isin(cfg.skipKeys.toSeq: _*))
-  }
+  def tagAttributes(spansV3: DataFrame, cfg: ExporterConfig = ExporterConfig()): DataFrame =
+    Exporter.tagAttributeRows(tagRows(spansV3), cfg)
 
   /** `span_attributes_keys`: distinct (key, tagType, dataType, isColumn)
     * (writer.go:328-350); every shaped attribute here has isColumn=false.
@@ -540,27 +495,4 @@ object TraceExporter {
   def usage(spansV3: DataFrame): DataFrame =
     spansV3.groupBy(col("service_name"))
       .agg(count(lit(1)).as("n_spans"), sum(col("record_size")).as("n_bytes"))
-
-  /** The full traces fan-out from one shared shaped upstream
-    * (writer.go WriteBatchOfSpansV3: index + errors + tags + resources
-    * written from the same batch).
-    */
-  def fanOut(spans: DataFrame, cfg: ExporterConfig = ExporterConfig()): Map[String, DataFrame] = {
-    val main = spansV3(spans, cfg)
-    Map(
-      "signoz_index_v3" -> main,
-      "traces_v3_resource" -> resources(main),
-      "span_attributes" -> tagAttributes(main, cfg),
-      "span_attributes_keys" -> tagKeys(main),
-      "signoz_error_index_v2" -> errorEvents(spans),
-      "trace_summary" -> traceSummary(main),
-      // root_operations + sub_root_operations share the top_level_operations
-      // dest table in the reference (migrations 20/21)
-      "root_operations" -> rootOperations(main),
-      "sub_root_operations" -> subRootOperations(main),
-      "usage_explorer" -> usageExplorer(main),
-      "durationSort" -> durationSort(main),
-      "dependency_graph_minutes" -> dependencyGraph(main),
-      "usage" -> usage(main))
-  }
 }

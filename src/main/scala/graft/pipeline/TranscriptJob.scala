@@ -40,36 +40,37 @@ object TranscriptJob {
   /** transcript table -> committed sinks under `outDir`; returns each sink's
     * committed row count (the tables are re-readable via [[GraftTable.read]]).
     *
-    * The five sink writes run concurrently from the one cached `main` batch
-    * ([[GraftTable.writeAll]]), as the reference exporter sends its five
-    * table batches at once (exporter.go:796-827). The fan-out is
-    * all-or-error: either every sink commits and the counts come back, or
-    * `run` throws the first failure, and only after every other write has
-    * finished (each either committed or failed). `main` is unpersisted only
-    * then. With `resume`, `logs_v2` appends only its missing route
+    * The five sinks are [[Exporter.fanOutFrom]]'s, all read from the one
+    * cached `main` batch; this job adds only how each is written. The
+    * writes run concurrently ([[GraftTable.writeAll]]), as the reference
+    * exporter sends its five table batches at once (exporter.go:796-827).
+    * The fan-out is all-or-error: either every sink commits and the counts
+    * come back, or `run` throws the first failure, and only after every
+    * other write has finished (each either committed or failed). `main` is
+    * unpersisted only then. With `resume`, `logs_v2` appends only its missing route
     * partitions and the resource sink only its missing rows, so a re-run
     * after a failure completes the fan-out.
     */
   def run(spark: SparkSession, transcripts: DataFrame, outDir: String,
       spec: PipelineSpec, cfg: JobConfig = JobConfig(),
       resume: Boolean = false): Map[String, Long] = {
-    // shared upstream of the 5-way fan-out (exporter.go:796-827)
     val main = logsV2(transcripts, spec, cfg).cache()
     try {
       val existingRes =
         if (resume) scala.util.Try(GraftTable.read(spark, s"$outDir/logs_v2_resource")).toOption
         else None
-      val sinks: Seq[(String, String => GraftTable.Snapshot)] = Seq(
-        "logs_v2" -> (t =>
-          if (resume) GraftTable.appendMissingPartitions(main, t, "route", "logs_v2")
-          else GraftTable.write(main, t, Some("route"), "logs_v2")),
-        "logs_v2_resource" -> (t => GraftTable.write(
-          Exporter.resources(main, existingRes), t, None, "resources", overwrite = !resume)),
-        "tag_attributes_v2" -> (t => GraftTable.write(
-          Exporter.tagAttributes(main, cfg.exporter), t, None, "tags")),
-        "logs_attribute_keys" -> (t => GraftTable.write(Exporter.attributeKeys(main), t, None, "keys")),
-        "logs_resource_keys" -> (t => GraftTable.write(Exporter.resourceKeys(main), t, None, "keys")))
-      val snaps = GraftTable.writeAll(sinks.map { case (name, w) => s"$outDir/$name" -> w })
+      val frames = Exporter.fanOutFrom(main, cfg.exporter, existingRes)
+      // the per-sink write policy: partitioning, resume mode, stage label
+      def write(name: String, df: DataFrame)(t: String): GraftTable.Snapshot = name match {
+        case "logs_v2" =>
+          if (resume) GraftTable.appendMissingPartitions(df, t, "route", "logs_v2")
+          else GraftTable.write(df, t, Some("route"), "logs_v2")
+        case "logs_v2_resource" => GraftTable.write(df, t, None, "resources", overwrite = !resume)
+        case "tag_attributes_v2" => GraftTable.write(df, t, None, "tags")
+        case _ => GraftTable.write(df, t, None, "keys")
+      }
+      val sinks = frames.toSeq
+      val snaps = GraftTable.writeAll(sinks.map { case (n, df) => s"$outDir/$n" -> write(n, df) _ })
       sinks.map(_._1).zip(snaps.map(_.rowCount)).toMap
     } finally main.unpersist()
   }

@@ -197,18 +197,6 @@ object StreamJobs {
         else Iterator(MeterDelta(key.mkString(","), c, s, nc, ns))
       }
 
-  /** Streaming resource sink rows with cross-batch dedup inside the
-    * watermark horizon (the rfCache TTL analogue).
-    */
-  def resourceStream(logsV2: DataFrame, watermarkDelay: String = "30 minutes"): DataFrame =
-    logsV2
-      .withColumn("event_time", timestamp_micros(expr("timestamp div 1000")))
-      .withWatermark("event_time", watermarkDelay)
-      .select(col("labels"), col("resource_fingerprint").as("fingerprint"),
-        col("ts_bucket_start").as("seen_at_ts_bucket_start"), col("event_time"))
-      .dropDuplicatesWithinWatermark("fingerprint", "seen_at_ts_bucket_start")
-      .drop("event_time")
-
   /** Streaming corpus-ingestion dedup — the streaming face of the batch
     * incremental dedup family (Dedup.bloomIncremental / the normalized
     * exact key): documents arriving on a stream are

@@ -204,9 +204,11 @@ object TailSampler {
     policies.iterator.map(evaluateRow(_, traceIdHex, spans))
       .find(_ != -1).getOrElse(1)
 
-  /** The decision-wait group function, factored out for `TestGroupState`
-    * unit tests (a live ProcessingTimeTimeout query livelocks
-    * `processAllAvailable` — same pattern as `StreamJobs.meterDeltaFn`).
+  /** The decision-wait group function for a `flatMapGroupsWithState` over
+    * trace_id with ProcessingTimeTimeout. No streaming job wires it in; it
+    * is tested with `TestGroupState` (a live ProcessingTimeTimeout query
+    * livelocks `processAllAvailable` — same pattern as
+    * `StreamJobs.meterDeltaFn`).
     *
     * Reference semantics (`processor.go`):
     *  - spans BUFFER from the trace's first arrival; the decision timer
@@ -258,27 +260,4 @@ object TailSampler {
             Iterator.empty
         }
       }
-
-  /** Streaming tail sampling with decision-wait buffering. Input: a
-    * streaming span frame with `trace_id`/`span_id`/`attributes_string`/
-    * `attributes_number` columns. Output: the sampled spans, each emitted
-    * once — buffered spans at the trace's decision tick, late spans as
-    * they arrive (if their trace sampled).
-    */
-  def sampledStream(spans: DataFrame, policies: Seq[Policy],
-      decisionWait: String = "30 seconds",
-      retention: Option[String] = Some("30 minutes")):
-      org.apache.spark.sql.Dataset[SpanBuf] = {
-    val spark = spans.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spans.select(
-      col("trace_id").cast("string").as("trace_id"),
-      col("span_id").cast("string").as("span_id"),
-      col("attributes_string"), col("attributes_number")).as[SpanBuf]
-      .groupByKey(_.trace_id)
-      .flatMapGroupsWithState[TraceDecision, SpanBuf](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-        decisionWaitFn(policies, decisionWait, retention))
-  }
 }

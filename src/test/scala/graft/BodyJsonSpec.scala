@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{BodyPromoted, BodyPromotedWorker}
+import graft.functions.BodyPromotedWorker
 import graft.pipeline.{Exporter, ExporterConfig}
 
 /** Golden tests for body-JSON mode, mirroring the reference's
@@ -12,7 +11,6 @@ import graft.pipeline.{Exporter, ExporterConfig}
   * (`exporter.go:840-863`).
   */
 class BodyJsonSpec extends SparkSuite {
-  import spark.implicits._
 
   private def promote(body: String, paths: String*): Option[(String, String)] = {
     val r = new BodyPromotedWorker(paths.sorted.toArray)

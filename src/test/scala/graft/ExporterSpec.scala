@@ -114,6 +114,30 @@ class ExporterSpec extends SparkSuite {
     assert(rkeys == Set("role"))
   }
 
+  test("a key that is both a tag and a resource attribute reaches both key sinks") {
+    val both = LogFrames.withDefaults(Seq(
+      ("c1", 0, "user", "hi", 1704067200L * 1000000000L,
+        Map("host" -> "h1", "status" -> "ok"), Map("host" -> "h1")),
+      ("c1", 1, "user", "again", 1704067200L * 1000000000L + 1000000000L,
+        Map("host" -> "h1"), Map("host" -> "h1"))
+    ).toDF("conv_id", "turn_idx", "role", "body", "timestamp",
+      "attributes_string", "resources_string"))
+    val main = Exporter.logsV2(both)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("name", "datatype").as[(String, String)].collect().toSeq.sorted
+    assert(rows(Exporter.attributeKeys(main)) == Seq("host" -> "string", "status" -> "string"))
+    assert(rows(Exporter.resourceKeys(main)) == Seq("host" -> "string"))
+    // the q_attribute_keys shape: one row per (tag type, key)
+    assert(rows(Exporter.keys(main, "tag", "resource")) ==
+      Seq("host" -> "string", "host" -> "string", "status" -> "string"))
+    val fanOut = Exporter.fanOutFrom(main)
+    assert(rows(fanOut("logs_attribute_keys")) == rows(Exporter.attributeKeys(main)))
+    assert(rows(fanOut("logs_resource_keys")) == rows(Exporter.resourceKeys(main)))
+    val hostTags = fanOut("tag_attributes_v2").filter($"tag_key" === "host")
+      .select("tag_type", "string_value").as[(String, String)].collect().toSeq.sorted
+    assert(hostTags == Seq("resource" -> "h1", "tag" -> "h1"))
+  }
+
   test("a NULL typed map drops only its branch of tag rows, not the record") {
     // a frame from an external adapter without withDefaults can carry NULL
     // maps; concat() null-propagates, so un-coalesced branches would drop

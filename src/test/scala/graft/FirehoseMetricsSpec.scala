@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{FirehoseMetrics, OtlpProto, OtlpProtoEncode}
+import graft.sources.{FirehoseMetrics, OtlpProtoEncode}
 import graft.sources.OtlpProto.OtlpMetricRow
 
 /** Firehose metric-stream unmarshalers, golden against the reference's own

@@ -74,7 +74,6 @@ class MeterConnectorSpec extends SparkSuite {
 
   test("v1 metrics Count reference goldens (metrics_test.go): 100/60/144/0/30") {
     val res = Map("r" -> "1")
-    def frames(n: Int, name: String = "m") = (0 until n).map(i => (s"$name$i", 1.0))
     def count(scalars: Option[org.apache.spark.sql.DataFrame] = None,
         hists: Option[org.apache.spark.sql.DataFrame] = None,
         summ: Option[org.apache.spark.sql.DataFrame] = None): Double =

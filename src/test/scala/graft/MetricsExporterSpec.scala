@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Fingerprint, PromFingerprintKernel}
-import graft.model.LogSchema
+import graft.functions.PromFingerprintKernel
 import graft.pipeline.MetricsExporter
 import graft.pipeline.MetricsExporter.ReductionRule
 

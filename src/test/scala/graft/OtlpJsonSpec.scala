@@ -19,7 +19,7 @@ class OtlpJsonSpec extends SparkSuite {
 
   private def logRow(
       ts: Long = 0L, ots: Long = 0L, sevNum: Int = 0, sevText: String = "",
-      body: String = "", as: Map[String, String] = Map.empty,
+      body: String, as: Map[String, String] = Map.empty,
       an: Map[String, Double] = Map.empty, ab: Map[String, Boolean] = Map.empty,
       res: Map[String, String] = Map.empty, traceId: String = "",
       spanId: String = "", flags: Int = 0, scopeName: String = "",
@@ -137,9 +137,9 @@ class OtlpJsonSpec extends SparkSuite {
   }
 
   private def metricRow(
-      shape: String = "scalar", name: String = "m", metricType: String = "Gauge",
+      shape: String = "scalar", name: String, metricType: String = "Gauge",
       temporality: String = "", isMonotonic: Boolean = false,
-      unixMilli: Long = 0L, value: Double = 0.0,
+      unixMilli: Long, value: Double = 0.0,
       attrs: Map[String, String] = Map.empty,
       res: Map[String, String] = Map.empty,
       count: Long = 0L, sumV: Double = 0.0, minV: Double = 0.0, maxV: Double = 0.0,

@@ -2,8 +2,6 @@ package graft
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.functions._
-
 import graft.sources.{LogSources, OtlpProto}
 
 /** Golden tests for the OTLP-protobuf logs decode (the Kafka receiver's

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.sources.PdataGen
 
 /** Ports of the reference's pdatagen generator semantics

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.model.LogFrames
 import graft.operators.PipelineConfig
 import graft.pipeline.Pipeline

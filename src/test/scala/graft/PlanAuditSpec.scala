@@ -107,8 +107,6 @@ class PlanAuditSpec extends SparkSuite {
     "q_bloom_dedup" -> "aggregates the Bloom bitset to the driver before the probe",
     "q_bm25" -> "collects the top-df terms, then the df and avgdl statistics",
     "q_bpe" -> "BPE trainer collects the pair counts for each merge",
-    "q_conv_containment" -> ("Par.widen's df.rdd partition probe runs the grouped " +
-      "input's shuffle stages under AQE"),
     "q_dedup_pr" -> "checkpoints `reps`, the input both the candidate and truth branches read",
     "q_dsir" -> "collects the per-bucket feature counts; checkpoints the scored docs",
     "q_dup_clusters" -> "connected components: checkpointed edge list, its count, the labels",

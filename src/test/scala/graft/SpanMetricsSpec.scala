@@ -156,7 +156,6 @@ class SpanMetricsSpec extends SparkSuite {
 
   test("exemplars: top-k by duration, empty-trace-id skip (setExemplars), " +
       "deterministic tie-break") {
-    val svc = Map("service.name" -> "A")
     // 6 spans, one key; k=3 keeps the three slowest; t0/span "s0" has the
     // HIGHEST latency but an empty trace id -> skipped like the reference's
     // traceID.IsEmpty() gate; two spans tie at 5ms -> trace_id DESC breaks

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.model.SpanFrames
-import graft.pipeline.TraceExporter
+import graft.pipeline.{Exporter, TraceExporter}
 
 /** Traces exporter slice, golden-tested against the reference's own test
   * fixtures (`exporter/clickhousetracesexporter/clickhouse_exporter_v3_test.go`).
@@ -255,6 +254,33 @@ class TraceExporterSpec extends SparkSuite {
 
     val keys = TraceExporter.tagKeys(TraceExporter.spansV3(frame)).collect()
     assert(keys.forall(!_.getBoolean(3))) // isColumn always false here
+  }
+
+  test("trace resource sink: Exporter.resources over spansV3 dedups per " +
+      "(fingerprint, bucket) and anti-joins existing (writer.go:508-540)") {
+    val svcA = Map("service.name" -> "a")
+    val svcB = Map("service.name" -> "b")
+    val none = Map.empty[String, String]
+    // a: three spans in the first bucket, one 1800 s later; b: one span
+    val main = TraceExporter.spansV3(spanFrame(Seq(
+      ("t1", "s1", "", 2, none, svcA), ("t1", "s2", "s1", 3, none, svcA),
+      ("t2", "s3", "", 2, none, svcA), ("t3", "s4", "", 2, none, svcB)))
+      .withColumn("start_ts", when($"span_id" === "s3", lit(T0 + 1800L * 1000000000L))
+        .otherwise(lit(T0))))
+    val res = Exporter.resources(main)
+    assert(res.columns.toSeq == Seq("labels", "fingerprint", "seen_at_ts_bucket_start"))
+    val rows = res.collect().map(r => (r.getString(0), r.getLong(2))).sortBy(_.toString).toSeq
+    assert(rows == Seq(
+      ("""{"service.name":"a"}""", T0 / 1000000000L),
+      ("""{"service.name":"a"}""", T0 / 1000000000L + 1800L),
+      ("""{"service.name":"b"}""", T0 / 1000000000L)))
+    assert(res.select("fingerprint", "seen_at_ts_bucket_start").distinct().count() == 3)
+    // the rfCache analogue: rows already written are not re-emitted
+    val firstBucket = res.filter($"seen_at_ts_bucket_start" === T0 / 1000000000L)
+    val again = Exporter.resources(main, existing = Some(firstBucket))
+    assert(again.collect().map(r =>
+        (r.getAs[String]("labels"), r.getAs[Long]("seen_at_ts_bucket_start"))).toSeq ==
+      Seq(("""{"service.name":"a"}""", T0 / 1000000000L + 1800L)))
   }
 
   test("dependencyGraph: db/msg attr edges (kind!=2 gate), service self-join " +

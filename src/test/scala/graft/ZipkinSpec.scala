@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.Zipkin
-import graft.sources.Zipkin.{ZAnnotation, ZEndpoint, ZipkinSpan}
+import graft.sources.Zipkin.{ZAnnotation, ZEndpoint}
 import graft.sources.ProtoWire.Writer
 
 /** Zipkin receiver decodings (`zipkin_proto` / `zipkin_json` /
