@@ -576,19 +576,9 @@ object ScaleUp {
     // verdict #3): the pass condition is bounded aggregation state — the
     // sketch buffer is fixed by the accuracy parameter where exact
     // percentile's buffer grows with per-group span count. Edges enriched
-    // exactly like q_dep_graph (db/messaging attrs + per-event services so
-    // the trace-co-partitioned self-join produces cross-service edges).
+    // exactly like q_dep_graph (TraceQueries.depGraphSpans).
     results += op("dep_graph", smallE, bigE, smallEvents, bigEvents) { e =>
-      val emptyMap = map().cast("map<string,string>")
-      val spans = TraceQueries.spansFrom(e)
-        .withColumn("attributes_string", map_concat(
-          col("attributes_string"),
-          when(col("event_id") % 11 === 0,
-            map(lit("db.system"), lit("postgres"))).otherwise(emptyMap),
-          when(col("event_id") % 13 === 0,
-            map(lit("messaging.system"), lit("kafka"))).otherwise(emptyMap)))
-        .withColumn("resources_string", map(lit("service.name"),
-          concat(lit("svc-"), (col("event_id") % 4).cast("string"))))
+      val spans = TraceQueries.depGraphSpans(TraceQueries.spansFrom(e))
       TraceExporter.dependencyGraph(TraceExporter.spansV3(spans))
         .agg(count(lit(1)).as("edges"),
           coalesce(sum(col("total_count")), lit(0L)).as("spans"))

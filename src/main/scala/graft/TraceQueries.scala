@@ -72,6 +72,24 @@ object TraceQueries {
         .otherwise(lit(null)).cast(graft.model.SpanSchema.eventType).as("events")))
   }
 
+  /** q_dep_graph's span enrichment: `db.system` / `messaging.system` attrs
+    * on every 11th / 13th event (the attribute edges) and a `service.name`
+    * per event rather than per user, so the trace-co-partitioned self-join
+    * finds cross-service edges. ScaleUp's dep_graph row runs the same.
+    */
+  private[graft] def depGraphSpans(spans: DataFrame): DataFrame = {
+    val emptyMap = map().cast("map<string,string>")
+    spans
+      .withColumn("attributes_string", map_concat(
+        col("attributes_string"),
+        when(col("event_id") % 11 === 0,
+          map(lit("db.system"), lit("postgres"))).otherwise(emptyMap),
+        when(col("event_id") % 13 === 0,
+          map(lit("messaging.system"), lit("kafka"))).otherwise(emptyMap)))
+      .withColumn("resources_string", map(lit("service.name"),
+        concat(lit("svc-"), (col("event_id") % 4).cast("string"))))
+  }
+
   /** Deterministic LLM-usage span attrs over `events`: model cycles through
     * a subtract-mode match / additive-mode match / no-match / absent, token
     * counts are modular arithmetic on event_id (with an explicit all-zero
@@ -218,16 +236,7 @@ object TraceQueries {
     // self-join (trace-co-partitioned), exact quantiles rounded to micros
     // so the double-arithmetic compare is ulp-safe cross-engine
     "q_dep_graph" -> ((s, d) => {
-      val emptyMap = map().cast("map<string,string>")
-      val spans = eventsAsSpans(s, d)
-        .withColumn("attributes_string", map_concat(
-          col("attributes_string"),
-          when(col("event_id") % 11 === 0,
-            map(lit("db.system"), lit("postgres"))).otherwise(emptyMap),
-          when(col("event_id") % 13 === 0,
-            map(lit("messaging.system"), lit("kafka"))).otherwise(emptyMap)))
-        .withColumn("resources_string", map(lit("service.name"),
-          concat(lit("svc-"), (col("event_id") % 4).cast("string"))))
+      val spans = depGraphSpans(eventsAsSpans(s, d))
       val q = (i: Int, name: String) =>
         round(element_at(col("duration_quantiles"), i) / 1000.0)
           .cast("long").as(name)

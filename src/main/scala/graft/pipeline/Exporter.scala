@@ -136,6 +136,9 @@ object Exporter {
   /** logs_v2_resource: one row per distinct (labels, fingerprint) per bucket
     * (v2_squashed_logs_migration.go:263-305). `existing` models the
     * cross-batch rfCache: rows already in the sink are not re-emitted.
+    * Either way the columns are (labels, fingerprint,
+    * seen_at_ts_bucket_start), so a resumed job appends files with the
+    * first write's schema.
     */
   def resources(logsV2: DataFrame, existing: Option[DataFrame] = None): DataFrame = {
     val fresh = logsV2
@@ -143,8 +146,10 @@ object Exporter {
         col("ts_bucket_start").as("seen_at_ts_bucket_start"))
       .dropDuplicates("fingerprint", "seen_at_ts_bucket_start")
     existing match {
+      // a join on column names moves the keys first; restore fresh's order
       case Some(e) => fresh.join(e.select("fingerprint", "seen_at_ts_bucket_start"),
         Seq("fingerprint", "seen_at_ts_bucket_start"), "left_anti")
+        .select(fresh.columns.map(col): _*)
       case None => fresh
     }
   }

@@ -133,12 +133,7 @@ object Pipeline {
     // row. [[graft.functions.OptimizerFence]] (identity expression flagged
     // non-deterministic on every column) blocks the same inlining with ZERO
     // runtime cost — the plan stays one whole-stage-codegen region.
-    // GRAFT_FENCE=observe restores the round-1 CollectMetrics fence — a
-    // diagnostic escape hatch for same-window A/B of the two fences.
-    if (sys.env.get("GRAFT_FENCE").contains("observe"))
-      out.observe("graft_pipeline", count(lit(1)).as("emitted_rows"))
-    else
-      out.select(out.columns.map(c =>
-        graft.functions.OptimizerFence(col(c)).as(c)): _*)
+    out.select(out.columns.map(c =>
+      graft.functions.OptimizerFence(col(c)).as(c)): _*)
   }
 }

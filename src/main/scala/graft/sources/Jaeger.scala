@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.OtlpJson.appendString
 import graft.sources.OtlpProto.{OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
 import graft.sources.ProtoWire.{Reader, Writer, hexToBytes, idHex, nonNull, nonNullSeq, orEmpty}
 
@@ -444,34 +445,14 @@ object Jaeger {
   private def b64(bytes: Array[Byte]): String =
     java.util.Base64.getEncoder.encodeToString(bytes)
 
-  private def jsonEsc(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 8)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      c match {
-        case '"' => sb.append("\\\"")
-        case '\\' => sb.append("\\\\")
-        case '\b' => sb.append("\\b")
-        case '\f' => sb.append("\\f")
-        case '\n' => sb.append("\\n")
-        case '\r' => sb.append("\\r")
-        case '\t' => sb.append("\\t")
-        case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-        case c => sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
   private def kvJson(kv: JaegerKV): String = {
     val sb = new java.lang.StringBuilder(64)
-    sb.append("{\"key\":\"").append(jsonEsc(kv.key)).append('"')
+    sb.append("{\"key\":"); appendString(sb, kv.key)
     kv.vType match {
       case VType.STRING =>
-        if (kv.vStr.nonEmpty)
-          sb.append(",\"vStr\":\"").append(jsonEsc(kv.vStr)).append('"')
+        if (kv.vStr.nonEmpty) {
+          sb.append(",\"vStr\":"); appendString(sb, kv.vStr)
+        }
       case VType.BOOL =>
         sb.append(",\"vType\":\"BOOL\"")
         if (kv.vBool) sb.append(",\"vBool\":true")
@@ -499,8 +480,9 @@ object Jaeger {
     val sb = new java.lang.StringBuilder(768)
     sb.append("{\"traceId\":\"").append(b64(idBytes(s.traceId, 16))).append('"')
     sb.append(",\"spanId\":\"").append(b64(idBytes(s.spanId, 8))).append('"')
-    if (s.operationName.nonEmpty)
-      sb.append(",\"operationName\":\"").append(jsonEsc(s.operationName)).append('"')
+    if (s.operationName.nonEmpty) {
+      sb.append(",\"operationName\":"); appendString(sb, s.operationName)
+    }
     if (s.references.nonEmpty) {
       sb.append(",\"references\":[")
       sb.append(s.references.map { r =>
@@ -531,7 +513,7 @@ object Jaeger {
     sb.append(",\"process\":{")
     var pFirst = true
     if (s.serviceName.nonEmpty) {
-      sb.append("\"serviceName\":\"").append(jsonEsc(s.serviceName)).append('"')
+      sb.append("\"serviceName\":"); appendString(sb, s.serviceName)
       pFirst = false
     }
     if (s.processTags.nonEmpty) {
@@ -625,8 +607,8 @@ object Jaeger {
   // ---- frame-level API -------------------------------------------------------
 
   /** Kafka traces topic in `jaeger_proto` / `jaeger_json` -> SpanFrames
-    * frame (one span per message; undecodable messages dropped, receiver
-    * error-metric parity with [[OtlpProto.fromOtlpProtoSpans]]).
+    * frame (one span per message; undecodable messages dropped by the
+    * receiver adapter the OTLP decoders share, [[OtlpEnvelope.decodeMessages]]).
     */
   def fromKafkaJaeger(df: DataFrame, encoding: String,
       valueCol: Column = col("value")): DataFrame = {
@@ -636,14 +618,8 @@ object Jaeger {
       case other =>
         throw new IllegalArgumentException(s"unrecognized jaeger encoding: $other")
     }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(valueCol.cast("binary").as("v")).as[Array[Byte]]
-      .flatMap { bytes =>
-        try Seq(toSpanRow(parse(bytes)))
-        catch { case scala.util.control.NonFatal(_) => Seq.empty }
-      }
-    graft.model.SpanFrames.withDefaults(rows.toDF())
+    graft.model.SpanFrames.withDefaults(OtlpEnvelope.decodeMessages(df, valueCol)(
+      bytes => Seq(toSpanRow(parse(bytes)))))
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.functions.GoJsonFloatKernel
+import graft.sources.OtlpEnvelope.{MetricKey, Scope, temporalityNum}
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
 import graft.sources.ProtoWire.{nonNull, nonNullSeq, orEmpty}
 
@@ -31,13 +32,39 @@ import graft.sources.ProtoWire.{nonNull, nonNullSeq, orEmpty}
   * identical either way and protojson does not HTML-escape.
   *
   * Row grouping (resource -> scope -> record in first-seen order, metrics
-  * additionally by metric identity) mirrors [[OtlpProtoEncode]] exactly, as
-  * do the per-field omission guards, so the proto and JSON encodings of the
-  * same frame carry identical structure.
+  * additionally by metric identity) is [[OtlpEnvelope]]'s, the one grouping
+  * [[OtlpProtoEncode]] renders too, and the per-field omission guards match
+  * the proto encoder's, so the proto and JSON encodings of the same frame
+  * carry identical structure.
   */
 object OtlpJson {
 
   // ---- JSON writer ---------------------------------------------------------
+
+  /** Append `s` as a protojson string literal: quote, backslash and the
+    * short escapes, other control characters as four-hex-digit unicode
+    * escapes, nothing else escaped (no HTML escaping). The Jaeger jsonpb
+    * encoder shares it.
+    */
+  private[sources] def appendString(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"')
+    var i = 0
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '"' => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\b' => sb.append("\\b")
+        case '\f' => sb.append("\\f")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
+        case c => sb.append(c)
+      }
+      i += 1
+    }
+    sb.append('"')
+  }
 
   /** Append-only JSON builder: callers bracket objects/arrays and add
     * fields; comma placement is tracked per nesting level.
@@ -51,26 +78,7 @@ object OtlpJson {
     def key(k: String): Unit = { comma(); str(k); sb.append(':'); first = true }
     def beginArr(k: String): Unit = { key(k); sb.append('['); first = true }
     def endArr(): Unit = { sb.append(']'); first = false }
-    private def str(s: String): Unit = {
-      sb.append('"')
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        c match {
-          case '"' => sb.append("\\\"")
-          case '\\' => sb.append("\\\\")
-          case '\b' => sb.append("\\b")
-          case '\f' => sb.append("\\f")
-          case '\n' => sb.append("\\n")
-          case '\r' => sb.append("\\r")
-          case '\t' => sb.append("\\t")
-          case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-          case c => sb.append(c)
-        }
-        i += 1
-      }
-      sb.append('"')
-    }
+    private def str(s: String): Unit = appendString(sb, s)
     def strField(k: String, v: String): Unit = { key(k); str(v); first = false }
     /** int64/uint64/fixed64 — protojson decimal string. */
     def longStrField(k: String, v: Long): Unit =
@@ -146,44 +154,35 @@ object OtlpJson {
       j.endObj()
     }
 
-  private def scopeObj(j: J, name: String, version: String,
-      attrs: Map[String, String]): Unit =
-    if (name.nonEmpty || version.nonEmpty || nonNull(attrs).nonEmpty) {
+  private def scopeObj(j: J, scope: Scope): Unit =
+    if (scope.name.nonEmpty || scope.version.nonEmpty || scope.attrs.nonEmpty) {
       j.key("scope"); j.beginObj()
-      if (name.nonEmpty) j.strField("name", name)
-      if (version.nonEmpty) j.strField("version", version)
-      stringAttrArr(j, "attributes", attrs)
+      if (scope.name.nonEmpty) j.strField("name", scope.name)
+      if (scope.version.nonEmpty) j.strField("version", scope.version)
+      stringAttrArr(j, "attributes", scope.attrs)
       j.endObj()
     }
 
-  // ---- generic resource -> scope nesting ------------------------------------
-
-  private type ScopeKey = (String, String, Map[String, String])
-
-  private def nest[R](rows: Seq[R], topField: String, recordsField: String,
-      resourceOf: R => Map[String, String], scopeOf: R => ScopeKey)(
-      record: (J, R) => Unit): Array[Byte] = {
-    val byResource = new java.util.LinkedHashMap[Map[String, String],
-      java.util.LinkedHashMap[ScopeKey, scala.collection.mutable.ArrayBuffer[R]]]()
-    rows.foreach { row =>
-      val scopes = byResource.computeIfAbsent(nonNull(resourceOf(row)),
-        _ => new java.util.LinkedHashMap())
-      scopes.computeIfAbsent(scopeOf(row),
-        _ => scala.collection.mutable.ArrayBuffer.empty[R]) += row
-    }
+  /** Render [[OtlpEnvelope]]'s grouping as `{topField: [{resource,
+    * scopeField: [{scope, recordsField: [...], schemaUrl}]}]}`, each record
+    * object's fields written by `record`.
+    */
+  private def envelope[R](nested: OtlpEnvelope.Nested[R], topField: String,
+      scopeField: String, recordsField: String)(record: (J, R) => Unit): Array[Byte] = {
     val j = new J()
     j.beginObj()
     j.beginArr(topField)
-    byResource.forEach { (res, scopes) =>
+    nested.foreach { case (res, scopes) =>
       j.beginObj()
       resourceObj(j, res)
-      j.beginArr(scopeField(topField))
-      scopes.forEach { (key, rs) =>
+      j.beginArr(scopeField)
+      scopes.foreach { case (scope, records) =>
         j.beginObj()
-        scopeObj(j, key._1, key._2, key._3)
+        scopeObj(j, scope)
         j.beginArr(recordsField)
-        rs.foreach { r => j.beginObj(); record(j, r); j.endObj() }
+        records.foreach { r => j.beginObj(); record(j, r); j.endObj() }
         j.endArr()
+        if (scope.schemaUrl.nonEmpty) j.strField("schemaUrl", scope.schemaUrl)
         j.endObj()
       }
       j.endArr()
@@ -194,19 +193,11 @@ object OtlpJson {
     j.toBytes
   }
 
-  private def scopeField(topField: String): String = topField match {
-    case "resourceLogs" => "scopeLogs"
-    case "resourceSpans" => "scopeSpans"
-    case _ => "scopeMetrics"
-  }
-
   // ---- logs ----------------------------------------------------------------
 
   /** Rows -> one `{"resourceLogs":[...]}` document (plog JSONMarshaler). */
   def encodeLogsJson(rows: Seq[OtlpRow]): Array[Byte] =
-    nest[OtlpRow](rows, "resourceLogs", "logRecords",
-      _.resources_string,
-      r => (orEmpty(r.scope_name), orEmpty(r.scope_version), nonNull(r.scope_string))) {
+    envelope(OtlpEnvelope.logs(rows), "resourceLogs", "scopeLogs", "logRecords") {
       (j, r) =>
         if (r.timestamp != 0L) j.longStrField("timeUnixNano", r.timestamp)
         if (r.severity_number != 0) j.numField("severityNumber", r.severity_number.toLong)
@@ -242,9 +233,7 @@ object OtlpJson {
 
   /** Rows -> one `{"resourceSpans":[...]}` document (ptrace JSONMarshaler). */
   def encodeTracesJson(rows: Seq[OtlpSpanRow]): Array[Byte] =
-    nest[OtlpSpanRow](rows, "resourceSpans", "spans",
-      _.resources_string,
-      r => (orEmpty(r.scope_name), orEmpty(r.scope_version), nonNull(r.scope_string))) {
+    envelope(OtlpEnvelope.spans(rows), "resourceSpans", "scopeSpans", "spans") {
       (j, r) =>
         if (orEmpty(r.trace_id).nonEmpty) j.strField("traceId", r.trace_id)
         if (orEmpty(r.span_id).nonEmpty) j.strField("spanId", r.span_id)
@@ -349,24 +338,11 @@ object OtlpJson {
     j.endObj()
   }
 
-  private def temporalityNum(s: String): Int = s match {
-    case "Delta" => 1
-    case "Cumulative" => 2
-    case _ => 0
-  }
-
-  private type MetricKey = (String, String, String, String, String, Boolean)
-  private def metricKey(r: OtlpMetricRow): MetricKey =
-    (orEmpty(r.metric_name), orEmpty(r.description), orEmpty(r.unit),
-      orEmpty(r.metric_type), orEmpty(r.temporality), r.is_monotonic)
-
   private def metricObj(j: J, key: MetricKey, points: Seq[OtlpMetricRow]): Unit = {
-    val (name, description, unit, metricType, temporality, isMonotonic) = key
-    j.beginObj()
-    if (name.nonEmpty) j.strField("name", name)
-    if (description.nonEmpty) j.strField("description", description)
-    if (unit.nonEmpty) j.strField("unit", unit)
-    val (dataName, withTemporality, point) = metricType match {
+    if (key.name.nonEmpty) j.strField("name", key.name)
+    if (key.description.nonEmpty) j.strField("description", key.description)
+    if (key.unit.nonEmpty) j.strField("unit", key.unit)
+    val (dataName, withTemporality, point) = key.metricType match {
       case "Gauge" => ("gauge", false, numberPoint _)
       case "Sum" => ("sum", true, numberPoint _)
       case "Histogram" => ("histogram", true, histogramPoint _)
@@ -378,56 +354,18 @@ object OtlpJson {
     j.beginArr("dataPoints")
     points.foreach(point(j, _))
     j.endArr()
-    if (withTemporality && temporalityNum(temporality) != 0)
-      j.numField("aggregationTemporality", temporalityNum(temporality).toLong)
-    if (metricType == "Sum" && isMonotonic) j.boolField("isMonotonic", isMonotonic)
-    j.endObj()
+    if (withTemporality && temporalityNum(key.temporality) != 0)
+      j.numField("aggregationTemporality", temporalityNum(key.temporality).toLong)
+    if (key.metricType == "Sum" && key.isMonotonic) j.boolField("isMonotonic", key.isMonotonic)
     j.endObj()
   }
 
   /** Rows -> one `{"resourceMetrics":[...]}` document (pmetric
-    * JSONMarshaler). Same regrouping as the proto encoder: resource ->
-    * scope (incl. ScopeMetrics schemaUrl) -> metric identity.
+    * JSONMarshaler): resource -> scope (with ScopeMetrics schemaUrl) ->
+    * metric identity.
     */
-  def encodeMetricsJson(rows: Seq[OtlpMetricRow]): Array[Byte] = {
-    type ScopeId = (Map[String, String], String, String, String, Map[String, String])
-    val byScope = new java.util.LinkedHashMap[ScopeId,
-      java.util.LinkedHashMap[MetricKey, scala.collection.mutable.ArrayBuffer[OtlpMetricRow]]]()
-    rows.foreach { r =>
-      val sid: ScopeId = (nonNull(r.resource_attrs), orEmpty(r.scope_name),
-        orEmpty(r.scope_version), orEmpty(r.scope_schema_url), nonNull(r.scope_attrs))
-      val metrics = byScope.computeIfAbsent(sid, _ => new java.util.LinkedHashMap())
-      metrics.computeIfAbsent(metricKey(r),
-        _ => scala.collection.mutable.ArrayBuffer.empty[OtlpMetricRow]) += r
+  def encodeMetricsJson(rows: Seq[OtlpMetricRow]): Array[Byte] =
+    envelope(OtlpEnvelope.metrics(rows), "resourceMetrics", "scopeMetrics", "metrics") {
+      case (j, (key, points)) => metricObj(j, key, points)
     }
-    val byResource = new java.util.LinkedHashMap[Map[String, String],
-      scala.collection.mutable.ArrayBuffer[(ScopeId,
-        java.util.LinkedHashMap[MetricKey, scala.collection.mutable.ArrayBuffer[OtlpMetricRow]])]]()
-    byScope.forEach { (sid, metrics) =>
-      byResource.computeIfAbsent(sid._1,
-        _ => scala.collection.mutable.ArrayBuffer.empty) += ((sid, metrics))
-    }
-    val j = new J()
-    j.beginObj()
-    j.beginArr("resourceMetrics")
-    byResource.forEach { (res, scopes) =>
-      j.beginObj()
-      resourceObj(j, res)
-      j.beginArr("scopeMetrics")
-      scopes.foreach { case ((_, name, version, schemaUrl, attrs), metrics) =>
-        j.beginObj()
-        scopeObj(j, name, version, attrs)
-        j.beginArr("metrics")
-        metrics.forEach { (key, points) => metricObj(j, key, points.toSeq) }
-        j.endArr()
-        if (schemaUrl.nonEmpty) j.strField("schemaUrl", schemaUrl)
-        j.endObj()
-      }
-      j.endArr()
-      j.endObj()
-    }
-    j.endArr()
-    j.endObj()
-    j.toBytes
-  }
 }

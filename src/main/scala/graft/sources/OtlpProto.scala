@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 
 import graft.model.LogFrames
+import graft.sources.OtlpEnvelope.{Scope, decodeMessages}
 import graft.sources.ProtoWire.{Reader, idHex}
 
 /** OTLP-protobuf logs decoding — the Kafka receiver's DEFAULT logs encoding
@@ -34,8 +35,11 @@ import graft.sources.ProtoWire.{Reader, idHex}
   *  - KeyValue: key=1, value=2 (AnyValue); ArrayValue: values=1;
   *    KeyValueList: values=1 (KeyValue)
   *
-  * Decoding runs as a typed Dataset `flatMap` (per-message imperative parse
-  * over binary payloads — the one shape Catalyst expressions don't fit);
+  * The three signals share one envelope walk (`walk`: XData -> ResourceX
+  * -> ScopeX) and differ only in their record parsers. Decoding runs in
+  * [[OtlpEnvelope.decodeMessages]], a typed Dataset `flatMap` (per-message
+  * imperative parse over binary payloads — the one shape Catalyst
+  * expressions don't fit);
   * everything downstream of the adapter is back in codegen land. At scale
   * the cost is one pass over the message bytes per record, embarrassingly
   * parallel over Kafka partitions.
@@ -74,7 +78,18 @@ object OtlpProto {
   private case class AVKv(vs: List[(String, AV)]) extends AV
   private case object AVEmpty extends AV
 
-  private def parseAnyValue(r: Reader): AV = {
+  /** Deepest AnyValue nesting (arrays and kvlists) the decoder accepts. The
+    * parse and the rendering below recurse once per level, so a deeper value
+    * would overflow a thread stack (about 1.5k levels on a 1 MiB stack);
+    * past the bound the message fails to decode like any malformed payload
+    * and the receiver adapter drops it. Go's growable stacks let the
+    * reference decode any depth; real attribute values nest a few levels.
+    */
+  val MaxAnyValueDepth = 100
+
+  private def parseAnyValue(r: Reader, depth: Int): AV = {
+    require(depth <= MaxAnyValueDepth,
+      s"AnyValue nested deeper than $MaxAnyValueDepth levels")
     var out: AV = AVEmpty
     while (r.hasMore) {
       val tag = r.readVarint()
@@ -90,7 +105,7 @@ object OtlpProto {
           val vs = scala.collection.mutable.ListBuffer.empty[AV]
           while (a.hasMore) {
             val t2 = a.readVarint()
-            if ((t2 >> 3).toInt == 1) vs += parseAnyValue(a.readSlice())
+            if ((t2 >> 3).toInt == 1) vs += parseAnyValue(a.readSlice(), depth + 1)
             else a.skip((t2 & 7).toInt)
           }
           out = AVArr(vs.toList)
@@ -99,7 +114,7 @@ object OtlpProto {
           val vs = scala.collection.mutable.ListBuffer.empty[(String, AV)]
           while (k.hasMore) {
             val t2 = k.readVarint()
-            if ((t2 >> 3).toInt == 1) vs += parseKeyValue(k.readSlice())
+            if ((t2 >> 3).toInt == 1) vs += parseKeyValue(k.readSlice(), depth + 1)
             else k.skip((t2 & 7).toInt)
           }
           out = AVKv(vs.toList)
@@ -110,14 +125,15 @@ object OtlpProto {
     out
   }
 
-  private def parseKeyValue(r: Reader): (String, AV) = {
+  /** KeyValue{key=1, value=2}; `depth` is the value's nesting level. */
+  private def parseKeyValue(r: Reader, depth: Int = 1): (String, AV) = {
     var key = ""
     var v: AV = AVEmpty
     while (r.hasMore) {
       val tag = r.readVarint()
       (tag >> 3).toInt match {
         case 1 => key = r.readString()
-        case 2 => v = parseAnyValue(r.readSlice())
+        case 2 => v = parseAnyValue(r.readSlice(), depth)
         case _ => r.skip((tag & 7).toInt)
       }
     }
@@ -174,85 +190,104 @@ object OtlpProto {
     (s.result(), n.result(), b.result())
   }
 
-  private def parseAttrList(r: Reader, valuesField: Int): List[(String, AV)] = {
-    val out = scala.collection.mutable.ListBuffer.empty[(String, AV)]
+  /** KeyValue with its value rendered AsString (resource, scope, span event
+    * and datapoint attributes).
+    */
+  private def stringKeyValue(r: Reader): (String, String) = {
+    val (k, v) = parseKeyValue(r)
+    k -> avToString(v)
+  }
+
+  /** Resource{attributes=1}, force-stringified as the sink sees it. */
+  private def readResource(r: Reader): Map[String, String] = {
+    var attrs = Map.empty[String, String]
     while (r.hasMore) {
       val tag = r.readVarint()
-      if ((tag >> 3).toInt == valuesField) out += parseKeyValue(r.readSlice())
+      if ((tag >> 3).toInt == 1) attrs += stringKeyValue(r.readSlice())
       else r.skip((tag & 7).toInt)
     }
-    out.toList
+    attrs
   }
 
   // ---- message walk --------------------------------------------------------
 
-  /** Parse one serialized LogsData / ExportLogsServiceRequest into rows.
-    * Malformed payloads raise (the receiver's unmarshal-error path — callers
-    * wanting drop-on-error should try/catch per message).
+  /** The envelope walk every signal shares: `XData{resource_x=1}` ->
+    * `ResourceX{resource=1, scope_x=2}` -> `ScopeX{scope=1, records=2,
+    * schema_url=3}`. Each record slice goes to the signal's own parser with
+    * its resource (force-stringified, as the sink sees it) and [[Scope]].
+    * A ResourceX or ScopeX is read to its end before its records are
+    * parsed, so fields after the records still apply to them. Malformed
+    * payloads raise (the receiver's unmarshal-error path; the adapters
+    * drop the message).
     */
-  def parseLogsData(bytes: Array[Byte]): Seq[OtlpRow] = {
+  private def walk[T](bytes: Array[Byte])(
+      record: (Reader, Map[String, String], Scope) => IterableOnce[T]): Seq[T] = {
     if (bytes == null || bytes.isEmpty) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[OtlpRow]
+    val out = scala.collection.mutable.ArrayBuffer.empty[T]
     val top = new Reader(bytes, 0, bytes.length)
     while (top.hasMore) {
       val tag = top.readVarint()
-      if ((tag >> 3).toInt == 1) parseResourceLogs(top.readSlice(), out)
-      else top.skip((tag & 7).toInt)
+      if ((tag >> 3).toInt == 1) {
+        val rx = top.readSlice()
+        var resource = Map.empty[String, String]
+        val scopeSlices = scala.collection.mutable.ListBuffer.empty[Reader]
+        while (rx.hasMore) {
+          val t = rx.readVarint()
+          (t >> 3).toInt match {
+            case 1 => resource = readResource(rx.readSlice())
+            case 2 => scopeSlices += rx.readSlice()
+            case _ => rx.skip((t & 7).toInt)
+          }
+        }
+        scopeSlices.foreach { sx =>
+          val (scope, records) = readScopeX(sx)
+          records.foreach(out ++= record(_, resource, scope))
+        }
+      } else top.skip((tag & 7).toInt)
     }
     out.toSeq
   }
 
-  private def parseResourceLogs(r: Reader,
-      out: scala.collection.mutable.ArrayBuffer[OtlpRow]): Unit = {
-    var resource = Map.empty[String, String]
-    val scopeSlices = scala.collection.mutable.ListBuffer.empty[Reader]
+  /** ScopeX{scope=1, records=2, schema_url=3} -> its scope and record
+    * slices.
+    */
+  private def readScopeX(r: Reader): (Scope, Seq[Reader]) = {
+    var name = ""
+    var version = ""
+    var attrs = Map.empty[String, String]
+    var schemaUrl = ""
+    val records = scala.collection.mutable.ListBuffer.empty[Reader]
     while (r.hasMore) {
       val tag = r.readVarint()
       (tag >> 3).toInt match {
-        case 1 => // Resource{attributes=1}: force-stringified at the sink
-          val attrs = parseAttrList(r.readSlice(), valuesField = 1)
-          resource = attrs.map { case (k, v) => k -> avToString(v) }.toMap
-        case 2 => scopeSlices += r.readSlice()
-        case _ => r.skip((tag & 7).toInt)
-      }
-    }
-    scopeSlices.foreach(parseScopeLogs(_, resource, out))
-  }
-
-  private def parseScopeLogs(r: Reader, resource: Map[String, String],
-      out: scala.collection.mutable.ArrayBuffer[OtlpRow]): Unit = {
-    var scopeName = ""
-    var scopeVersion = ""
-    var scopeAttrs = Map.empty[String, String]
-    val recordSlices = scala.collection.mutable.ListBuffer.empty[Reader]
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      (tag >> 3).toInt match {
-        case 1 =>
+        case 1 => // InstrumentationScope{name=1, version=2, attributes=3}
           val s = r.readSlice()
           while (s.hasMore) {
             val t2 = s.readVarint()
             (t2 >> 3).toInt match {
-              case 1 => scopeName = s.readString()
-              case 2 => scopeVersion = s.readString()
-              case 3 =>
-                val (k, v) = parseKeyValue(s.readSlice())
-                scopeAttrs += k -> avToString(v)
+              case 1 => name = s.readString()
+              case 2 => version = s.readString()
+              case 3 => attrs += stringKeyValue(s.readSlice())
               case _ => s.skip((t2 & 7).toInt)
             }
           }
-        case 2 => recordSlices += r.readSlice()
+        case 2 => records += r.readSlice()
+        case 3 => schemaUrl = r.readString()
         case _ => r.skip((tag & 7).toInt)
       }
     }
-    recordSlices.foreach { rec =>
-      out += parseLogRecord(rec, resource, scopeName, scopeVersion, scopeAttrs)
-    }
+    (Scope(name, version, attrs, schemaUrl), records.toSeq)
   }
 
+  /** Parse one serialized LogsData / ExportLogsServiceRequest into rows.
+    * Malformed payloads raise (the receiver's unmarshal-error path;
+    * [[OtlpEnvelope.decodeMessages]] drops such a message).
+    */
+  def parseLogsData(bytes: Array[Byte]): Seq[OtlpRow] =
+    walk(bytes)((r, resource, scope) => Iterator.single(parseLogRecord(r, resource, scope)))
+
   private def parseLogRecord(r: Reader, resource: Map[String, String],
-      scopeName: String, scopeVersion: String,
-      scopeAttrs: Map[String, String]): OtlpRow = {
+      scope: Scope): OtlpRow = {
     var ts = 0L
     var ots = 0L
     var sevNum = 0
@@ -269,7 +304,7 @@ object OtlpProto {
         case 1 => ts = r.readFixed64()
         case 2 => sevNum = r.readVarint().toInt
         case 3 => sevText = r.readString()
-        case 5 => body = avToString(parseAnyValue(r.readSlice()))
+        case 5 => body = avToString(parseAnyValue(r.readSlice(), 1))
         case 6 => attrs = attrs :+ parseKeyValue(r.readSlice())
         case 8 => flags = r.readFixed32()
         case 9 => traceId = idHex(r.readBytes())
@@ -280,7 +315,7 @@ object OtlpProto {
     }
     val (as, an, ab) = splitAttrs(attrs)
     OtlpRow(ts, ots, sevNum, sevText, body, as, an, ab, resource,
-      traceId, spanId, flags, scopeName, scopeVersion, scopeAttrs)
+      traceId, spanId, flags, scope.name, scope.version, scope.attrs)
   }
 
   // ---- DataFrame adapter ---------------------------------------------------
@@ -289,16 +324,8 @@ object OtlpProto {
     * Undecodable messages are dropped (the receiver increments an error
     * metric and continues; here the drop is the deterministic equivalent).
     */
-  def fromOtlpProto(df: DataFrame, valueCol: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(valueCol.cast("binary").as("v")).as[Array[Byte]]
-      .flatMap { bytes =>
-        try parseLogsData(bytes)
-        catch { case _: RuntimeException => Seq.empty }
-      }
-    LogFrames.withDefaults(rows.toDF())
-  }
+  def fromOtlpProto(df: DataFrame, valueCol: Column): DataFrame =
+    LogFrames.withDefaults(decodeMessages(df, valueCol)(parseLogsData))
 
   /** Convenience for [[LogSources.fromKafka]]. */
   def fromKafka(df: DataFrame): DataFrame = fromOtlpProto(df, col("value"))
@@ -359,65 +386,8 @@ object OtlpProto {
     * All-zero ids map to "" (`utils.TraceIDToHexOrEmptyString` /
     * `SpanIDToHexOrEmptyString` parity).
     */
-  def parseTracesData(bytes: Array[Byte]): Seq[OtlpSpanRow] = {
-    if (bytes == null || bytes.isEmpty) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[OtlpSpanRow]
-    val top = new Reader(bytes, 0, bytes.length)
-    while (top.hasMore) {
-      val tag = top.readVarint()
-      if ((tag >> 3).toInt == 1) parseResourceSpans(top.readSlice(), out)
-      else top.skip((tag & 7).toInt)
-    }
-    out.toSeq
-  }
-
-  private def parseResourceSpans(r: Reader,
-      out: scala.collection.mutable.ArrayBuffer[OtlpSpanRow]): Unit = {
-    var resource = Map.empty[String, String]
-    val scopeSlices = scala.collection.mutable.ListBuffer.empty[Reader]
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      (tag >> 3).toInt match {
-        case 1 => // Resource{attributes=1}: force-stringified at the sink
-          val attrs = parseAttrList(r.readSlice(), valuesField = 1)
-          resource = attrs.map { case (k, v) => k -> avToString(v) }.toMap
-        case 2 => scopeSlices += r.readSlice()
-        case _ => r.skip((tag & 7).toInt)
-      }
-    }
-    scopeSlices.foreach(parseScopeSpans(_, resource, out))
-  }
-
-  private def parseScopeSpans(r: Reader, resource: Map[String, String],
-      out: scala.collection.mutable.ArrayBuffer[OtlpSpanRow]): Unit = {
-    var scopeName = ""
-    var scopeVersion = ""
-    var scopeAttrs = Map.empty[String, String]
-    val spanSlices = scala.collection.mutable.ListBuffer.empty[Reader]
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      (tag >> 3).toInt match {
-        case 1 =>
-          val s = r.readSlice()
-          while (s.hasMore) {
-            val t2 = s.readVarint()
-            (t2 >> 3).toInt match {
-              case 1 => scopeName = s.readString()
-              case 2 => scopeVersion = s.readString()
-              case 3 =>
-                val (k, v) = parseKeyValue(s.readSlice())
-                scopeAttrs += k -> avToString(v)
-              case _ => s.skip((t2 & 7).toInt)
-            }
-          }
-        case 2 => spanSlices += r.readSlice()
-        case _ => r.skip((tag & 7).toInt)
-      }
-    }
-    spanSlices.foreach { sp =>
-      out += parseSpan(sp, resource, scopeName, scopeVersion, scopeAttrs)
-    }
-  }
+  def parseTracesData(bytes: Array[Byte]): Seq[OtlpSpanRow] =
+    walk(bytes)((r, resource, scope) => Iterator.single(parseSpan(r, resource, scope)))
 
   private def parseSpanEvent(r: Reader): OtlpSpanEvent = {
     var ts = 0L
@@ -428,9 +398,7 @@ object OtlpProto {
       (tag >> 3).toInt match {
         case 1 => ts = r.readFixed64()
         case 2 => name = r.readString()
-        case 3 =>
-          val (k, v) = parseKeyValue(r.readSlice())
-          attrs += k -> avToString(v)
+        case 3 => attrs += stringKeyValue(r.readSlice())
         case _ => r.skip((tag & 7).toInt)
       }
     }
@@ -452,8 +420,7 @@ object OtlpProto {
   }
 
   private def parseSpan(r: Reader, resource: Map[String, String],
-      scopeName: String, scopeVersion: String,
-      scopeAttrs: Map[String, String]): OtlpSpanRow = {
+      scope: Scope): OtlpSpanRow = {
     var traceId = ""
     var spanId = ""
     var parentId = ""
@@ -500,7 +467,7 @@ object OtlpProto {
     val (as, an, ab) = splitAttrs(attrs)
     OtlpSpanRow(startTs, endTs, traceId, spanId, parentId, traceState, flags,
       name, kind, statusCode, statusMessage, as, an, ab, resource,
-      scopeName, scopeVersion, scopeAttrs, events.toSeq, links.toSeq)
+      scope.name, scope.version, scope.attrs, events.toSeq, links.toSeq)
   }
 
   /** Binary column of OTLP-protobuf traces payloads -> SpanFrames frame,
@@ -508,16 +475,8 @@ object OtlpProto {
     * messages are dropped (receiver error-metric parity, as in
     * [[fromOtlpProto]]).
     */
-  def fromOtlpProtoSpans(df: DataFrame, valueCol: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(valueCol.cast("binary").as("v")).as[Array[Byte]]
-      .flatMap { bytes =>
-        try parseTracesData(bytes)
-        catch { case _: RuntimeException => Seq.empty }
-      }
-    graft.model.SpanFrames.withDefaults(rows.toDF())
-  }
+  def fromOtlpProtoSpans(df: DataFrame, valueCol: Column): DataFrame =
+    graft.model.SpanFrames.withDefaults(decodeMessages(df, valueCol)(parseTracesData))
 
   /** Kafka traces topic (default `otlp_proto` encoding) -> span frame. */
   def fromKafkaSpans(df: DataFrame): DataFrame =
@@ -605,89 +564,29 @@ object OtlpProto {
     * type/temporality render as the pmetric enum strings the exporter
     * consumes ("Gauge"/"Sum"/..., "Delta"/"Cumulative"/"Unspecified").
     */
-  def parseMetricsData(bytes: Array[Byte]): Seq[OtlpMetricRow] = {
-    if (bytes == null || bytes.isEmpty) return Seq.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[OtlpMetricRow]
-    val top = new Reader(bytes, 0, bytes.length)
-    while (top.hasMore) {
-      val tag = top.readVarint()
-      if ((tag >> 3).toInt == 1) parseResourceMetrics(top.readSlice(), out)
-      else top.skip((tag & 7).toInt)
-    }
-    out.toSeq
-  }
-
-  private def parseResourceMetrics(r: Reader,
-      out: scala.collection.mutable.ArrayBuffer[OtlpMetricRow]): Unit = {
-    var resource = Map.empty[String, String]
-    val scopeSlices = scala.collection.mutable.ListBuffer.empty[Reader]
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      (tag >> 3).toInt match {
-        case 1 =>
-          val attrs = parseAttrList(r.readSlice(), valuesField = 1)
-          resource = attrs.map { case (k, v) => k -> avToString(v) }.toMap
-        case 2 => scopeSlices += r.readSlice()
-        case _ => r.skip((tag & 7).toInt)
-      }
-    }
-    scopeSlices.foreach(parseScopeMetrics(_, resource, out))
-  }
-
-  private def parseScopeMetrics(r: Reader, resource: Map[String, String],
-      out: scala.collection.mutable.ArrayBuffer[OtlpMetricRow]): Unit = {
-    var scopeName = ""
-    var scopeVersion = ""
-    var schemaUrl = ""
-    var scopeAttrs = Map.empty[String, String]
-    val metricSlices = scala.collection.mutable.ListBuffer.empty[Reader]
-    while (r.hasMore) {
-      val tag = r.readVarint()
-      (tag >> 3).toInt match {
-        case 1 =>
-          val s = r.readSlice()
-          while (s.hasMore) {
-            val t2 = s.readVarint()
-            (t2 >> 3).toInt match {
-              case 1 => scopeName = s.readString()
-              case 2 => scopeVersion = s.readString()
-              case 3 =>
-                val (k, v) = parseKeyValue(s.readSlice())
-                scopeAttrs += k -> avToString(v)
-              case _ => s.skip((t2 & 7).toInt)
-            }
-          }
-        case 2 => metricSlices += r.readSlice()
-        case 3 => schemaUrl = r.readString()
-        case _ => r.skip((tag & 7).toInt)
-      }
-    }
-    metricSlices.foreach(parseMetric(_, resource, scopeName, scopeVersion,
-      schemaUrl, scopeAttrs, out))
-  }
+  def parseMetricsData(bytes: Array[Byte]): Seq[OtlpMetricRow] =
+    walk(bytes)(parseMetric)
 
   /** Shared identity for every datapoint row of one Metric. */
   private final case class MetricCtx(
       name: String, description: String, unit: String, metricType: String,
       temporality: String, isMonotonic: Boolean,
-      resource: Map[String, String], scopeName: String, scopeVersion: String,
-      schemaUrl: String, scopeAttrs: Map[String, String])
+      resource: Map[String, String], scope: Scope)
 
   private def baseRow(c: MetricCtx, shape: String, timeNano: Long,
       flags: Int, attrs: Map[String, String]): OtlpMetricRow =
     OtlpMetricRow(shape, c.name, c.description, c.unit, c.metricType,
       c.temporality, c.isMonotonic, timeNano / 1000000L, 0.0, flags, attrs,
-      c.scopeName, c.scopeVersion, c.schemaUrl, c.scopeAttrs, c.resource,
+      c.scope.name, c.scope.version, c.scope.schemaUrl, c.scope.attrs, c.resource,
       count = 0L, sum_v = 0.0, min_v = 0.0, max_v = 0.0,
       has_sum = false, has_min = false, has_max = false,
       explicit_bounds = Nil, bucket_counts = Nil, quantiles = Nil,
       scale = 0, zero_count = 0.0, positive_offset = 0, positive_counts = Nil,
       negative_offset = 0, negative_counts = Nil)
 
+  /** One Metric -> one row per datapoint (none for a Metric without data). */
   private def parseMetric(r: Reader, resource: Map[String, String],
-      scopeName: String, scopeVersion: String, schemaUrl: String,
-      scopeAttrs: Map[String, String],
-      out: scala.collection.mutable.ArrayBuffer[OtlpMetricRow]): Unit = {
+      scope: Scope): Seq[OtlpMetricRow] = {
     var name = ""
     var description = ""
     var unit = ""
@@ -725,16 +624,16 @@ object OtlpProto {
         case _ => r.skip((tag & 7).toInt)
       }
     }
-    if (metricType.isEmpty) return
+    if (metricType.isEmpty) return Nil
     val ctx = MetricCtx(name, description, unit, metricType, temporality,
-      isMonotonic, resource, scopeName, scopeVersion, schemaUrl, scopeAttrs)
-    metricType match {
-      case "Gauge" | "Sum" => points.foreach(out += parseNumberPoint(_, ctx))
-      case "Histogram" => points.foreach(out += parseHistogramPoint(_, ctx))
-      case "Summary" => points.foreach(out += parseSummaryPoint(_, ctx))
-      case "ExponentialHistogram" =>
-        points.foreach(out += parseExpHistPoint(_, ctx))
+      isMonotonic, resource, scope)
+    val parsePoint: Reader => OtlpMetricRow = metricType match {
+      case "Gauge" | "Sum" => parseNumberPoint(_, ctx)
+      case "Histogram" => parseHistogramPoint(_, ctx)
+      case "Summary" => parseSummaryPoint(_, ctx)
+      case "ExponentialHistogram" => parseExpHistPoint(_, ctx)
     }
+    points.map(parsePoint).toSeq
   }
 
   private def parseNumberPoint(r: Reader, c: MetricCtx): OtlpMetricRow = {
@@ -749,9 +648,7 @@ object OtlpProto {
         case 3 => time = r.readFixed64()
         case 4 => value = r.readDouble()
         case 6 => value = r.readFixed64().toDouble // sfixed64 as_int
-        case 7 =>
-          val (k, v) = parseKeyValue(r.readSlice())
-          attrs += k -> avToString(v)
+        case 7 => attrs += stringKeyValue(r.readSlice())
         case 8 => flags = r.readVarint().toInt
         case _ => r.skip(wire)
       }
@@ -781,9 +678,7 @@ object OtlpProto {
         case 5 => sum = r.readDouble(); hasSum = true
         case 6 => r.readRepeatedFixed64(wire, buckets)
         case 7 => r.readRepeatedFixed64(wire, bounds)
-        case 9 =>
-          val (k, v) = parseKeyValue(r.readSlice())
-          attrs += k -> avToString(v)
+        case 9 => attrs += stringKeyValue(r.readSlice())
         case 10 => flags = r.readVarint().toInt
         case 11 => min = r.readDouble(); hasMin = true
         case 12 => max = r.readDouble(); hasMax = true
@@ -824,9 +719,7 @@ object OtlpProto {
             }
           }
           qs += OtlpQuantile(q, v)
-        case 7 =>
-          val (k, v) = parseKeyValue(r.readSlice())
-          attrs += k -> avToString(v)
+        case 7 => attrs += stringKeyValue(r.readSlice())
         case 8 => flags = r.readVarint().toInt
         case _ => r.skip(wire)
       }
@@ -872,9 +765,7 @@ object OtlpProto {
       val tag = r.readVarint()
       val wire = (tag & 7).toInt
       (tag >> 3).toInt match {
-        case 1 =>
-          val (k, v) = parseKeyValue(r.readSlice())
-          attrs += k -> avToString(v)
+        case 1 => attrs += stringKeyValue(r.readSlice())
         case 3 => time = r.readFixed64()
         case 4 => count = r.readFixed64()
         case 5 => sum = r.readDouble(); hasSum = true
@@ -898,18 +789,7 @@ object OtlpProto {
       negative_offset = negOff, negative_counts = neg.map(_.toDouble).toSeq)
   }
 
-  // ---- metrics DataFrame adapters ------------------------------------------
-
-  private def decodedMetricRows(df: DataFrame, valueCol: Column,
-      parser: Array[Byte] => Seq[OtlpMetricRow]) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(valueCol.cast("binary").as("v")).as[Array[Byte]]
-      .flatMap { bytes =>
-        try parser(bytes)
-        catch { case _: RuntimeException => Seq.empty }
-      }
-  }
+  // ---- metrics DataFrame adapter -------------------------------------------
 
   /** Binary OTLP-metrics payloads -> the four MetricFrames families, ready
     * for [[graft.pipeline.MetricsExporter]] (`scalarPoints`,
@@ -924,7 +804,7 @@ object OtlpProto {
     */
   def metricFramesFrom(df: DataFrame, valueCol: Column,
       parser: Array[Byte] => Seq[OtlpMetricRow]): OtlpMetricFrames = {
-    val all = decodedMetricRows(df, valueCol, parser).toDF().cache()
+    val all = decodeMessages(df, valueCol)(parser).cache()
     def shaped(shape: String, keep: Seq[String]): DataFrame =
       all.filter(col("shape") === shape).select(keep.map(col): _*)
     val ident = Seq("metric_name", "description", "unit", "metric_type",

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.sources.OtlpEnvelope.{MetricKey, Scope, temporalityNum}
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
 import graft.sources.ProtoWire.{Writer, hexToBytes, nonNull, nonNullSeq, orEmpty}
 
@@ -13,8 +14,8 @@ import graft.sources.ProtoWire.{Writer, hexToBytes, nonNull, nonNullSeq, orEmpty
   * the decode side ([[OtlpProto.parseLogsData]] / [[OtlpProto.parseTracesData]]
   * / [[OtlpProto.parseMetricsData]] Scaladoc). proto3 semantics: zero /
   * empty fields are omitted. The encoders take the engine's flattened frame
-  * rows and rebuild the Resource -> Scope -> record nesting by grouping on
-  * resource / scope identity in first-seen order, so
+  * rows and render the Resource -> Scope -> record nesting of
+  * [[OtlpEnvelope]]'s first-seen grouping (the one [[OtlpJson]] renders), so
   * `parse*Data(encode*Data(rows))` returns exactly `rows` (order preserved
   * within each resource+scope group; the flatten order overall).
   *
@@ -82,55 +83,32 @@ object OtlpProtoEncode {
   }
 
   /** InstrumentationScope{name=1, version=2, attributes=3}. */
-  private def scopeMsg(name: String, version: String,
-      attrs: Map[String, String]): Writer = {
+  private def scopeMsg(scope: Scope): Writer = {
     val w = new Writer(64)
-    if (orEmpty(name).nonEmpty) w.stringField(1, name)
-    if (orEmpty(version).nonEmpty) w.stringField(2, version)
-    nonNull(attrs).foreach { case (k, v) => w.msgField(3, kvString(k, v)) }
+    if (scope.name.nonEmpty) w.stringField(1, scope.name)
+    if (scope.version.nonEmpty) w.stringField(2, scope.version)
+    scope.attrs.foreach { case (k, v) => w.msgField(3, kvString(k, v)) }
     w
   }
 
-  // ---- generic Resource -> Scope -> record nesting -------------------------
-
-  private type ScopeKey = (String, String, Map[String, String])
-
-  /** Rebuild `ResourceX{resource=1, scope_x=2}` / `ScopeX{scope=1, records=2}`
-    * nesting from flat rows, grouping by resource then scope identity in
-    * first-seen order. `recordsField`/`scopeExtra` parameterize the small
-    * differences between the three signals.
+  /** Render [[OtlpEnvelope]]'s grouping as `XData{resource_x=1}` ->
+    * `ResourceX{resource=1, scope_x=2}` -> `ScopeX{scope=1, records=2,
+    * schema_url=3}`, each record encoded by `record`.
     */
-  private def nest[R](rows: Seq[R],
-      resourceOf: R => Map[String, String],
-      scopeOf: R => ScopeKey,
-      encodeRecord: R => Writer,
-      scopeExtra: (Writer, R) => Unit = (_: Writer, _: R) => ()): Array[Byte] = {
-    val byResource =
-      new java.util.LinkedHashMap[Map[String, String],
-        java.util.LinkedHashMap[ScopeKey, (scala.collection.mutable.ArrayBuffer[Writer], R)]]()
-    rows.foreach { row =>
-      val res = nonNull(resourceOf(row))
-      val scopes = byResource.computeIfAbsent(res, _ => new java.util.LinkedHashMap())
-      val key = scopeOf(row)
-      val slot = scopes.get(key)
-      if (slot == null)
-        scopes.put(key, (scala.collection.mutable.ArrayBuffer(encodeRecord(row)), row))
-      else slot._1 += encodeRecord(row)
-    }
+  private def envelope[R](nested: OtlpEnvelope.Nested[R])(record: R => Writer): Array[Byte] = {
     val top = new Writer(1024)
-    byResource.forEach { (res, scopes) =>
-      val rl = new Writer(512)
-      if (res.nonEmpty) rl.msgField(1, resourceMsg(res))
-      scopes.forEach { (key, slot) =>
-        val sl = new Writer(512)
-        val (name, version, attrs) = key
-        if (name.nonEmpty || version.nonEmpty || attrs.nonEmpty)
-          sl.msgField(1, scopeMsg(name, version, attrs))
-        slot._1.foreach(sl.msgField(2, _))
-        scopeExtra(sl, slot._2)
-        rl.msgField(2, sl)
+    nested.foreach { case (res, scopes) =>
+      val rx = new Writer(512)
+      if (res.nonEmpty) rx.msgField(1, resourceMsg(res))
+      scopes.foreach { case (scope, records) =>
+        val sx = new Writer(512)
+        if (scope.name.nonEmpty || scope.version.nonEmpty || scope.attrs.nonEmpty)
+          sx.msgField(1, scopeMsg(scope))
+        records.foreach(r => sx.msgField(2, record(r)))
+        if (scope.schemaUrl.nonEmpty) sx.stringField(3, scope.schemaUrl)
+        rx.msgField(2, sx)
       }
-      top.msgField(1, rl)
+      top.msgField(1, rx)
     }
     top.toBytes
   }
@@ -154,10 +132,7 @@ object OtlpProtoEncode {
 
   /** Rows -> one serialized LogsData payload. */
   def encodeLogsData(rows: Seq[OtlpRow]): Array[Byte] =
-    nest[OtlpRow](rows,
-      r => r.resources_string,
-      r => (orEmpty(r.scope_name), orEmpty(r.scope_version), nonNull(r.scope_string)),
-      logRecordMsg)
+    envelope(OtlpEnvelope.logs(rows))(logRecordMsg)
 
   // ---- traces --------------------------------------------------------------
 
@@ -202,10 +177,7 @@ object OtlpProtoEncode {
 
   /** Rows -> one serialized TracesData payload. */
   def encodeTracesData(rows: Seq[OtlpSpanRow]): Array[Byte] =
-    nest[OtlpSpanRow](rows,
-      r => r.resources_string,
-      r => (orEmpty(r.scope_name), orEmpty(r.scope_version), nonNull(r.scope_string)),
-      spanMsg)
+    envelope(OtlpEnvelope.spans(rows))(spanMsg)
 
   // ---- metrics -------------------------------------------------------------
 
@@ -275,29 +247,14 @@ object OtlpProtoEncode {
     w
   }
 
-  private def temporalityNum(s: String): Int = s match {
-    case "Delta" => 1
-    case "Cumulative" => 2
-    case _ => 0
-  }
-
-  /** Metric identity: all datapoint rows sharing it re-nest into one Metric
-    * message with one data-oneof.
-    */
-  private type MetricKey = (String, String, String, String, String, Boolean)
-  private def metricKey(r: OtlpMetricRow): MetricKey =
-    (orEmpty(r.metric_name), orEmpty(r.description), orEmpty(r.unit),
-      orEmpty(r.metric_type), orEmpty(r.temporality), r.is_monotonic)
-
-  private def metricMsg(key: MetricKey, points: Seq[Writer]): Writer = {
-    val (name, description, unit, metricType, temporality, isMonotonic) = key
+  private def metricMsg(key: MetricKey, points: Seq[OtlpMetricRow]): Writer = {
     val w = new Writer(256)
-    if (name.nonEmpty) w.stringField(1, name)
-    if (description.nonEmpty) w.stringField(2, description)
-    if (unit.nonEmpty) w.stringField(3, unit)
+    if (key.name.nonEmpty) w.stringField(1, key.name)
+    if (key.description.nonEmpty) w.stringField(2, key.description)
+    if (key.unit.nonEmpty) w.stringField(3, key.unit)
     val data = new Writer(256)
-    points.foreach(data.msgField(1, _))
-    val (dataField, withTemporality) = metricType match {
+    points.foreach(p => data.msgField(1, pointMsg(p)))
+    val (dataField, withTemporality) = key.metricType match {
       case "Gauge" => (5, false)
       case "Sum" => (7, true)
       case "Histogram" => (9, true)
@@ -305,9 +262,9 @@ object OtlpProtoEncode {
       case "Summary" => (11, false)
       case other => throw new IllegalArgumentException(s"unknown metric_type: $other")
     }
-    if (withTemporality && temporalityNum(temporality) != 0)
-      data.varintField(2, temporalityNum(temporality).toLong)
-    if (metricType == "Sum" && isMonotonic) data.boolField(3, isMonotonic)
+    if (withTemporality && temporalityNum(key.temporality) != 0)
+      data.varintField(2, temporalityNum(key.temporality).toLong)
+    if (key.metricType == "Sum" && key.isMonotonic) data.boolField(3, key.isMonotonic)
     w.msgField(dataField, data)
     w
   }
@@ -320,44 +277,9 @@ object OtlpProtoEncode {
     case other => throw new IllegalArgumentException(s"unknown shape: $other")
   }
 
-  /** Rows -> one serialized MetricsData payload. Rows regroup by resource,
-    * scope (incl. schema_url=3 on ScopeMetrics), then metric identity.
+  /** Rows -> one serialized MetricsData payload: resource -> scope (with
+    * schema_url=3 on ScopeMetrics) -> metric identity.
     */
-  def encodeMetricsData(rows: Seq[OtlpMetricRow]): Array[Byte] = {
-    // nest() handles resource+scope; the metric level needs its own grouping,
-    // so group rows by (resource, scope) into per-scope metric maps first.
-    type ScopeId = (Map[String, String], String, String, String, Map[String, String])
-    val byScope = new java.util.LinkedHashMap[ScopeId,
-      java.util.LinkedHashMap[MetricKey, scala.collection.mutable.ArrayBuffer[Writer]]]()
-    rows.foreach { r =>
-      val sid: ScopeId = (nonNull(r.resource_attrs), orEmpty(r.scope_name),
-        orEmpty(r.scope_version), orEmpty(r.scope_schema_url), nonNull(r.scope_attrs))
-      val metrics = byScope.computeIfAbsent(sid, _ => new java.util.LinkedHashMap())
-      metrics.computeIfAbsent(metricKey(r),
-        _ => scala.collection.mutable.ArrayBuffer.empty[Writer]) += pointMsg(r)
-    }
-    // regroup scopes under their resource, preserving first-seen order
-    val byResource = new java.util.LinkedHashMap[Map[String, String],
-      scala.collection.mutable.ArrayBuffer[(ScopeId,
-        java.util.LinkedHashMap[MetricKey, scala.collection.mutable.ArrayBuffer[Writer]])]]()
-    byScope.forEach { (sid, metrics) =>
-      byResource.computeIfAbsent(sid._1,
-        _ => scala.collection.mutable.ArrayBuffer.empty) += ((sid, metrics))
-    }
-    val top = new Writer(1024)
-    byResource.forEach { (res, scopes) =>
-      val rm = new Writer(512)
-      if (res.nonEmpty) rm.msgField(1, resourceMsg(res))
-      scopes.foreach { case ((_, name, version, schemaUrl, attrs), metrics) =>
-        val sm = new Writer(512)
-        if (name.nonEmpty || version.nonEmpty || attrs.nonEmpty)
-          sm.msgField(1, scopeMsg(name, version, attrs))
-        metrics.forEach { (key, points) => sm.msgField(2, metricMsg(key, points.toSeq)) }
-        if (schemaUrl.nonEmpty) sm.stringField(3, schemaUrl)
-        rm.msgField(2, sm)
-      }
-      top.msgField(1, rm)
-    }
-    top.toBytes
-  }
+  def encodeMetricsData(rows: Seq[OtlpMetricRow]): Array[Byte] =
+    envelope(OtlpEnvelope.metrics(rows)) { case (key, points) => metricMsg(key, points) }
 }

@@ -491,7 +491,8 @@ object Zipkin {
   // ---- frame-level API -----------------------------------------------------
 
   /** Kafka traces topic in any zipkin encoding -> SpanFrames frame
-    * (a batch of spans per message; undecodable messages dropped).
+    * (a batch of spans per message; undecodable messages dropped by
+    * [[OtlpEnvelope.decodeMessages]]).
     */
   def fromKafkaZipkin(df: DataFrame, encoding: String,
       valueCol: Column = col("value")): DataFrame = {
@@ -502,13 +503,7 @@ object Zipkin {
       case other =>
         throw new IllegalArgumentException(s"unrecognized zipkin encoding: $other")
     }
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(valueCol.cast("binary").as("v")).as[Array[Byte]]
-      .flatMap { bytes =>
-        try parse(bytes).map(toSpanRow)
-        catch { case scala.util.control.NonFatal(_) => Seq.empty }
-      }
-    graft.model.SpanFrames.withDefaults(rows.toDF())
+    graft.model.SpanFrames.withDefaults(OtlpEnvelope.decodeMessages(df, valueCol)(
+      bytes => parse(bytes).map(toSpanRow)))
   }
 }

@@ -94,6 +94,14 @@ class ExporterSpec extends SparkSuite {
     assert(again.count() == 0)
   }
 
+  test("resource sink: the anti-joined branch keeps the fresh branch's column order") {
+    val main = Exporter.logsV2(sampleLogs)
+    val fresh = Exporter.resources(main)
+    val rest = Exporter.resources(main, existing = Some(fresh.limit(1)))
+    assert(fresh.columns.toSeq === Seq("labels", "fingerprint", "seen_at_ts_bucket_start"))
+    assert(rest.columns.toSeq === fresh.columns.toSeq)
+  }
+
   test("tag attributes: keycheck filters random keys, typed rows split") {
     val main = Exporter.logsV2(sampleLogs)
     val tags = Exporter.tagAttributes(main)

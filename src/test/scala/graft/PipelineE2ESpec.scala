@@ -87,6 +87,28 @@ class PipelineE2ESpec extends SparkSuite {
     assert(counts2 == counts) // all five sinks keep their counts
   }
 
+  test("resume: appended resource-sink files keep the first write's footer schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-job-resume").toString
+    val small = Transcripts.generate(spark, nConvs = 40, seed = 7L)
+    val cfg = JobConfig(layoutPartitions = 2)
+    // the first run sees only each conversation's opening turns, so the
+    // resumed run has resource rows (later buckets) left to append
+    val first = TranscriptJob.run(spark, small.filter($"turn_idx" < 2), dir,
+      SparkEntry.transcriptPipeline, cfg)
+    val resumed = TranscriptJob.run(spark, small, dir, SparkEntry.transcriptPipeline,
+      cfg, resume = true)
+    assert(resumed("logs_v2_resource") > first("logs_v2_resource"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schemas = GraftTable.current(s"$dir/logs_v2_resource").get.files.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.path), conf))
+      try reader.getFooter.getFileMetaData.getSchema
+      finally reader.close()
+    }
+    assert(schemas.size > 1 && schemas.distinct.size == 1, schemas.distinct.mkString("\n"))
+  }
+
   /** Order-independent content checksum: row count plus the sum of a 64-bit
     * hash of every row, map entries sorted by key.
     */
