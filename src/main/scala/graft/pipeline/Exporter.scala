@@ -145,14 +145,17 @@ object Exporter {
       .select(col("labels"), col("resource_fingerprint").as("fingerprint"),
         col("ts_bucket_start").as("seen_at_ts_bucket_start"))
       .dropDuplicates("fingerprint", "seen_at_ts_bucket_start")
-    existing match {
-      // a join on column names moves the keys first; restore fresh's order
-      case Some(e) => fresh.join(e.select("fingerprint", "seen_at_ts_bucket_start"),
-        Seq("fingerprint", "seen_at_ts_bucket_start"), "left_anti")
-        .select(fresh.columns.map(col): _*)
-      case None => fresh
-    }
+    existing.fold(fresh)(antiJoin(fresh, _, "fingerprint", "seen_at_ts_bucket_start"))
   }
+
+  /** The rows of `fresh` whose `keys` are not in `existing` (the reference's
+    * cache existence checks), in `fresh`'s column order: a join on column
+    * names moves the keys first, so the order is restored.
+    */
+  private[pipeline] def antiJoin(fresh: DataFrame, existing: DataFrame,
+      keys: String*): DataFrame =
+    fresh.join(existing.select(keys.map(col): _*), keys, "left_anti")
+      .select(fresh.columns.map(col): _*)
 
   /** One tag-metadata row: the element type [[explodeTagRows]] explodes. */
   private def tagRow(key: String, tagType: String, dataType: String,

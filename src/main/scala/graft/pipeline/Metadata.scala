@@ -133,12 +133,8 @@ object Metadata {
           .getField("strings").as("resource_attrs"),
         graft.functions.JsonTypedMaps.of(col("__att_json"))
           .getField("strings").as("attrs"))
-    existing match {
-      case Some(e) => rows.join(
-        e.select("rounded_unix_milli", "resource_fingerprint", "attr_fingerprint"),
-        Seq("rounded_unix_milli", "resource_fingerprint", "attr_fingerprint"), "left_anti")
-      case None => rows
-    }
+    existing.fold(rows)(Exporter.antiJoin(rows, _,
+      "rounded_unix_milli", "resource_fingerprint", "attr_fingerprint"))
   }
 
   /** `distributed_json_path_types` rows: the json_writer's body walk

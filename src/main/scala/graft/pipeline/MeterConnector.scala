@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{JsonTypedMaps, MapFilterKeys, MapSortedJson}
 
-/** The `signozmeterconnector` as a batch stage: billing meter metrics from
+/** The `signozmeterconnector`: billing meter metrics from
   * the three signal streams (`connectors/signozmeterconnector/connector.go`).
   *
   * Reference semantics replicated exactly:
@@ -25,8 +25,13 @@ import graft.functions.{JsonTypedMaps, MapFilterKeys, MapSortedJson}
   *    `signoz.meter.{log,span,metric.datapoint}.{count,size}` with units
   *    "1"/"By", scope `signozmeterconnector` + `connector_id` scope attr,
   *    zero-valued families skipped (collect*MeterMetrics, connector.go:
-  *    175-296); state purges on every flush (delta temporality — the
-  *    streaming analogue is [[graft.streaming.StreamJobs.meterDeltas]]).
+  *    175-296); state purges on every flush (delta temporality).
+  *
+  * One connector, two faces sharing [[dimensionKey]] and [[meterRows]]: the
+  * batch face (`fromLogs`, `fromMetricFrames`) is one flush of the whole
+  * input at `flushUnixMilli`; the streaming face,
+  * [[graft.streaming.StreamJobs.meterConnectorStream]], flushes each
+  * micro-batch at its trigger time.
   *
   * The output frames are [[MeterExporter]]-ready (Sum + Delta passes its
   * gauge/sum gate), closing the reference pipeline
@@ -37,22 +42,26 @@ object MeterConnector {
   val ScopeName = "signozmeterconnector"
 
   final case class Names(count: String, size: String, countDesc: String, sizeDesc: String)
-  private val logNames = Names("signoz.meter.log.count", "signoz.meter.log.size",
+  private[graft] val logNames = Names("signoz.meter.log.count", "signoz.meter.log.size",
     "The number of log records observed.", "The size of log records observed.")
   private val dpNames = Names("signoz.meter.metric.datapoint.count",
     "signoz.meter.metric.datapoint.size",
     "The number of data points observed.", "The size of data points observed.")
 
-  /** Group rows carrying (resources_string, __count, __size) by the selected
-    * dimension map and emit the two meter frames for one family.
+  /** The accumulator key: the configured dimension keys of the resource map
+    * as sorted-key JSON. Absent keys are omitted and JSON quoting keeps a
+    * value holding a separator from colliding with a split pair. A null map
+    * is a resource without attributes: the empty key, like an absent one.
     */
-  private def build(rows: DataFrame, dims: Seq[String], names: Names,
-      connectorId: String, flushUnixMilli: Long): DataFrame = {
-    val keyed = rows
-      .withColumn("__dims",
-        MapSortedJson(MapFilterKeys(col("__res"), dims, keep = true)))
-      .groupBy(col("__dims"))
-      .agg(sum(col("__count")).as("__n"), sum(col("__size")).as("__b"))
+  private[graft] def dimensionKey(resources: Column, dims: Seq[String]): Column =
+    when(resources.isNull, lit("{}"))
+      .otherwise(MapSortedJson(MapFilterKeys(resources, dims, keep = true)))
+
+  /** One flush of a keyed `(__dims, __n, __b)` frame: per key a count and a
+    * size row of one family, stamped with `flushUnixMilli`.
+    */
+  private[graft] def meterRows(keyed: DataFrame, names: Names, connectorId: String,
+      flushUnixMilli: Column): DataFrame =
     keyed
       .select(col("__dims"), explode(array(
         struct(lit(names.count).as("metric_name"), lit(names.countDesc).as("description"),
@@ -66,12 +75,22 @@ object MeterConnector {
         lit("Sum").as("metric_type"),
         lit("Delta").as("temporality"),
         lit(true).as("is_monotonic"),
-        lit(flushUnixMilli).as("unix_milli"),
+        flushUnixMilli.as("unix_milli"),
         col("__m.value").as("value"),
         JsonTypedMaps.of(col("__dims")).getField("strings").as("attrs"),
         lit(ScopeName).as("scope_name"),
         map(lit("connector_id"), lit(connectorId)).as("scope_attrs"))
-  }
+
+  /** Group rows carrying (__res, __count, __size) by the dimension key and
+    * flush the two meter rows per key for one family.
+    */
+  private def build(rows: DataFrame, dims: Seq[String], names: Names,
+      connectorId: String, flushUnixMilli: Long): DataFrame =
+    meterRows(rows
+      .withColumn("__dims", dimensionKey(col("__res"), dims))
+      .groupBy(col("__dims"))
+      .agg(sum(col("__count")).as("__n"), sum(col("__size")).as("__b")),
+      names, connectorId, lit(flushUnixMilli))
 
   /** Log records -> `signoz.meter.log.{count,size}` (count 1 + the v1 logs
     * billing size per record — `record_size` from [[Exporter.logsV2]]).

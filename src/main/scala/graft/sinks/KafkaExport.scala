@@ -222,11 +222,11 @@ object KafkaExport {
       (if (r.positive_counts == null) 0 else r.positive_counts.size * 3) +
       (if (r.negative_counts == null) 0 else r.negative_counts.size * 3) + 128
 
-  /** Union-shaped metric frame (the [[OtlpMetricRow]] columns; `shape`
-    * selects the datapoint family per row) -> producer messages on
-    * `{tenant|default}_metrics`. Shape-specific columns missing from the
-    * input gain frame defaults first, so any one family's frame exports
-    * as-is.
+  /** Union-shaped metric frame (the [[OtlpMetricRow]] columns;
+    * `metric_type` selects the Metric data field and its datapoint
+    * encoding) -> producer messages on `{tenant|default}_metrics`.
+    * Family-specific columns missing from the input gain frame defaults
+    * first, so any one family's frame exports as-is.
     */
   def metricsToKafka(df: DataFrame, encoding: String = "otlp_proto",
       tenant: String = null,
@@ -253,7 +253,7 @@ object KafkaExport {
       graft.model.MetricFrames.withHistogramDefaults(
         graft.model.MetricFrames.withSummaryDefaults(df)))
     val extras: Seq[(String, org.apache.spark.sql.Column)] = Seq(
-      "shape" -> lit("scalar"),
+      "shape" -> lit("scalar"), // the decoder's family tag; encoding reads metric_type
       "value" -> lit(0.0),
       "has_sum" -> lit(false),
       "has_min" -> lit(false),
@@ -269,14 +269,10 @@ object KafkaExport {
   def metricFramesToKafka(frames: graft.sources.OtlpMetricFrames,
       tenant: String = null,
       maxMessageBytes: Int = DefaultMaxMessageBytes): Dataset[KafkaMessage] = {
-    val tagged = Seq(
-      frames.scalars.withColumn("shape", lit("scalar")),
-      frames.histograms.withColumn("shape", lit("histogram")),
-      frames.summaries.withColumn("shape", lit("summary")),
-      frames.expHistograms.withColumn("shape", lit("exp_histogram")))
-      .map(withMetricUnionDefaults)
-    val cols = tagged.head.columns.sorted.toSeq
-    val unioned = tagged.map(_.select(cols.map(col): _*)).reduce(_ unionByName _)
+    val lifted = Seq(frames.scalars, frames.histograms, frames.summaries,
+      frames.expHistograms).map(withMetricUnionDefaults)
+    val cols = lifted.head.columns.sorted.toSeq
+    val unioned = lifted.map(_.select(cols.map(col): _*)).reduce(_ unionByName _)
     metricsToKafka(unioned, "otlp_proto", tenant, maxMessageBytes)
   }
 }

@@ -252,29 +252,21 @@ object OtlpProtoEncode {
     if (key.name.nonEmpty) w.stringField(1, key.name)
     if (key.description.nonEmpty) w.stringField(2, key.description)
     if (key.unit.nonEmpty) w.stringField(3, key.unit)
-    val data = new Writer(256)
-    points.foreach(p => data.msgField(1, pointMsg(p)))
-    val (dataField, withTemporality) = key.metricType match {
-      case "Gauge" => (5, false)
-      case "Sum" => (7, true)
-      case "Histogram" => (9, true)
-      case "ExponentialHistogram" => (10, true)
-      case "Summary" => (11, false)
+    val (dataField, withTemporality, pointMsg) = key.metricType match {
+      case "Gauge" => (5, false, numberPointMsg _)
+      case "Sum" => (7, true, numberPointMsg _)
+      case "Histogram" => (9, true, histogramPointMsg _)
+      case "ExponentialHistogram" => (10, true, expHistPointMsg _)
+      case "Summary" => (11, false, summaryPointMsg _)
       case other => throw new IllegalArgumentException(s"unknown metric_type: $other")
     }
+    val data = new Writer(256)
+    points.foreach(p => data.msgField(1, pointMsg(p)))
     if (withTemporality && temporalityNum(key.temporality) != 0)
       data.varintField(2, temporalityNum(key.temporality).toLong)
     if (key.metricType == "Sum" && key.isMonotonic) data.boolField(3, key.isMonotonic)
     w.msgField(dataField, data)
     w
-  }
-
-  private def pointMsg(r: OtlpMetricRow): Writer = r.shape match {
-    case "scalar" => numberPointMsg(r)
-    case "histogram" => histogramPointMsg(r)
-    case "summary" => summaryPointMsg(r)
-    case "exp_histogram" => expHistPointMsg(r)
-    case other => throw new IllegalArgumentException(s"unknown shape: $other")
   }
 
   /** Rows -> one serialized MetricsData payload: resource -> scope (with

@@ -207,8 +207,8 @@ object TailSampler {
   /** The decision-wait group function for a `flatMapGroupsWithState` over
     * trace_id with ProcessingTimeTimeout. No streaming job wires it in; it
     * is tested with `TestGroupState` (a live ProcessingTimeTimeout query
-    * livelocks `processAllAvailable` — same pattern as
-    * `StreamJobs.meterDeltaFn`).
+    * re-runs empty batches to service timers, which livelocks
+    * `processAllAvailable`).
     *
     * Reference semantics (`processor.go`):
     *  - spans BUFFER from the trace's first arrival; the decision timer

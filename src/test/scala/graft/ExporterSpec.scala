@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Fingerprint, KeyCheck}
-import graft.model.LogFrames
-import graft.pipeline.{Exporter, ExporterConfig}
+import graft.model.{LogFrames, MetricFrames, SpanFrames}
+import graft.pipeline.{Exporter, ExporterConfig, Metadata}
 import graft.sinks.GraftTable
 
 /** Exporter stage + table-layer tests: fingerprint goldens straight from the
@@ -100,6 +101,24 @@ class ExporterSpec extends SparkSuite {
     val rest = Exporter.resources(main, existing = Some(fresh.limit(1)))
     assert(fresh.columns.toSeq === Seq("labels", "fingerprint", "seen_at_ts_bucket_start"))
     assert(rest.columns.toSeq === fresh.columns.toSeq)
+  }
+
+  test("attributes metadata: the anti-joined branch keeps the fresh branch's columns") {
+    val main = Exporter.logsV2(sampleLogs)
+    val spans = SpanFrames.withDefaults(Seq(("t1", "s1", "GET /", 1704067200000000000L))
+      .toDF("trace_id", "span_id", "name", "start_ts"))
+    val dps = MetricFrames.withDefaults(Seq(("requests", 1.0, 1704067200000L))
+      .toDF("metric_name", "value", "unix_milli"))
+    for ((ctx, rows) <- Seq[(String, Option[DataFrame] => DataFrame)](
+        "logs" -> (e => Metadata.attributesMetadata(main, existing = e)),
+        "traces" -> (e => Metadata.spanAttributesMetadata(spans, existing = e)),
+        "metrics" -> (e => Metadata.metricAttributesMetadata(dps, existing = e)))) {
+      val fresh = rows(None)
+      assert(fresh.columns.toSeq === Seq("rounded_unix_milli", "data_source",
+        "resource_fingerprint", "attr_fingerprint", "resource_attrs", "attrs"), ctx)
+      assert(rows(Some(fresh.limit(1))).columns.toSeq === fresh.columns.toSeq, ctx)
+      assert(rows(Some(fresh)).count() == 0L, ctx)
+    }
   }
 
   test("tag attributes: keycheck filters random keys, typed rows split") {

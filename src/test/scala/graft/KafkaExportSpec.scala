@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sinks.KafkaExport
-import graft.sources.{OtlpProto, OtlpProtoEncode}
+import graft.sources.{OtlpProto, OtlpProtoEncode, PdataGen}
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpQuantile, OtlpRow, OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
 
 /** Kafka exporter analogue (`exporter/signozkafkaexporter`): encode-side
@@ -220,5 +221,26 @@ class KafkaExportSpec extends SparkSuite {
     val h = back.find(_.shape == "histogram").get
     assert(h.explicit_bounds === Seq(2.0) && h.bucket_counts === Seq(1L, 2L)
       && h.count === 3L && h.sum_v === 6.0 && h.has_sum)
+  }
+
+  test("metricsToKafka: a histogram or a summary family frame round-trips") {
+    // PdataGen family frames carry no `shape`; the Metric's data field and
+    // each point's encoding both follow `metric_type`
+    val frames = PdataGen.metrics(spark, PdataGen.Count(
+      histMetrics = 2, histDataPoints = 3, histPointAttrs = 1,
+      summaryMetrics = 2, summaryDataPoints = 3, summaryQuantiles = 2))
+    def roundTrip(df: DataFrame) = OtlpProto.fromOtlpProtoMetrics(
+      KafkaExport.metricsToKafka(df).select(col("value")), col("value"))
+    def rows(df: DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val h = Seq("metric_name", "metric_type", "unix_milli", "count", "sum_v", "min_v",
+      "max_v", "explicit_bounds", "bucket_counts", "attrs")
+    val hBack = roundTrip(frames.histograms).histograms
+    assert(hBack.count() == 6L)
+    assert(rows(hBack, h: _*) == rows(frames.histograms, h: _*))
+    val sm = Seq("metric_name", "metric_type", "unix_milli", "count", "sum_v", "quantiles")
+    val sBack = roundTrip(frames.summaries).summaries
+    assert(sBack.count() == 6L)
+    assert(rows(sBack, sm: _*) == rows(frames.summaries, sm: _*))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.{LogFrames, MetricFrames}
 import graft.pipeline.{Exporter, MeterConnector, MeterExporter}
+import graft.streaming.StreamJobs
 
 /** signozmeterconnector semantics (connector.go + pkg/metering/v1). */
 class MeterConnectorSpec extends SparkSuite {
@@ -45,6 +46,40 @@ class MeterConnectorSpec extends SparkSuite {
     assert(out.forall(_.getAs[Map[String, String]]("attrs").isEmpty))
     assert(out.find(_.getAs[String]("metric_name") == "signoz.meter.log.count")
       .get.getAs[Double]("value") == 3.0)
+  }
+
+  test("fromLogs and meterConnectorStream build the same dimension key") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val rows = Seq[(Map[String, String], Long)](
+      (Map("a" -> "x,y"), 1L), // one value holding the separator ...
+      (Map("a" -> "x", "b" -> "y"), 2L), // ... against two split values
+      (Map("a" -> "q\"u", "b" -> "back\\slash", "c" -> "dropped"), 4L),
+      (Map("a" -> "q\"u", "b" -> "back\\slash"), 8L),
+      (Map("c" -> "only-other"), 16L), // no configured key -> empty attrs
+      (null, 32L)) // no resource map -> empty attrs too
+    val dims = Seq("a", "b")
+    def triples(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getAs[String]("metric_name"), r.getAs[Map[String, String]]("attrs"),
+        r.getAs[Double]("value"))).toSet
+    val batch = triples(MeterConnector.fromLogs(
+      rows.toDF("resources_string", "record_size"), dims, "cid", 0L))
+    val in = MemoryStream[(Map[String, String], Long)]
+    val q = StreamJobs.meterConnectorStream(in.toDF().toDF("resources_string", "record_size"),
+      dims, "cid").writeStream.outputMode("append")
+      .format("memory").queryName("graft_meter_key_parity").start()
+    val stream = try {
+      in.addData(rows)
+      q.processAllAvailable()
+      triples(spark.table("graft_meter_key_parity"))
+    } finally q.stop()
+    assert(stream == batch)
+    val counts = batch.filter(_._1 == "signoz.meter.log.count").map(t => (t._2, t._3))
+    assert(counts == Set(
+      (Map("a" -> "x,y"), 1.0),
+      (Map("a" -> "x", "b" -> "y"), 1.0),
+      (Map("a" -> "q\"u", "b" -> "back\\slash"), 2.0),
+      (Map.empty[String, String], 2.0)))
   }
 
   test("fromMetricFrames: v1 datapoint counting — exclusions, histogram " +

@@ -8,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
 import graft.pipeline.{Enrich, Exporter, JobConfig, Pipeline, TranscriptJob}
 import graft.sinks.GraftTable
 import graft.sources.Transcripts
-import graft.streaming.{MeterDelta, StreamJobs}
+import graft.pipeline.MeterConnector
+import graft.streaming.{StreamJobs, TailSampler}
 
 /** End-to-end: transcripts -> pipeline -> enrich -> fan-out sinks, plus the
   * streaming variants and the scaling invariants (stable ordering, per-sink
@@ -172,20 +173,20 @@ class PipelineE2ESpec extends SparkSuite {
     assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore)
   }
 
-  test("streaming: same pipeline over readStream + windowed meter") {
+  test("streaming: same pipeline over readStream + meter connector flush") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     transcripts.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(transcripts.schema).parquet(dir)
     val main = StreamJobs.pipelineStream(stream, SparkEntry.transcriptPipeline)
     assert(main.isStreaming)
-    val meter = StreamJobs.meter(main, "30 minutes", "10 minutes")
-    val q = meter.writeStream.outputMode("update")
+    val meter = StreamJobs.meterConnectorStream(main, Seq("role"), "cid-s")
+    val q = meter.writeStream.outputMode("append")
       .format("memory").queryName("graft_meter_test").start()
     try {
       q.processAllAvailable()
-      val agg = spark.sql(
-        "SELECT sum(n_records) FROM graft_meter_test").as[Long].collect().head
-      assert(agg == transcripts.count())
+      val agg = spark.sql("SELECT sum(value) FROM graft_meter_test " +
+        "WHERE metric_name = 'signoz.meter.log.count'").as[Double].collect().head
+      assert(agg == transcripts.count().toDouble)
     } finally q.stop()
   }
 
@@ -230,54 +231,64 @@ class PipelineE2ESpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("meter delta-flush: per-trigger deltas sum to the batch aggregate") {
+  /** A MemoryStream of (resources_string, record_size) rows: the two
+    * columns the meter connector reads from a logs_v2 frame.
+    */
+  private def meterInput() = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // (route, record_size) rows fed over 3 micro-batches = 3 flush ticks
-    val in = MemoryStream[(String, Long)]
-    val logsShaped = in.toDF().toDF("route", "record_size")
-    // stateTtl = None here ONLY because a live ProcessingTimeTimeout query
-    // re-runs empty batches to service timers, livelocking
-    // processAllAvailable; the default (TTL on) path is asserted in the
-    // "meter delta state TTL" test below via TestGroupState
-    val deltas = StreamJobs.meterDeltas(logsShaped, dimCols = Seq("route"),
-      stateTtl = None)
-    val q = deltas.writeStream.outputMode("append")
+    val in = MemoryStream[(Map[String, String], Long)]
+    (in, in.toDF().toDF("resources_string", "record_size"))
+  }
+
+  private def meterTriple(r: org.apache.spark.sql.Row) =
+    (r.getAs[String]("metric_name"), r.getAs[Map[String, String]]("attrs"),
+      r.getAs[Double]("value"))
+
+  test("meter delta-flush: per-trigger deltas sum to the batch aggregate") {
+    // (resources, record_size) rows fed over 3 micro-batches = 3 flush ticks
+    val (in, logsShaped) = meterInput()
+    val frames = StreamJobs.meterConnectorStream(logsShaped, Seq("route"), "cid-d")
+    val q = frames.writeStream.outputMode("append")
       .format("memory").queryName("graft_meter_deltas").start()
+    def r(route: String) = Map("route" -> route, "host" -> "h")
     val batches = Seq(
-      Seq(("r1", 10L), ("r1", 20L), ("r2", 5L)),
-      Seq(("r1", 1L)),
-      Seq(("r2", 7L), ("r2", 8L)))
+      Seq((r("r1"), 10L), (r("r1"), 20L), (r("r2"), 5L)),
+      Seq((r("r1"), 1L)),
+      Seq((r("r2"), 7L), (r("r2"), 8L)))
     try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val rows = spark.table("graft_meter_deltas")
-        .orderBy("dimensions", "cumulative_count").collect()
+      var seen = 0
+      val flushes = batches.map { b =>
+        in.addData(b)
+        q.processAllAvailable()
+        val all = spark.table("graft_meter_deltas").collect().map(meterTriple)
+        val flushed = all.drop(seen).toSet
+        seen = all.length
+        flushed
+      }
       // r1: flush1 (2 records, 30 bytes), flush2 (1, 1); r2: flush1 (1, 5),
       // flush3 (2, 15) — a tick with no data for a key emits nothing
-      val got = rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSeq
-      assert(got == Seq(
-        ("r1", 2L, 30L, 2L, 30L),
-        ("r1", 1L, 1L, 3L, 31L),
-        ("r2", 1L, 5L, 1L, 5L),
-        ("r2", 2L, 15L, 3L, 20L)))
-      // delta temporality: per-key deltas sum to the plain batch aggregate
-      val all = batches.flatten
-      for (k <- Seq("r1", "r2")) {
-        val deltaSum = got.filter(_._1 == k).map(_._3).sum
-        assert(deltaSum == all.filter(_._1 == k).map(_._2).sum)
-        assert(got.filter(_._1 == k).map(_._2).sum == all.count(_._1 == k))
-      }
+      val expected = Seq(
+        Seq(("r1", 2.0, 30.0), ("r2", 1.0, 5.0)),
+        Seq(("r1", 1.0, 1.0)),
+        Seq(("r2", 2.0, 15.0)))
+      assert(flushes == expected.map(_.flatMap { case (route, n, bytes) => Seq(
+        ("signoz.meter.log.count", Map("route" -> route), n),
+        ("signoz.meter.log.size", Map("route" -> route), bytes))
+      }.toSet))
+      // delta temporality: summed per attrs over the triggers, the flushes
+      // equal one batch flush over all the rows
+      val summed = flushes.flatten.groupMapReduce(t => (t._1, t._2))(_._3)(_ + _)
+      val batch = MeterConnector.fromLogs(batches.flatten.toDF("resources_string", "record_size"),
+        Seq("route"), "cid-d", 0L).collect().map(meterTriple)
+        .map(t => (t._1, t._2) -> t._3).toMap
+      assert(summed == batch)
     } finally q.stop()
   }
 
   test("meterConnectorStream: resource-dim keyed signoz.meter.log.* frames per flush") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Map[String, String], Long)]
-    val logsShaped = in.toDF().toDF("resources_string", "record_size")
-    val frames = StreamJobs.meterConnectorStream(logsShaped, Seq("role"), "cid-9",
-      stateTtl = None) // None: live-timer livelock, see delta-flush test note
+    val (in, logsShaped) = meterInput()
+    val frames = StreamJobs.meterConnectorStream(logsShaped, Seq("role"), "cid-9")
     val q = frames.writeStream.outputMode("append")
       .format("memory").queryName("graft_meter_frames").start()
     try {
@@ -298,56 +309,38 @@ class PipelineE2ESpec extends SparkSuite {
     } finally q.stop()
   }
 
-  test("meter delta state TTL: idle dimension keys are evicted on timeout") {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    // the DEFAULT path must be the evicting one (reference purges state at
-    // every flush; unbounded retention is the opt-in deviation)
-    assert(StreamJobs.DefaultStateTtl.isDefined)
-    val fn = StreamJobs.meterDeltaFn(StreamJobs.DefaultStateTtl)
-    // batch 1: key gets data -> delta emitted, state kept, timeout armed
-    val live = TestGroupState.create[(Long, Long)](
-      optionalState = org.apache.spark.api.java.Optional.empty(),
-      timeoutConf = GroupStateTimeout.ProcessingTimeTimeout,
-      batchProcessingTimeMs = 1000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
-    val out1 = fn(Seq("r1"), Iterator((Seq("r1"), 10L), (Seq("r1"), 20L)), live).toSeq
-    assert(out1 == Seq(MeterDelta("r1", 2L, 30L, 2L, 30L)))
-    assert(live.get == ((2L, 30L)))
-    assert(live.getTimeoutTimestampMs.isPresent) // TTL armed
-    // idle timeout tick: state REMOVED (the reference's resetState parity —
-    // high-cardinality dimension tuples cannot accumulate forever), nothing
-    // emitted
-    val timedOut = TestGroupState.create[(Long, Long)](
-      optionalState = org.apache.spark.api.java.Optional.of((2L, 30L)),
-      timeoutConf = GroupStateTimeout.ProcessingTimeTimeout,
-      batchProcessingTimeMs = 1000L + 30 * 60 * 1000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty(), hasTimedOut = true)
-    assert(fn(Seq("r1"), Iterator.empty, timedOut).isEmpty)
-    assert(timedOut.isRemoved, "idle state must be evicted")
-    // a returning key restarts its cumulative totals from zero
-    val reborn = TestGroupState.create[(Long, Long)](
-      optionalState = org.apache.spark.api.java.Optional.empty(),
-      timeoutConf = GroupStateTimeout.ProcessingTimeTimeout,
-      batchProcessingTimeMs = 2000L + 30 * 60 * 1000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
-    val out2 = fn(Seq("r1"), Iterator((Seq("r1"), 3L)), reborn).toSeq
-    assert(out2 == Seq(MeterDelta("r1", 1L, 3L, 1L, 3L)))
-    // the None opt-out keeps NoTimeout semantics: no timer is ever armed
-    val noTtl = TestGroupState.create[(Long, Long)](
-      optionalState = org.apache.spark.api.java.Optional.empty(),
-      timeoutConf = GroupStateTimeout.NoTimeout,
-      batchProcessingTimeMs = 1000L,
-      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty(), hasTimedOut = false)
-    StreamJobs.meterDeltaFn(None)(Seq("r2"), Iterator((Seq("r2"), 5L)), noTtl)
-    assert(!noTtl.isRemoved && noTtl.get == ((1L, 5L)))
+  test("meter connector flush keeps no state between triggers") {
+    // the reference purges its accumulator at every flush tick
+    // (connector.go:165-221 resetState): no key outlives its trigger
+    val (in, logsShaped) = meterInput()
+    val frames = StreamJobs.meterConnectorStream(logsShaped, Seq("role"), "cid-t")
+    val q = frames.writeStream.outputMode("append")
+      .format("memory").queryName("graft_meter_state").start()
+    try {
+      for (b <- Seq(
+          Seq((Map("role" -> "a"), 1L), (Map("role" -> "b"), 2L)),
+          Seq((Map("role" -> "c"), 3L)),
+          Seq((Map("role" -> "a"), 4L), (Map("role" -> "d"), 5L)))) {
+        in.addData(b)
+        q.processAllAvailable()
+        val ops = q.lastProgress.stateOperators
+        assert(ops.nonEmpty)
+        assert(ops.map(_.numRowsTotal).sum == 0L)
+      }
+      assert(spark.table("graft_meter_state").count() == 10L) // 5 flushed keys x 2
+    } finally q.stop()
   }
 
   test("probabilistic sampling is deterministic and roughly proportional") {
-    val s = StreamJobs.sampleByKey(transcripts, "conv_id", 0.25)
-    val n = s.select("conv_id").distinct().count()
+    // trace ids made from conv_id: 16 bytes of the conv_id's sha2 digest
+    val traced = transcripts.withColumn("trace_id",
+      substring(sha2(col("conv_id").cast("string"), 256), 1, 32))
+    def kept = traced.filter(TailSampler.probabilisticSampled(col("trace_id"), 25.0))
+      .select("conv_id").distinct().as[String].collect().sorted.toSeq
+    val n = kept.size
     val total = transcripts.select("conv_id").distinct().count()
     assert(n > total / 5 && n < total / 3)
-    assert(s.count() == StreamJobs.sampleByKey(transcripts, "conv_id", 0.25).count())
+    assert(kept == kept)
   }
 
   test("cardinality guard: high-distinct keys land in the skip set") {
