@@ -220,7 +220,7 @@ object ScaleUp {
     // independent of phrase count, the k-pass contains/regex replacement
     results += op("blocklist", smallD, bigD, smallDocs, bigDocs) { d =>
       d.select(graft.functions.AcBlocklistStats(
-          col("text"), DataQueries.blocklistPhrases).as("b"))
+          col("text"), TextQueries.blocklistPhrases).as("b"))
         .select((col("b.n_matches") + col("b.first_pos") * 7L +
           col("b.first_phrase")).as("h"))
         .agg(sum(col("h"))).collect().head.getLong(0)

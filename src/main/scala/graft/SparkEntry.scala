@@ -44,11 +44,6 @@ object SparkEntry {
     spark
   }
 
-  /** The flagship transcript pipeline: parse -> enrich -> route -> aggregate
-    * over the synthetic transcript table, covering the reference's hotrod
-    * end-to-end fixture semantics (`processor_test.go:258-345`) across the
-    * four generated payload shapes.
-    */
   /** Reference fixture pattern (`processor_test.go:268`) — kept verbatim for
     * the golden tests.
     */
@@ -62,11 +57,14 @@ object SparkEntry {
   val hotrodRegexFast: String =
     "^(?P<ts>[^\\t]*)\\t(?P<log_level>[^\\t]*)\\t(?P<location>[^\\t]*)\\t(?P<msg>[^\\t]*)\\t(?P<data_json>[^\\t]*)$"
 
-  /** Flagship pipeline. Perf notes (profiled): route predicates are cheap
-    * single-scan regexes; the expensive extractions run exactly once per
-    * routed row (no duplicated `matches` in `if:` guards — a failed parse
-    * takes the on_error=send path, which is the same pass-through the guard
-    * would produce).
+  /** The flagship transcript pipeline: parse -> enrich -> route -> aggregate
+    * over the synthetic transcript table, covering the reference's hotrod
+    * end-to-end fixture semantics (`processor_test.go:258-345`) across the
+    * four generated payload shapes. Perf notes (profiled): route predicates
+    * are cheap single-scan regexes; the expensive extractions run exactly
+    * once per routed row (no duplicated `matches` in `if:` guards — a failed
+    * parse takes the on_error=send path, which is the same pass-through the
+    * guard would produce).
     */
   def transcriptPipeline: PipelineSpec = PipelineSpec(Seq(
     RouterOp(Common("router"), Seq(
@@ -148,15 +146,19 @@ object SparkEntry {
       .orderBy(col("route"), col("severity_text"), col("actor_kind"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 + the
-    * training-data ops (dedup/ANN/text/multimodal).
+  /** Every oracle-checked query, each declared once beside its oracle: one
+    * per implemented operator from SURVEY.md §2 plus the training-data ops
+    * (dedup/ANN/text/multimodal).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all ++ DataQueries.all ++ TraceQueries.all ++ MetricQueries.all
+  private lazy val table: Seq[Query] =
+    Queries.table ++ DataQueries.table ++ TraceQueries.table ++ MetricQueries.table
+
+  /** Each query's builder; the session is configured before every build. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.byName(table)(q => (spark, dir) => q.build(configure(spark), dir))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    Queries.oracles ++ DataQueries.oracles ++ TraceQueries.oracles ++ MetricQueries.oracles
+  lazy val oracleSql: Map[String, String] = Query.byName(table)(_.oracle)
 }

@@ -95,11 +95,16 @@ object Dedup {
     * failure mode behind the round-5 conv-containment incident (360 s at
     * sf0.1 until the prefix bound landed). The check reads at most
     * `maxDocs + 1` rows (limit short-circuits the scan); `uncapped = true`
-    * is the explicit opt-in for a caller who has its own bound.
+    * is the explicit opt-in for a caller who has its own bound. A streaming
+    * input cannot be counted while the plan is built, so it is refused.
     */
   private def guardVerifierInput(docs: DataFrame, maxDocs: Long,
       uncapped: Boolean, op: String): Unit =
     if (!uncapped) {
+      require(!docs.isStreaming,
+        s"$op is an exact quadratic verifier and cannot bound a streaming " +
+          "input: verify a capped batch sliver, or opt in explicitly with " +
+          "uncapped = true")
       val n = docs.limit(math.min(maxDocs + 1, Int.MaxValue.toLong).toInt).count()
       require(n <= maxDocs,
         s"$op is an exact quadratic verifier and its input has >= $n docs " +

@@ -280,6 +280,12 @@ object Zipkin {
 
   // ---- v1 thrift ----------------------------------------------------------
 
+  /** Deepest nesting of structs and containers that the v1 Thrift reader
+    * skips through. Without a bound a crafted message nests deeper than the
+    * thread's stack; real spans nest a few levels.
+    */
+  val MaxThriftDepth = 100
+
   /** Minimal TBinaryProtocol reader (big-endian, strict struct framing):
     * the payload is a bare `list<zipkincore.Span>` — one byte element type
     * (STRUCT=12) + i32 count, then each struct as (type byte, i16 field id,
@@ -298,34 +304,51 @@ object Zipkin {
       while (i < 8) { v = (v << 8) | (buf(pos + i) & 0xffL); i += 1 }
       pos += 8; v
     }
-    def binary(): Array[Byte] = {
+    /** A STRING/BINARY length, checked against the bytes left. */
+    private def length(): Int = {
       val len = i32()
-      require(len >= 0 && pos + len <= buf.length, "truncated thrift binary")
+      require(len >= 0 && len <= buf.length - pos, "truncated thrift binary")
+      len
+    }
+    /** A MAP/SET/LIST element count; a negative count is malformed. */
+    def size(): Int = {
+      val n = i32()
+      require(n >= 0, s"negative thrift container size $n")
+      n
+    }
+    def binary(): Array[Byte] = {
+      val len = length()
       val out = java.util.Arrays.copyOfRange(buf, pos, pos + len)
       pos += len; out
     }
     def str(): String = new String(binary(), java.nio.charset.StandardCharsets.UTF_8)
-    /** Skip one value of the given thrift type id. */
-    def skip(tpe: Int): Unit = tpe match {
-      case 2 => pos += 1 // BOOL
-      case 3 => pos += 1 // BYTE
-      case 4 => pos += 8 // DOUBLE
-      case 6 => pos += 2 // I16
-      case 8 => pos += 4 // I32
-      case 10 => pos += 8 // I64
-      case 11 => pos += i32() // STRING/BINARY
-      case 12 => // STRUCT
-        var t = u8()
-        while (t != 0) { i16(); skip(t); t = u8() }
-      case 13 => // MAP
-        val kt = u8(); val vt = u8(); val n = i32()
-        var i = 0
-        while (i < n) { skip(kt); skip(vt); i += 1 }
-      case 14 | 15 => // SET / LIST
-        val et = u8(); val n = i32()
-        var i = 0
-        while (i < n) { skip(et); i += 1 }
-      case other => throw new IllegalArgumentException(s"unknown thrift type $other")
+    /** Skip one value of the given thrift type id, nested `depth` levels. */
+    def skip(tpe: Int, depth: Int = 0): Unit = {
+      require(depth <= MaxThriftDepth,
+        s"thrift value nested deeper than $MaxThriftDepth levels")
+      tpe match {
+        case 2 => pos += 1 // BOOL
+        case 3 => pos += 1 // BYTE
+        case 4 => pos += 8 // DOUBLE
+        case 6 => pos += 2 // I16
+        case 8 => pos += 4 // I32
+        case 10 => pos += 8 // I64
+        case 11 => // STRING/BINARY
+          val len = length()
+          pos += len
+        case 12 => // STRUCT
+          var t = u8()
+          while (t != 0) { i16(); skip(t, depth + 1); t = u8() }
+        case 13 => // MAP
+          val kt = u8(); val vt = u8(); val n = size()
+          var i = 0
+          while (i < n) { skip(kt, depth + 1); skip(vt, depth + 1); i += 1 }
+        case 14 | 15 => // SET / LIST
+          val et = u8(); val n = size()
+          var i = 0
+          while (i < n) { skip(et, depth + 1); i += 1 }
+        case other => throw new IllegalArgumentException(s"unknown thrift type $other")
+      }
     }
   }
 
@@ -384,7 +407,7 @@ object Zipkin {
           case (4, 10) => id = t.i64()
           case (5, 10) => parentId = t.i64()
           case (6, 15) =>
-            val et = t.u8(); val n = t.i32()
+            val et = t.u8(); val n = t.size()
             require(et == 12, "annotations must be structs")
             (0 until n).foreach { _ =>
               var ats = 0L; var av = ""; var host: V1Endpoint = null
@@ -402,7 +425,7 @@ object Zipkin {
               anns += V1Annotation(ats, av, host)
             }
           case (8, 15) =>
-            val et = t.u8(); val n = t.i32()
+            val et = t.u8(); val n = t.size()
             require(et == 12, "binary annotations must be structs")
             (0 until n).foreach { _ =>
               var key = ""; var value: Array[Byte] = null; var at = 6

@@ -559,6 +559,18 @@ class DataOpsSpec extends SparkSuite {
       uncapped = true).count() > 0)
   }
 
+  test("exact-verifier guard: a streaming input is refused while the plan is built") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val docs = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    for ((op, build) <- Seq[(String, () => Any)](
+        "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs)),
+        "containmentPairs" -> (() => Dedup.containmentPairs(docs)))) {
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(op) && e.getMessage.contains("streaming"), e.getMessage)
+    }
+  }
+
   test("connected components: distributed fixpoint loop (forced past " +
       "the local union-find fast path) matches the same fixpoint") {
     // localEdgeThreshold=0 forces the distributed DataFrame rounds; the

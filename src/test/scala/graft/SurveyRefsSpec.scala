@@ -11,7 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `dir/File.scala` and `dir/File.member` references. Each one whose `dir`
   * is a package under `src/main/scala/graft/` must name a file that exists
   * and, for `File.member`, a member declared in that file, so a rename or
-  * deletion that leaves a SURVEY row behind fails here.
+  * deletion that leaves a SURVEY row behind fails here. Every query name
+  * (`q_...`) in SURVEY.md and README.md must be a key of
+  * [[SparkEntry.queries]], and a `FamilyQueries q_name` reference must name
+  * the top-level file that declares that query.
   */
 class SurveyRefsSpec extends AnyFunSuite {
 
@@ -36,5 +39,22 @@ class SurveyRefsSpec extends AnyFunSuite {
     }
     assert(unresolved.isEmpty, unresolved.map { case (d, f, m) => s"$d/$f.$m" }
       .mkString("stale SURVEY.md references: ", ", ", ""))
+  }
+
+  test("every q_ name in SURVEY.md and README.md is a query, in the file it is placed in") {
+    val docs = Seq("SURVEY.md", "README.md").map(f => read(Paths.get(f))).mkString("\n")
+    val names = """\bq_[a-z0-9_]+""".r.findAllIn(docs).toSet
+    assert(names.size > 100, s"found only ${names.size} query names")
+    val unknown = names -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, unknown.toSeq.sorted.mkString("unknown query names: ", ", ", ""))
+    // `FamilyQueries q_name` places a query in a top-level query file
+    val placed = """\b([A-Z]\w*Queries) (q_[a-z0-9_]+)""".r.findAllMatchIn(docs)
+      .map(m => (m.group(1), m.group(2))).toSeq.distinct
+    val misplaced = placed.filterNot { case (file, q) =>
+      val src = graftRoot.resolve(s"$file.scala")
+      Files.isRegularFile(src) && read(src).contains("Query(\"" + q + "\"")
+    }
+    assert(misplaced.isEmpty, misplaced.map { case (f, q) => s"$f $q" }
+      .mkString("query placed in the wrong file: ", ", ", ""))
   }
 }

@@ -206,6 +206,52 @@ class ZipkinSpec extends SparkSuite {
     assert(s.timestampMicros === 1500L && s.durationMicros === 2500L)
   }
 
+  /** `f` on one daemon thread with `stackBytes` of stack: its result or what
+    * it threw, or None while it is still running after `seconds`.
+    */
+  private def onThread[A](stackBytes: Long, seconds: Int)(f: => A): Option[Either[Throwable, A]] = {
+    val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
+    val t = new Thread(null, () => out.set(try Right(f) catch { case e: Throwable => Left(e) }),
+      "thrift-parse", stackBytes)
+    t.setDaemon(true)
+    t.start()
+    t.join(seconds * 1000L)
+    Option(out.get)
+  }
+
+  test("thrift: an unknown string field is skipped to the byte after it") {
+    def parse(unknown: Boolean) = {
+      val w = new TW
+      w.u8(12).i32(1)
+      w.field(10, 1).i64(7L)
+      if (unknown) w.field(11, 99).str("unknown field")
+      w.field(11, 3).str("call")
+      w.field(10, 4).i64(9L)
+      w.stop()
+      Zipkin.parseThriftV1(w.bytes)
+    }
+    assert(parse(unknown = false).map(_.name) === Seq("call"))
+    assert(parse(unknown = true) === parse(unknown = false))
+  }
+
+  test("thrift: a negative string length is rejected, not looped on") {
+    // list<STRUCT>[1], then field 99 of type STRING with length -3
+    val msg = Array(0x0c, 0, 0, 0, 1, 0x0b, 0x00, 0x63, 0xff, 0xff, 0xff, 0xfd).map(_.toByte)
+    val r = onThread(1L << 20, 10)(Zipkin.parseThriftV1(msg))
+    assert(r.isDefined, "parseThriftV1 still running after 10 s")
+    assert(r.get.left.exists(_.isInstanceOf[IllegalArgumentException]), r)
+  }
+
+  test("thrift: unknown structs nested past MaxThriftDepth throw, not overflow the stack") {
+    val w = new TW
+    w.u8(12).i32(1)
+    (0 until 50000).foreach(_ => w.field(12, 99))
+    (0 to 50000).foreach(_ => w.stop())
+    val r = onThread(512L << 10, 60)(Zipkin.parseThriftV1(w.bytes))
+    assert(r.isDefined, "parseThriftV1 still running after 60 s")
+    assert(r.get.left.exists(_.isInstanceOf[IllegalArgumentException]), r)
+  }
+
   test("frame-level decode for all three encodings; malformed messages dropped") {
     import spark.implicits._
     val protoBytes = {
