@@ -65,6 +65,15 @@ case class BloomContainsAll(child: Expression, filter: Array[Byte])
     copy(child = newChild)
 
   override def prettyName: String = "bloom_contains_all"
+
+  /** The filter prints as its size and checksum, not its JVM identity, so
+    * two builds over one input print the same plan.
+    */
+  override protected def stringArgs: Iterator[Any] = {
+    val crc = new java.util.zip.CRC32()
+    crc.update(filter)
+    Iterator(child, s"${filter.length * 8L} bits crc32 ${java.lang.Long.toHexString(crc.getValue)}")
+  }
 }
 
 object BloomContainsAll {

@@ -112,7 +112,7 @@ object Ops {
   import FieldRef._
 
   /** Name of the route column a router materializes. */
-  def routeCol(routerId: String, isFirst: Boolean): String =
+  private def routeCol(routerId: String, isFirst: Boolean): String =
     if (isFirst) "route" else s"route_$routerId"
 
   // -- merge helpers ---------------------------------------------------------
@@ -180,7 +180,7 @@ object Ops {
     (ok, Seq("severity_number" -> sevNum, "severity_text" -> sevText))
   }
 
-  private def timeUpdates(spec: TimeParserSpec): (Column, Column, Seq[(String, Column)]) = {
+  private def timeUpdates(spec: TimeParserSpec): (Column, Seq[(String, Column)]) = {
     val parsed = spec.parseFrom match {
       case Attr(keys) if spec.layoutType == "epoch" =>
         // numeric attribute values truncate like Go `int64(v)`; string values
@@ -196,7 +196,7 @@ object Ops {
           location = spec.location)
     }
     val ok = FieldCols.exists(spec.parseFrom) && parsed.isNotNull
-    (ok, parsed, Seq("timestamp" -> parsed))
+    (ok, Seq("timestamp" -> parsed))
   }
 
   private val hexRe = "^(?:[0-9a-fA-F]{2})*$"
@@ -230,65 +230,64 @@ object Ops {
   private def applyExtras(df0: DataFrame, extras: ParserExtras, gate: Column,
       onError: OnError.T): DataFrame = {
     var df = df0
-    extras.timestamp.foreach { spec =>
-      val (ok, _, updates) = timeUpdates(spec)
-      df = gatedApply(df, updates, gate, ok, onError)
-    }
-    extras.severity.foreach { spec =>
-      val (ok, updates) = severityUpdates(spec)
-      df = gatedApply(df, updates, gate, ok, onError)
-    }
-    extras.trace.foreach { spec =>
-      val (ok, updates) = traceUpdates(spec)
-      df = partialApply(df, updates, gate, ok, onError)
-    }
+    extras.timestamp.map(timeUpdates).foreach { case (ok, u) =>
+      df = step(df, gate, ok, onError)(u) }
+    extras.severity.map(severityUpdates).foreach { case (ok, u) =>
+      df = step(df, gate, ok, onError)(u) }
+    extras.trace.map(traceUpdates).foreach { case (ok, u) =>
+      df = step(df, gate, ok, onError, partial = true)(u) }
     extras.scopeName.foreach { f =>
       df = FieldCols.applyUpdates(df, Seq("scope_name" -> FieldCols.readString(f)), Some(gate))
     }
     df
   }
 
-  /** Apply `updates` for rows passing `gate` whose parse succeeded (`ok`);
-    * on_error decides the fate of gate-true/ok-false rows
-    * (`helper/transformer.go:43-51,118-130`).
+  /** The one operator step, where on_error is decided
+    * (`helper/transformer.go:43-51,118-130`). Each stage of `updates`
+    * applies in turn to the rows that pass `gate` and whose `ok` holds; a
+    * `partial` step (trace_parser, remove) applies them on `gate` alone,
+    * each update carrying its own validity, and `ok` only routes the error.
+    * Rows where `gate && !ok` pass unmodified under `send*` and are
+    * filtered out under `drop*`. `ok` and the filter read the row before
+    * the updates rewrite it.
     */
-  private def gatedApply(df0: DataFrame, updates: Seq[(String, Column)], gate: Column,
-      ok: Column, onError: OnError.T): DataFrame = {
-    // materialize ok before mutating the columns it reads
+  private def step(df0: DataFrame, gate: Column, ok: Column, onError: OnError.T,
+      partial: Boolean = false)(updates: Seq[(String, Column)]*): DataFrame = {
     val df = df0.withColumn("__ok", coalesce(ok, lit(false)))
-    val out = FieldCols.applyUpdates(df, updates, Some(gate && col("__ok")))
-    val filtered = onError match {
-      case OnError.Drop | OnError.DropQuiet => out.filter(!gate || col("__ok"))
-      case _ => out
+    val kept = onError match {
+      case OnError.Drop | OnError.DropQuiet => df.filter(!gate || col("__ok"))
+      case _ => df
     }
-    filtered.drop("__ok")
+    val g = if (partial) gate else gate && col("__ok")
+    updates.foldLeft(kept)((d, u) => FieldCols.applyUpdates(d, u, Some(g))).drop("__ok")
   }
 
-  /** Like [[gatedApply]] but the updates apply on `gate` ALONE — each update
-    * carries its own per-field validity condition — while `ok` (all fields
-    * valid) only routes the combined error: trace_parser semantics, where
-    * valid fields stick even when a sibling errors (helper/trace.go:93-111).
+  /** The parser shell (`helper/parser.go:130-190`): the `kernel` result
+    * lands in `__parsed` under the gate, the step `assign`s it where it is
+    * not null, and the embedded sub-parsers run on the rows that parsed.
     */
-  private def partialApply(df0: DataFrame, updates: Seq[(String, Column)], gate: Column,
-      ok: Column, onError: OnError.T): DataFrame = {
-    val df = df0.withColumn("__ok", coalesce(ok, lit(false)))
-    val out = FieldCols.applyUpdates(df, updates, Some(gate))
-    val filtered = onError match {
-      case OnError.Drop | OnError.DropQuiet => out.filter(!gate || col("__ok"))
-      case _ => out
-    }
-    filtered.drop("__ok")
+  private def parse(df: DataFrame, c: Common, gate: Column, extras: ParserExtras,
+      kernel: Column)(assign: Column => Seq[(String, Column)]): DataFrame = {
+    val parsed = col("__parsed")
+    val df1 = step(df.withColumn("__parsed", when(gate, kernel)), gate, parsed.isNotNull,
+      c.onError)(assign(parsed))
+    applyExtras(df1, extras, gate && parsed.isNotNull, c.onError).drop("__parsed")
   }
 
   // -- the operator dispatch ---------------------------------------------------
 
-  /** Apply one operator for rows where `reach` holds. */
-  def applyOp(df: DataFrame, op: Op, reach: Column, isFirstRouter: Boolean = true): DataFrame = {
+  /** Apply one operator for rows where `reach` holds. A router also
+    * returns each of its outputs with the condition under which a row
+    * reaches it; every other operator returns no outputs.
+    */
+  def applyOp(df: DataFrame, op: Op, reach: Column,
+      isFirstRouter: Boolean = true): (DataFrame, Seq[(String, Column)]) = {
     val gate = op.common.ifExpr match {
       case Some(e) => reach && ExprLang.boolExpr(e)
       case None => reach
     }
-    op match {
+    var routed = Seq.empty[(String, Column)]
+    val out = op match {
       case NoopOp(_) => df
 
       case AddOp(_, field, value, isJson) =>
@@ -341,148 +340,146 @@ object Ops {
           Some(exprGate.map(gate && _).getOrElse(gate)))
 
       case RemoveOp(c, field) =>
-        // missing field is an error (remove/transformer.go:38-42) — only
-        // observable under on_error: drop, since the remove itself is a
-        // no-op on absent fields; rootable/whole-entry targets always
-        // succeed (transformer.go:29-37). Existence is captured BEFORE the
-        // remove projection.
-        val needOk = (c.onError == OnError.Drop || c.onError == OnError.DropQuiet) &&
-          (field match {
-            case FieldRef.AttrsRoot | FieldRef.ResourceRoot | FieldRef.Body |
-                FieldRef.Top(_) => false
-            case _ => true
-          })
-        if (!needOk) FieldCols.applyUpdates(df, FieldCols.remove(field), Some(gate))
-        else {
-          // keep-decision materialized BEFORE the remove projection (both
-          // the gate and the existence read pre-remove values)
-          val df1 = df.withColumn("__rkeep",
-            !gate || coalesce(FieldCols.existsStrict(field), lit(false)))
-          FieldCols.applyUpdates(df1, FieldCols.remove(field), Some(gate))
-            .filter(col("__rkeep"))
-            .drop("__rkeep")
+        // missing field is an error (remove/transformer.go:38-42), seen only
+        // under on_error: drop since removing an absent field changes
+        // nothing; rootable/whole-entry targets always succeed
+        // (transformer.go:29-37)
+        val ok = field match {
+          case AttrsRoot | ResourceRoot | Body | Top(_) => lit(true)
+          case _ => FieldCols.existsStrict(field)
         }
+        step(df, gate, ok, c.onError, partial = true)(FieldCols.remove(field))
 
-      case CopyOp(_, from, to) =>
-        copyMove(df, from, to, gate, op.common.onError, deleteFrom = false)
+      case CopyOp(c, from, to) =>
+        step(df, gate, FieldCols.existsStrict(from), c.onError)(
+          copyMove(from, to, deleteFrom = false): _*)
 
-      case MoveOp(_, from, to) =>
-        copyMove(df, from, to, gate, op.common.onError, deleteFrom = true)
+      case MoveOp(c, from, to) =>
+        step(df, gate, FieldCols.existsStrict(from), c.onError)(
+          copyMove(from, to, deleteFrom = true): _*)
 
       case NormalizeOp(_) =>
         FieldCols.applyUpdates(df, Seq("body" -> NormalizeBody(col("body"))), Some(gate))
 
       case RegexParserOp(c, regex, parseFrom, parseTo, extras) =>
-        val src = FieldCols.readString(parseFrom)
-        val df1 = df.withColumn("__parsed",
-          when(gate, RegexExtractNamedGroups(src, regex)))
-        val ok = col("__parsed").isNotNull
-        val updates = assignStringMap(parseTo, col("__parsed"),
-          map().cast(graft.model.LogSchema.mapSD))
-        val df2 = gatedApply(df1, updates, gate, ok, c.onError)
-        applyExtras(df2, extras, gate && col("__parsed").isNotNull, c.onError)
-          .drop("__parsed")
+        parse(df, c, gate, extras, RegexExtractNamedGroups(FieldCols.readString(parseFrom), regex))(
+          assignStringMap(parseTo, _, map().cast(graft.model.LogSchema.mapSD)))
 
       case GrokParserOp(c, pattern, include, exclude, parseFrom, parseTo, extras) =>
         val expanded = Grok.expand(pattern)
-        val src = FieldCols.readString(parseFrom)
-        val df1 = df.withColumn("__parsed",
-          when(gate, RegexExtractNamedGroups(src, expanded.regex)))
-        val ok = col("__parsed").isNotNull
-        // include/exclude filters (pkg/parser/grok/grok.go:105-131), static
-        // keys — MapFilterKeys/MapGrokNumeric codegen kernels instead of
-        // map_filter/transform_values (CodegenFallback HOFs that would
-        // de-codegen the whole projection)
-        val keep: Column = {
-          var m = col("__parsed")
-          if (include.nonEmpty)
-            m = graft.functions.MapFilterKeys(m, include.toSeq, keep = true)
-          if (exclude.nonEmpty)
-            m = graft.functions.MapFilterKeys(m, exclude.toSeq, keep = false)
-          m
+        parse(df, c, gate, extras,
+            RegexExtractNamedGroups(FieldCols.readString(parseFrom), expanded.regex)) { parsed =>
+          // include/exclude filters (pkg/parser/grok/grok.go:105-131), static
+          // keys — MapFilterKeys/MapGrokNumeric codegen kernels instead of
+          // map_filter/transform_values (CodegenFallback HOFs that would
+          // de-codegen the whole projection)
+          val keep: Column = {
+            var m = parsed
+            if (include.nonEmpty)
+              m = graft.functions.MapFilterKeys(m, include.toSeq, keep = true)
+            if (exclude.nonEmpty)
+              m = graft.functions.MapFilterKeys(m, exclude.toSeq, keep = false)
+            m
+          }
+          val numKeys = expanded.types.keySet
+            .filter(k => include.isEmpty || include.contains(k)) -- exclude
+          val (strPart, numPart) =
+            if (numKeys.isEmpty) (keep, map().cast(graft.model.LogSchema.mapSD))
+            else (
+              graft.functions.MapFilterKeys(keep, numKeys.toSeq, keep = false),
+              graft.functions.MapGrokNumeric(
+                graft.functions.MapFilterKeys(keep, numKeys.toSeq, keep = true),
+                intKeys = numKeys.toSeq.filter(k => expanded.types(k) == "int")))
+          assignStringMap(parseTo,
+            strPart.cast(graft.model.LogSchema.mapSS), numPart.cast(graft.model.LogSchema.mapSD))
         }
-        val numKeys = expanded.types.keySet
-          .filter(k => include.isEmpty || include.contains(k)) -- exclude
-        val (strPart, numPart) =
-          if (numKeys.isEmpty) (keep, map().cast(graft.model.LogSchema.mapSD))
-          else (
-            graft.functions.MapFilterKeys(keep, numKeys.toSeq, keep = false),
-            graft.functions.MapGrokNumeric(
-              graft.functions.MapFilterKeys(keep, numKeys.toSeq, keep = true),
-              intKeys = numKeys.toSeq.filter(k => expanded.types(k) == "int")))
-        val updates = assignStringMap(parseTo,
-          strPart.cast(graft.model.LogSchema.mapSS), numPart.cast(graft.model.LogSchema.mapSD))
-        val df2 = gatedApply(df1, updates, gate, ok, c.onError)
-        applyExtras(df2, extras, gate && col("__parsed").isNotNull, c.onError)
-          .drop("__parsed")
 
       case JsonParserOp(c, parseFrom, parseTo, maxDepth, enablePaths, pathPrefix, extras) =>
-        val src = FieldCols.readString(parseFrom)
-        val df1 = df.withColumn("__parsed",
-          when(gate, JsonTypedMaps.of(src,
+        parse(df, c, gate, extras, JsonTypedMaps.of(FieldCols.readString(parseFrom),
             flatten = maxDepth.isDefined || enablePaths,
             maxDepth = maxDepth.getOrElse(1),
-            enablePaths = enablePaths, pathPrefix = pathPrefix)))
-        val ok = col("__parsed").isNotNull
-        val updates = assignTypedStruct(parseTo, col("__parsed"))
-        val df2 = gatedApply(df1, updates, gate, ok, c.onError)
-        applyExtras(df2, extras, gate && col("__parsed").isNotNull, c.onError)
-          .drop("__parsed")
+            enablePaths = enablePaths, pathPrefix = pathPrefix))(
+          assignTypedStruct(parseTo, _))
 
       case SeverityParserOp(c, spec) =>
-        val (ok, updates) = severityUpdates(spec)
-        gatedApply(df, updates, gate, ok, c.onError)
+        applyExtras(df, ParserExtras(severity = Some(spec)), gate, c.onError)
 
       case TimeParserOp(c, spec) =>
-        val (ok, _, updates) = timeUpdates(spec)
-        gatedApply(df, updates, gate, ok, c.onError)
+        applyExtras(df, ParserExtras(timestamp = Some(spec)), gate, c.onError)
 
       case TraceParserOp(c, spec) =>
-        val (ok, updates) = traceUpdates(spec)
-        partialApply(df, updates, gate, ok, c.onError)
+        applyExtras(df, ParserExtras(trace = Some(spec)), gate, c.onError)
 
-      case RouterOp(c, routes, default) =>
+      case router @ RouterOp(c, routes, default) =>
         // first matching route wins (`router/transformer.go:49-68`);
         // `default:` is an always-true last route (`router/config.go:56-62`)
         val colName = routeCol(c.id, isFirstRouter)
-        val defaultName = default.headOption.getOrElse("default")
-        val routeVal = routes.zipWithIndex.foldRight(lit(defaultName): Column) {
-          case ((r, i), acc) => when(ExprLang.boolExpr(r.expr), routeName(r, i)).otherwise(acc)
+        val (names, defaultName) = routeNames(router)
+        val routeVal = routes.zip(names).foldRight(lit(defaultName): Column) {
+          case ((r, name), acc) => when(ExprLang.boolExpr(r.expr), name).otherwise(acc)
         }
         var out = df.withColumn(colName, when(gate, routeVal))
         // per-route attached attributes
-        routes.zipWithIndex.foreach { case (r, i) =>
+        routes.zip(names).foreach { case (r, name) =>
           if (r.attributes.nonEmpty) {
-            val g = gate && col(colName) === routeName(r, i)
+            val g = gate && col(colName) === name
             r.attributes.foreach { case (k, v) =>
               out = FieldCols.applyUpdates(out,
                 FieldCols.setString(Attr(Seq(k)), lit(v)), Some(g))
             }
           }
         }
+        // every output of a route is reached by the rows that route names
+        routed = (routes.map(_.output).zip(names) :+ (default -> defaultName)).flatMap {
+          case (outputs, name) => outputs.map(_ -> (reach && col(colName) === name))
+        }
         out
     }
+    (out, routed)
   }
 
-  def routeName(r: Route, i: Int): String =
-    r.output.headOption.getOrElse(s"route_$i")
-
-  /** Shared copy/move kernel (`operators/copy/transformer.go:31-36`,
-    * `operators/move/transformer.go:27-31`): missing `from` is an error.
-    * Attr->Attr preserves the value's typed map; body-path targets edit the
-    * body JSON with `BodyField.Set/Merge` semantics (map values merge,
-    * string attrs keep their string type, number/bool attrs keep their JSON
-    * types); move inside the body runs Delete-then-Set in the reference's
-    * order so self-overlapping paths resolve identically. Everything else
-    * goes through the string read. Set and delete compose as chained
-    * projections (Catalyst's CollapseProject fuses them back into one).
+  /** The name each route writes to the route column, and the default's.
+    * A route is named by its first output, unless an earlier route or the
+    * default already holds that name with other outputs or attributes:
+    * then it takes a name no other route of the router uses, so a row
+    * reaches only the outputs, and gets only the attributes, of its own
+    * route.
     */
-  private def copyMove(df0: DataFrame, from: FieldRef, to: FieldRef, gate: Column,
-      onError: OnError.T, deleteFrom: Boolean): DataFrame = {
+  private def routeNames(router: RouterOp): (Seq[String], String) = {
+    val defaultName = router.default.headOption.getOrElse("default")
+    val firsts = router.routes.zipWithIndex.map { case (r, i) =>
+      r.output.headOption.getOrElse(s"route_$i")
+    }
+    val taken = scala.collection.mutable.Set(defaultName +: firsts: _*)
+    val holder = scala.collection.mutable.Map(defaultName -> (router.default, Map.empty[String, String]))
+    val names = router.routes.zip(firsts).zipWithIndex.map { case ((r, first), i) =>
+      if (holder.get(first).exists(_ != (r.output -> r.attributes))) {
+        val fresh = Iterator.iterate(s"route_$i")(_ + "_").find(n => !taken(n)).get
+        taken += fresh
+        fresh
+      } else {
+        holder(first) = r.output -> r.attributes
+        first
+      }
+    }
+    (names, defaultName)
+  }
+
+  /** Shared copy/move updates (`operators/copy/transformer.go:31-36`,
+    * `operators/move/transformer.go:27-31`), for a step whose error is a
+    * missing `from`. Attr->Attr preserves the value's typed map; body-path
+    * targets edit the body JSON with `BodyField.Set/Merge` semantics (map
+    * values merge, string attrs keep their string type, number/bool attrs
+    * keep their JSON types); move inside the body runs Delete-then-Set in
+    * the reference's order so self-overlapping paths resolve identically.
+    * Everything else goes through the string read. Set and delete are two
+    * stages, applied as chained projections (Catalyst's CollapseProject
+    * fuses them back into one).
+    */
+  private def copyMove(from: FieldRef, to: FieldRef,
+      deleteFrom: Boolean): Seq[Seq[(String, Column)]] = {
     import graft.functions.BodyEdit
-    val df = df0.withColumn("__ok", coalesce(FieldCols.existsStrict(from), lit(false)))
-    val g = gate && col("__ok")
-    val out = (from, to) match {
+    (from, to) match {
       case (Attr(fk), Attr(tk)) =>
         val fkey = FieldCols.attrKey(fk)
         val tkey = FieldCols.attrKey(tk)
@@ -494,28 +491,27 @@ object Ops {
               map(lit(tkey), col(m).getItem(fkey))))
             .otherwise(graft.functions.MapFilterKeys(col(m), Seq(tkey), keep = false))
         }
-        FieldCols.applyUpdates(df, updates, Some(g))
+        Seq(updates)
 
       // ---- body-path targets (stanza BodyField.Set/Merge semantics) ----
       case (BodyPath(fk), BodyPath(tk)) =>
         val newBody =
           if (deleteFrom) BodyEdit.move(col("body"), fk, tk)
           else BodyEdit.copyWithin(col("body"), fk, tk)
-        FieldCols.applyUpdates(df, Seq("body" -> newBody), Some(g))
+        Seq(Seq("body" -> newBody))
       case (BodyPath(fk), Body) =>
         // subtree to root: objects MERGE into the remaining root map
         // (body_field.go:127-133); scalars replace the body
         val newBody =
           if (deleteFrom) BodyEdit.move(col("body"), fk, Nil)
           else BodyEdit.copyWithin(col("body"), fk, Nil)
-        FieldCols.applyUpdates(df, Seq("body" -> newBody), Some(g))
+        Seq(Seq("body" -> newBody))
       case (Body, BodyPath(tk)) =>
         // whole body into a path: a JSON-object body merges as the map it
         // denotes, a plain-text body sets as a string scalar; move first
         // deletes the root (fresh object)
         val src = if (deleteFrom) lit(null).cast("string") else col("body")
-        FieldCols.applyUpdates(df,
-          Seq("body" -> BodyEdit.set(src, tk, col("body"))), Some(g))
+        Seq(Seq("body" -> BodyEdit.set(src, tk, col("body"))))
       case (from0, BodyPath(tk)) =>
         // typed scalar source -> body path: string values stay string
         // scalars; number/bool renderings parse back to their JSON types
@@ -530,20 +526,11 @@ object Ops {
             BodyEdit.set(col("body"), tk, sval)
           case _ => BodyEdit.setRaw(col("body"), tk, sval)
         }
-        val step1 = FieldCols.applyUpdates(df, Seq("body" -> newBody), Some(g))
-        if (deleteFrom) FieldCols.applyUpdates(step1, FieldCols.remove(from0), Some(g))
-        else step1
+        Seq("body" -> newBody) +: (if (deleteFrom) Seq(FieldCols.remove(from0)) else Nil)
 
       case _ =>
-        val step1 = FieldCols.applyUpdates(df,
-          FieldCols.setString(to, FieldCols.readString(from)), Some(g))
-        if (deleteFrom) FieldCols.applyUpdates(step1, FieldCols.remove(from), Some(g))
-        else step1
+        FieldCols.setString(to, FieldCols.readString(from)) +:
+          (if (deleteFrom) Seq(FieldCols.remove(from)) else Nil)
     }
-    val filtered = onError match {
-      case OnError.Drop | OnError.DropQuiet => out.filter(!gate || col("__ok"))
-      case _ => out
-    }
-    filtered.drop("__ok")
   }
 }

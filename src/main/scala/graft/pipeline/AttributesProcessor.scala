@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.MapKeysRegex
 import graft.operators.{FieldCols, FieldRef}
 
 /** The collector `attributes` processor re-expressed over this engine's
@@ -34,7 +35,9 @@ import graft.operators.{FieldCols, FieldRef}
   *
   * Everything compiles to `when`-gated map updates over the typed maps —
   * per-row codegen projections, no shuffle, no UDF. The two `pattern`
-  * variants use `map_filter`/`transform_values` HOFs (config-rare paths);
+  * variants select keys with the OTTL `delete_matching_keys` kernel
+  * [[graft.functions.MapKeysRegex]] (unanchored find); `hash` still
+  * rewrites values with `transform_values` HOFs (a config-rare path);
   * everything else rides the [[graft.functions.MapFilterKeys]] codegen
   * kernel via [[FieldCols]].
   */
@@ -152,7 +155,7 @@ object AttributesProcessor {
       case "delete" => a.pattern match {
         case Some(pat) =>
           val updates = Seq("attributes_string", "attributes_number", "attributes_bool")
-            .map(n => n -> map_filter(col(n), (k, _) => !regexp_like(k, lit(pat))))
+            .map(n => n -> MapKeysRegex(col(n), pat, keep = false))
           FieldCols.applyUpdates(df, updates, Some(gate))
         case None => FieldCols.applyUpdates(df, FieldCols.remove(f), Some(gate))
       }
@@ -161,8 +164,8 @@ object AttributesProcessor {
         case Some(pat) =>
           // pattern-hash: rewrite matching STRING values in place; rendered
           // number/bool values move into the string map (they become hex)
-          val hashedNums = map_filter(numM, (k, _) => regexp_like(k, lit(pat)))
-          val hashedBools = map_filter(boolM, (k, _) => regexp_like(k, lit(pat)))
+          val hashedNums = MapKeysRegex(numM, pat, keep = true)
+          val hashedBools = MapKeysRegex(boolM, pat, keep = true)
           val strOut = map_concat(
             transform_values(asM, (k, v) =>
               when(regexp_like(k, lit(pat)), sha2(v, 256)).otherwise(v)),
@@ -170,8 +173,8 @@ object AttributesProcessor {
             transform_values(hashedBools, (_, v) => sha2(v.cast("string"), 256)))
           FieldCols.applyUpdates(df, Seq(
             "attributes_string" -> strOut,
-            "attributes_number" -> map_filter(numM, (k, _) => !regexp_like(k, lit(pat))),
-            "attributes_bool" -> map_filter(boolM, (k, _) => !regexp_like(k, lit(pat)))),
+            "attributes_number" -> MapKeysRegex(numM, pat, keep = false),
+            "attributes_bool" -> MapKeysRegex(boolM, pat, keep = false)),
             Some(gate))
         case None =>
           FieldCols.applyUpdates(df,

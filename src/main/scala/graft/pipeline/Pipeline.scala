@@ -94,22 +94,13 @@ object Pipeline {
         if (op.id == ops.head.id) lit(true) // pipeline entry = first in config
         else reach.getOrElse(op.id, lit(false))
 
+      val (next, routed) = Ops.applyOp(df, op, r, isFirstRouter = !firstRouterDone)
+      df = next
       op match {
-        case router: RouterOp =>
-          val isFirst = !firstRouterDone
+        case _: RouterOp =>
           firstRouterDone = true
-          df = Ops.applyOp(df, router, r, isFirst)
-          val colName = Ops.routeCol(router.id, isFirst)
-          router.routes.zipWithIndex.foreach { case (rt, j) =>
-            val name = Ops.routeName(rt, j)
-            rt.output.foreach(o => addReach(o, r && col(colName) === name))
-          }
-          if (router.default.nonEmpty) {
-            val defName = router.default.head
-            router.default.foreach(o => addReach(o, r && col(colName) === defName))
-          }
+          routed.foreach { case (o, c) => addReach(o, c) }
         case _ =>
-          df = Ops.applyOp(df, op, r)
           val outs = effOutputs(op.id)
           if (outs.isEmpty) tails += (op.id -> r)
           else outs.foreach(o => addReach(o, r))

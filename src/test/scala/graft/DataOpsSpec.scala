@@ -869,6 +869,19 @@ class DataOpsSpec extends SparkSuite {
     inc.values.foreach { case (maybe, dup) => assert(maybe || !dup) }
   }
 
+  test("bloom probe: two builds on one input print the same optimized plan") {
+    // range inputs: a local relation would fold the probe away
+    def docs(from: Long, to: Long) = spark.range(from, to).select(col("id").as("doc_id"),
+      concat(lit("old document number "), (col("id") % 50).cast("string")).as("text"))
+    val old = docs(1, 41)
+    val nw = docs(101, 104)
+    def plan: String = Dedup.bloomIncremental(nw, old, mBits = 2048, k = 4)
+      .queryExecution.optimizedPlan.toString.replaceAll("#\\d+", "#")
+    val first = plan
+    assert(first.contains("bloom_contains_all"))
+    assert(first == plan)
+  }
+
   test("transcript packing: straddling turn lands where its first token " +
       "falls, windows are per-conversation") {
     import graft.ops.TranscriptOps

@@ -58,4 +58,36 @@ class RouterTableSpec extends SparkSuite {
     assert(sinks(run(Seq(Route("false", Seq("output1"))), Seq("output2"))) == Seq("output2"))
     assert(sinks(run(Seq(Route("true", Seq("output1"))), Seq("output2"))) == Seq("output1"))
   }
+
+  // Reach is per route: a route is named by its first output, so routes
+  // that share that name must not share each other's outputs or attributes.
+  // Rows "a" and "b"; `audit` adds attributes.audited and flows to `x`.
+  private def audited(routes: Seq[Route], default: Seq[String]): Map[String, Map[String, String]] = {
+    val df = LogFrames.withDefaults(Seq("a", "b").toDF("body"))
+    Pipeline.compile(PipelineSpec(Seq(
+      RouterOp(Common("router"), routes, default),
+      AddOp(Common("audit", output = Seq("x")), FieldRef.Attr(Seq("audited")), "1"),
+      NoopOp(Common("x")))))(df)
+      .select("body", "attributes_string").collect()
+      .map(r => r.getString(0) -> r.getMap[String, String](1).toMap).toMap
+  }
+
+  test("routes sharing a first output keep their own output lists") {
+    val got = audited(Seq(
+      Route("body == \"a\"", Seq("x", "audit")),
+      Route("body == \"b\"", Seq("x"))), Nil)
+    assert(got == Map("a" -> Map("audited" -> "1"), "b" -> Map.empty[String, String]))
+  }
+
+  test("a route sharing its first output with the default keeps its own output list") {
+    val got = audited(Seq(Route("body == \"a\"", Seq("x", "audit"))), Seq("x"))
+    assert(got == Map("a" -> Map("audited" -> "1"), "b" -> Map.empty[String, String]))
+  }
+
+  test("routes sharing their outputs attach only their own attributes") {
+    val got = audited(Seq(
+      Route("body == \"a\"", Seq("x"), attributes = Map("from" -> "a")),
+      Route("body == \"b\"", Seq("x"), attributes = Map("from" -> "b"))), Nil)
+    assert(got == Map("a" -> Map("from" -> "a"), "b" -> Map("from" -> "b")))
+  }
 }

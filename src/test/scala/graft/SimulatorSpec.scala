@@ -130,6 +130,35 @@ class SimulatorSpec extends SparkSuite {
       "f52fbd32b2b3b86ff88ef6c490628285f482af15ddcb29541f94bcf526a3f6c7")
   }
 
+  private def typedFrame = attrsFrame
+    .withColumn("attributes_number", map(lit("latency"), lit(3.9), lit("size"), lit(2.0)))
+    .withColumn("attributes_bool", map(lit("ok"), lit(true), lit("cached"), lit(false)))
+  private def boolAttrs(df: org.apache.spark.sql.DataFrame): Map[String, Boolean] =
+    df.select("attributes_bool").as[Map[String, Boolean]].head()
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))
+      .map(b => f"$b%02x").mkString
+
+  test("delete by pattern: an unanchored key match in all three typed maps; null stays null") {
+    val cfg = """{"actions": [{"key": "", "pattern": "^count|lat|^ok$", "action": "delete"}]}"""
+    val out = run(typedFrame, cfg)
+    assert(strAttrs(out).keySet == Set("method", "frac_s", "secret"))
+    assert(numAttrs(out) == Map("size" -> 2.0))
+    assert(boolAttrs(out) == Map("cached" -> false))
+    val nulls = run(typedFrame.withColumn("attributes_bool",
+      lit(null).cast(graft.model.LogSchema.mapSB)), cfg)
+    assert(nulls.select("attributes_bool").head().isNullAt(0))
+  }
+
+  test("hash by pattern: matched string, number and bool keys become SHA-256 hex strings") {
+    val out = run(typedFrame, """{"actions": [
+      {"key": "", "pattern": "^secret|lat|^ok$", "action": "hash"}]}""")
+    assert(strAttrs(out) == Map("method" -> "GET", "count_s" -> "42", "frac_s" -> "1.5",
+      "secret" -> sha256("hunter2"), "latency" -> sha256("3.9"), "ok" -> sha256("true")))
+    assert(numAttrs(out) == Map("size" -> 2.0))
+    assert(boolAttrs(out) == Map("cached" -> false))
+  }
+
   test("convert: string->int (integral only), string->double, number->string") {
     val out = run(attrsFrame, """{"actions": [
       {"key": "count_s", "action": "convert", "converted_type": "int"},

@@ -67,4 +67,16 @@ class TraceTableSpec extends SparkSuite {
     val (t, _, _) = one(run(s"""{"trace_id":"${tid.toUpperCase}"}"""))
     assert(t == tid)
   }
+
+  test("drop decides on the entry as it was before the valid fields were set") {
+    // the if: reads trace_id, which the valid trace id rewrites while the
+    // invalid span id routes the error
+    val df = LogFrames.withDefaults(Seq(s"""{"trace_id":"$tid","span_id":"foo_bar"}""")
+      .toDF("body"))
+    def out(onError: OnError.T): DataFrame = Pipeline.compile(PipelineSpec(Seq(
+      TraceParserOp(Common("t", ifExpr = Some("trace_id == \"\""), onError = onError), TraceSpec()),
+      NoopOp(Common("__noop")))))(df)
+    assert(one(out(OnError.Send))._1 == tid)
+    assert(out(OnError.Drop).count() == 0)
+  }
 }
