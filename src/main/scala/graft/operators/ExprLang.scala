@@ -100,11 +100,7 @@ object ExprLang {
   private def asStr(v: V): Column = v match {
     case Field(r) => FieldCols.readString(r)
     case CStr(c) => c
-    // Go %v: integral float64 prints without decimals (same rule as
-    // FieldCols.stringifyNumber)
-    case CNum(c) =>
-      when(c === c.cast("long").cast("double"), c.cast("long").cast("string"))
-        .otherwise(c.cast("string"))
+    case CNum(c) => FieldCols.stringifyNumber(c)
     case CBool(c) => c.cast("string")
     case LStr(s) => lit(s)
     case LNum(d, true) => lit(d.toLong.toString)
@@ -249,9 +245,6 @@ object ExprLang {
           Some(map_contains_key(col("attributes_number"), keys.mkString(".")))
         case _ => None
       }
-      def goNum(c: Column): Column =
-        when(c === c.cast("long").cast("double"), c.cast("long").cast("string"))
-          .otherwise(c.cast("string"))
       var l = parseAtom()
       var go = true
       while (go) peek match {
@@ -263,7 +256,7 @@ object ExprLang {
             case _ if knownNum(l) || knownNum(r) => CNum(asNum(l) + asNum(r))
             case _ => (numKey(l), numKey(r)) match {
               case (Some(ln), Some(rn)) =>
-                CStr(when(ln && rn, goNum(asNum(l) + asNum(r)))
+                CStr(when(ln && rn, FieldCols.stringifyNumber(asNum(l) + asNum(r)))
                   .otherwise(concat(asStr(l), asStr(r))))
               case _ => CStr(concat(asStr(l), asStr(r)))
             }
@@ -455,12 +448,10 @@ object ExprLang {
           case LStr(s) => s
           case other => fail(s"'in attributes' needs a literal key, got $other")
         }
-        map_contains_key(col("attributes_string"), k) ||
-          map_contains_key(col("attributes_number"), k) ||
-          map_contains_key(col("attributes_bool"), k)
+        FieldCols.exists(FieldRef.Attr(Seq(k)))
       case Field(FieldRef.ResourceRoot) =>
         val k = l match { case LStr(s) => s; case other => fail(s"need literal key, got $other") }
-        map_contains_key(col("resources_string"), k)
+        FieldCols.exists(FieldRef.Resource(Seq(k)))
       case other => fail(s"unsupported 'in' target: $other")
     }
   }

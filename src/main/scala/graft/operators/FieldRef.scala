@@ -88,6 +88,7 @@ object FieldRef {
 /** Column-level read/write resolution for [[FieldRef]]s. */
 object FieldCols {
   import FieldRef._
+  import graft.functions.{MapFilterKeys, MapKeysIn, MergeMaps}
 
   def attrKey(keys: Seq[String]): String = keys.mkString(".")
 
@@ -130,8 +131,21 @@ object FieldCols {
       throw new IllegalArgumentException("cannot read whole attributes/resource as string")
   }
 
-  /** Go-style `%v` for float64: integral values print without decimals. */
-  private def stringifyNumber(c: Column): Column =
+  /** The engine's one Go-`%v` renderer of a float64 Column: integral
+    * values print without decimals (`3.0` -> `3`), null stays null. A
+    * non-integral value, or one past the long range, prints in Java's
+    * `Double.toString` form, where Go's `%v` (`strconv` `'g'`, shortest)
+    * differs in the exponent rule and spelling:
+    * {{{
+    *   value        here            Go %v
+    *   1e-4         1.0E-4          0.0001
+    *   12345678.5   1.23456785E7    1.23456785e+07
+    *   1e21         1.0E21          1e+21
+    * }}}
+    * `FieldSyntaxSpec` pins the left column. Span-mapper resource writes
+    * render numbers the `AsString` way instead ([[graft.functions.GoFormatFloat]]).
+    */
+  def stringifyNumber(c: Column): Column =
     when(c.isNotNull,
       when(c === c.cast("long").cast("double"), c.cast("long").cast("string"))
         .otherwise(c.cast("string")))
@@ -192,25 +206,30 @@ object FieldCols {
   }
 
   // ---- writes -------------------------------------------------------------
+  // A record's attributes are one pcommon.Map in the reference, one value
+  // per key. Here they are three typed maps, and every write below keeps
+  // each key in exactly one of them (SURVEY §1); this object is the only
+  // code that knows that layout.
+
+  private val typedMaps = Seq("attributes_string", "attributes_number", "attributes_bool")
 
   // codegen kernel, not map_filter: a CodegenFallback HOF here would drag
   // the whole operator-chain projection out of whole-stage codegen
   private def mapWithout(m: Column, key: String): Column =
-    graft.functions.MapFilterKeys(m, Seq(key), keep = false)
+    MapFilterKeys(m, Seq(key), keep = false)
 
   private def mapSet(m: Column, key: String, v: Column): Column =
     map_concat(mapWithout(m, key), map(lit(key), v))
 
-  /** All column updates needed to set `f` to string value `v` (removing the
-    * key from the other typed maps so a key lives in exactly one).
-    */
+  /** Set attribute `keys` in typed map `m`, removing it from the other two. */
+  private def setAttr(keys: Seq[String], m: String, v: Column): Seq[(String, Column)] = {
+    val k = attrKey(keys)
+    (m -> mapSet(col(m), k, v)) +: typedMaps.filter(_ != m).map(o => o -> mapWithout(col(o), k))
+  }
+
+  /** All column updates needed to set `f` to string value `v`. */
   def setString(f: FieldRef, v: Column): Seq[(String, Column)] = f match {
-    case Attr(keys) =>
-      val k = attrKey(keys)
-      Seq(
-        "attributes_string" -> mapSet(col("attributes_string"), k, v),
-        "attributes_number" -> mapWithout(col("attributes_number"), k),
-        "attributes_bool" -> mapWithout(col("attributes_bool"), k))
+    case Attr(keys) => setAttr(keys, "attributes_string", v)
     case Resource(keys) =>
       Seq("resources_string" -> mapSet(col("resources_string"), attrKey(keys), v))
     case Body => Seq("body" -> v)
@@ -224,12 +243,7 @@ object FieldCols {
   }
 
   def setNumber(f: FieldRef, v: Column): Seq[(String, Column)] = f match {
-    case Attr(keys) =>
-      val k = attrKey(keys)
-      Seq(
-        "attributes_number" -> mapSet(col("attributes_number"), k, v.cast("double")),
-        "attributes_string" -> mapWithout(col("attributes_string"), k),
-        "attributes_bool" -> mapWithout(col("attributes_bool"), k))
+    case Attr(keys) => setAttr(keys, "attributes_number", v.cast("double"))
     case Top(n) => Seq(n -> v.cast(topType(n)))
     case BodyPath(keys) =>
       // Go-rendered number (integral values print without decimals) parsed
@@ -240,12 +254,7 @@ object FieldCols {
   }
 
   def setBool(f: FieldRef, v: Column): Seq[(String, Column)] = f match {
-    case Attr(keys) =>
-      val k = attrKey(keys)
-      Seq(
-        "attributes_bool" -> mapSet(col("attributes_bool"), k, v.cast("boolean")),
-        "attributes_string" -> mapWithout(col("attributes_string"), k),
-        "attributes_number" -> mapWithout(col("attributes_number"), k))
+    case Attr(keys) => setAttr(keys, "attributes_bool", v.cast("boolean"))
     case BodyPath(keys) =>
       Seq("body" -> graft.functions.BodyEdit.set(col("body"), keys,
         v.cast("boolean").cast("string")))
@@ -253,12 +262,7 @@ object FieldCols {
   }
 
   def remove(f: FieldRef): Seq[(String, Column)] = f match {
-    case Attr(keys) =>
-      val k = attrKey(keys)
-      Seq(
-        "attributes_string" -> mapWithout(col("attributes_string"), k),
-        "attributes_number" -> mapWithout(col("attributes_number"), k),
-        "attributes_bool" -> mapWithout(col("attributes_bool"), k))
+    case Attr(keys) => typedMaps.map(m => m -> mapWithout(col(m), attrKey(keys)))
     case Resource(keys) =>
       Seq("resources_string" -> mapWithout(col("resources_string"), attrKey(keys)))
     case AttrsRoot => Seq(
@@ -274,6 +278,71 @@ object FieldCols {
       Seq("body" -> graft.functions.BodyEdit.delete(col("body"), keys))
     case Top(n) => Seq(n -> lit(null).cast(topType(n)))
     case other => throw new IllegalArgumentException(s"cannot remove field $other")
+  }
+
+  /** An empty merge argument: nothing wins, nothing is evicted. */
+  private def none: Column = map()
+
+  /** The one typed merge: `strings`, `numbers` and `bools` land in their
+    * typed maps and each of their keys leaves the other two. `upsert`
+    * merges every source key, `insert` only keys the record lacks, and
+    * `update` only keys it has (value and type move). Single-pass
+    * [[MergeMaps]] kernels, not map_filter/map_concat chains: Spark's
+    * higher-order functions run their lambdas interpreted per entry per
+    * row and were a top profiled cost.
+    */
+  def mergeAttrs(strings: Column = none, numbers: Column = none, bools: Column = none,
+      strategy: String = "upsert"): Seq[(String, Column)] = {
+    val (tS, tN, tB) = (col("attributes_string"), col("attributes_number"), col("attributes_bool"))
+    def pick(src: Column) = strategyFilter(src, strategy, tS, tN, tB)
+    val (s, n, b) = (pick(strings), pick(numbers), pick(bools))
+    Seq(
+      "attributes_string" -> MergeMaps(tS, s, n, b),
+      "attributes_number" -> MergeMaps(tN, n, s, b),
+      "attributes_bool" -> MergeMaps(tB, b, s, n))
+  }
+
+  /** [[mergeAttrs]] into the resource root, a single string map. */
+  def mergeResources(strings: Column, strategy: String): Seq[(String, Column)] = {
+    val rs = col("resources_string")
+    val e = map().cast(graft.model.LogSchema.mapSS)
+    Seq("resources_string" -> MergeMaps(rs, strategyFilter(strings, strategy, rs, e, e), e, e))
+  }
+
+  private def strategyFilter(src: Column, strategy: String,
+      t1: Column, t2: Column, t3: Column): Column = strategy match {
+    case "upsert" => src
+    case "insert" => MapKeysIn(src, t1, t2, t3, present = false)
+    case "update" => MapKeysIn(src, t1, t2, t3, present = true)
+  }
+
+  /** Apply a map-valued edit to a whole root: the attributes root spans the
+    * three typed maps (`typed` says whether the number and bool maps take
+    * part), the resource root is one string map.
+    */
+  def editMaps(root: FieldRef, f: Column => Column, typed: Boolean): Seq[(String, Column)] =
+    root match {
+      case AttrsRoot => typedMaps.take(if (typed) 3 else 1).map(m => m -> f(col(m)))
+      case ResourceRoot => Seq("resources_string" -> f(col("resources_string")))
+      case other => throw new IllegalArgumentException(s"needs a map root, got $other")
+    }
+
+  /** Copy (`move = false`) or move one attribute to another key: the target
+    * joins the typed map that holds the source's value and leaves the other
+    * two. For a step gated on the source's presence: a row without the
+    * source only loses the target.
+    */
+  def copyAttr(from: Attr, to: Attr, move: Boolean): Seq[(String, Column)] = {
+    val fkey = attrKey(from.keys)
+    val tkey = attrKey(to.keys)
+    typedMaps.map { m =>
+      val hasFrom = map_contains_key(col(m), fkey)
+      val dropSet = if (move) Seq(fkey, tkey) else Seq(tkey)
+      m -> when(hasFrom,
+        map_concat(MapFilterKeys(col(m), dropSet, keep = false),
+          map(lit(tkey), col(m).getItem(fkey))))
+        .otherwise(MapFilterKeys(col(m), Seq(tkey), keep = false))
+    }
   }
 
   private def topType(n: String): String = n match {

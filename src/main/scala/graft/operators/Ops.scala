@@ -115,39 +115,11 @@ object Ops {
   private def routeCol(routerId: String, isFirst: Boolean): String =
     if (isFirst) "route" else s"route_$routerId"
 
-  // -- merge helpers ---------------------------------------------------------
-  // single-pass MergeMaps kernel instead of map_filter/map_concat chains —
-  // Spark's higher-order functions run their lambdas interpreted per entry
-  // per row and were a top profiled cost (see graft.functions.MergeMaps)
-
-  private def noWinner: Column = map() // empty: drop-only merge
-
-  /** Merge `parsed` (string map) + statically-typed keys into the three
-    * attribute maps; parsed keys override, key lives in exactly one map.
-    */
-  private def mergeParsedToAttrs(parsedStr: Column, typedNum: Column): Seq[(String, Column)] = Seq(
-    "attributes_string" -> graft.functions.MergeMaps(
-      col("attributes_string"), parsedStr, typedNum, noWinner),
-    "attributes_number" -> graft.functions.MergeMaps(
-      col("attributes_number"), typedNum, parsedStr, noWinner),
-    "attributes_bool" -> graft.functions.MergeMaps(
-      col("attributes_bool"), noWinner, parsedStr, typedNum)
-  )
-
-  private def mergeTypedStructToAttrs(parsed: Column): Seq[(String, Column)] = {
-    val s = parsed.getField("strings")
-    val n = parsed.getField("numbers")
-    val b = parsed.getField("bools")
-    Seq(
-      "attributes_string" -> graft.functions.MergeMaps(col("attributes_string"), s, n, b),
-      "attributes_number" -> graft.functions.MergeMaps(col("attributes_number"), n, s, b),
-      "attributes_bool" -> graft.functions.MergeMaps(col("attributes_bool"), b, s, n))
-  }
-
   /** Write a parsed result to an arbitrary parse_to destination. */
   private def assignTypedStruct(parseTo: FieldRef, parsed: Column): Seq[(String, Column)] =
     parseTo match {
-      case AttrsRoot => mergeTypedStructToAttrs(parsed)
+      case AttrsRoot => FieldCols.mergeAttrs(
+        parsed.getField("strings"), parsed.getField("numbers"), parsed.getField("bools"))
       case other =>
         // non-root destination: store the parsed map as canonical JSON text
         FieldCols.setString(other, to_json(parsed))
@@ -155,7 +127,7 @@ object Ops {
 
   private def assignStringMap(parseTo: FieldRef, parsedStr: Column, typedNum: Column): Seq[(String, Column)] =
     parseTo match {
-      case AttrsRoot => mergeParsedToAttrs(parsedStr, typedNum)
+      case AttrsRoot => FieldCols.mergeAttrs(parsedStr, typedNum)
       case other => FieldCols.setString(other, to_json(parsedStr))
     }
 
@@ -480,18 +452,7 @@ object Ops {
       deleteFrom: Boolean): Seq[Seq[(String, Column)]] = {
     import graft.functions.BodyEdit
     (from, to) match {
-      case (Attr(fk), Attr(tk)) =>
-        val fkey = FieldCols.attrKey(fk)
-        val tkey = FieldCols.attrKey(tk)
-        val updates = Seq("attributes_string", "attributes_number", "attributes_bool").map { m =>
-          val hasFrom = map_contains_key(col(m), fkey)
-          val dropSet = if (deleteFrom) Seq(fkey, tkey) else Seq(tkey)
-          m -> when(hasFrom,
-            map_concat(graft.functions.MapFilterKeys(col(m), dropSet, keep = false),
-              map(lit(tkey), col(m).getItem(fkey))))
-            .otherwise(graft.functions.MapFilterKeys(col(m), Seq(tkey), keep = false))
-        }
-        Seq(updates)
+      case (f: Attr, t: Attr) => Seq(FieldCols.copyAttr(f, t, deleteFrom))
 
       // ---- body-path targets (stanza BodyField.Set/Merge semantics) ----
       case (BodyPath(fk), BodyPath(tk)) =>

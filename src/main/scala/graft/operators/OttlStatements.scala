@@ -716,26 +716,14 @@ object OttlStatements {
             throw new IllegalArgumentException(s"cannot set from value $other")
         }
       case DeleteKeyStmt(m, key, _) =>
-        val ref = pathToRef(m, context) match {
+        val ref = mapRoot(m, context, "delete_key") match {
           case FieldRef.AttrsRoot => FieldRef.Attr(Seq(key))
-          case FieldRef.ResourceRoot => FieldRef.Resource(Seq(key))
-          case other => throw new IllegalArgumentException(s"delete_key needs a map, got $other")
+          case _ => FieldRef.Resource(Seq(key))
         }
         gated(FieldCols.remove(ref))
       case KeepKeysStmt(m, keys, _) =>
-        pathToRef(m, context) match {
-          case FieldRef.AttrsRoot => gated(Seq(
-            "attributes_string" ->
-              graft.functions.MapFilterKeys(col("attributes_string"), keys, keep = true),
-            "attributes_number" ->
-              graft.functions.MapFilterKeys(col("attributes_number"), keys, keep = true),
-            "attributes_bool" ->
-              graft.functions.MapFilterKeys(col("attributes_bool"), keys, keep = true)))
-          case FieldRef.ResourceRoot => gated(Seq(
-            "resources_string" ->
-              graft.functions.MapFilterKeys(col("resources_string"), keys, keep = true)))
-          case other => throw new IllegalArgumentException(s"keep_keys needs a map, got $other")
-        }
+        gated(FieldCols.editMaps(mapRoot(m, context, "keep_keys"),
+          graft.functions.MapFilterKeys(_, keys, keep = true), typed = true))
       case ReplacePatternStmt(target, pattern, replacement, _) =>
         val ref = pathToRef(target, context)
         val read = FieldCols.readString(ref)
@@ -744,27 +732,25 @@ object OttlStatements {
           extraGate = Some(read.isNotNull))
 
       case MatchingKeysStmt(m, pattern, keep, _) =>
-        onMapRoot(m, context, "delete/keep_matching_keys",
-          c => graft.functions.MapKeysRegex(c, pattern, keep),
-          typedToo = true)(u => gated(u))
+        gated(FieldCols.editMaps(mapRoot(m, context, "delete/keep_matching_keys"),
+          graft.functions.MapKeysRegex(_, pattern, keep), typed = true))
       case TruncateAllStmt(m, limit, _) =>
         // upstream truncates Str values only — the typed maps pass through
-        onMapRoot(m, context, "truncate_all",
-          c => graft.functions.MapTruncateValues(c, limit),
-          typedToo = false)(u => gated(u))
+        gated(FieldCols.editMaps(mapRoot(m, context, "truncate_all"),
+          graft.functions.MapTruncateValues(_, limit), typed = false))
       case ReplaceAllPatternsStmt(m, mode, pattern, replacement, _) =>
         // key mode renames keys of every typed map; value mode touches only
         // string values (upstream replace_all_patterns semantics)
-        onMapRoot(m, context, "replace_all_patterns",
-          c => graft.functions.MapReplacePatterns(c, mode, pattern, replacement),
-          typedToo = mode == "key")(u => gated(u))
+        gated(FieldCols.editMaps(mapRoot(m, context, "replace_all_patterns"),
+          graft.functions.MapReplacePatterns(_, mode, pattern, replacement),
+          typed = mode == "key"))
       case ReplaceAllMatchesStmt(m, glob, replacement, _) =>
         // whole-value glob match -> the literal replacement (string values)
-        onMapRoot(m, context, "replace_all_matches",
-          c => graft.functions.MapReplacePatterns(c, "value",
+        gated(FieldCols.editMaps(mapRoot(m, context, "replace_all_matches"),
+          graft.functions.MapReplacePatterns(_, "value",
             graft.pipeline.Enrich.globToRegex(glob),
             java.util.regex.Matcher.quoteReplacement(replacement)),
-          typedToo = false)(u => gated(u))
+          typed = false))
       case ReplaceMatchStmt(target, glob, replacement, _) =>
         val ref = pathToRef(target, context)
         val read = FieldCols.readString(ref)
@@ -774,58 +760,26 @@ object OttlStatements {
       case MergeMapsStmt(target, source, strategy, _) =>
         // upstream merge_maps editor: insert = only keys NEW to the target,
         // update = only keys the target already has (value AND type move),
-        // upsert = all source keys override. Key-in-exactly-one-typed-map
-        // invariant preserved via the MergeMaps eviction arguments.
-        import graft.functions.{MapKeysIn, MergeMaps, StringifyTypedMaps}
+        // upsert = all source keys override
         val (srcCol, kind) = compileValue(source, context)
-        val emptySD = map().cast(graft.model.LogSchema.mapSD)
-        val emptySB = map().cast(graft.model.LogSchema.mapSB)
-        val emptySS = map().cast(graft.model.LogSchema.mapSS)
         val (ss, sn, sb) = kind match {
           case "maps" => (srcCol.getField("strings"), srcCol.getField("numbers"),
             srcCol.getField("bools"))
-          case "map" => (srcCol, emptySD, emptySB)
+          case "map" => (srcCol, map().cast(graft.model.LogSchema.mapSD),
+            map().cast(graft.model.LogSchema.mapSB))
           case other => throw new IllegalArgumentException(
             s"merge_maps needs a map-valued source, got kind $other")
         }
-        pathToRef(target, context) match {
-          case FieldRef.AttrsRoot =>
-            val tS = col("attributes_string")
-            val tN = col("attributes_number")
-            val tB = col("attributes_bool")
-            val (fS, fN, fB) = strategy match {
-              case "upsert" => (ss, sn, sb)
-              case "insert" => (
-                MapKeysIn(ss, tS, tN, tB, present = false),
-                MapKeysIn(sn, tS, tN, tB, present = false),
-                MapKeysIn(sb, tS, tN, tB, present = false))
-              case "update" => (
-                MapKeysIn(ss, tS, tN, tB, present = true),
-                MapKeysIn(sn, tS, tN, tB, present = true),
-                MapKeysIn(sb, tS, tN, tB, present = true))
-            }
-            gated(Seq(
-              "attributes_string" -> MergeMaps(tS, fS, fN, fB),
-              "attributes_number" -> MergeMaps(tN, fN, fS, fB),
-              "attributes_bool" -> MergeMaps(tB, fB, fS, fN)))
-          case FieldRef.ResourceRoot =>
+        mapRoot(target, context, "merge_maps") match {
+          case FieldRef.AttrsRoot => gated(FieldCols.mergeAttrs(ss, sn, sb, strategy))
+          case _ =>
             // resources are force-stringified (engine convention)
-            val rs = col("resources_string")
-            val asStrings = kind match {
-              case "maps" => StringifyTypedMaps(ss, sn, sb)
-              case _ => srcCol
-            }
-            val f = strategy match {
-              case "upsert" => asStrings
-              case "insert" => MapKeysIn(asStrings, rs, emptySS, emptySS, present = false)
-              case "update" => MapKeysIn(asStrings, rs, emptySS, emptySS, present = true)
-            }
-            gated(Seq("resources_string" -> MergeMaps(rs, f, emptySS, emptySS)))
-          case other =>
-            throw new IllegalArgumentException(s"merge_maps needs a map target, got $other")
+            val asStrings =
+              if (kind == "maps") graft.functions.StringifyTypedMaps(ss, sn, sb) else srcCol
+            gated(FieldCols.mergeResources(asStrings, strategy))
         }
       case LimitStmt(m, n, priority, _) =>
-        pathToRef(m, context) match {
+        mapRoot(m, context, "limit") match {
           case FieldRef.AttrsRoot =>
             // one joint budget across the three typed maps (they are ONE
             // logical pcommon.Map in the reference); subexpression
@@ -837,35 +791,23 @@ object OttlStatements {
               "attributes_string" -> limited.getField("strings"),
               "attributes_number" -> limited.getField("numbers"),
               "attributes_bool" -> limited.getField("bools")))
-          case FieldRef.ResourceRoot =>
+          case _ =>
             val limited = graft.functions.LimitTypedMaps(
               col("resources_string"),
               map().cast(graft.model.LogSchema.mapSD),
               map().cast(graft.model.LogSchema.mapSB), n, priority)
             gated(Seq("resources_string" -> limited.getField("strings")))
-          case other =>
-            throw new IllegalArgumentException(s"limit needs a map, got $other")
         }
     }
   }
 
-  /** Apply a map-valued editor to the attr/resource root maps: attrs span
-    * the three typed maps (`typedToo` controls whether the number/bool maps
-    * participate), the resource root is a single string map.
+  /** The attributes or resource root `m` names; a statement that edits a
+    * whole map fails on any other path.
     */
-  private def onMapRoot(m: String, context: String, what: String,
-      f: Column => Column, typedToo: Boolean)(
-      gated: Seq[(String, Column)] => DataFrame): DataFrame =
+  private def mapRoot(m: String, context: String, what: String): FieldRef =
     pathToRef(m, context) match {
-      case FieldRef.AttrsRoot =>
-        val base = Seq("attributes_string" -> f(col("attributes_string")))
-        gated(if (typedToo) base ++ Seq(
-          "attributes_number" -> f(col("attributes_number")),
-          "attributes_bool" -> f(col("attributes_bool"))) else base)
-      case FieldRef.ResourceRoot =>
-        gated(Seq("resources_string" -> f(col("resources_string"))))
-      case other =>
-        throw new IllegalArgumentException(s"$what needs a map, got $other")
+      case r @ (FieldRef.AttrsRoot | FieldRef.ResourceRoot) => r
+      case other => throw new IllegalArgumentException(s"$what needs a map, got $other")
     }
 
   /** Apply a statement block list (the processor's `log_statements` config

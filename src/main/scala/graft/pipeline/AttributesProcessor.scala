@@ -141,10 +141,6 @@ object AttributesProcessor {
     spec.actions.foldLeft(df0)((df, a) => applyAction(df, a, gate))
   }
 
-  private def asM = col("attributes_string")
-  private def numM = col("attributes_number")
-  private def boolM = col("attributes_bool")
-
   private def applyAction(df: DataFrame, a: Action, gate: Column): DataFrame = {
     val f = FieldRef.Attr(Seq(a.key))
     a.action match {
@@ -153,10 +149,9 @@ object AttributesProcessor {
       case "upsert" => typedSet(df, f, a, gate)
 
       case "delete" => a.pattern match {
-        case Some(pat) =>
-          val updates = Seq("attributes_string", "attributes_number", "attributes_bool")
-            .map(n => n -> MapKeysRegex(col(n), pat, keep = false))
-          FieldCols.applyUpdates(df, updates, Some(gate))
+        case Some(pat) => FieldCols.applyUpdates(df,
+          FieldCols.editMaps(FieldRef.AttrsRoot, MapKeysRegex(_, pat, keep = false), typed = true),
+          Some(gate))
         case None => FieldCols.applyUpdates(df, FieldCols.remove(f), Some(gate))
       }
 
@@ -164,17 +159,19 @@ object AttributesProcessor {
         case Some(pat) =>
           // pattern-hash: rewrite matching STRING values in place; rendered
           // number/bool values move into the string map (they become hex)
-          val hashedNums = MapKeysRegex(numM, pat, keep = true)
-          val hashedBools = MapKeysRegex(boolM, pat, keep = true)
+          val (s, n, b) =
+            (col("attributes_string"), col("attributes_number"), col("attributes_bool"))
           val strOut = map_concat(
-            transform_values(asM, (k, v) =>
+            transform_values(s, (k, v) =>
               when(regexp_like(k, lit(pat)), sha2(v, 256)).otherwise(v)),
-            transform_values(hashedNums, (_, v) => sha2(goRender(v), 256)),
-            transform_values(hashedBools, (_, v) => sha2(v.cast("string"), 256)))
+            transform_values(MapKeysRegex(n, pat, keep = true),
+              (_, v) => sha2(FieldCols.stringifyNumber(v), 256)),
+            transform_values(MapKeysRegex(b, pat, keep = true),
+              (_, v) => sha2(v.cast("string"), 256)))
           FieldCols.applyUpdates(df, Seq(
             "attributes_string" -> strOut,
-            "attributes_number" -> MapKeysRegex(numM, pat, keep = false),
-            "attributes_bool" -> MapKeysRegex(boolM, pat, keep = false)),
+            "attributes_number" -> MapKeysRegex(n, pat, keep = false),
+            "attributes_bool" -> MapKeysRegex(b, pat, keep = false)),
             Some(gate))
         case None =>
           FieldCols.applyUpdates(df,
@@ -187,32 +184,21 @@ object AttributesProcessor {
       case "extract" =>
         val pat = a.pattern.getOrElse(
           throw new IllegalArgumentException("extract action needs 'pattern'"))
-        val scanned = graft.functions.RegexNamedGroups.scan(pat)
-        val names = scanned.names
-        require(names.nonEmpty, "extract pattern needs named capture groups")
+        require(graft.functions.RegexNamedGroups.scan(pat).names.nonEmpty,
+          "extract pattern needs named capture groups")
+        // every named group is a key of the groups map, matched or not
         val groups = graft.functions.RegexExtractNamedGroups(FieldCols.readString(f), pat)
-        val g = gate && groups.isNotNull
-        FieldCols.applyUpdates(df, Seq(
-          "attributes_string" -> map_concat(
-            graft.functions.MapFilterKeys(asM, names, keep = false), groups),
-          "attributes_number" -> graft.functions.MapFilterKeys(numM, names, keep = false),
-          "attributes_bool" -> graft.functions.MapFilterKeys(boolM, names, keep = false)),
-          Some(g))
+        FieldCols.applyUpdates(df, FieldCols.mergeAttrs(groups), Some(gate && groups.isNotNull))
 
       case other =>
         throw new IllegalArgumentException(s"unsupported attributes action: $other")
     }
   }
 
-  /** Go `%v` rendering of a double (integral values print without '.0'). */
-  private def goRender(c: Column): Column =
-    when(c === c.cast("long").cast("double"), c.cast("long").cast("string"))
-      .otherwise(c.cast("string"))
-
   /** insert/update/upsert with a literal `value` (typed by its JSON type)
     * or `from_attribute` (copies preserving the source's typed map).
     */
-  private def typedSet(df: DataFrame, f: FieldRef, a: Action, gate: Column): DataFrame =
+  private def typedSet(df: DataFrame, f: FieldRef.Attr, a: Action, gate: Column): DataFrame =
     (a.value, a.fromAttribute) match {
       case (Some(v), _) =>
         val updates =
@@ -221,17 +207,9 @@ object AttributesProcessor {
           else FieldCols.setString(f, lit(v.asText()))
         FieldCols.applyUpdates(df, updates, Some(gate))
       case (None, Some(src)) =>
-        // one pass per source map: the source key lives in exactly one, so
-        // exactly one pass fires per row
-        val d1 = FieldCols.applyUpdates(df,
-          FieldCols.setString(f, asM.getItem(src)),
-          Some(gate && map_contains_key(asM, src)))
-        val d2 = FieldCols.applyUpdates(d1,
-          FieldCols.setNumber(f, numM.getItem(src)),
-          Some(gate && map_contains_key(numM, src)))
-        FieldCols.applyUpdates(d2,
-          FieldCols.setBool(f, boolM.getItem(src)),
-          Some(gate && map_contains_key(boolM, src)))
+        val from = FieldRef.Attr(Seq(src))
+        FieldCols.applyUpdates(df, FieldCols.copyAttr(from, f, move = false),
+          Some(gate && FieldCols.exists(from)))
       case (None, None) =>
         throw new IllegalArgumentException(
           s"${a.action} action needs 'value' or 'from_attribute'")
@@ -242,26 +220,21 @@ object AttributesProcessor {
     * unchanged (gate includes parse success).
     */
   private def convertedTo(df: DataFrame, f: FieldRef, a: Action, gate: Column): DataFrame = {
-    val k = a.key
+    val Seq(str, num, bool) =
+      Seq("attributes_string", "attributes_number", "attributes_bool").map(col(_).getItem(a.key))
     a.convertedType.getOrElse(
       throw new IllegalArgumentException("convert action needs 'converted_type'")) match {
       case "string" =>
         FieldCols.applyUpdates(df, FieldCols.setString(f, FieldCols.readString(f)),
           Some(gate && FieldCols.exists(f)))
       case "double" =>
-        val parsed = coalesce(numM.getItem(k),
-          asM.getItem(k).cast("double"),
-          boolM.getItem(k).cast("int").cast("double"))
+        val parsed = coalesce(num, str.cast("double"), bool.cast("int").cast("double"))
         FieldCols.applyUpdates(df, FieldCols.setNumber(f, parsed),
           Some(gate && parsed.isNotNull))
       case "int" =>
         // Go strconv.ParseInt rejects "1.5"; double truncates toward zero
-        val fromStr = when(asM.getItem(k).rlike("^[+-]?[0-9]+$"),
-          asM.getItem(k).cast("long"))
-        val parsed = coalesce(
-          numM.getItem(k).cast("long"),
-          fromStr,
-          boolM.getItem(k).cast("int").cast("long"))
+        val fromStr = when(str.rlike("^[+-]?[0-9]+$"), str.cast("long"))
+        val parsed = coalesce(num.cast("long"), fromStr, bool.cast("int").cast("long"))
         FieldCols.applyUpdates(df, FieldCols.setNumber(f, parsed.cast("double")),
           Some(gate && parsed.isNotNull))
       case other =>

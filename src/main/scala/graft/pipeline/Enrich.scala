@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model.LogSchema
+import graft.operators.FieldCols
 
 /** Broadcast-lookup enrich stage.
   *
@@ -48,7 +49,7 @@ object Enrich {
   }
 
   /** First-match-wins glob rules: attach each output key of the winning rule
-    * into attributes_string. Pure projection (rules folded into the plan).
+    * as a string attribute. Pure projection (rules folded into the plan).
     */
   def applyRules(df: DataFrame, matchOn: Column, rules: Seq[Rule]): DataFrame = {
     if (rules.isEmpty) return df
@@ -66,13 +67,11 @@ object Enrich {
         val m = if (r.attach.isEmpty) empty else typedlit(r.attach)
         when(col("__rule") === i, m).otherwise(acc)
     }
-    df1.withColumn("attributes_string",
-      graft.functions.MergeMaps(col("attributes_string"), attachMap, map(), map()))
-      .drop("__rule")
+    FieldCols.applyUpdates(df1, FieldCols.mergeAttrs(attachMap), None).drop("__rule")
   }
 
   /** Exact-key lookup enrich: broadcast hash join against a lookup table
-    * `(key, attrs...)`; matched columns are attached into attributes_string
+    * `(key, attrs...)`; matched columns are attached as string attributes
     * under their column names. Non-matching rows pass through unchanged.
     * This is the role/tool/conv-level lookup stage of the flagship job.
     */
@@ -86,10 +85,8 @@ object Enrich {
     // `map_filter(m, (k, v) => v.isNotNull)` — zero-alloc when nothing drops
     val attach = graft.functions.MapDropNullValues(
       map(attachCols.flatMap(c => Seq(lit(c), col(s"__lv_$c").cast("string"))): _*))
-    joined.withColumn("attributes_string",
-      graft.functions.MergeMaps(col("attributes_string"),
-        when(col("__lk").isNotNull, attach).otherwise(map().cast(LogSchema.mapSS)),
-        map(), map()))
+    FieldCols.applyUpdates(joined, FieldCols.mergeAttrs(
+        when(col("__lk").isNotNull, attach).otherwise(map().cast(LogSchema.mapSS))), None)
       .drop("__lk" +: attachCols.map(c => s"__lv_$c"): _*)
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.model.LogSchema
+import graft.operators.FieldCols
 
 /** LLM cost computation — the full `signozllmpricingprocessor` semantics
   * (`processor/signozllmpricingprocessor/processor.go:105-218`,
@@ -33,9 +34,9 @@ import graft.model.LogSchema
   * Spark-first: the rule table is driver-small by definition, so the whole
   * processor folds into ONE projection — glob chain -> winning rule index,
   * per-rule prices as array literals indexed O(1) by that index, cost
-  * arithmetic inline, one [[graft.functions.MergeMaps]] into
-  * `attributes_number` — zero shuffle, zero extra pass, fully inside
-  * whole-stage codegen.
+  * arithmetic inline, one [[FieldCols.mergeAttrs]] of the costs as number
+  * attributes — zero shuffle, zero extra pass, fully inside whole-stage
+  * codegen.
   */
 object LlmPricing {
 
@@ -162,14 +163,12 @@ object LlmPricing {
       Seq(o.in -> cInput, o.out -> cOutput, o.cacheRead -> cRead,
         o.cacheWrite -> cWrite, o.total -> cTotal)
         .collect { case (k, v) if k.nonEmpty => Seq(lit(k), v) }.flatten
-    val emptyNum = map().cast(LogSchema.mapSD)
 
-    df1.withColumn("attributes_number",
-      graft.functions.MergeMaps(
-        col("attributes_number"),
-        when(processed, map(attachKVs: _*)).otherwise(emptyNum),
-        emptyNum, emptyNum))
-      .drop("__llm_rule")
+    // a span frame without a bool map takes the string and number updates
+    val updates = FieldCols.mergeAttrs(
+      numbers = when(processed, map(attachKVs: _*)).otherwise(map().cast(LogSchema.mapSD)))
+      .filter { case (m, _) => df1.columns.contains(m) }
+    FieldCols.applyUpdates(df1, updates, None).drop("__llm_rule")
   }
 
   // ---- config loader (reference mapstructure field names, like

@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{AnyKeyContains, GoFormatFloat, MapFilterKeys}
+import graft.functions.{AnyKeyContains, GoFormatFloat}
+import graft.operators.{FieldCols, FieldRef}
 
 /** The span-mapper processor (`processor/signozspanmapperprocessor/
   * processor.go`): config-driven attribute normalization — groups gated by
@@ -26,17 +27,17 @@ import graft.functions.{AnyKeyContains, GoFormatFloat, MapFilterKeys}
   *    (config.go:117-120).
   *
   * Spark-first restatement over the typed-map row model: each rule is a
-  * conditional map-update projection (codegen MapFilterKeys + map_concat,
-  * no interpreted HOFs), applied sequentially so later rules and groups see
-  * earlier writes exactly like the in-place pcommon.Map mutation. Values
-  * keep their type when copied attr→attr (a key lives in exactly one typed
-  * map); writes into resource context stringify numbers/bools the
-  * `pcommon.Value.AsString` way (resource maps are force-stringified
-  * everywhere in this engine). One deliberate divergence: the reference
-  * mutates the resource map SHARED by all spans under one ResourceSpans, so
-  * a resource-context write becomes visible to sibling spans in the same
-  * batch — a batch-boundary-dependent effect; here every row sees its own
-  * resource view (deterministic, boundary-free).
+  * chain of gated [[FieldCols]] updates, one per source (codegen
+  * MapFilterKeys + map_concat, no interpreted HOFs), applied sequentially so
+  * later rules and groups see earlier writes exactly like the in-place
+  * pcommon.Map mutation. Values keep their type when copied attr→attr
+  * ([[FieldCols.copyAttr]]); writes into resource context stringify
+  * numbers/bools the `pcommon.Value.AsString` way (resource maps are
+  * force-stringified everywhere in this engine). One deliberate divergence:
+  * the reference mutates the resource map SHARED by all spans under one
+  * ResourceSpans, so a resource-context write becomes visible to sibling
+  * spans in the same batch — a batch-boundary-dependent effect; here every
+  * row sees its own resource view (deterministic, boundary-free).
   */
 object SpanMapper {
 
@@ -53,20 +54,7 @@ object SpanMapper {
   final case class Group(id: String, attrPatterns: Seq[String],
       resPatterns: Seq[String], rules: Seq[Rule])
 
-  private val S = "attributes_string"
-  private val N = "attributes_number"
-  private val B = "attributes_bool"
   private val R = "resources_string"
-
-  private def without(m: Column, key: String): Column =
-    MapFilterKeys(m, Seq(key), keep = false)
-
-  private def put(m: Column, key: String, v: Column): Column =
-    map_concat(without(m, key), map(lit(key), v))
-
-  /** Conditional put/remove keeping the non-matching branch the identity. */
-  private def gated(gate: Column, updated: Column, current: Column): Column =
-    when(gate, updated).otherwise(current)
 
   /** Apply every group in order. Works on any frame with the typed attr
     * maps + resources_string (spans and logs share the shape).
@@ -82,9 +70,9 @@ object SpanMapper {
         else AnyKeyContains(col("__res0"), g.resPatterns)
       val attrGate =
         if (g.attrPatterns.isEmpty) lit(false)
-        else AnyKeyContains(col(S), g.attrPatterns) ||
-          AnyKeyContains(col(N), g.attrPatterns) ||
-          AnyKeyContains(col(B), g.attrPatterns)
+        else AnyKeyContains(col("attributes_string"), g.attrPatterns) ||
+          AnyKeyContains(col("attributes_number"), g.attrPatterns) ||
+          AnyKeyContains(col("attributes_bool"), g.attrPatterns)
       val gateName = s"__gate_$gi"
       cur = cur.withColumn(gateName, resGate || attrGate)
       g.rules.foreach { r => cur = applyRule(cur, col(gateName), r) }
@@ -93,77 +81,45 @@ object SpanMapper {
     cur.drop("__res0")
   }
 
+  /** One rule: the first existing source's value goes to the target, and
+    * a `move` source is deleted after the copy (processor.go:133-166), so a
+    * move onto its own key deletes it. The selected source's index is
+    * materialized before any update, so each source's updates read the row
+    * as it was and at most one source's updates fire.
+    */
   private def applyRule(df: DataFrame, gate: Column, rule: Rule): DataFrame = {
-    // first existing source index (-1 = none); existence per context
-    def exists(s: Source): Column =
-      if (s.isResource) map_contains_key(col(R), s.bare)
-      else map_contains_key(col(S), s.key) ||
-        map_contains_key(col(N), s.key) || map_contains_key(col(B), s.key)
-    val sel = rule.sources.zipWithIndex.foldRight(lit(-1)) {
-      case ((s, i), rest) => when(exists(s), i).otherwise(rest)
+    val refs = rule.sources.map(s =>
+      if (s.isResource) FieldRef.Resource(Seq(s.bare)) else FieldRef.Attr(Seq(s.key)))
+    val sel = refs.zipWithIndex.foldRight(lit(-1)) {
+      case ((r, i), rest) => when(FieldCols.exists(r), i).otherwise(rest)
     }
-    val selected = gate && sel =!= -1
-
-    // the selected source's value in AsString rendering (for resource-
-    // context targets; numbers via Go FormatFloat like every stringified
-    // value in this engine)
-    def asString(s: Source): Column =
-      if (s.isResource) col(R).getItem(s.bare)
-      else coalesce(col(S).getItem(s.key),
-        when(col(N).getItem(s.key).isNotNull, GoFormatFloat(col(N).getItem(s.key))),
-        when(col(B).getItem(s.key).isNotNull,
-          when(col(B).getItem(s.key), "true").otherwise("false")))
-
-    // per typed map: fold the per-source updates into one conditional chain
-    def updatedMap(mapName: String): Column = {
-      val m = col(mapName)
-      rule.sources.zipWithIndex.foldRight(m) { case ((s, i), rest) =>
-        val active = selected && sel === i
-        // 1. target write for this map
-        val afterTarget: Column =
-          if (rule.toResource) {
-            if (mapName == R) put(m, rule.target, asString(s)) else m
-          } else if (s.isResource) {
-            // resource sources are strings; target lands in the string map,
-            // evicted from the others
-            mapName match {
-              case S => put(m, rule.target, col(R).getItem(s.bare))
-              case N | B => without(m, rule.target)
-              case _ => m
-            }
-          } else {
-            // attr source: the target joins the SAME typed map as the
-            // source's value, and leaves the other two
-            val srcHere = map_contains_key(col(mapName), s.key)
-            mapName match {
-              case S | N | B =>
-                when(srcHere, put(m, rule.target, col(mapName).getItem(s.key)))
-                  .otherwise(without(m, rule.target))
-              case _ => m
-            }
-          }
-        // 2. move: delete the source key from its context
-        val afterMove: Column =
-          if (!s.move) afterTarget
-          else if (s.isResource) {
-            if (mapName == R) without(afterTarget, s.bare) else afterTarget
-          } else mapName match {
-            case S | N | B =>
-              // guard: a move whose target == source key must keep the
-              // just-written target (reference deletes src AFTER the copy,
-              // which for target==source removes the value entirely —
-              // replicate exactly: delete wins)
-              without(afterTarget, s.key)
-            case _ => afterTarget
-          }
-        when(active, afterMove).otherwise(rest)
-      }
+    val out = rule.sources.zip(refs).zipWithIndex.foldLeft(df.withColumn("__sel", sel)) {
+      case (d, ((s, ref), i)) =>
+        val write = (ref, rule.toResource) match {
+          case (_, true) => FieldCols.setString(FieldRef.Resource(Seq(rule.target)), asString(s))
+          case (from: FieldRef.Attr, false) =>
+            // the target joins the source value's typed map
+            FieldCols.copyAttr(from, FieldRef.Attr(Seq(rule.target)), move = false)
+          case _ => FieldCols.setString(FieldRef.Attr(Seq(rule.target)), col(R).getItem(s.bare))
+        }
+        val stages = write +: (if (s.move) Seq(FieldCols.remove(ref)) else Nil)
+        val active = Some(gate && col("__sel") === i)
+        stages.foldLeft(d)((d1, u) => FieldCols.applyUpdates(d1, u, active))
     }
-
-    df.withColumns(Map(
-      S -> gated(selected, updatedMap(S), col(S)),
-      N -> gated(selected, updatedMap(N), col(N)),
-      B -> gated(selected, updatedMap(B), col(B)),
-      R -> gated(selected, updatedMap(R), col(R))))
+    out.drop("__sel")
   }
+
+  /** The source's value in the `pcommon.Value.AsString` rendering that a
+    * resource-context target takes: numbers through Go's
+    * `strconv.FormatFloat(f, 'f', -1, 64)`, which other stringified reads
+    * in this engine ([[FieldCols.stringifyNumber]]) do not use.
+    */
+  private def asString(s: Source): Column =
+    if (s.isResource) col(R).getItem(s.bare)
+    else {
+      val (str, num, bool) = (col("attributes_string").getItem(s.key),
+        col("attributes_number").getItem(s.key), col("attributes_bool").getItem(s.key))
+      coalesce(str, when(num.isNotNull, GoFormatFloat(num)),
+        when(bool.isNotNull, when(bool, "true").otherwise("false")))
+    }
 }

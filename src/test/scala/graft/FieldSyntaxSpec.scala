@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.FieldCols
 import graft.operators.FieldRef
 import graft.operators.FieldRef._
 
@@ -59,5 +60,18 @@ class FieldSyntaxSpec extends AnyFunSuite {
         "resource[test]")) { // TestFieldFromStringInvalidSplit
       assert(scala.util.Try(FieldRef.parse(bad)).isFailure, s"expected failure: $bad")
     }
+  }
+
+  test("readString of a number attribute: integral values drop the decimals, " +
+      "others print in Java Double.toString form, not Go's %v") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val keys = Seq("small", "mid", "big", "whole")
+    val df = graft.model.LogFrames.withDefaults(Seq(
+      Map("small" -> 1e-4, "mid" -> 12345678.5, "big" -> 1e21, "whole" -> 3.0))
+      .toDF("attributes_number"))
+    val row = df.select(keys.map(k => FieldCols.readString(Attr(Seq(k)))): _*).head()
+    // Go %v prints 0.0001, 1.23456785e+07, 1e+21 and 3
+    assert(keys.indices.map(row.getString) == Seq("1.0E-4", "1.23456785E7", "1.0E21", "3"))
   }
 }
