@@ -211,10 +211,6 @@ final class AttrsMetaWorker(skipKeys: Array[String]) extends Serializable {
     s
   }
 
-  /** Go `%v` of a float64: integral prints without decimals. */
-  private def goNum(d: Double): String =
-    if (d == d.toLong.toDouble) d.toLong.toString else d.toString
-
   def compute(row: org.apache.spark.sql.catalyst.InternalRow): org.apache.spark.sql.catalyst.InternalRow = {
     if (row == null) return null
     val entries = scala.collection.mutable.ArrayBuffer.empty[(String, String, Boolean)]
@@ -241,7 +237,7 @@ final class AttrsMetaWorker(skipKeys: Array[String]) extends Serializable {
       }
     }
     addMap(0, v => v.toString, isString = true)
-    addMap(1, v => goNum(v.asInstanceOf[Double]), isString = false)
+    addMap(1, v => GoPercentV.float(v.asInstanceOf[Double]), isString = false)
     addMap(2, v => v.toString, isString = false)
 
     val sorted = entries.sortBy(_._1)

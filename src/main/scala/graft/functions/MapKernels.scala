@@ -23,47 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
 final class MapMergeWorker(valueType: DataType) extends Serializable {
   def merge(old: MapData, winner: MapData, d1: MapData, d2: MapData): MapData = {
     if (old == null) return null
-    val drop = new java.util.HashSet[UTF8String]()
-    def addKeys(m: MapData): Unit = if (m != null) {
-      val ks = m.keyArray()
-      var i = 0
-      while (i < m.numElements()) { drop.add(ks.getUTF8String(i)); i += 1 }
-    }
     val n = old.numElements()
     val wn = if (winner == null) 0 else winner.numElements()
     // zero-alloc fast paths for the common empty cases
     if (n == 0 && wn == 0) return old
     if (n == 0) return winner
-    addKeys(winner); addKeys(d1); addKeys(d2)
-    if (drop.isEmpty && wn == 0) return old
-
-    val keys = new Array[Any](n + wn)
-    val vals = new Array[Any](n + wn)
-    var out = 0
-    val ok = old.keyArray(); val ov = old.valueArray()
-    var i = 0
-    while (i < n) {
-      val k = ok.getUTF8String(i)
-      if (!drop.contains(k)) {
-        keys(out) = k
-        vals(out) = if (ov.isNullAt(i)) null else ov.get(i, valueType)
-        out += 1
-      }
-      i += 1
-    }
-    if (wn > 0) {
-      val wk = winner.keyArray(); val wv = winner.valueArray()
-      var j = 0
-      while (j < wn) {
-        keys(out) = wk.getUTF8String(j)
-        vals(out) = if (wv.isNullAt(j)) null else wv.get(j, valueType)
-        out += 1
-        j += 1
-      }
-    }
-    val k2 = if (out == keys.length) keys else java.util.Arrays.copyOf(keys.asInstanceOf[Array[AnyRef]], out).asInstanceOf[Array[Any]]
-    val v2 = if (out == vals.length) vals else java.util.Arrays.copyOf(vals.asInstanceOf[Array[AnyRef]], out).asInstanceOf[Array[Any]]
-    new ArrayBasedMapData(new GenericArrayData(k2), new GenericArrayData(v2))
+    val drop = MapEntries.keySet(winner, d1, d2)
+    val kept = MapEntries.filter(old, valueType, (m, i) => !drop.contains(MapEntries.key(m, i)))
+    if (wn == 0) kept else MapEntries.concat(valueType, kept, winner)
   }
 }
 
@@ -96,7 +63,9 @@ object MergeMaps {
 /** Sorted-key compact JSON of a MAP<STRING,STRING> — what Go's
   * `json.Marshal` emits for the resource labels column
   * (`exporter/clickhouselogsexporter/exporter.go:656-661`), byte-for-byte
-  * incl. the escapeHTML default ([[JsonCanon.quote]]).
+  * incl. the escapeHTML default ([[JsonCanon.quote]]): keys in UTF-8 byte
+  * order, `"null"` for a null value, `{}` for an empty map. That is
+  * [[TypedAttrsGoJsonKernel]] over one string map.
   *
   * Replaces `to_json(map_from_entries(array_sort(map_entries(m), <lambda>)))`:
   * ArraySort-with-comparator is a HigherOrderFunction = CodegenFallback, and
@@ -106,43 +75,8 @@ object MergeMaps {
   * of this single labels column.
   */
 object MapSortedJsonKernel extends Serializable {
-  def toJson(m: MapData): UTF8String = {
-    if (m == null) return null
-    val n = m.numElements()
-    if (n == 0) return UTF8String.fromString("{}")
-    val keys = m.keyArray()
-    val vals = m.valueArray()
-    val idx = Array.range(0, n)
-    // keys compare as UTF8String (UTF-8 BYTE order — what Go's json.Marshal
-    // sorts by); java.lang.String '<' is UTF-16 code-unit order and diverges
-    // on supplementary-plane keys (e.g. emoji)
-    val ks = new Array[UTF8String](n)
-    var i = 0
-    while (i < n) { ks(i) = keys.getUTF8String(i); i += 1 }
-    // insertion sort on the (small) resource map
-    i = 1
-    while (i < n) {
-      val ki = ks(idx(i))
-      val ii = idx(i)
-      var j = i - 1
-      while (j >= 0 && ks(idx(j)).compareTo(ki) > 0) { idx(j + 1) = idx(j); j -= 1 }
-      idx(j + 1) = ii
-      i += 1
-    }
-    val sb = new java.lang.StringBuilder(n * 24)
-    sb.append('{')
-    i = 0
-    while (i < n) {
-      if (i > 0) sb.append(',')
-      val k = idx(i)
-      sb.append(JsonCanon.quote(ks(k).toString)).append(':')
-      if (vals.isNullAt(k)) sb.append("null")
-      else sb.append(JsonCanon.quote(vals.getUTF8String(k).toString))
-      i += 1
-    }
-    sb.append('}')
-    UTF8String.fromString(sb.toString)
-  }
+  def toJson(m: MapData): UTF8String =
+    if (m == null) null else TypedAttrsGoJsonKernel.toJson(m, null, null)
 }
 
 /** `map_sorted_json(map)` — see [[MapSortedJsonKernel]]; NULL for NULL. */
@@ -228,39 +162,9 @@ object MapToTagRows {
   */
 final class MapFilterKeysWorker(keys: Array[String], keep: Boolean,
     valueType: DataType) extends Serializable {
-  @transient private lazy val set: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](keys.length * 2)
-    keys.foreach(k => s.add(UTF8String.fromString(k)))
-    s
-  }
-  def filter(m: MapData): MapData = {
-    if (m == null) return null
-    val n = m.numElements()
-    val ks = m.keyArray()
-    var matches = 0
-    var i = 0
-    while (i < n) {
-      if (set.contains(ks.getUTF8String(i))) matches += 1
-      i += 1
-    }
-    val kept = if (keep) matches else n - matches
-    if (kept == n) return m // nothing filtered out
-    val vs = m.valueArray()
-    val outK = new Array[Any](kept)
-    val outV = new Array[Any](kept)
-    var o = 0
-    i = 0
-    while (i < n) {
-      val in = set.contains(ks.getUTF8String(i))
-      if (in == keep) {
-        outK(o) = ks.getUTF8String(i)
-        outV(o) = if (vs.isNullAt(i)) null else vs.get(i, valueType)
-        o += 1
-      }
-      i += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(outK), new GenericArrayData(outV))
-  }
+  @transient private lazy val set = MapEntries.keySet(keys.toSeq)
+  private val test: MapEntries.Keep = (m, i) => set.contains(MapEntries.key(m, i)) == keep
+  def filter(m: MapData): MapData = MapEntries.filter(m, valueType, test)
 }
 
 case class MapFilterKeys(child: Expression, keys: Seq[String], keep: Boolean)
@@ -282,45 +186,27 @@ object MapFilterKeys {
 
 /** Grok typed-capture conversion: a MAP<STRING,STRING> whose keys are all
   * declared numeric captures -> MAP<STRING,DOUBLE>, parsing `int`-typed
-  * keys with integral semantics (non-integral -> null, like the non-ANSI
-  * string->long cast) and `float`-typed keys as doubles. Replaces the
+  * keys with the non-ANSI string->long cast's semantics (a fraction is
+  * truncated, anything else non-integral is null) and `float`-typed keys
+  * as doubles. Replaces the
   * `transform_values(map_filter(...), <when-chain cast lambda>)` pair —
   * both CodegenFallback HOFs.
   */
 final class MapGrokNumericWorker(intKeys: Array[String]) extends Serializable {
-  @transient private lazy val ints: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](intKeys.length * 2)
-    intKeys.foreach(k => s.add(UTF8String.fromString(k)))
-    s
-  }
-  def convert(m: MapData): MapData = {
-    if (m == null) return null
-    val n = m.numElements()
-    val ks = m.keyArray()
-    val vs = m.valueArray()
-    val outK = new Array[Any](n)
-    val outV = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val k = ks.getUTF8String(i)
-      outK(i) = k
-      outV(i) =
-        if (vs.isNullAt(i)) null
-        else {
-          val v = vs.getUTF8String(i)
-          if (ints.contains(k)) {
-            val w = new UTF8String.LongWrapper
-            if (v.toLong(w)) java.lang.Double.valueOf(w.value.toDouble) else null
-          } else {
-            // double parse with cast semantics: trim + Java parse, null on fail
-            try java.lang.Double.valueOf(v.toString.trim.toDouble)
-            catch { case _: NumberFormatException => null }
-          }
-        }
-      i += 1
+  @transient private lazy val ints = MapEntries.keySet(intKeys.toSeq)
+  private val toDouble: (UTF8String, Any) => Any = { (k, v) =>
+    val s = v.asInstanceOf[UTF8String]
+    if (ints.contains(k)) {
+      val w = new UTF8String.LongWrapper
+      if (s.toLong(w)) java.lang.Double.valueOf(w.value.toDouble) else null
+    } else {
+      // double parse with cast semantics: trim + Java parse, null on fail
+      try java.lang.Double.valueOf(s.toString.trim.toDouble)
+      catch { case _: NumberFormatException => null }
     }
-    new ArrayBasedMapData(new GenericArrayData(outK), new GenericArrayData(outV))
   }
+  def convert(m: MapData): MapData =
+    MapEntries.rewrite(m, StringType, value = toDouble, retype = true)
 }
 
 case class MapGrokNumeric(child: Expression, intKeys: Seq[String])
@@ -347,29 +233,8 @@ object MapGrokNumeric {
   * returned as-is, zero allocation.
   */
 object MapDropNullValuesKernel extends Serializable {
-  def drop(m: MapData): MapData = {
-    if (m == null) return null
-    val n = m.numElements()
-    val vs = m.valueArray()
-    var nulls = 0
-    var i = 0
-    while (i < n) { if (vs.isNullAt(i)) nulls += 1; i += 1 }
-    if (nulls == 0) return m
-    val ks = m.keyArray()
-    val outK = new Array[Any](n - nulls)
-    val outV = new Array[Any](n - nulls)
-    var o = 0
-    i = 0
-    while (i < n) {
-      if (!vs.isNullAt(i)) {
-        outK(o) = ks.getUTF8String(i)
-        outV(o) = vs.getUTF8String(i)
-        o += 1
-      }
-      i += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(outK), new GenericArrayData(outV))
-  }
+  private val notNull: MapEntries.Keep = (m, i) => !m.valueArray().isNullAt(i)
+  def drop(m: MapData): MapData = MapEntries.filter(m, StringType, notNull)
 }
 
 case class MapDropNullValues(child: Expression)
@@ -388,9 +253,8 @@ object MapDropNullValues {
 }
 
 /** Force-stringify the three typed attribute maps into ONE MAP<STRING,STRING>
-  * (the resource-attrs-at-the-sink rule): numbers print Go-%v style —
-  * integral doubles without decimals, everything else Double.toString (what
-  * the double->string cast emits) — and booleans as true/false. Replaces
+  * (the resource-attrs-at-the-sink rule): numbers print as
+  * [[GoPercentV.float]] does and booleans as true/false. Replaces
   * `map_concat(strings, transform_values(numbers, ...),
   * transform_values(bools, ...))`: `transform_values` is a CodegenFallback
   * HOF and one of them de-codegens the whole ingest projection. NULL typed
@@ -427,12 +291,7 @@ object StringifyTypedMapsKernel extends Serializable {
         outK(o) = ks.getUTF8String(i)
         outV(o) =
           if (vs.isNullAt(i)) null
-          else {
-            val d = vs.getDouble(i)
-            val l = d.toLong
-            if (l.toDouble == d) UTF8String.fromString(java.lang.Long.toString(l))
-            else UTF8String.fromString(java.lang.Double.toString(d))
-          }
+          else UTF8String.fromString(GoPercentV.float(vs.getDouble(i)))
         o += 1; i += 1
       }
     }
@@ -550,30 +409,8 @@ final class MapRenameKeysWorker(renames: Array[Array[String]]) extends Serializa
     val renamed = table.get(stripped)
     if (renamed != null) renamed else stripped
   }
-  def rename(m: MapData): MapData = {
-    if (m == null) return null
-    val n = m.numElements()
-    val ks = m.keyArray()
-    // fast path: nothing changes
-    var changed = false
-    var i = 0
-    while (i < n && !changed) {
-      val k = ks.getUTF8String(i)
-      if (normalize(k) ne k) changed = true
-      i += 1
-    }
-    if (!changed) return m
-    val vs = m.valueArray()
-    val outK = new Array[Any](n)
-    val outV = new Array[Any](n)
-    i = 0
-    while (i < n) {
-      outK(i) = normalize(ks.getUTF8String(i))
-      outV(i) = if (vs.isNullAt(i)) null else vs.getUTF8String(i)
-      i += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(outK), new GenericArrayData(outV))
-  }
+  private val renamed: UTF8String => UTF8String = normalize
+  def rename(m: MapData): MapData = MapEntries.rewrite(m, StringType, key = renamed)
 }
 
 case class MapRenameKeys(child: Expression, renames: Seq[(String, String)])

@@ -1,13 +1,14 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
+import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
-import org.apache.spark.sql.types.{DataType, MapType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Map kernels for the upstream OTTL editor set the transform processor
@@ -21,34 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
 final class MapKeysRegexWorker(pattern: String, keep: Boolean,
     valueType: DataType) extends Serializable {
   @transient private lazy val re = Pattern.compile(pattern)
-  def filter(m: MapData): MapData = {
-    if (m == null) return null
-    val n = m.numElements()
-    val ks = m.keyArray()
-    var matches = 0
-    var i = 0
-    while (i < n) {
-      if (re.matcher(ks.getUTF8String(i).toString).find()) matches += 1
-      i += 1
-    }
-    val kept = if (keep) matches else n - matches
-    if (kept == n) return m
-    val vs = m.valueArray()
-    val outK = new Array[Any](kept)
-    val outV = new Array[Any](kept)
-    var o = 0
-    i = 0
-    while (i < n) {
-      val hit = re.matcher(ks.getUTF8String(i).toString).find()
-      if (hit == keep) {
-        outK(o) = ks.getUTF8String(i)
-        outV(o) = if (vs.isNullAt(i)) null else vs.get(i, valueType)
-        o += 1
-      }
-      i += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(outK), new GenericArrayData(outV))
-  }
+  private val test: MapEntries.Keep =
+    (m, i) => re.matcher(MapEntries.key(m, i).toString).find() == keep
+  def filter(m: MapData): MapData = MapEntries.filter(m, valueType, test)
 }
 
 /** `delete_matching_keys(map, re)` (keep=false) / `keep_matching_keys`
@@ -79,40 +55,17 @@ object MapKeysRegex {
 final class MapReplacePatternsWorker(mode: String, pattern: String,
     replacement: String, valueType: DataType) extends Serializable {
   @transient private lazy val re = Pattern.compile(pattern)
-  private val onKeys = mode == "key"
-  def replace(m: MapData): MapData = {
-    if (m == null) return null
-    val n = m.numElements()
-    if (n == 0) return m
-    val ks = m.keyArray()
-    val vs = m.valueArray()
-    val outK = new Array[Any](n)
-    val outV = new Array[Any](n)
-    var changed = false
-    var i = 0
-    while (i < n) {
-      if (onKeys) {
-        val k = ks.getUTF8String(i).toString
-        val nk = re.matcher(k).replaceAll(replacement)
-        changed ||= nk != k
-        outK(i) = UTF8String.fromString(nk)
-        outV(i) = if (vs.isNullAt(i)) null else vs.get(i, valueType)
-      } else {
-        outK(i) = ks.getUTF8String(i)
-        outV(i) =
-          if (vs.isNullAt(i)) null
-          else {
-            val v = vs.getUTF8String(i).toString
-            val nv = re.matcher(v).replaceAll(replacement)
-            changed ||= nv != v
-            UTF8String.fromString(nv)
-          }
-      }
-      i += 1
-    }
-    if (!changed) m
-    else new ArrayBasedMapData(new GenericArrayData(outK), new GenericArrayData(outV))
+  /** `u` with every match replaced, or `u` itself when that changes nothing. */
+  private def replaced(u: UTF8String): UTF8String = {
+    val s = u.toString
+    val r = re.matcher(s).replaceAll(replacement)
+    if (r == s) u else UTF8String.fromString(r)
   }
+  private val onKey: UTF8String => UTF8String = replaced
+  private val onValue: (UTF8String, Any) => Any = (_, v) => replaced(v.asInstanceOf[UTF8String])
+  def replace(m: MapData): MapData =
+    if (mode == "key") MapEntries.rewrite(m, valueType, key = onKey)
+    else MapEntries.rewrite(m, valueType, value = onValue)
 }
 
 case class MapReplacePatterns(child: Expression, mode: String, pattern: String,
@@ -139,33 +92,11 @@ object MapReplacePatterns {
   * values only; other typed maps pass through untouched at the call site).
   */
 final class MapTruncateValuesWorker(limit: Int) extends Serializable {
-  def truncate(m: MapData): MapData = {
-    if (m == null) return null
-    val n = m.numElements()
-    val vs = m.valueArray()
-    var needed = false
-    var i = 0
-    while (i < n && !needed) {
-      needed = !vs.isNullAt(i) && vs.getUTF8String(i).numChars() > limit
-      i += 1
-    }
-    if (!needed) return m
-    val ks = m.keyArray()
-    val outK = new Array[Any](n)
-    val outV = new Array[Any](n)
-    i = 0
-    while (i < n) {
-      outK(i) = ks.getUTF8String(i)
-      outV(i) =
-        if (vs.isNullAt(i)) null
-        else {
-          val v = vs.getUTF8String(i)
-          if (v.numChars() > limit) v.substring(0, limit) else v
-        }
-      i += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(outK), new GenericArrayData(outV))
+  private val truncated: (UTF8String, Any) => Any = { (_, v) =>
+    val u = v.asInstanceOf[UTF8String]
+    if (u.numChars() > limit) u.substring(0, limit) else u
   }
+  def truncate(m: MapData): MapData = MapEntries.rewrite(m, StringType, value = truncated)
 }
 
 case class MapTruncateValues(child: Expression, limit: Int)
@@ -192,11 +123,7 @@ object MapTruncateValues {
   * producer order). Returns `struct(strings, numbers, bools)`.
   */
 final class LimitTypedMapsWorker(n: Int, priority: Array[String]) extends Serializable {
-  @transient private lazy val prio: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](priority.length * 2)
-    priority.foreach(k => s.add(UTF8String.fromString(k)))
-    s
-  }
+  @transient private lazy val prio = MapEntries.keySet(priority.toSeq)
   private def count(m: MapData): Int = if (m == null) 0 else m.numElements()
 
   def limit(strings: MapData, numbers: MapData, bools: MapData): InternalRow = {
@@ -205,48 +132,20 @@ final class LimitTypedMapsWorker(n: Int, priority: Array[String]) extends Serial
     // pass 1: priority keys present (they consume budget first)
     var prioHits = 0
     def countPrio(m: MapData): Unit = if (m != null) {
-      val ks = m.keyArray()
       var i = 0
       while (i < m.numElements()) {
-        if (prio.contains(ks.getUTF8String(i))) prioHits += 1
+        if (prio.contains(MapEntries.key(m, i))) prioHits += 1
         i += 1
       }
     }
     countPrio(strings); countPrio(numbers); countPrio(bools)
     var budget = math.max(0, n - prioHits)
-    def take(m: MapData, valueType: DataType): MapData = {
-      if (m == null) return null
-      val size = m.numElements()
-      val ks = m.keyArray()
-      val vs = m.valueArray()
-      val keep = new Array[Boolean](size)
-      var kept = 0
-      var i = 0
-      while (i < size) {
-        val isPrio = prio.contains(ks.getUTF8String(i))
-        if (isPrio) { keep(i) = true; kept += 1 }
-        else if (budget > 0) { keep(i) = true; kept += 1; budget -= 1 }
-        i += 1
-      }
-      if (kept == size) return m
-      val outK = new Array[Any](kept)
-      val outV = new Array[Any](kept)
-      var o = 0
-      i = 0
-      while (i < size) {
-        if (keep(i)) {
-          outK(o) = ks.getUTF8String(i)
-          outV(o) = if (vs.isNullAt(i)) null else vs.get(i, valueType)
-          o += 1
-        }
-        i += 1
-      }
-      new ArrayBasedMapData(new GenericArrayData(outK), new GenericArrayData(outV))
-    }
+    val take: MapEntries.Keep = (m, i) =>
+      prio.contains(MapEntries.key(m, i)) || (budget > 0 && { budget -= 1; true })
     InternalRow(
-      take(strings, StringType),
-      take(numbers, org.apache.spark.sql.types.DoubleType),
-      take(bools, org.apache.spark.sql.types.BooleanType))
+      MapEntries.filter(strings, StringType, take),
+      MapEntries.filter(numbers, DoubleType, take),
+      MapEntries.filter(bools, BooleanType, take))
   }
 }
 
@@ -273,4 +172,59 @@ object LimitTypedMaps {
     ExpressionUtils.column(LimitTypedMaps(
       ExpressionUtils.expression(strings), ExpressionUtils.expression(numbers),
       ExpressionUtils.expression(bools), n, priority))
+}
+
+/** The attributes processor's pattern `hash` over the three typed maps
+  * jointly: each value whose key matches `pattern` (unanchored find)
+  * becomes the lowercase SHA-256 hex of its string form, numbers rendered
+  * by [[GoPercentV.float]] and bools as true/false. Hashed number and bool
+  * entries move to the end of the string map, strings first. Returns
+  * `struct(strings, numbers, bools)`; like the `map_concat` it replaces,
+  * the string map is null when any input map is.
+  */
+final class HashTypedMapsWorker(pattern: String) extends Serializable {
+  @transient private lazy val re = Pattern.compile(pattern)
+  private def hit(k: UTF8String): Boolean = re.matcher(k.toString).find()
+  private val hits: MapEntries.Keep = (m, i) => hit(MapEntries.key(m, i))
+  private val misses: MapEntries.Keep = (m, i) => !hit(MapEntries.key(m, i))
+  private def sha256(s: String): UTF8String = UTF8String.fromString(
+    org.apache.commons.codec.digest.DigestUtils.sha256Hex(s.getBytes(StandardCharsets.UTF_8)))
+  private val hashString: (UTF8String, Any) => Any = (k, v) => if (hit(k)) sha256(v.toString) else v
+  private val hashNumber: (UTF8String, Any) => Any =
+    (_, v) => sha256(GoPercentV.float(v.asInstanceOf[Double]))
+  private val hashBool: (UTF8String, Any) => Any = (_, v) => sha256(v.toString)
+
+  def hash(strings: MapData, numbers: MapData, bools: MapData): InternalRow = {
+    def moved(m: MapData, valueType: DataType, f: (UTF8String, Any) => Any) =
+      MapEntries.rewrite(MapEntries.filter(m, valueType, hits), valueType, value = f, retype = true)
+    val hashed =
+      if (strings == null || numbers == null || bools == null) null
+      else MapEntries.concat(StringType,
+        MapEntries.rewrite(strings, StringType, value = hashString),
+        moved(numbers, DoubleType, hashNumber), moved(bools, BooleanType, hashBool))
+    InternalRow(hashed, MapEntries.filter(numbers, DoubleType, misses),
+      MapEntries.filter(bools, BooleanType, misses))
+  }
+}
+
+case class HashTypedMaps(strings: Expression, numbers: Expression,
+    bools: Expression, pattern: String) extends Expression with InvokeKernel {
+  protected lazy val kernel = new HashTypedMapsWorker(pattern)
+  protected def method = "hash"
+  override protected def propagateNull = false
+  override protected def returnNullable = false
+  override def children: Seq[Expression] = Seq(strings, numbers, bools)
+  override def dataType: DataType = org.apache.spark.sql.types.StructType(
+    Seq("strings", "numbers", "bools").zip(children).map { case (name, c) =>
+      org.apache.spark.sql.types.StructField(name, c.dataType) })
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): HashTypedMaps =
+    copy(strings = newChildren(0), numbers = newChildren(1), bools = newChildren(2))
+}
+
+object HashTypedMaps {
+  def apply(strings: Column, numbers: Column, bools: Column, pattern: String): Column =
+    ExpressionUtils.column(HashTypedMaps(
+      ExpressionUtils.expression(strings), ExpressionUtils.expression(numbers),
+      ExpressionUtils.expression(bools), pattern))
 }

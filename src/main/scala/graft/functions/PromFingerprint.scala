@@ -452,6 +452,18 @@ object GoFormatFloatKernel extends Serializable {
   }
 }
 
+/** This engine's row-level `fmt.Sprintf("%v")` of a float64: an integral
+  * value prints as its long (`3.0` -> `3`), anything else in Java's
+  * `Double.toString` form (`1.0E-4`, where Go prints `0.0001`). Its Column
+  * twin is [[graft.operators.FieldCols.stringifyNumber]].
+  */
+object GoPercentV {
+  def float(d: Double): String = {
+    val l = d.toLong
+    if (l.toDouble == d) java.lang.Long.toString(l) else java.lang.Double.toString(d)
+  }
+}
+
 case class GoFormatFloat(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
   protected def kernel = GoFormatFloatKernel

@@ -177,31 +177,8 @@ object GoJsonQuote {
   * so it stays a codegen one-liner.
   */
 object MapDropKeyPrefixKernel extends Serializable {
-  def drop(m: MapData, prefix: UTF8String): MapData = {
-    if (m == null) return null
-    val n = m.numElements()
-    val keys = m.keyArray()
-    val vals = m.valueArray()
-    var kept = 0
-    var i = 0
-    while (i < n) { if (!keys.getUTF8String(i).startsWith(prefix)) kept += 1; i += 1 }
-    if (kept == n) return m
-    val ks = new Array[Any](kept)
-    val vs = new Array[Any](kept)
-    var w = 0
-    i = 0
-    while (i < n) {
-      val k = keys.getUTF8String(i)
-      if (!k.startsWith(prefix)) {
-        ks(w) = k
-        vs(w) = if (vals.isNullAt(i)) null else vals.getUTF8String(i)
-        w += 1
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new GenericArrayData(ks), new GenericArrayData(vs))
-  }
+  def drop(m: MapData, prefix: UTF8String): MapData =
+    MapEntries.filter(m, StringType, (d, i) => !MapEntries.key(d, i).startsWith(prefix))
 }
 
 case class MapDropKeyPrefix(child: Expression, prefix: String)

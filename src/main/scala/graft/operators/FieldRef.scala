@@ -88,7 +88,7 @@ object FieldRef {
 /** Column-level read/write resolution for [[FieldRef]]s. */
 object FieldCols {
   import FieldRef._
-  import graft.functions.{MapFilterKeys, MapKeysIn, MergeMaps}
+  import graft.functions.{HashTypedMaps, LimitTypedMaps, MapFilterKeys, MapKeysIn, MergeMaps}
 
   def attrKey(keys: Seq[String]): String = keys.mkString(".")
 
@@ -142,8 +142,10 @@ object FieldCols {
     *   12345678.5   1.23456785E7    1.23456785e+07
     *   1e21         1.0E21          1e+21
     * }}}
-    * `FieldSyntaxSpec` pins the left column. Span-mapper resource writes
-    * render numbers the `AsString` way instead ([[graft.functions.GoFormatFloat]]).
+    * `FieldSyntaxSpec` pins the left column, and that this prints what its
+    * row-level twin [[graft.functions.GoPercentV.float]] does. Span-mapper
+    * resource writes render numbers the `AsString` way instead
+    * ([[graft.functions.GoFormatFloat]]).
     */
   def stringifyNumber(c: Column): Column =
     when(c.isNotNull,
@@ -326,6 +328,34 @@ object FieldCols {
       case ResourceRoot => Seq("resources_string" -> f(col("resources_string")))
       case other => throw new IllegalArgumentException(s"needs a map root, got $other")
     }
+
+  /** The three typed maps from one `struct(strings, numbers, bools)` kernel
+    * result; subexpression elimination shares the struct across the three
+    * updates.
+    */
+  private def typedFields(s: Column): Seq[(String, Column)] =
+    typedMaps.zip(Seq("strings", "numbers", "bools")).map { case (m, f) => m -> s.getField(f) }
+
+  /** OTTL `limit(root, n, priority)`: at most `n` keys stay, priority keys
+    * always. The attributes root is one joint budget across the three typed
+    * maps (one logical pcommon.Map in the reference).
+    */
+  def limit(root: FieldRef, n: Int, priority: Seq[String]): Seq[(String, Column)] = root match {
+    case AttrsRoot => typedFields(LimitTypedMaps(
+      col("attributes_string"), col("attributes_number"), col("attributes_bool"), n, priority))
+    case ResourceRoot =>
+      val limited = LimitTypedMaps(col("resources_string"),
+        map().cast(graft.model.LogSchema.mapSD), map().cast(graft.model.LogSchema.mapSB), n, priority)
+      Seq("resources_string" -> limited.getField("strings"))
+    case other => throw new IllegalArgumentException(s"needs a map root, got $other")
+  }
+
+  /** The attributes processor's pattern `hash`: each attribute whose key
+    * matches `pattern` becomes the SHA-256 hex of its string form, in the
+    * string map ([[HashTypedMaps]]).
+    */
+  def hashMatching(pattern: String): Seq[(String, Column)] = typedFields(HashTypedMaps(
+    col("attributes_string"), col("attributes_number"), col("attributes_bool"), pattern))
 
   /** Copy (`move = false`) or move one attribute to another key: the target
     * joins the typed map that holds the source's value and leaves the other

@@ -779,25 +779,7 @@ object OttlStatements {
             gated(FieldCols.mergeResources(asStrings, strategy))
         }
       case LimitStmt(m, n, priority, _) =>
-        mapRoot(m, context, "limit") match {
-          case FieldRef.AttrsRoot =>
-            // one joint budget across the three typed maps (they are ONE
-            // logical pcommon.Map in the reference); subexpression
-            // elimination shares the struct across the three updates
-            val limited = graft.functions.LimitTypedMaps(
-              col("attributes_string"), col("attributes_number"),
-              col("attributes_bool"), n, priority)
-            gated(Seq(
-              "attributes_string" -> limited.getField("strings"),
-              "attributes_number" -> limited.getField("numbers"),
-              "attributes_bool" -> limited.getField("bools")))
-          case _ =>
-            val limited = graft.functions.LimitTypedMaps(
-              col("resources_string"),
-              map().cast(graft.model.LogSchema.mapSD),
-              map().cast(graft.model.LogSchema.mapSB), n, priority)
-            gated(Seq("resources_string" -> limited.getField("strings")))
-        }
+        gated(FieldCols.limit(mapRoot(m, context, "limit"), n, priority))
     }
   }
 

@@ -36,10 +36,9 @@ import graft.operators.{FieldCols, FieldRef}
   * Everything compiles to `when`-gated map updates over the typed maps —
   * per-row codegen projections, no shuffle, no UDF. The two `pattern`
   * variants select keys with the OTTL `delete_matching_keys` kernel
-  * [[graft.functions.MapKeysRegex]] (unanchored find); `hash` still
-  * rewrites values with `transform_values` HOFs (a config-rare path);
-  * everything else rides the [[graft.functions.MapFilterKeys]] codegen
-  * kernel via [[FieldCols]].
+  * [[graft.functions.MapKeysRegex]] (unanchored find) and pattern `hash`
+  * the [[graft.functions.HashTypedMaps]] kernel; everything else rides the
+  * [[graft.functions.MapFilterKeys]] codegen kernel via [[FieldCols]].
   */
 object AttributesProcessor {
 
@@ -156,23 +155,7 @@ object AttributesProcessor {
       }
 
       case "hash" => a.pattern match {
-        case Some(pat) =>
-          // pattern-hash: rewrite matching STRING values in place; rendered
-          // number/bool values move into the string map (they become hex)
-          val (s, n, b) =
-            (col("attributes_string"), col("attributes_number"), col("attributes_bool"))
-          val strOut = map_concat(
-            transform_values(s, (k, v) =>
-              when(regexp_like(k, lit(pat)), sha2(v, 256)).otherwise(v)),
-            transform_values(MapKeysRegex(n, pat, keep = true),
-              (_, v) => sha2(FieldCols.stringifyNumber(v), 256)),
-            transform_values(MapKeysRegex(b, pat, keep = true),
-              (_, v) => sha2(v.cast("string"), 256)))
-          FieldCols.applyUpdates(df, Seq(
-            "attributes_string" -> strOut,
-            "attributes_number" -> MapKeysRegex(n, pat, keep = false),
-            "attributes_bool" -> MapKeysRegex(b, pat, keep = false)),
-            Some(gate))
+        case Some(pat) => FieldCols.applyUpdates(df, FieldCols.hashMatching(pat), Some(gate))
         case None =>
           FieldCols.applyUpdates(df,
             FieldCols.setString(f, sha2(FieldCols.readString(f), 256)),

@@ -160,7 +160,7 @@ object SpanMetrics {
     val bucketAggs = bounds.zipWithIndex.map { case (b, i) =>
       sum(when(col("latency_ms") <= b, 1L).otherwise(0L)).as(s"bucket_$i")
     }
-    val leNames = bounds.map(GoFormatFloatKernelNames.le) :+ "+Inf"
+    val leNames = bounds.map(b => graft.functions.GoFormatFloatKernel.format(b).toString) :+ "+Inf"
     val aggs = count(lit(1)).as("call_count") +:
       sum(col("latency_ms")).as("sum_ms") +: bucketAggs
     val grouped = p.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
@@ -270,10 +270,4 @@ object SpanMetrics {
       .agg(sum(col("latency_ms")).as("latency_sum_ms"),
         count(lit(1)).as("latency_count"))
   }
-}
-
-/** Shared Go-format names for the histogram le labels. */
-private object GoFormatFloatKernelNames {
-  def le(b: Double): String =
-    graft.functions.GoFormatFloatKernel.format(b).toString
 }

@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.functions.JsonCanon
+import graft.functions.{GoJsonFloatKernel, JsonCanon}
 import graft.sources.{Jaeger, OtlpJson, OtlpProtoEncode}
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanRow}
 
@@ -69,17 +69,10 @@ object KafkaExport {
     case object Empty extends RawBody
   }
 
-  /** Go json.Marshal float formatting for the common range: integral values
-    * print bare ("456", not "456.0"), else Java's shortest round-trip repr
-    * (matches Go for |exponent| small; both emit e-notation only at
-    * extremes, where the thresholds differ — irrelevant for log bodies).
+  /** None = skip the message: an empty payload (`raw_marshaler.go:37-39`),
+    * or a NaN/±Inf double body, for which `json.Marshal` returns an error
+    * and no payload exists. Doubles print as [[GoJsonFloatKernel]] does.
     */
-  private def goFloat(d: Double): String = {
-    val l = d.toLong
-    if (l.toDouble == d) java.lang.Long.toString(l) else java.lang.Double.toString(d)
-  }
-
-  /** None = skip the message (empty payload, `raw_marshaler.go:37-39`). */
   def rawBodyBytes(b: RawBody): Option[Array[Byte]] = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     b match {
@@ -88,7 +81,7 @@ object KafkaExport {
       case RawBody.Str(s) => Some(JsonCanon.quote(s).getBytes(utf8))
       case RawBody.Bool(x) => Some((if (x) "true" else "false").getBytes(utf8))
       case RawBody.Int64(l) => Some(java.lang.Long.toString(l).getBytes(utf8))
-      case RawBody.Dbl(d) => Some(goFloat(d).getBytes(utf8))
+      case RawBody.Dbl(d) => Option(GoJsonFloatKernel.format(d)).map(_.getBytes)
     }
   }
 

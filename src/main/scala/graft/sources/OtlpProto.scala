@@ -149,9 +149,7 @@ object OtlpProto {
     case AVStr(s) => s
     case AVBool(b) => if (b) "true" else "false"
     case AVInt(l) => java.lang.Long.toString(l)
-    case AVDouble(d) =>
-      val l = d.toLong
-      if (l.toDouble == d) java.lang.Long.toString(l) else java.lang.Double.toString(d)
+    case AVDouble(d) => graft.functions.GoPercentV.float(d)
     case AVBytes(b) => java.util.Base64.getEncoder.encodeToString(b)
     case AVArr(vs) => vs.map(avToJson).mkString("[", ",", "]")
     case AVKv(vs) => vs.map { case (k, x) =>

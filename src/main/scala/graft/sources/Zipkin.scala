@@ -292,18 +292,27 @@ object Zipkin {
     * value)* terminated by STOP=0.
     */
   private final class T(val buf: Array[Byte], var pos: Int) {
-    def u8(): Int = { val b = buf(pos) & 0xff; pos += 1; b }
-    def i16(): Int = { val v = ((buf(pos) & 0xff) << 8) | (buf(pos + 1) & 0xff); pos += 2; v.toShort.toInt }
+    /** `n` more bytes must be left; a truncated message throws. */
+    private def need(n: Int, what: String): Unit =
+      if (n > buf.length - pos) throw new IllegalArgumentException(s"truncated thrift $what")
+    def u8(): Int = { need(1, "byte"); val b = buf(pos) & 0xff; pos += 1; b }
+    def i16(): Int = {
+      need(2, "i16")
+      val v = ((buf(pos) & 0xff) << 8) | (buf(pos + 1) & 0xff); pos += 2; v.toShort.toInt
+    }
     def i32(): Int = {
+      need(4, "i32")
       var v = 0; var i = 0
       while (i < 4) { v = (v << 8) | (buf(pos + i) & 0xff); i += 1 }
       pos += 4; v
     }
     def i64(): Long = {
+      need(8, "i64")
       var v = 0L; var i = 0
       while (i < 8) { v = (v << 8) | (buf(pos + i) & 0xffL); i += 1 }
       pos += 8; v
     }
+    private def advance(n: Int, what: String): Unit = { need(n, what); pos += n }
     /** A STRING/BINARY length, checked against the bytes left. */
     private def length(): Int = {
       val len = i32()
@@ -327,12 +336,12 @@ object Zipkin {
       require(depth <= MaxThriftDepth,
         s"thrift value nested deeper than $MaxThriftDepth levels")
       tpe match {
-        case 2 => pos += 1 // BOOL
-        case 3 => pos += 1 // BYTE
-        case 4 => pos += 8 // DOUBLE
-        case 6 => pos += 2 // I16
-        case 8 => pos += 4 // I32
-        case 10 => pos += 8 // I64
+        case 2 => advance(1, "bool")
+        case 3 => advance(1, "byte")
+        case 4 => advance(8, "double")
+        case 6 => advance(2, "i16")
+        case 8 => advance(4, "i32")
+        case 10 => advance(8, "i64")
         case 11 => // STRING/BINARY
           val len = length()
           pos += len

@@ -29,4 +29,18 @@ class AttrWriterSiteSpec extends AnyFunSuite {
     val elsewhere = sites.filterNot(_._1.endsWith(Paths.get("operators", "FieldRef.scala")))
     assert(elsewhere.isEmpty, elsewhere.map { case (f, l) => s"$f:$l" }.mkString("\n"))
   }
+
+  test("LimitTypedMaps( and HashTypedMaps( appear outside functions/ only in operators/FieldRef.scala") {
+    val root = Paths.get("src/main")
+    val kernels = root.resolve(Paths.get("scala", "graft", "functions"))
+    val sites = Files.walk(root).iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.startsWith(kernels)).toSeq.flatMap { f =>
+        val lines = Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
+        lines.indices.filter(i => lines(i).contains("LimitTypedMaps(") || lines(i).contains("HashTypedMaps("))
+          .map(i => (f, i + 1))
+      }
+    assert(sites.nonEmpty)
+    val elsewhere = sites.filterNot(_._1.endsWith(Paths.get("operators", "FieldRef.scala")))
+    assert(elsewhere.isEmpty, elsewhere.map { case (f, l) => s"$f:$l" }.mkString("\n"))
+  }
 }

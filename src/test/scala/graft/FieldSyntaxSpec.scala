@@ -74,4 +74,14 @@ class FieldSyntaxSpec extends AnyFunSuite {
     // Go %v prints 0.0001, 1.23456785e+07, 1e+21 and 3
     assert(keys.indices.map(row.getString) == Seq("1.0E-4", "1.23456785E7", "1.0E21", "3"))
   }
+
+  test("stringifyNumber and its row-level twin GoPercentV.float print the same") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val values = Seq(3.0, 1e-4, 12345678.5, 1e21, math.pow(2, 63), -0.0,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val got = values.toDF("d").select(FieldCols.stringifyNumber(org.apache.spark.sql.functions.col("d")))
+      .collect().map(_.getString(0)).toSeq
+    assert(got == values.map(graft.functions.GoPercentV.float))
+  }
 }

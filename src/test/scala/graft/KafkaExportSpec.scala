@@ -123,6 +123,18 @@ class KafkaExportSpec extends SparkSuite {
     assert(KafkaExport.rawBodyBytes(RawBody.Empty) === None)
   }
 
+  test("rawBodyBytes: doubles print as json.Marshal does; NaN and Inf have no payload") {
+    import KafkaExport.RawBody
+    def s(d: Double): Option[String] =
+      KafkaExport.rawBodyBytes(RawBody.Dbl(d)).map(new String(_, "UTF-8"))
+    assert(s(12345678.5) === Some("12345678.5"))
+    assert(s(1e-4) === Some("0.0001"))
+    assert(s(1e21) === Some("1e+21"))
+    assert(s(Double.NaN) === None)
+    assert(s(Double.PositiveInfinity) === None)
+    assert(s(Double.NegativeInfinity) === None)
+  }
+
   // ---- topics --------------------------------------------------------------
 
   test("tenant topic prefixes (utils.go getKafkaTopicPrefixFromClientMetadata)") {

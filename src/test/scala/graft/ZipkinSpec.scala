@@ -252,6 +252,35 @@ class ZipkinSpec extends SparkSuite {
     assert(r.get.left.exists(_.isInstanceOf[IllegalArgumentException]), r)
   }
 
+  test("thrift: every strict prefix of a valid message throws IllegalArgumentException") {
+    import spark.implicits._
+    val w = new TW
+    w.u8(12).i32(2)
+    w.field(10, 1).i64(0x0102030405060708L)
+    w.field(11, 3).str("call")
+    w.field(10, 4).i64(9L)
+    w.field(15, 6).u8(12).i32(1)
+    w.field(10, 1).i64(1000L); w.field(11, 2).str("cs")
+    w.field(12, 3); thriftEndpoint(w, (10 << 24) | 1, 8080, "caller")
+    w.stop()
+    w.field(15, 8).u8(12).i32(1)
+    w.field(11, 1).str("k"); w.field(11, 2).bin(Array[Byte](1)); w.field(8, 3).i32(0); w.stop()
+    w.field(2, 9).u8(1) // debug
+    // unknown fields of every fixed-width type, skipped
+    w.field(2, 90).u8(0); w.field(3, 91).u8(7); w.field(4, 92).i64(1L)
+    w.field(6, 93).i16(5); w.field(8, 94).i32(6); w.field(10, 95).i64(7L)
+    w.stop()
+    w.field(11, 3).str("second")
+    w.stop()
+    val msg = w.bytes
+    assert(Zipkin.parseThriftV1(msg).map(_.name) === Seq("call", "second"))
+    (0 until msg.length).foreach { n =>
+      intercept[IllegalArgumentException](Zipkin.parseThriftV1(msg.take(n)))
+    }
+    val prefixes = Seq(1, msg.length / 2, msg.length - 1).map(msg.take)
+    assert(Zipkin.fromKafkaZipkin(prefixes.toDF("value"), "zipkin_thrift").count() === 0L)
+  }
+
   test("frame-level decode for all three encodings; malformed messages dropped") {
     import spark.implicits._
     val protoBytes = {
