@@ -37,8 +37,7 @@ final class NearestCentroidWorker(centroids: Array[Array[Double]])
         d += diff * diff
         i += 1
       }
-      val e6 = BigDecimal(d * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      val e6 = DecimalRound.e6(d)
       if (e6 < bestE6) { bestE6 = e6; best = c } // ties keep the lower cluster
       c += 1
     }
@@ -94,8 +93,7 @@ final class CentroidDistsWorker(centroids: Array[Array[Double]])
           d += diff * diff
           i += 1
         }
-        out(c) = BigDecimal(d * 1e6)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        out(c) = DecimalRound.e6(d)
         c += 1
       }
     } else { java.util.Arrays.fill(out, Long.MaxValue) }

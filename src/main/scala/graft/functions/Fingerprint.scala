@@ -195,7 +195,8 @@ object FnvOverBytes {
   * + `utils/fingerprint/hash.go:32-52` FingerprintHash +
   * `exporter.go:81-89` flattenJSONToStringMap):
   *  - fingerprint = FNV-1a over name-sorted `k`,0xFF,`%v(value)`,0xFF of ALL
-  *    (non-skipped) attributes regardless of type;
+  *    (non-skipped) attributes regardless of type, a number as
+  *    [[GoFloat.int64Or]] `percentV` (SURVEY rows 250, 385);
   *  - the stored map keeps ONLY string-valued attributes (numbers/bools are
   *    in the fingerprint but dropped from the map — faithful to
   *    flattenJSONToStringMap's `case string` switch).
@@ -237,7 +238,7 @@ final class AttrsMetaWorker(skipKeys: Array[String]) extends Serializable {
       }
     }
     addMap(0, v => v.toString, isString = true)
-    addMap(1, v => GoPercentV.float(v.asInstanceOf[Double]), isString = false)
+    addMap(1, v => GoFloat.int64Or(v.asInstanceOf[Double], GoFloat.percentV), isString = false)
     addMap(2, v => v.toString, isString = false)
 
     val sorted = entries.sortBy(_._1)

@@ -115,8 +115,7 @@ final class HllStatsWorker(m: Int) extends Serializable {
     val est =
       if (raw <= 2.5 * md && nZero > 0) md * math.log(md / nZero)
       else raw
-    val rounded = BigDecimal(est)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val rounded = DecimalRound.round(est, 6)
     new GenericInternalRow(Array[Any](nZero, sumPow,
       UTF8String.fromString(sb.toString), rounded))
   }

@@ -45,8 +45,7 @@ final class LmScoreWorker(
     val cb = { val v = bi.get(key); if (v == null) 0L else v.longValue() }
     val cu = { val v = uni.get(w1); if (v == null) 0L else v.longValue() }
     val lp = math.log((cb + 1.0) / (cu + vTot)) / LN2 // vTot = V + 1 (<unk>)
-    val e6 = BigDecimal(lp * 1e6)
-      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    val e6 = DecimalRound.e6(lp)
     memo.put(key, e6)
     e6
   }

@@ -253,8 +253,10 @@ object MapDropNullValues {
 }
 
 /** Force-stringify the three typed attribute maps into ONE MAP<STRING,STRING>
-  * (the resource-attrs-at-the-sink rule): numbers print as
-  * [[GoPercentV.float]] does and booleans as true/false. Replaces
+  * (the resource-attrs-at-the-sink rule): numbers print as pdata's
+  * `Value.AsString` prints them, `strconv.FormatFloat(f, 'f', -1, 64)`
+  * ([[GoFloat.int64Or]] `fixed`, SURVEY rows 79 and 408), and booleans as
+  * true/false. Replaces
   * `map_concat(strings, transform_values(numbers, ...),
   * transform_values(bools, ...))`: `transform_values` is a CodegenFallback
   * HOF and one of them de-codegens the whole ingest projection. NULL typed
@@ -291,7 +293,7 @@ object StringifyTypedMapsKernel extends Serializable {
         outK(o) = ks.getUTF8String(i)
         outV(o) =
           if (vs.isNullAt(i)) null
-          else UTF8String.fromString(GoPercentV.float(vs.getDouble(i)))
+          else UTF8String.fromString(GoFloat.int64Or(vs.getDouble(i), GoFloat.fixed))
         o += 1; i += 1
       }
     }

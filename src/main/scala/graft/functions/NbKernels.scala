@@ -48,8 +48,7 @@ final class NbScoreWorker(
     while (c < classes.length) {
       val n = if (cnt == null) 0L else cnt(c)
       val lp = math.log((n + 1.0) / (classTokTotals(c) + vTot)) / LN2
-      out(c) = BigDecimal(lp * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      out(c) = DecimalRound.e6(lp)
       c += 1
     }
     memo.put(w, out)

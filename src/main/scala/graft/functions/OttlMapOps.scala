@@ -177,7 +177,9 @@ object LimitTypedMaps {
 /** The attributes processor's pattern `hash` over the three typed maps
   * jointly: each value whose key matches `pattern` (unanchored find)
   * becomes the lowercase SHA-256 hex of its string form, numbers rendered
-  * by [[GoPercentV.float]] and bools as true/false. Hashed number and bool
+  * as `%v` prints a typed number-map value ([[GoFloat.int64Or]]
+  * `percentV`; rendering non-string inputs before hashing is SURVEY row
+  * 423's documented deviation), and bools as true/false. Hashed number and bool
   * entries move to the end of the string map, strings first. Returns
   * `struct(strings, numbers, bools)`; like the `map_concat` it replaces,
   * the string map is null when any input map is.
@@ -191,7 +193,7 @@ final class HashTypedMapsWorker(pattern: String) extends Serializable {
     org.apache.commons.codec.digest.DigestUtils.sha256Hex(s.getBytes(StandardCharsets.UTF_8)))
   private val hashString: (UTF8String, Any) => Any = (k, v) => if (hit(k)) sha256(v.toString) else v
   private val hashNumber: (UTF8String, Any) => Any =
-    (_, v) => sha256(GoPercentV.float(v.asInstanceOf[Double]))
+    (_, v) => sha256(GoFloat.int64Or(v.asInstanceOf[Double], GoFloat.percentV))
   private val hashBool: (UTF8String, Any) => Any = (_, v) => sha256(v.toString)
 
   def hash(strings: MapData, numbers: MapData, bools: MapData): InternalRow = {

@@ -433,47 +433,3 @@ object PrefixSums {
   def apply(c: Column): Column =
     ExpressionUtils.column(PrefixSums(ExpressionUtils.expression(c)))
 }
-
-/** Go `strconv.FormatFloat(f, 'f', -1, 64)` — shortest decimal, NO
-  * exponent — used for `le` bucket bounds and summary `quantile` label
-  * values (exporter.go:602, :820). Spark's cast(double as string) emits
-  * Java Double.toString ("1.0E7", "0.001" vs "1E-3") which diverges.
-  */
-object GoFormatFloatKernel extends Serializable {
-  def format(d: Double): UTF8String = {
-    if (d == java.lang.Double.POSITIVE_INFINITY) return UTF8String.fromString("+Inf")
-    if (d == java.lang.Double.NEGATIVE_INFINITY) return UTF8String.fromString("-Inf")
-    if (d.isNaN) return UTF8String.fromString("NaN")
-    // shortest round-trip decimal without exponent: BigDecimal of the
-    // shortest repr, rendered plain
-    val shortest = java.lang.Double.toString(d)
-    val bd = new java.math.BigDecimal(shortest)
-    UTF8String.fromString(bd.stripTrailingZeros().toPlainString)
-  }
-}
-
-/** This engine's row-level `fmt.Sprintf("%v")` of a float64: an integral
-  * value prints as its long (`3.0` -> `3`), anything else in Java's
-  * `Double.toString` form (`1.0E-4`, where Go prints `0.0001`). Its Column
-  * twin is [[graft.operators.FieldCols.stringifyNumber]].
-  */
-object GoPercentV {
-  def float(d: Double): String = {
-    val l = d.toLong
-    if (l.toDouble == d) java.lang.Long.toString(l) else java.lang.Double.toString(d)
-  }
-}
-
-case class GoFormatFloat(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with InvokeKernel {
-  protected def kernel = GoFormatFloatKernel
-  protected def method = "format"
-  override def dataType: DataType = StringType
-  override protected def withNewChildInternal(newChild: Expression): GoFormatFloat =
-    copy(child = newChild)
-}
-
-object GoFormatFloat {
-  def apply(c: Column): Column =
-    ExpressionUtils.column(GoFormatFloat(ExpressionUtils.expression(c)))
-}

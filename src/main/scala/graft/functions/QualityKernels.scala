@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `[^A-Za-z0-9\s]` / `[A-Za-z]` match per CODE POINT; Java-regex `\s`
   *    (no UNICODE flags) is exactly { space, \t, \n, \x0B, \f, \r };
   *  - `trim` strips 0x20 only; `split(s, "\s+")` has limit -1;
-  *  - `round(x, n)` is `BigDecimal.valueOf(x).setScale(n, HALF_UP)` — the
-  *    Catalyst Round double path;
+  *  - `round(x, n)` is [[DecimalRound.round]], the Catalyst Round double
+  *    path (`BigDecimal.valueOf(x).setScale(n, HALF_UP)`);
   *  - score terms sum left-associated exactly as the column tree does.
   */
 final class QualityStatsWorker(stopwords: Array[String]) extends Serializable {
@@ -33,10 +33,6 @@ final class QualityStatsWorker(stopwords: Array[String]) extends Serializable {
     stopwords.foreach(s.add)
     s
   }
-
-  private def round(x: Double, scale: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
   private def isWsClass(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0b || cp == '\f' || cp == '\r'
@@ -75,14 +71,14 @@ final class QualityStatsWorker(stopwords: Array[String]) extends Serializable {
     }
 
     val avgWordLen =
-      if (nWords > 0) round((nChars - (nWords - 1)).toDouble / nWords, 4) else 0.0
-    val punctRatio = if (nChars > 0) round(nPunct.toDouble / nChars, 6) else 0.0
-    val alphaRatio = if (nChars > 0) round(nAlpha.toDouble / nChars, 6) else 0.0
-    val stopRatio = if (nWords > 0) round(nStop.toDouble / nWords, 6) else 0.0
+      if (nWords > 0) DecimalRound.round((nChars - (nWords - 1)).toDouble / nWords, 4) else 0.0
+    val punctRatio = if (nChars > 0) DecimalRound.round(nPunct.toDouble / nChars, 6) else 0.0
+    val alphaRatio = if (nChars > 0) DecimalRound.round(nAlpha.toDouble / nChars, 6) else 0.0
+    val stopRatio = if (nWords > 0) DecimalRound.round(nStop.toDouble / nWords, 6) else 0.0
     val x = alphaRatio * 0.5 +
       math.min(stopRatio * 4.0, 1.0) * 0.3 +
       (1.0 - math.min(punctRatio * 5.0, 1.0)) * 0.2
-    val score = round(math.max(0.0, math.min(1.0, x)), 6)
+    val score = DecimalRound.round(math.max(0.0, math.min(1.0, x)), 6)
 
     new GenericInternalRow(Array[Any](
       nChars.toLong, nWords.toLong, avgWordLen, punctRatio, alphaRatio,

@@ -134,8 +134,7 @@ final class RepetitionWorker extends Serializable {
     round6(dup.toDouble / positions)
   }
 
-  private def round6(d: Double): Double =
-    BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def round6(d: Double): Double = DecimalRound.round(d, 6)
 }
 
 /** `repetition_stats(text)` -> struct of the 8 repetition signals. */

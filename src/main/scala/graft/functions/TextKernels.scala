@@ -116,8 +116,7 @@ final class CharEntropyWorker extends Serializable {
         while (it.hasNext) {
           val k = it.next()(0)
           val lg = math.log(n.toDouble / k.toDouble) / LN2
-          val e6 = BigDecimal(lg * 1e6)
-            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+          val e6 = DecimalRound.e6(lg)
           hSum += k * e6
         }
       }

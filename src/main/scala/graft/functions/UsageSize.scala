@@ -7,42 +7,14 @@ import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Go `encoding/json` float64 rendering (encode.go floatEncoder): shortest
-  * round-trip decimal, `'f'` format unless `abs < 1e-6 || abs >= 1e21`
-  * (then `'g'`), with json's exponent cleanup (`e-07` -> `e-7`). Integral
-  * doubles render without a fraction (`5.0` -> `"5"`), exactly how an int64
-  * attribute marshals — which is why the typed-split engine can size raw
-  * attribute maps without tracking int-vs-double. Returns null for NaN/Inf
-  * (Go json.Marshal errors on non-finite floats; the metering sizer then
-  * records size 0 for the whole map — json.go SizeOfMapStringAny).
-  */
-object GoJsonFloatKernel extends Serializable {
-  def format(d: Double): UTF8String = {
-    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) return null
-    val abs = math.abs(d)
-    if (abs != 0.0 && (abs < 1e-6 || abs >= 1e21)) {
-      // 'g' branch. Java's shortest repr is already exponent-form here
-      // (Java switches at >=1e7 / <1e-3, both inside this range).
-      val s = java.lang.Double.toString(d)
-      val ei = s.indexOf('E')
-      var mant = s.substring(0, ei)
-      if (mant.endsWith(".0")) mant = mant.substring(0, mant.length - 2)
-      val exp = Integer.parseInt(s.substring(ei + 1))
-      // strconv pads single-digit exponents (e-07) and json strips the pad
-      // back off; |exp| here is always >= 7 so the net result is unpadded
-      val es = if (exp >= 0) "e+" + exp else "e-" + (-exp)
-      UTF8String.fromString(mant + es)
-    } else GoFormatFloatKernel.format(d)
-  }
-}
-
 /** Go-JSON serialization of a raw (typed) attribute map, reconstructed from
   * this engine's typed split: what `json.Marshal(record.Attributes().AsRaw())`
   * yields in the logs exporter's usage sizer (clickhouselogsexporter/
   * exporter.go:719) and the meter connector's logs sizer (pkg/metering/
   * json.go:46-68 SizeOfMapStringAny) — keys sorted in byte order (Go sorts
-  * map keys), Go string escaping (HTML escapes on), numbers via
-  * [[GoJsonFloatKernel]], bools bare. Returns null when any number is
+  * map keys), Go string escaping (HTML escapes on), numbers as
+  * `json.Marshal` prints a float64 ([[GoFloat.json]], SURVEY row 369),
+  * bools bare. Returns null when any number is
   * NaN/Inf (json.Marshal error => the sizer counts 0 bytes for the map).
   *
   * Precision caveat (documented divergence): int64 attributes beyond 2^53
@@ -84,11 +56,11 @@ object TypedAttrsGoJsonKernel extends Serializable {
       while (i < nn) {
         if (vs.isNullAt(i)) { keys(o) = ks.getUTF8String(i); vals(o) = "null"; o += 1 }
         else {
-          val f = GoJsonFloatKernel.format(vs.getDouble(i))
+          val f = GoFloat.json(vs.getDouble(i))
           if (f == null) {
             if (!dropNonFinite) return null // marshal error parity
             // IsValidFloat filter: entry silently dropped
-          } else { keys(o) = ks.getUTF8String(i); vals(o) = f.toString; o += 1 }
+          } else { keys(o) = ks.getUTF8String(i); vals(o) = f; o += 1 }
         }
         i += 1
       }

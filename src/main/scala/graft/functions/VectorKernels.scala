@@ -116,8 +116,7 @@ object VectorKernelsImpl extends Serializable {
     val out = new Array[Long](dOut)
     var i = 0
     while (i < dIn) {
-      val q = BigDecimal(v.getFloat(i).toDouble * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      val q = DecimalRound.e6(v.getFloat(i).toDouble)
       val row = m(i)
       var j = 0
       while (j < dOut) { out(j) += row(j) * q; j += 1 }

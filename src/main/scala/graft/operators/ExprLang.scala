@@ -96,7 +96,11 @@ object ExprLang {
   private case object LNil extends V
   private case class CTypeName(c: Column) extends V // result of type(x)
 
-  /** Render any V as a string Column. */
+  /** Render any V as a string Column, as expr-lang's `string(x)` does with
+    * `fmt.Sprintf("%v")`: an int literal as its int, a float literal as
+    * [[graft.functions.GoFloat.percentV]] (`1e-4` is `0.0001`), a number
+    * Column as [[FieldCols.stringifyNumber]].
+    */
   private def asStr(v: V): Column = v match {
     case Field(r) => FieldCols.readString(r)
     case CStr(c) => c
@@ -104,7 +108,7 @@ object ExprLang {
     case CBool(c) => c.cast("string")
     case LStr(s) => lit(s)
     case LNum(d, true) => lit(d.toLong.toString)
-    case LNum(d, false) => lit(d.toString)
+    case LNum(d, false) => lit(graft.functions.GoFloat.percentV(d))
     case CTypeName(c) => c
     case LNil => lit(null).cast("string")
     case LList(_) => throw new IllegalArgumentException("list not usable as string")

@@ -131,26 +131,15 @@ object FieldCols {
       throw new IllegalArgumentException("cannot read whole attributes/resource as string")
   }
 
-  /** The engine's one Go-`%v` renderer of a float64 Column: integral
-    * values print without decimals (`3.0` -> `3`), null stays null. A
-    * non-integral value, or one past the long range, prints in Java's
-    * `Double.toString` form, where Go's `%v` (`strconv` `'g'`, shortest)
-    * differs in the exponent rule and spelling:
-    * {{{
-    *   value        here            Go %v
-    *   1e-4         1.0E-4          0.0001
-    *   12345678.5   1.23456785E7    1.23456785e+07
-    *   1e21         1.0E21          1e+21
-    * }}}
-    * `FieldSyntaxSpec` pins the left column, and that this prints what its
-    * row-level twin [[graft.functions.GoPercentV.float]] does. Span-mapper
-    * resource writes render numbers the `AsString` way instead
-    * ([[graft.functions.GoFormatFloat]]).
+  /** A number attribute read as a string: the stanza entry's
+    * `fmt.Sprintf("%v")` of the value (SURVEY row 358), which is
+    * [[graft.functions.GoFloat.int64Or]] `percentV` (`0.0001`,
+    * `1.23456785e+07`, `1e+21`). The number map holds int64 and float64
+    * values alike, so an integral value prints as the int64 it may have been
+    * (`3`, not Go's float64 `%v` of 1234567, `1.234567e+06`). Null stays
+    * null.
     */
-  def stringifyNumber(c: Column): Column =
-    when(c.isNotNull,
-      when(c === c.cast("long").cast("double"), c.cast("long").cast("string"))
-        .otherwise(c.cast("string")))
+  def stringifyNumber(c: Column): Column = graft.functions.GoNumberText(c, "percentV")
 
   /** Read as DOUBLE where available (attributes_number first). */
   def readNumber(f: FieldRef): Column = f match {
@@ -244,15 +233,17 @@ object FieldCols {
     case other => throw new IllegalArgumentException(s"cannot set field $other")
   }
 
+  /** All column updates needed to set `f` to number value `v`. A string
+    * destination (body, resource) takes the number as [[stringifyNumber]]
+    * prints it; a body path parses that text back as a JSON number leaf.
+    */
   def setNumber(f: FieldRef, v: Column): Seq[(String, Column)] = f match {
     case Attr(keys) => setAttr(keys, "attributes_number", v.cast("double"))
     case Top(n) => Seq(n -> v.cast(topType(n)))
     case BodyPath(keys) =>
-      // Go-rendered number (integral values print without decimals) parsed
-      // back as a JSON number, so the body JSON carries a number leaf
       Seq("body" -> graft.functions.BodyEdit.set(col("body"), keys,
         stringifyNumber(v.cast("double"))))
-    case other => setString(other, v.cast("string"))
+    case other => setString(other, stringifyNumber(v.cast("double")))
   }
 
   def setBool(f: FieldRef, v: Column): Seq[(String, Column)] = f match {

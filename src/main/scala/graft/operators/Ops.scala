@@ -295,8 +295,10 @@ object Ops {
               case Attr(_) | BodyPath(_) => FieldCols.setNumber(field, lit(node.asDouble()))
               case Top(n) if FieldCols.isNumericTop(n) =>
                 FieldCols.setNumber(field, lit(node.asDouble()))
-              case other => // string-typed destination: Go %v rendering
-                FieldCols.setString(other, lit(node.asText()))
+              case other => // string-typed destination: Go %v (SURVEY row 358)
+                FieldCols.setString(other, lit(
+                  if (node.isIntegralNumber) node.asText()
+                  else graft.functions.GoFloat.percentV(node.asDouble())))
             }
             else if (node.isBoolean) FieldCols.setBool(field, lit(node.asBoolean()))
             else if (node.isTextual) FieldCols.setString(field, lit(node.asText()))

@@ -379,6 +379,18 @@ object OttlStatements {
     (sb.toString, casts.toSeq)
   }
 
+  /** A compiled value as text, as `ottl.StringLikeGetter` gives it to the
+    * string converters (Concat, String, the hashes, IsMatch, ...): a float64
+    * the way jsoniter marshals it, which is `json.Marshal`'s layout, and an
+    * int64 as its digits, so a number-kind value prints as
+    * [[graft.functions.GoFloat.int64Or]] `json` (SURVEY rows 297, 412); time
+    * and duration values are int64 nanoseconds.
+    */
+  private def asText(v: (Column, String)): Column = v match {
+    case (c, "number") => graft.functions.GoNumberText(c, "json")
+    case (c, _) => c.cast("string")
+  }
+
   /** Compile a value (literal / path / converter call) to a Column and its
     * type kind for the typed-map write dispatch:
     * `"string" | "number" | "bool"` (literals and scalar converters),
@@ -412,6 +424,7 @@ object OttlStatements {
       throw new IllegalArgumentException("a list literal is only valid inside a converter call")
     case VFunc(name, args) =>
       def one(i: Int): Column = compileValue(args(i), context)._1
+      def text(i: Int): Column = asText(compileValue(args(i), context))
       def str(i: Int): String = args(i) match {
         case VStr(s) => s
         case other => throw new IllegalArgumentException(s"$name arg ${i + 1} must be a string literal, got $other")
@@ -435,7 +448,7 @@ object OttlStatements {
           // Concat(values[], delimiter): nil values render empty
           require(args.size == 2, "Concat needs ([values], delimiter)")
           val items = args.head match {
-            case VList(is) => is.map(i => coalesce(compileValue(i, context)._1.cast("string"), lit("")))
+            case VList(is) => is.map(i => coalesce(asText(compileValue(i, context)), lit("")))
             case other => throw new IllegalArgumentException(s"Concat needs a list, got $other")
           }
           (concat_ws(str(1), items: _*), "string")
@@ -449,25 +462,25 @@ object OttlStatements {
           (one(0).cast("double"), "number")
         case "Len" =>
           require(args.size == 1, "Len needs 1 arg")
-          (length(one(0).cast("string")).cast("double"), "number")
+          (length(text(0)).cast("double"), "number")
         case "Substring" =>
           // Substring(target, start, length), 0-based start
           require(args.size == 3, "Substring needs 3 args")
-          (substring(one(0).cast("string"), num(1) + 1, num(2)), "string")
+          (substring(text(0), num(1) + 1, num(2)), "string")
         case "ConvertCase" =>
           require(args.size == 2, "ConvertCase needs 2 args")
           str(1) match {
-            case "lower" => (graft.functions.FastLower(one(0).cast("string")), "string")
-            case "upper" => (upper(one(0).cast("string")), "string")
+            case "lower" => (graft.functions.FastLower(text(0)), "string")
+            case "upper" => (upper(text(0)), "string")
             case "snake" =>
               // strcase.ToSnake shape: delimiters -> _, case boundaries -> _
-              val s0 = regexp_replace(one(0).cast("string"), "[\\s-]+", "_")
+              val s0 = regexp_replace(text(0), "[\\s-]+", "_")
               val s1 = regexp_replace(s0, "([a-z0-9])([A-Z])", "$1_$2")
               (lower(regexp_replace(s1, "([A-Z]+)([A-Z][a-z])", "$1_$2")), "string")
             case "camel" =>
               // strcase.ToCamel shape: UpperCamel over separated tokens
               (regexp_replace(
-                initcap(regexp_replace(one(0).cast("string"), "[_\\s-]+", " ")),
+                initcap(regexp_replace(text(0), "[_\\s-]+", " ")),
                 " ", ""), "string")
             case other => throw new IllegalArgumentException(
               s"ConvertCase supports lower|upper|snake|camel, got: $other")
@@ -475,10 +488,10 @@ object OttlStatements {
         case "Trim" =>
           // Trim(target, replacement?): strips the cutset (default " ")
           require(args.size == 1 || args.size == 2, "Trim needs 1-2 args")
-          (trim(one(0).cast("string"), if (args.size == 2) str(1) else " "), "string")
+          (trim(text(0), if (args.size == 2) str(1) else " "), "string")
         case "Split" =>
           require(args.size == 2, "Split needs 2 args")
-          (to_json(split(one(0).cast("string"),
+          (to_json(split(text(0),
             java.util.regex.Pattern.quote(str(1)))), "string")
         case "Format" =>
           // Format(formatString, [args]) — Go Sprintf verbs
@@ -490,40 +503,44 @@ object OttlStatements {
           val (javaFmt, casts) = goFormatToJava(str(0))
           require(casts.size == items.size,
             s"Format: ${casts.size} verbs but ${items.size} args")
+          // Sprintf's %v of a number is fmt's: GoFloat.int64Or percentV
           val cols = items.zip(casts).map { case (it, t) =>
-            compileValue(it, context)._1.cast(t)
+            compileValue(it, context) match {
+              case (c, "number") if t == "string" => graft.functions.GoNumberText(c, "percentV")
+              case (c, _) => c.cast(t)
+            }
           }
           (format_string(javaFmt, cols: _*), "string")
         case "String" =>
           require(args.size == 1, "String needs 1 arg")
-          (one(0).cast("string"), "string")
+          (text(0), "string")
         case "SHA256" =>
           require(args.size == 1, "SHA256 needs 1 arg")
-          (sha2(one(0).cast("string"), 256), "string")
+          (sha2(text(0), 256), "string")
         case "SHA512" =>
           require(args.size == 1, "SHA512 needs 1 arg")
-          (sha2(one(0).cast("string"), 512), "string")
+          (sha2(text(0), 512), "string")
         case "SHA1" =>
           require(args.size == 1, "SHA1 needs 1 arg")
-          (sha1(one(0).cast("string")), "string")
+          (sha1(text(0)), "string")
         case "MD5" =>
           require(args.size == 1, "MD5 needs 1 arg")
-          (md5(one(0).cast("string")), "string")
+          (md5(text(0)), "string")
         case "FNV" =>
           // FNV-1a 64 over the UTF-8 bytes, int64 like the upstream hash/fnv
           require(args.size == 1, "FNV needs 1 arg")
           (graft.functions.FnvOverBytes(
-            encode(one(0).cast("string"), "UTF-8"), 0xcbf29ce484222325L), "number")
+            encode(text(0), "UTF-8"), 0xcbf29ce484222325L), "number")
         case "Hex" =>
           // hex.EncodeToString of the string's bytes (lowercase)
           require(args.size == 1, "Hex needs 1 arg")
-          (lower(hex(one(0).cast("string"))), "string")
+          (lower(hex(text(0))), "string")
         case "Log" =>
           require(args.size == 1, "Log needs 1 arg")
           (log(one(0).cast("double")), "number")
         case "IsMatch" =>
           require(args.size == 2, "IsMatch needs 2 args")
-          (one(0).cast("string").rlike(str(1)), "bool")
+          (text(0).rlike(str(1)), "bool")
         case "IsString" | "IsInt" | "IsDouble" | "IsBool" =>
           require(args.size == 1, s"$name needs 1 arg")
           val want = name match {
@@ -553,7 +570,7 @@ object OttlStatements {
           val prefix = if (name == "IsMap") "{" else "["
           val read = args.head match {
             case VPath(p) => FieldCols.readString(pathToRef(p, context))
-            case a => compileValue(a, context)._1.cast("string")
+            case a => asText(compileValue(a, context))
           }
           (coalesce(ltrim(read).startsWith(prefix), lit(false)), "bool")
         // ---- time & duration ----------------------------------------------
@@ -570,7 +587,7 @@ object OttlStatements {
                 org.apache.spark.unsafe.types.UTF8String.fromString(s))
               require(ns != null, s"invalid duration literal: $s")
               (lit(ns.longValue()), "duration")
-            case _ => (graft.functions.GoDurationParse(one(0).cast("string")), "duration")
+            case _ => (graft.functions.GoDurationParse(text(0)), "duration")
           }
         case "Unix" =>
           // Unix(seconds, nanoseconds?) -> time
@@ -629,22 +646,22 @@ object OttlStatements {
         // ---- map-valued (legal only under merge_maps) ----------------------
         case "ParseJSON" =>
           require(args.size == 1, "ParseJSON needs 1 arg")
-          (graft.functions.JsonTypedMaps.of(one(0).cast("string")), "maps")
+          (graft.functions.JsonTypedMaps.of(text(0)), "maps")
         case "ParseKeyValue" =>
           // ParseKeyValue(target, delimiter = "=", pair_delimiter = " ")
           require(args.nonEmpty && args.size <= 3, "ParseKeyValue needs 1-3 args")
-          (graft.functions.KeyValueMap(one(0).cast("string"),
+          (graft.functions.KeyValueMap(text(0),
             if (args.size >= 2) str(1) else "=",
             if (args.size >= 3) str(2) else " "), "map")
         case "ExtractPatterns" =>
           require(args.size == 2, "ExtractPatterns needs 2 args")
-          (graft.functions.RegexExtractNamedGroups(one(0).cast("string"), str(1)), "map")
+          (graft.functions.RegexExtractNamedGroups(text(0), str(1)), "map")
         case "ExtractGrokPatterns" =>
           // (target, pattern, namedCapturesOnly? — the engine always keeps
           // named captures only, the upstream default used in configs)
           require(args.size >= 2, "ExtractGrokPatterns needs 2+ args")
           val expanded = graft.functions.Grok.expand(str(1))
-          (graft.functions.RegexExtractNamedGroups(one(0).cast("string"),
+          (graft.functions.RegexExtractNamedGroups(text(0),
             expanded.regex), "map")
         case "Keys" | "Values" =>
           require(args.size == 1, s"$name needs 1 arg")
@@ -704,8 +721,11 @@ object OttlStatements {
             val updates = kind match {
               case "number" => FieldCols.setNumber(ref, c)
               // LONG nanos: exact on the long top-level time fields, float64
-              // through the number map (setNumber's per-target casts)
-              case "time" | "duration" => FieldCols.setNumber(ref, c)
+              // through the number map, their int64 digits in a string field
+              case "time" | "duration" => ref match {
+                case FieldRef.Body | _: FieldRef.Resource => FieldCols.setString(ref, c.cast("string"))
+                case _ => FieldCols.setNumber(ref, c)
+              }
               case "bool" => FieldCols.setBool(ref, c)
               case "map" | "maps" => throw new IllegalArgumentException(
                 s"${f.name} is map-valued — use merge_maps(target, ${f.name}(...), strategy)")

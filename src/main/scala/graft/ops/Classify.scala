@@ -62,7 +62,7 @@ object Classify {
     val nDocs = classRows.map(_.getLong(1)).sum
     val priorsE6 = classRows.map { r =>
       val lp = math.log(r.getLong(1).toDouble / nDocs) / math.log(2.0)
-      BigDecimal(lp * 1e6).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      graft.functions.DecimalRound.e6(lp)
     }
 
     val toks = corpus.select(labelCol.as("c"), explode(words(textCol)).as("w"))

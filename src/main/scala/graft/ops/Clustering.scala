@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.NearestCentroid
+import graft.functions.{DecimalRound, NearestCentroid}
 
 /** SemDeDup-style semantic clustering for training-data curation (Abbas et
   * al. 2023 cluster corpus embeddings with k-means, then dedup/sample
@@ -70,8 +70,7 @@ object Clustering {
         val next = centroids.map(_.clone()) // empty clusters keep previous
         sums.foreach { r =>
           val cl = r.getInt(0)
-          next(cl)(r.getInt(1)) = BigDecimal(r.getDouble(2) / r.getLong(3))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+          next(cl)(r.getInt(1)) = DecimalRound.round(r.getDouble(2) / r.getLong(3), 6)
         }
         centroids = next
       }
@@ -109,9 +108,7 @@ object Clustering {
         d += diff * diff
         i += 1
       }
-      val e6 = BigDecimal(d * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      (e6, cl)
+      (DecimalRound.e6(d), cl)
     }
     dists.sortBy(identity).take(nprobe).map(_._2).toSeq
   }

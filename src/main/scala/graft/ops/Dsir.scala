@@ -53,8 +53,7 @@ object Dsir {
     val ratio = Array.tabulate(buckets) { b =>
       val lp = math.log((cp.getOrElse(b.toLong, 0L) + 1.0) / tp)
       val lq = math.log((cq.getOrElse(b.toLong, 0L) + 1.0) / tq)
-      BigDecimal((lp - lq) * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      graft.functions.DecimalRound.e6(lp - lq)
     }
     DsirModel(ratio)
   }

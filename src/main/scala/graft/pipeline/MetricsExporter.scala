@@ -111,7 +111,8 @@ object MetricsExporter {
       "Gauge", lit("Unspecified"), lit(false), col("unit"))
 
     // bucket rows: cumulative counts per bound (exporter.go:594-649), le
-    // rendered with Go FormatFloat; +Inf carries the dp count. arrays_zip
+    // rendered with Go FormatFloat(f, 'f', -1, 64), GoFloat.fixed (SURVEY
+    // row 335); +Inf carries the dp count. arrays_zip
     // pads to the longest array — the null filter reproduces the reference's
     // min(len(bounds), len(counts)) loop bound.
     val buckets = base
@@ -169,6 +170,7 @@ object MetricsExporter {
       .withColumn("temporality", lit("Unspecified"))
       .withColumn("is_monotonic", lit(false))
       .withColumn("__extras", map(
+        // FormatFloat(q, 'f', -1, 64), GoFloat.fixed (SURVEY row 335)
         lit("quantile"), GoFormatFloat(col("__q.q")),
         lit("__temporality__"), col("temporality")))
       .drop("__q")

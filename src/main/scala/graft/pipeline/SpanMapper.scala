@@ -110,9 +110,11 @@ object SpanMapper {
   }
 
   /** The source's value in the `pcommon.Value.AsString` rendering that a
-    * resource-context target takes: numbers through Go's
-    * `strconv.FormatFloat(f, 'f', -1, 64)`, which other stringified reads
-    * in this engine ([[FieldCols.stringifyNumber]]) do not use.
+    * resource-context target takes: a number through Go's
+    * `strconv.FormatFloat(f, 'f', -1, 64)`, [[graft.functions.GoFloat.fixed]]
+    * ([[GoFormatFloat]]), as at every AsString site (SURVEY row 353). A
+    * stanza `%v` read ([[FieldCols.stringifyNumber]]) is another Go
+    * function and prints another layout.
     */
   private def asString(s: Source): Column =
     if (s.isResource) col(R).getItem(s.bare)

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GoFormatFloat, Histogram}
+import graft.functions.{GoFloat, GoFormatFloat, Histogram}
 
 /** The spanmetrics processor's five metric families
   * (`processor/signozspanmetricsprocessor/processor.go`), Spark-first: the
@@ -97,7 +97,8 @@ object SpanMetrics {
 
   /** Dimension value with the span-attr-first / stable-name / resource /
     * default chain. Numeric span attrs stringify the Go way
-    * (`pcommon.Value.AsString` -> FormatFloat shortest form).
+    * (`pcommon.Value.AsString` -> `strconv.FormatFloat(f, 'f', -1, 64)`,
+    * [[GoFloat.fixed]] via [[GoFormatFloat]]; SURVEY row 350).
     */
   private def dimValue(d: Dimension): Column = {
     def s(k: String) = col("attributes_string").getItem(k)
@@ -160,7 +161,8 @@ object SpanMetrics {
     val bucketAggs = bounds.zipWithIndex.map { case (b, i) =>
       sum(when(col("latency_ms") <= b, 1L).otherwise(0L)).as(s"bucket_$i")
     }
-    val leNames = bounds.map(b => graft.functions.GoFormatFloatKernel.format(b).toString) :+ "+Inf"
+    // `le` labels: FormatFloat(bound, 'f', -1, 64), GoFloat.fixed (SURVEY row 350)
+    val leNames = bounds.map(GoFloat.fixed) :+ "+Inf"
     val aggs = count(lit(1)).as("call_count") +:
       sum(col("latency_ms")).as("sum_ms") +: bucketAggs
     val grouped = p.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)

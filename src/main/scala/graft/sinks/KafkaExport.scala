@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GoJsonFloatKernel, JsonCanon}
+import graft.functions.{GoFloat, JsonCanon}
 import graft.sources.{Jaeger, OtlpJson, OtlpProtoEncode}
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanRow}
 
@@ -71,7 +71,8 @@ object KafkaExport {
 
   /** None = skip the message: an empty payload (`raw_marshaler.go:37-39`),
     * or a NaN/±Inf double body, for which `json.Marshal` returns an error
-    * and no payload exists. Doubles print as [[GoJsonFloatKernel]] does.
+    * and no payload exists. A double prints as `json.Marshal` prints it,
+    * [[GoFloat.json]]; no SURVEY row maps the raw marshaler.
     */
   def rawBodyBytes(b: RawBody): Option[Array[Byte]] = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
@@ -81,7 +82,7 @@ object KafkaExport {
       case RawBody.Str(s) => Some(JsonCanon.quote(s).getBytes(utf8))
       case RawBody.Bool(x) => Some((if (x) "true" else "false").getBytes(utf8))
       case RawBody.Int64(l) => Some(java.lang.Long.toString(l).getBytes(utf8))
-      case RawBody.Dbl(d) => Option(GoJsonFloatKernel.format(d)).map(_.getBytes)
+      case RawBody.Dbl(d) => Option(GoFloat.json(d)).map(_.getBytes(utf8))
     }
   }
 

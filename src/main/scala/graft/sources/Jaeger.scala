@@ -67,15 +67,16 @@ object Jaeger {
   final case class JaegerKV(key: String, vType: Int, vStr: String = "",
       vBool: Boolean = false, vInt64: Long = 0L, vFloat64: Double = 0.0,
       vBinary: Array[Byte] = null) {
-    /** pcommon.Value.AsString rendering for the engine's string maps. */
+    /** pcommon.Value.AsString rendering for the engine's string maps: a
+      * float64 through `strconv.FormatFloat(f, 'f', -1, 64)`, which is
+      * [[graft.functions.GoFloat.fixed]] as at every AsString site (SURVEY
+      * rows 350, 353, 410).
+      */
     def asString: String = vType match {
       case VType.STRING => vStr
       case VType.BOOL => if (vBool) "true" else "false"
       case VType.INT64 => vInt64.toString
-      case VType.FLOAT64 => graft.functions.GoJsonFloatKernel.format(vFloat64) match {
-        case null => "null"
-        case s => s.toString
-      }
+      case VType.FLOAT64 => graft.functions.GoFloat.fixed(vFloat64)
       case VType.BINARY =>
         if (vBinary == null) "" else java.util.Base64.getEncoder.encodeToString(vBinary)
       case _ => ""
@@ -463,8 +464,9 @@ object Jaeger {
         sb.append(",\"vType\":\"FLOAT64\"")
         if (kv.vFloat64 != 0.0) {
           sb.append(",\"vFloat64\":")
-          val f = graft.functions.GoJsonFloatKernel.format(kv.vFloat64)
-          sb.append(if (f == null) "0" else f.toString)
+          // gogo jsonpb prints a double as encoding/json does (SURVEY row 410)
+          val f = graft.functions.GoFloat.json(kv.vFloat64)
+          sb.append(if (f == null) "0" else f)
         }
       case VType.BINARY =>
         sb.append(",\"vType\":\"BINARY\"")

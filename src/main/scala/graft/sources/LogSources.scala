@@ -41,7 +41,7 @@ object LogSources {
       coalesce(stringifyAll(res), map().cast(LogSchema.mapSS)).as("resources_string")))
   }
 
-  // one codegen pass (Go-%v number formatting, true/false bools) replacing
+  // one codegen pass (AsString number formatting, true/false bools) replacing
   // map_concat over two `transform_values` — CodegenFallback HOFs that
   // de-codegen'd the whole json-body ingest projection
   private def stringifyAll(typedStruct: Column): Column =

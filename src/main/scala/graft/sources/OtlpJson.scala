@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.functions.GoJsonFloatKernel
+import graft.functions.GoFloat
 import graft.sources.OtlpEnvelope.{MetricKey, Scope, temporalityNum}
 import graft.sources.OtlpProto.{OtlpMetricRow, OtlpRow, OtlpSpanEvent, OtlpSpanLink, OtlpSpanRow}
 import graft.sources.ProtoWire.{nonNull, nonNullSeq, orEmpty}
@@ -21,8 +21,8 @@ import graft.sources.ProtoWire.{nonNull, nonNullSeq, orEmpty}
   *     aggregationTemporality) and fixed32 flags as JSON numbers;
   *   - `trace_id` / `span_id` / `parent_span_id` as lowercase hex strings
   *     (the OTLP spec's explicit deviation from protojson's base64);
-  *   - doubles as JSON numbers in Go strconv shortest form (the shared
-  *     [[GoJsonFloatKernel]]); non-finite values as protojson's quoted
+  *   - doubles as protojson's copy of `json.Marshal` prints them
+  *     ([[GoFloat.json]], SURVEY row 409); non-finite values as its quoted
   *     `"NaN"` / `"Infinity"` / `"-Infinity"`;
   *   - AnyValue as its oneof wrapper object (`{"stringValue": ...}`,
   *     int64 `intValue` again a string).
@@ -95,7 +95,7 @@ object OtlpJson {
       if (java.lang.Double.isNaN(v)) sb.append("\"NaN\"")
       else if (v == java.lang.Double.POSITIVE_INFINITY) sb.append("\"Infinity\"")
       else if (v == java.lang.Double.NEGATIVE_INFINITY) sb.append("\"-Infinity\"")
-      else sb.append(GoJsonFloatKernel.format(v).toString)
+      else sb.append(GoFloat.json(v))
       first = false
     }
     def toBytes: Array[Byte] =

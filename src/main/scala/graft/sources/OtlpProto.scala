@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 
+import graft.functions.GoFloat
 import graft.model.LogFrames
 import graft.sources.OtlpEnvelope.{Scope, decodeMessages}
 import graft.sources.ProtoWire.{Reader, idHex}
@@ -140,16 +141,18 @@ object OtlpProto {
     (key, v)
   }
 
-  /** Stringify an AnyValue (this engine's `fmt.Sprintf("%v")` convention:
-    * integral doubles print without decimals; arrays/kvlists as compact
-    * JSON with the exporter's canonical escaping; bytes base64 like pdata's
-    * `Value.AsString`).
+  /** Stringify an AnyValue the way pdata's `Value.AsString` does (body,
+    * resource and scope values, non-scalar attributes): a double through
+    * `strconv.FormatFloat(f, 'f', -1, 64)`, which is [[GoFloat.fixed]]
+    * (SURVEY rows 294 and 353); arrays and kvlists as compact JSON with the
+    * exporter's canonical escaping, their doubles as `json.Marshal` prints
+    * them ([[GoFloat.json]], `null` for NaN and ±Inf); bytes base64.
     */
   private def avToString(v: AV): String = v match {
     case AVStr(s) => s
     case AVBool(b) => if (b) "true" else "false"
     case AVInt(l) => java.lang.Long.toString(l)
-    case AVDouble(d) => graft.functions.GoPercentV.float(d)
+    case AVDouble(d) => GoFloat.fixed(d)
     case AVBytes(b) => java.util.Base64.getEncoder.encodeToString(b)
     case AVArr(vs) => vs.map(avToJson).mkString("[", ",", "]")
     case AVKv(vs) => vs.map { case (k, x) =>
@@ -162,7 +165,7 @@ object OtlpProto {
     case AVStr(s) => graft.functions.JsonCanon.quote(s)
     case AVBool(b) => if (b) "true" else "false"
     case AVInt(l) => java.lang.Long.toString(l)
-    case AVDouble(d) => avToString(AVDouble(d))
+    case AVDouble(d) => Option(GoFloat.json(d)).getOrElse("null")
     case AVBytes(b) =>
       graft.functions.JsonCanon.quote(java.util.Base64.getEncoder.encodeToString(b))
     case AVArr(_) | AVKv(_) => avToString(v)

@@ -513,9 +513,9 @@ object Zipkin {
       case 3 => bb.getInt.toString
       case 4 => bb.getLong.toString
       case 5 =>
-        graft.functions.GoJsonFloatKernel.format(bb.getDouble) match {
-          case null => "null"; case s => s.toString
-        }
+        // SURVEY row 411 does not settle the contrib v1 translator's float
+        // text; json.Marshal's layout stands until it does
+        Option(graft.functions.GoFloat.json(bb.getDouble)).getOrElse("null")
       case _ => new String(value, java.nio.charset.StandardCharsets.UTF_8)
     }
   }

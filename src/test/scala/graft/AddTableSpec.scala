@@ -77,6 +77,13 @@ class AddTableSpec extends SparkSuite {
     assert(res == Map("new" -> "1"))
   }
 
+  test("a float added to resource prints Go's %v") {
+    val (_, _, _, _, res) = run("""{"type":"add","field":"resource.new","value":0.0001}""")
+    assert(res == Map("new" -> "0.0001"))
+    val (_, _, _, _, big) = run("""{"type":"add","field":"resource.new","value":12345678.5}""")
+    assert(big == Map("new" -> "1.23456785e+07"))
+  }
+
   test("add_nested_to_attributes: map value stringifies into the string map") {
     val (_, s, _, _, _) = run(
       """{"type":"add","field":"attributes.new","value":{"nest":{"key":"val"}}}""")

@@ -28,6 +28,13 @@ class ExprLangSpec extends SparkSuite {
     df.select(ExprLang.boolExpr(expr).as("b")).collect().toSeq.map(_.getBoolean(0))
   }
 
+  test("string() of a float literal prints Go's %v") {
+    val df = LogFrames.fromBodies(spark, Seq("x"))
+    val got = df.select(ExprLang.stringExpr("string(0.0001)"), ExprLang.stringExpr("string(12345678.5)"),
+      ExprLang.stringExpr("string(3)")).head()
+    assert((got.getString(0), got.getString(1), got.getString(2)) == (("0.0001", "1.23456785e+07", "3")))
+  }
+
   test("like: the reference's own expr_test.go table rows (helper/expr_test.go:54-104)") {
     val cases = Seq( // (pattern, input, want)
       ("hello", "hello", true), ("world", "hello", false),

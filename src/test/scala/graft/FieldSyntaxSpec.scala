@@ -62,8 +62,7 @@ class FieldSyntaxSpec extends AnyFunSuite {
     }
   }
 
-  test("readString of a number attribute: integral values drop the decimals, " +
-      "others print in Java Double.toString form, not Go's %v") {
+  test("readString of a number attribute prints Go's %v") {
     val spark = TestSpark.spark
     import spark.implicits._
     val keys = Seq("small", "mid", "big", "whole")
@@ -71,17 +70,33 @@ class FieldSyntaxSpec extends AnyFunSuite {
       Map("small" -> 1e-4, "mid" -> 12345678.5, "big" -> 1e21, "whole" -> 3.0))
       .toDF("attributes_number"))
     val row = df.select(keys.map(k => FieldCols.readString(Attr(Seq(k)))): _*).head()
-    // Go %v prints 0.0001, 1.23456785e+07, 1e+21 and 3
-    assert(keys.indices.map(row.getString) == Seq("1.0E-4", "1.23456785E7", "1.0E21", "3"))
+    assert(keys.indices.map(row.getString) == Seq("0.0001", "1.23456785e+07", "1e+21", "3"))
   }
 
-  test("stringifyNumber and its row-level twin GoPercentV.float print the same") {
+  test("setNumber into a string field prints Go's %v") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val values = Seq(3.0, 1e-4, 12345678.5, 1e21, math.pow(2, 63), -0.0,
-      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    import org.apache.spark.sql.functions.lit
+    val df = graft.model.LogFrames.withDefaults(Seq("b").toDF("body"))
+    val updates = FieldCols.setNumber(Resource(Seq("whole")), lit(3.0)) ++
+      FieldCols.setNumber(Resource(Seq("small")), lit(1e-4)) ++
+      FieldCols.setNumber(Body, lit(12345678.5))
+    val row = updates.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
+      .select("resources_string", "body").head()
+    assert(row.getMap[String, String](0).toMap == Map("whole" -> "3", "small" -> "0.0001"))
+    assert(row.getString(1) == "1.23456785e+07")
+  }
+
+  test("stringifyNumber is GoFloat.int64Or under percentV") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val expected = Seq(3.0 -> "3", 1e-4 -> "0.0001", 12345678.5 -> "1.23456785e+07",
+      1e21 -> "1e+21", math.pow(2, 63) -> "9223372036854775807", -0.0 -> "-0",
+      Double.NaN -> "NaN", Double.PositiveInfinity -> "+Inf", Double.NegativeInfinity -> "-Inf")
+    val values = expected.map(_._1)
     val got = values.toDF("d").select(FieldCols.stringifyNumber(org.apache.spark.sql.functions.col("d")))
       .collect().map(_.getString(0)).toSeq
-    assert(got == values.map(graft.functions.GoPercentV.float))
+    assert(got == expected.map(_._2))
+    assert(got == values.map(graft.functions.GoFloat.int64Or(_, graft.functions.GoFloat.percentV)))
   }
 }

@@ -87,6 +87,8 @@ class KernelParitySpec extends SparkSuite {
     "PromLabelsJson" -> k(PromLabelsJson(e("s2"), e("ms"), e("ms2"), e("ms"))),
     "PrefixSums" -> k(PrefixSums(e("arr_l"))),
     "GoFormatFloat" -> k(GoFormatFloat(e("dbl"))),
+    "GoNumberText percentV" -> k(GoNumberText(e("dbl"), "percentV")),
+    "GoNumberText json" -> k(GoNumberText(e("dbl"), "json")),
     "QualityStats" -> k(QualityStats(e("s"), Seq("the", "a"))),
     "RegexExtractNamedGroups" -> k(RegexExtractNamedGroups(e("s"), "(?P<word>[a-z]+) (?P<num>[0-9]+)")),
     "RepetitionStats" -> k(RepetitionStats(e("s"))),

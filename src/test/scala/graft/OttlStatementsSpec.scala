@@ -197,6 +197,19 @@ class OttlStatementsSpec extends SparkSuite {
     }
   }
 
+  test("number values print as Go text in Concat, Format %v and String") {
+    val out = OttlStatements.applyAll(frame, Seq("log" -> Seq(
+      """set(attributes["joined"], Concat(["a", 3], "-"))""",
+      """set(attributes["fmt"], Format("%v|%v|%v", [3, 0.00001, 12345678.5]))""",
+      """set(attributes["str"], String(0.00001))""",
+      """set(attributes["int"], String(Int("42")))"""))).orderBy("turn_idx")
+    val (s, _, _) = attrs(out).head
+    assert(s("joined") == "a-3")
+    assert(s("fmt") == "3|1e-05|1.23456785e+07") // fmt %v
+    assert(s("str") == "0.00001") // StringLikeGetter: json.Marshal's layout
+    assert(s("int") == "42")
+  }
+
   // ---- widened standard-library converter set (round 5) --------------------
 
   test("string converters: Trim/Split/Format/String/Hex/ConvertCase snake+camel") {

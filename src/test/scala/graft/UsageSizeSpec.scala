@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GoJsonFloatKernel, TypedAttrsGoJson}
+import graft.functions.{GoFloat, TypedAttrsGoJson}
 import graft.model.LogSchema
 
 /** Goldens for the billing-sizer kernels: every expected string below is the
@@ -14,10 +14,7 @@ import graft.model.LogSchema
 class UsageSizeSpec extends SparkSuite {
   import spark.implicits._
 
-  private def goFloat(d: Double): String = {
-    val u = GoJsonFloatKernel.format(d)
-    if (u == null) null else u.toString
-  }
+  private def goFloat(d: Double): String = GoFloat.json(d)
 
   test("GoJsonFloat matches Go json.Marshal float64 rendering") {
     assert(goFloat(5.0) == "5")            // json.Marshal(5.0) == "5"
