@@ -3,9 +3,10 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.{GraftBridge => ExpressionUtils}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType,
+  StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's one float64-to-text module. The reference prints a float64
@@ -27,20 +28,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * The digits are Go's shortest: the fewest significant digits that read
   * back to the same double, the nearer of two candidates when both do, the
   * even one on a tie. They are not `Double.toString`'s: on JDK 17 that is
-  * not always the shortest (`2e23` prints `1.9999999999999998E23`). The
-  * exact reference is [[ladder]]: for p = 1..17, round the exact binary
-  * value down and up to p significant digits and take the first p at which
-  * a candidate reads back. The fast path starts from `Double.toString`'s
-  * digit count n, which always reads back: if no p = n-1 candidate reads
-  * back, then none shorter does either, and n is the answer; otherwise
-  * `Double.toString` was more than one digit long and the ladder decides.
-  * An integral value below 2^53 is its own long's digits.
-  * `GoFloatSpec` checks the fast path against the ladder.
+  * not always the shortest (`2e23` prints `1.9999999999999998E23`).
+  * [[shortest]] is a ladder: for p = 1..17, round the exact binary value
+  * down and up to p significant digits and take the first p at which a
+  * candidate reads back. An integral value below 2^53 is its own long's
+  * digits.
   *
-  * The typed number map holds int64 and float64 attributes alike (SURVEY
-  * row 79, `Int/Double→number`), so a value read from it prints as its
-  * long when integral ([[int64Or]]); elsewhere the layouts take the float64
-  * as Go would.
+  * An int64 prints as its digits in every layout (`strconv.FormatInt`,
+  * which `fmt`, `encoding/json` and `AsString` all use). The typed number
+  * map holds int64 and float64 attributes alike (SURVEY row 79,
+  * `Int/Double→number`), so a value read from it prints as its long when
+  * integral ([[int64Or]]); elsewhere the layouts take the float64 as Go
+  * would.
   */
 object GoFloat extends Serializable {
 
@@ -57,7 +56,9 @@ object GoFloat extends Serializable {
   private val Up = mc(RoundingMode.UP)
   private val Nearest = mc(RoundingMode.HALF_EVEN)
 
-  /** Go's shortest decimal of |d|, for a finite `d`. */
+  /** Go's shortest decimal of |d|, for a finite `d`: the nearest p-digit
+    * candidate for the first p in 1..17 at which one reads back.
+    */
   private[graft] def shortest(d: Double): Decimal = {
     val a = math.abs(d)
     if (a == 0.0) Zero
@@ -66,21 +67,11 @@ object GoFloat extends Serializable {
       Decimal(stripZeros(s), s.length)
     } else {
       val exact = new JBigDecimal(a)
-      val n = javaDigits(a)
-      val c = if (n > 1 && readBack(exact, a, n - 1) != null) null else readBack(exact, a, n)
-      if (c != null) decimal(c) else ladder(a)
+      var p = 1
+      var c = readBack(exact, a, p)
+      while (c == null) { p += 1; c = readBack(exact, a, p) }
+      decimal(c)
     }
-  }
-
-  /** The exact reference for a finite non-zero `a`: the nearest p-digit
-    * candidate for the first p in 1..17 at which one reads back to `a`.
-    */
-  private[graft] def ladder(a: Double): Decimal = {
-    val exact = new JBigDecimal(math.abs(a))
-    var p = 1
-    var c = readBack(exact, math.abs(a), p)
-    while (c == null) { p += 1; c = readBack(exact, math.abs(a), p) }
-    decimal(c)
   }
 
   /** `exact` rounded down and up to `p` significant digits: the one that
@@ -106,26 +97,6 @@ object GoFloat extends Serializable {
     var end = s.length
     while (end > 0 && s.charAt(end - 1) == '0') end -= 1
     s.substring(0, end)
-  }
-
-  /** Significant digits of `Double.toString(a)`, a > 0. */
-  private def javaDigits(a: Double): Int = {
-    val s = java.lang.Double.toString(a)
-    val e = s.indexOf('E')
-    val end = if (e < 0) s.length else e
-    var k = 0
-    var first = -1
-    var last = -1
-    var i = 0
-    while (i < end) {
-      val ch = s.charAt(i)
-      if (ch != '.') {
-        if (ch != '0') { if (first < 0) first = k; last = k }
-        k += 1
-      }
-      i += 1
-    }
-    last - first + 1
   }
 
   private def negative(d: Double): Boolean = java.lang.Double.doubleToRawLongBits(d) < 0
@@ -184,9 +155,13 @@ object GoFloat extends Serializable {
     if (java.lang.Double.isFinite(d)) render(d, x => x.point - 1 < -4 || x.point - 1 >= 6, pad = true)
     else nonFinite(d)
 
-  /** The layouts by name, for [[GoNumberText]]. */
-  val layouts: Map[String, Double => String] =
-    Map("fixed" -> fixed, "json" -> json, "percentV" -> percentV)
+  /** One of the three layouts, as a [[GoNumberText]] plan names it. */
+  sealed abstract class Layout(render: Double => String) extends Serializable {
+    def apply(d: Double): String = render(d)
+  }
+  case object Fixed extends Layout(fixed)
+  case object Json extends Layout(json)
+  case object PercentV extends Layout(percentV)
 
   /** A typed number-map value: the long's digits when `d` is integral (the
     * int64 it may have been), else `layout`. `-0.0` came from a float64, so
@@ -199,44 +174,43 @@ object GoFloat extends Serializable {
   }
 }
 
-/** The Column worker: `layout` of a DOUBLE, the typed number-map rule first
-  * when `int64`; null when the layout gives none.
+/** The Column worker: an int64 as its digits; a float64 under `layout`,
+  * the typed number-map rule first when `int64`; null when the layout gives
+  * none.
   */
-final class GoFloatText(layout: Double => String, int64: Boolean) extends Serializable {
+final class GoFloatText(layout: GoFloat.Layout, int64: Boolean) extends Serializable {
+  def text(l: Long): UTF8String = UTF8String.fromString(java.lang.Long.toString(l))
+
   def text(d: Double): UTF8String = {
-    val s = if (int64) GoFloat.int64Or(d, layout) else layout(d)
+    val s = if (int64) GoFloat.int64Or(d, layout(_)) else layout(d)
     if (s == null) null else UTF8String.fromString(s)
   }
 }
 
-/** [[GoFloat.fixed]] of a DOUBLE Column. */
-case class GoFormatFloat(child: Expression) extends UnaryExpression with InvokeKernel {
-  protected def kernel = new GoFloatText(GoFloat.fixed, int64 = false)
-  protected def method = "text"
-  override def dataType: DataType = StringType
-  override protected def withNewChildInternal(newChild: Expression): GoFormatFloat =
-    copy(child = newChild)
-}
-
-object GoFormatFloat {
-  def apply(c: Column): Column =
-    ExpressionUtils.column(GoFormatFloat(ExpressionUtils.expression(c)))
-}
-
-/** A DOUBLE Column of typed number-map values as text:
-  * [[GoFloat.int64Or]] under the named [[GoFloat.layouts]] entry.
+/** A number Column as Go's text: a LONG (or narrower integral) column as
+  * its int64 digits, any other as a float64 under `layout`, with
+  * [[GoFloat.int64Or]] first when `int64` (a typed number-map value).
   */
-case class GoNumberText(child: Expression, layout: String)
+case class GoNumberText(child: Expression, layout: GoFloat.Layout, int64: Boolean)
     extends UnaryExpression with InvokeKernel {
-  require(GoFloat.layouts.contains(layout), s"unknown Go float layout: $layout")
-  protected def kernel = new GoFloatText(GoFloat.layouts(layout), int64 = true)
+  protected def kernel = new GoFloatText(layout, int64)
   protected def method = "text"
+  override protected def arguments: Seq[Expression] = child.dataType match {
+    case LongType | DoubleType => Seq(child)
+    case ByteType | ShortType | IntegerType => Seq(Cast(child, LongType))
+    case _ => Seq(Cast(child, DoubleType))
+  }
   override def dataType: DataType = StringType
   override protected def withNewChildInternal(newChild: Expression): GoNumberText =
     copy(child = newChild)
 }
 
 object GoNumberText {
-  def apply(c: Column, layout: String): Column =
-    ExpressionUtils.column(GoNumberText(ExpressionUtils.expression(c), layout))
+  def apply(c: Column, layout: GoFloat.Layout, int64: Boolean): Column =
+    ExpressionUtils.column(GoNumberText(ExpressionUtils.expression(c), layout, int64))
+}
+
+/** [[GoFloat.fixed]] of a number Column: `strconv.FormatFloat(f, 'f', -1, 64)`. */
+object GoFormatFloat {
+  def apply(c: Column): Column = GoNumberText(c, GoFloat.Fixed, int64 = false)
 }

@@ -139,7 +139,8 @@ object FieldCols {
     * (`3`, not Go's float64 `%v` of 1234567, `1.234567e+06`). Null stays
     * null.
     */
-  def stringifyNumber(c: Column): Column = graft.functions.GoNumberText(c, "percentV")
+  def stringifyNumber(c: Column): Column =
+    graft.functions.GoNumberText(c, graft.functions.GoFloat.PercentV, int64 = true)
 
   /** Read as DOUBLE where available (attributes_number first). */
   def readNumber(f: FieldRef): Column = f match {
@@ -235,15 +236,15 @@ object FieldCols {
 
   /** All column updates needed to set `f` to number value `v`. A string
     * destination (body, resource) takes the number as [[stringifyNumber]]
-    * prints it; a body path parses that text back as a JSON number leaf.
+    * prints it, a LONG `v` (an OTTL int64, time or duration) as its exact
+    * digits; a body path parses that text back as a JSON number leaf.
     */
   def setNumber(f: FieldRef, v: Column): Seq[(String, Column)] = f match {
     case Attr(keys) => setAttr(keys, "attributes_number", v.cast("double"))
     case Top(n) => Seq(n -> v.cast(topType(n)))
     case BodyPath(keys) =>
-      Seq("body" -> graft.functions.BodyEdit.set(col("body"), keys,
-        stringifyNumber(v.cast("double"))))
-    case other => setString(other, stringifyNumber(v.cast("double")))
+      Seq("body" -> graft.functions.BodyEdit.set(col("body"), keys, stringifyNumber(v)))
+    case other => setString(other, stringifyNumber(v))
   }
 
   def setBool(f: FieldRef, v: Column): Seq[(String, Column)] = f match {

@@ -382,12 +382,14 @@ object OttlStatements {
   /** A compiled value as text, as `ottl.StringLikeGetter` gives it to the
     * string converters (Concat, String, the hashes, IsMatch, ...): a float64
     * the way jsoniter marshals it, which is `json.Marshal`'s layout, and an
-    * int64 as its digits, so a number-kind value prints as
-    * [[graft.functions.GoFloat.int64Or]] `json` (SURVEY rows 297, 412); time
-    * and duration values are int64 nanoseconds.
+    * int64 as its digits (SURVEY rows 297, 412). A LONG number column (FNV,
+    * UnixNano, ...) prints exactly; a DOUBLE one under
+    * [[graft.functions.GoFloat.int64Or]] `json`, since `Int` and integral
+    * literals reach it as float64. Time and duration values are int64
+    * nanoseconds.
     */
   private def asText(v: (Column, String)): Column = v match {
-    case (c, "number") => graft.functions.GoNumberText(c, "json")
+    case (c, "number") => graft.functions.GoNumberText(c, graft.functions.GoFloat.Json, int64 = true)
     case (c, _) => c.cast("string")
   }
 
@@ -506,7 +508,8 @@ object OttlStatements {
           // Sprintf's %v of a number is fmt's: GoFloat.int64Or percentV
           val cols = items.zip(casts).map { case (it, t) =>
             compileValue(it, context) match {
-              case (c, "number") if t == "string" => graft.functions.GoNumberText(c, "percentV")
+              case (c, "number") if t == "string" =>
+                graft.functions.GoNumberText(c, graft.functions.GoFloat.PercentV, int64 = true)
               case (c, _) => c.cast(t)
             }
           }
@@ -719,13 +722,10 @@ object OttlStatements {
           case f: VFunc =>
             val (c, kind) = compileValue(f, context)
             val updates = kind match {
-              case "number" => FieldCols.setNumber(ref, c)
-              // LONG nanos: exact on the long top-level time fields, float64
-              // through the number map, their int64 digits in a string field
-              case "time" | "duration" => ref match {
-                case FieldRef.Body | _: FieldRef.Resource => FieldCols.setString(ref, c.cast("string"))
-                case _ => FieldCols.setNumber(ref, c)
-              }
+              // LONG nanos (time, duration) and int64 numbers: exact on the
+              // long top-level fields and in a string field, float64 through
+              // the number map
+              case "number" | "time" | "duration" => FieldCols.setNumber(ref, c)
               case "bool" => FieldCols.setBool(ref, c)
               case "map" | "maps" => throw new IllegalArgumentException(
                 s"${f.name} is map-valued — use merge_maps(target, ${f.name}(...), strategy)")

@@ -87,6 +87,20 @@ class FieldSyntaxSpec extends AnyFunSuite {
     assert(row.getString(1) == "1.23456785e+07")
   }
 
+  test("setNumber of a LONG into a string field prints its exact int64") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val df = graft.model.LogFrames.withDefaults(Seq("b").toDF("body"))
+    val big = 9007199254740993L // 2^53 + 1, not a float64
+    val updates = FieldCols.setNumber(Resource(Seq("big")), lit(big)) ++
+      FieldCols.setNumber(Body, lit(-5808556873153909620L))
+    val row = updates.foldLeft(df) { case (d, (name, c)) => d.withColumn(name, c) }
+      .select("resources_string", "body").head()
+    assert(row.getMap[String, String](0).toMap == Map("big" -> "9007199254740993"))
+    assert(row.getString(1) == "-5808556873153909620")
+  }
+
   test("stringifyNumber is GoFloat.int64Or under percentV") {
     val spark = TestSpark.spark
     import spark.implicits._

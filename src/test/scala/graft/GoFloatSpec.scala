@@ -71,7 +71,39 @@ class GoFloatSpec extends AnyFunSuite {
     assert(GoFloat.int64Or(Double.NaN, GoFloat.json) == null)
   }
 
-  test("the fast path agrees with the ladder on 1M random bit patterns") {
+  test("an int64 column prints its exact digits under every layout") {
+    val big = -5808556873153909620L // FNV-1a 64 of "a", past 2^53
+    Seq(GoFloat.Fixed, GoFloat.Json, GoFloat.PercentV).foreach { layout =>
+      Seq(false, true).foreach { int64 =>
+        val w = new graft.functions.GoFloatText(layout, int64)
+        assert(w.text(big).toString == "-5808556873153909620", s"$layout")
+        assert(w.text(Long.MaxValue).toString == "9223372036854775807", s"$layout")
+      }
+    }
+  }
+
+  private def readsBack(x: GoFloat.Decimal, a: Double): Boolean =
+    java.lang.Double.parseDouble("0." + x.digits + "E" + x.point) == a
+
+  /** No decimal with one digit fewer than `x` reads back to `a`: the two
+    * such neighbours of the exact value both miss.
+    */
+  private def noneShorter(x: GoFloat.Decimal, a: Double): Boolean = {
+    val p = x.digits.length - 1
+    val exact = new java.math.BigDecimal(a)
+    p == 0 || Seq(java.math.RoundingMode.FLOOR, java.math.RoundingMode.CEILING).forall { m =>
+      exact.round(new java.math.MathContext(p, m)).doubleValue != a
+    }
+  }
+
+  /** Significant digits of `Double.toString(a)`, which always reads back. */
+  private def javaDigits(a: Double): Int = {
+    val s = java.lang.Double.toString(a)
+    val m = s.takeWhile(_ != 'E').filter(_ != '.').dropWhile(_ == '0').reverse.dropWhile(_ == '0')
+    m.length
+  }
+
+  test("shortest reads back, with no shorter decimal that does, on 1M random bit patterns") {
     val threads = 4
     val perThread = 250000
     val pool = Executors.newFixedThreadPool(threads)
@@ -84,8 +116,11 @@ class GoFloatSpec extends AnyFunSuite {
             var i = 0
             while (i < perThread) {
               val d = java.lang.Double.longBitsToDouble(rnd.nextLong())
-              if (java.lang.Double.isFinite(d) && d != 0.0 &&
-                  GoFloat.shortest(d) != GoFloat.ladder(d)) bad += d
+              if (java.lang.Double.isFinite(d) && d != 0.0) {
+                val a = math.abs(d)
+                val x = GoFloat.shortest(d)
+                if (!readsBack(x, a) || !noneShorter(x, a) || x.digits.length > javaDigits(a)) bad += d
+              }
               i += 1
             }
             bad.result()
@@ -93,7 +128,7 @@ class GoFloatSpec extends AnyFunSuite {
         })
       }
       val bad = work.flatMap(_.get(600, TimeUnit.SECONDS))
-      assert(bad.isEmpty, bad.take(5).map(d => s"$d: ${GoFloat.shortest(d)} vs ${GoFloat.ladder(d)}"))
+      assert(bad.isEmpty, bad.take(5).map(d => s"$d: ${GoFloat.shortest(d)}"))
     } finally pool.shutdownNow()
   }
 
@@ -102,8 +137,7 @@ class GoFloatSpec extends AnyFunSuite {
     assert(GoFloat.shortest(2e23) == GoFloat.Decimal("2", 24))
     Seq(2e23, 5e-324, 1e23, 8.41e21, maxFloat, 0.1, 1.0 / 3).foreach { d =>
       val x = GoFloat.shortest(d)
-      assert(x == GoFloat.ladder(d), s"$d")
-      assert(java.lang.Double.parseDouble("0." + x.digits + "E" + x.point) == d, s"$d")
+      assert(readsBack(x, d) && noneShorter(x, d), s"$d")
     }
   }
 }

@@ -86,9 +86,10 @@ class KernelParitySpec extends SparkSuite {
     "PromHashWithName" -> k(PromHashWithName(e("lng"), e("s2"))),
     "PromLabelsJson" -> k(PromLabelsJson(e("s2"), e("ms"), e("ms2"), e("ms"))),
     "PrefixSums" -> k(PrefixSums(e("arr_l"))),
-    "GoFormatFloat" -> k(GoFormatFloat(e("dbl"))),
-    "GoNumberText percentV" -> k(GoNumberText(e("dbl"), "percentV")),
-    "GoNumberText json" -> k(GoNumberText(e("dbl"), "json")),
+    "GoNumberText fixed" -> k(GoNumberText(e("dbl"), GoFloat.Fixed, int64 = false)),
+    "GoNumberText percentV" -> k(GoNumberText(e("dbl"), GoFloat.PercentV, int64 = true)),
+    "GoNumberText json" -> k(GoNumberText(e("dbl"), GoFloat.Json, int64 = true)),
+    "GoNumberText json long" -> k(GoNumberText(e("lng"), GoFloat.Json, int64 = true)),
     "QualityStats" -> k(QualityStats(e("s"), Seq("the", "a"))),
     "RegexExtractNamedGroups" -> k(RegexExtractNamedGroups(e("s"), "(?P<word>[a-z]+) (?P<num>[0-9]+)")),
     "RepetitionStats" -> k(RepetitionStats(e("s"))),

@@ -210,6 +210,28 @@ class OttlStatementsSpec extends SparkSuite {
     assert(s("int") == "42")
   }
 
+  test("int64 converter results print their exact digits past 2^53") {
+    // FNV-1a 64 of "a" is -5808556873153909620; as a float64 it would print
+    // -5808556873153909760
+    val out = OttlStatements.applyAll(frame, Seq("log" -> Seq(
+      """set(attributes["fnv"], String(FNV("a")))""",
+      """set(attributes["nano"], Concat([UnixNano(Unix(1700000000, 123456789))], ""))""",
+      """set(attributes["sha"], SHA256(FNV("a")))""",
+      """set(attributes["fmt"], Format("%v", [FNV("a")]))""",
+      """set(resource.attributes["h"], FNV("a"))""",
+      """set(resource.attributes["t"], UnixNano(Unix(1700000000, 123456789)))""",
+      """set(resource.attributes["u"], Unix(1700000000, 123456789))"""))).orderBy("turn_idx")
+    val (s, _, _) = attrs(out).head
+    assert(s("fnv") == "-5808556873153909620")
+    assert(s("nano") == "1700000000123456789")
+    assert(s("sha") == "b467914d9d627bb138ed8b0a5d204e158aaa5fbf73ba890eac6a160f1d38f560")
+    assert(s("fmt") == "-5808556873153909620")
+    val res = out.select("resources_string").head().getMap[String, String](0)
+    assert(res("h") == "-5808556873153909620")
+    assert(res("t") == "1700000000123456789")
+    assert(res("u") == "1700000000123456789")
+  }
+
   // ---- widened standard-library converter set (round 5) --------------------
 
   test("string converters: Trim/Split/Format/String/Hex/ConvertCase snake+camel") {
