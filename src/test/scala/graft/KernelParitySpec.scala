@@ -86,7 +86,8 @@ class KernelParitySpec extends SparkSuite {
     "PromHashWithName" -> k(PromHashWithName(e("lng"), e("s2"))),
     "PromLabelsJson" -> k(PromLabelsJson(e("s2"), e("ms"), e("ms2"), e("ms"))),
     "PrefixSums" -> k(PrefixSums(e("arr_l"))),
-    "GoNumberText fixed" -> k(GoNumberText(e("dbl"), GoFloat.Fixed, int64 = false)),
+    // GoFormatFloat(c) is this expression
+    "GoFormatFloat" -> k(GoNumberText(e("dbl"), GoFloat.Fixed, int64 = false)),
     "GoNumberText percentV" -> k(GoNumberText(e("dbl"), GoFloat.PercentV, int64 = true)),
     "GoNumberText json" -> k(GoNumberText(e("dbl"), GoFloat.Json, int64 = true)),
     "GoNumberText json long" -> k(GoNumberText(e("lng"), GoFloat.Json, int64 = true)),
